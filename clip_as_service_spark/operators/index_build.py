@@ -572,11 +572,15 @@ def merge_indexes(
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     """DELETE documents from a block index — merge-on-read tombstones,
     the postings-side twin of ann_index.delete_ann_vectors (and Lucene's
-    live-docs posture). One (doc_id) row per id is appended to
-    ``deleted_docs``; every query path (search_topk WAND/TAAT/exploded,
-    IndexReader.search/phrase, phrase_search_indexed) masks tombstoned
-    docs BEFORE ranking — snippets inherit via the masked results page.
-    Nothing is rewritten.
+    live-docs posture). The distinct ids are collected on the driver and
+    appended to ``deleted_docs`` as ONE parquet file per call
+    (IndexStorage.append_local: no Spark write job, published whole by a
+    rename, so a reader never lists a partial file); every query path
+    (search_topk WAND/TAAT/exploded, IndexReader.search/phrase,
+    phrase_search_indexed) masks tombstoned docs BEFORE ranking — snippets
+    inherit via the masked results page. Nothing is rewritten. Collecting
+    adds no memory bound: every reader gathers the whole tombstone set on
+    the driver anyway.
 
     Stats semantics, stated: idf/avgdl/N stay those of the FULL corpus
     until purge_deleted_docs — surviving docs keep their exact pre-delete
@@ -585,29 +589,28 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     has no per-doc re-add path — re-crawls enter through the streaming
     side and a compact/purge, which clears tombstones.
 
-    ``doc_ids``: iterable of ints or a DataFrame with a doc_id column.
-    Idempotent; absent ids are no-op tombstones. Returns tombstones
-    written."""
-    store = IndexStorage(index_dir)
+    ``doc_ids``: iterable of ints or a DataFrame with a doc_id column (one
+    collect job; the list path runs no Spark job at all). Idempotent;
+    absent ids are no-op tombstones. An empty input writes nothing (mirror
+    of delete_ann_vectors: a zero-row tombstone table would make every
+    later query pay the tombstone load for nothing, and purge runnable on
+    an index with no deletes). Returns tombstones written."""
+    import pyarrow as pa
+
     if isinstance(doc_ids, DataFrame):
-        tomb = doc_ids.select(
-            F.col("doc_id").cast("long").alias("doc_id")
-        ).dropDuplicates()
-        n = tomb.count()
-        if n == 0:
-            # mirror delete_ann_vectors: an empty batch must not materialize
-            # a zero-row tombstone table (every later query would pay the
-            # tombstone load/anti-join setup for nothing, and purge would
-            # become runnable on an index with no actual deletes)
-            return 0
-    else:
-        vals = sorted({int(i) for i in doc_ids})
-        if not vals:
-            return 0
-        n = len(vals)
-        tomb = spark.createDataFrame([(v,) for v in vals], "doc_id long")
-    store.append(tomb, "deleted_docs")
-    return n
+        doc_ids = [
+            r[0]
+            for r in doc_ids.select(F.col("doc_id").cast("long"))
+            .distinct()
+            .collect()
+        ]
+    vals = sorted({int(i) for i in doc_ids})
+    if not vals:
+        return 0
+    IndexStorage(index_dir).append_local(
+        pa.table({"doc_id": pa.array(vals, pa.int64())}), "deleted_docs"
+    )
+    return len(vals)
 
 
 def delete_urls(spark: SparkSession, index_dir: str, urls) -> int:

@@ -551,6 +551,11 @@ def _taat_multi_term(
         else:
             cand = np.flatnonzero(dense >= kth / _UB_SAFETY)
 
+    if deleted is not None and len(deleted):
+        # a phase-1 threshold ≤ 0 admits accumulator-0 docs, tombstones
+        # among them, and the phase-2 fold below does not mask
+        cand = np.setdiff1d(cand, deleted, assume_unique=True)
+
     # phase 2: exact ascending-term fold over the candidate set only
     scores = np.zeros(len(cand), dtype=np.float64)
     for _t, idf, blks in entries:
@@ -612,7 +617,9 @@ class IndexReader:
     the same way, retriever.md:117-136). Works wherever the driver can read
     the index store (local disk here; object store on a cluster). Pass
     ``engine="spark"`` to route the scan through Spark instead. Decoded
-    term cursors are memoized across queries (head terms repeat).
+    term cursors are memoized across queries (head terms repeat), and the
+    memo survives a delete-only refresh(): tombstones are masked at use,
+    so live deletes never cost a re-fetch or re-decode.
 
     strategy='auto' crossover: vectorized TAAT (numpy, whole lists decoded)
     up to ``taat_max_postings``; the per-posting-loop Python WAND only
@@ -637,7 +644,6 @@ class IndexReader:
     ):
         self.spark = spark
         self.store = IndexStorage(index_dir)
-        self.meta = self.store.read_meta()
         self.engine = engine
         self.strategy = strategy
         self.taat_max_postings = taat_max_postings
@@ -651,15 +657,6 @@ class IndexReader:
             self.RAW_CACHE_MAX_BYTES = raw_cache_bytes
         if decoded_cache_bytes is not None:
             self.DECODED_CACHE_MAX_BYTES = decoded_cache_bytes
-        if self.meta.get("version") != 2:
-            raise ValueError(
-                f"index at {index_dir} has block format "
-                f"v{self.meta.get('version')}; this reader needs v2 "
-                "(vByte tf/dl payloads) — rebuild the index"
-            )
-        self._bm25 = (
-            float(self.meta["avgdl"]), float(self.meta["k1"]), float(self.meta["b"])
-        )
         self.query_log: list[dict] = []
         # both caches are BYTE-budgeted, not entry-counted: Zipf-head terms
         # are exactly the entries that repeat AND are the largest (millions
@@ -671,36 +668,30 @@ class IndexReader:
         self._raw_bytes = 0
         # decoded-term memo: head terms repeat across interactive queries, and
         # decode (vByte + impact_weights) dominates warm latency — cache the
-        # decoded (docs, idf·w) per term (~16 B/posting; reset via clear())
+        # decoded (docs, idf·w) per term (~16 B/posting; reset when refresh()
+        # finds the index changed)
         self._decoded_cache: dict[str, tuple] = {}
         self._decoded_sizes: dict[str, int] = {}
         self._decoded_bytes = 0
+        self._snapshot = None
         self.refresh()
 
     def refresh(self) -> None:
-        """Re-list the index files and reload doc tombstones — pick up
-        appended blocks and delete_docs() made after construction (the
-        snapshot posture of AnnReader.refresh). Clears both term caches:
-        their entries may describe superseded files."""
-        self._term_rows_cache.clear()
-        self._raw_sizes.clear()
-        self._raw_bytes = 0
-        self._decoded_cache.clear()
-        self._decoded_sizes.clear()
-        self._decoded_bytes = 0
-        if self.engine == "pyarrow":
-            # per-shard ParquetFile handles + per-row-group (min, max) term
-            # stats, built ONCE per refresh: a query's fetch then opens no
-            # files and reads no footers — it prunes row groups driver-side
-            # (files are term-sorted at build, so the stats are selective)
-            # and issues direct read_row_groups calls. Measured ~2× faster
-            # per query than re-filtering a hive dataset (which re-evaluates
-            # partition + stats expressions per to_table call).
-            self._pq_files = self._build_pq_handles()
-            self.blocks = None
-        else:
-            self._pq_files = None
-            self.blocks = self.store.read(self.spark, "blocks")
+        """Reload doc tombstones — pick up delete_docs() made since the
+        last refresh (the snapshot posture of AnnReader.refresh) — and
+        reload the index itself only if it changed.
+
+        Change is detected by a snapshot of (path, size, mtime_ns) of every
+        file under ``blocks/`` plus the bytes of ``_meta.json``. Unchanged
+        (a delete-only refresh): the file handles, ``meta`` and both term
+        caches are kept — their entries are tombstone-independent, the
+        mask applies at use. Changed (appended blocks, a rebuild in place):
+        ``meta`` and the BM25 parameters are re-read, the handles rebuilt,
+        and both caches cleared, since their entries may describe
+        superseded files or stats."""
+        snapshot = self._index_snapshot()
+        if snapshot != self._snapshot:
+            self._reload(snapshot)
         # merge-on-read doc deletes (delete_docs): tombstoned ids loaded
         # at construction/refresh; masked out of every scorer. The
         # decoded/raw caches stay UNFILTERED (delete-independent), the
@@ -720,6 +711,56 @@ class IndexReader:
             if len(ids):
                 self._deleted_arr = ids
                 self._deleted_set = set(int(i) for i in ids)
+
+    def _index_snapshot(self) -> tuple:
+        """(path, size, mtime_ns) of every file under ``blocks/``, plus the
+        bytes of ``_meta.json``: everything meta, handles and caches read."""
+        import os as _os
+
+        files = []
+        for dp, _, fns in _os.walk(self.store.path("blocks")):
+            for f in fns:
+                st = _os.stat(_os.path.join(dp, f))
+                files.append((dp, f, st.st_size, st.st_mtime_ns))
+        with open(_os.path.join(self.store.root, "_meta.json"), "rb") as fh:
+            return tuple(sorted(files)), fh.read()
+
+    def _reload(self, snapshot: tuple) -> None:
+        """Load meta and file handles of the index ``snapshot`` describes,
+        emptying both term caches."""
+        import json
+
+        meta = json.loads(snapshot[1])
+        if meta.get("version") != 2:
+            raise ValueError(
+                f"index at {self.store.root} has block format "
+                f"v{meta.get('version')}; this reader needs v2 "
+                "(vByte tf/dl payloads) — rebuild the index"
+            )
+        self.meta = meta
+        self._bm25 = (
+            float(meta["avgdl"]), float(meta["k1"]), float(meta["b"])
+        )
+        self._term_rows_cache.clear()
+        self._raw_sizes.clear()
+        self._raw_bytes = 0
+        self._decoded_cache.clear()
+        self._decoded_sizes.clear()
+        self._decoded_bytes = 0
+        if self.engine == "pyarrow":
+            # per-shard ParquetFile handles + per-row-group (min, max) term
+            # stats, built once per index change: a fetch then opens no
+            # files and reads no footers — it prunes row groups driver-side
+            # (files are term-sorted at build, so the stats are selective)
+            # and issues direct read_row_groups calls. Measured ~2× faster
+            # per query than re-filtering a hive dataset (which re-evaluates
+            # partition + stats expressions per to_table call).
+            self._pq_files = self._build_pq_handles()
+            self.blocks = None
+        else:
+            self._pq_files = None
+            self.blocks = self.store.read(self.spark, "blocks")
+        self._snapshot = snapshot
 
     # cache byte budgets (defaults sized for a long-lived service reader;
     # per-entry accounting uses the payload buffers, the dominant cost —

@@ -18,10 +18,29 @@ tag; the interface below is the only place that changes.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import pathlib
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _publish(final: str, write) -> None:
+    """Crash-safe file write: ``write(tmp)`` fills a hidden ``.tmp-*`` file
+    beside ``final``, then os.replace moves it into place in one step, so a
+    reader sees the old file or the new one, never a torn one. Spark and
+    pyarrow listings skip dot-prefixed names, so a tmp left by a crash is
+    never read as data."""
+    tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex}")
+    try:
+        write(tmp)
+        os.replace(tmp, final)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        raise
 
 
 class IndexStorage:
@@ -77,6 +96,19 @@ class IndexStorage:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
+
+    def append_local(self, tbl, table: str) -> None:
+        """Append a driver-side ``pyarrow.Table`` to ``table`` as ONE
+        parquet file, written without a Spark job (tombstone batches are a
+        few ids; a job costs ~0.5 s). The file is published whole via
+        _publish, and ``_SUCCESS`` is added if missing so exists() holds."""
+        import pyarrow.parquet as pq
+
+        d = self.path(table)
+        os.makedirs(d, exist_ok=True)
+        final = os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
+        _publish(final, lambda tmp: pq.write_table(tbl, tmp))
+        open(os.path.join(d, "_SUCCESS"), "a").close()
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
@@ -150,8 +182,11 @@ class IndexStorage:
 
     def write_meta(self, meta: dict):
         os.makedirs(self.root, exist_ok=True)
-        with open(os.path.join(self.root, "_meta.json"), "w") as fh:
-            json.dump(meta, fh, indent=2, sort_keys=True)
+        text = json.dumps(meta, indent=2, sort_keys=True)
+        _publish(
+            os.path.join(self.root, "_meta.json"),
+            lambda tmp: pathlib.Path(tmp).write_text(text),
+        )
 
     def read_meta(self) -> dict:
         with open(os.path.join(self.root, "_meta.json")) as fh:

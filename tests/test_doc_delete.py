@@ -227,3 +227,157 @@ def test_purge_equals_fresh_build_over_survivors(
     assert n_pos_docs == IndexStorage(fresh).read(
         spark, "positions"
     ).select("doc_id").distinct().count()
+
+
+def test_delete_only_refresh_keeps_caches(spark, pages, built, queries):
+    """A refresh after delete_docs alone keeps the reader warm: the same
+    file handles, meta and cache entries (tombstones are masked at use),
+    and the new tombstones are masked all the same."""
+    import shutil
+
+    idx = built + "_warm"
+    shutil.copytree(built, idx)
+    reader = wand.IndexReader(None, idx)
+    texts = [q["text"] for q in queries.collect()]
+    before = {t: reader.search(t, k=K_ALL) for t in texts}
+    assert reader._term_rows_cache and reader._decoded_cache
+    raw, decoded = dict(reader._term_rows_cache), dict(reader._decoded_cache)
+    handles, meta = reader._pq_files, reader.meta
+    top = before[texts[0]][0][1]
+    index_build.delete_docs(spark, idx, [top])
+    reader.refresh()
+    assert reader._pq_files is handles and reader.meta is meta
+    assert reader._term_rows_cache.keys() == raw.keys()
+    assert all(reader._term_rows_cache[t] is v for t, v in raw.items())
+    assert reader._decoded_cache.keys() == decoded.keys()
+    assert all(reader._decoded_cache[t] is v for t, v in decoded.items())
+    fresh = wand.IndexReader(None, idx)
+    for t in texts:
+        got = reader.search(t, k=K_ALL)
+        assert top not in {d for _r, d, _s in got}
+        assert {d: s for _r, d, s in got} == {
+            d: s for _r, d, s in before[t] if d != top
+        }
+        assert got == fresh.search(t, k=K_ALL)
+
+
+def test_refresh_after_rebuild_in_place_reloads(spark, built, queries):
+    """Rebuilding the index in place under a held reader (another corpus,
+    so avgdl moves): refresh() must drop the caches and the old meta and
+    answer exactly like a fresh reader."""
+    import shutil
+
+    idx = built + "_rebuilt"
+    shutil.copytree(built, idx)
+    reader = wand.IndexReader(None, idx)
+    texts = [q["text"] for q in queries.collect()]
+    for t in texts:
+        reader.search(t, k=K_ALL)
+    old_avgdl = reader.meta["avgdl"]
+    shutil.rmtree(idx)
+    index_build.build_index(
+        spark, fixtures.pages_spark_df(spark, N_PAGES // 2), idx, n_shards=4,
+        salt_cutoff=30, target_sublist=20, doc_id_method="hash",
+    )
+    reader.refresh()
+    assert not reader._term_rows_cache and not reader._decoded_cache
+    assert reader.meta["avgdl"] != old_avgdl
+    fresh = wand.IndexReader(None, idx)
+    assert reader.meta == fresh.meta
+    answers = [reader.search(t, k=K_ALL) for t in texts]
+    assert any(answers)
+    assert answers == [fresh.search(t, k=K_ALL) for t in texts]
+
+
+def _tomb_files(idx):
+    import glob
+    import os
+
+    return glob.glob(os.path.join(idx, "deleted_docs", "*.parquet"))
+
+
+def test_delete_docs_list_and_dataframe_write_one_file(spark, built):
+    """List and DataFrame inputs write the same tombstone set, one parquet
+    file per call; an empty input writes no table at all."""
+    import shutil
+
+    from clip_as_service_spark.sources.tables import IndexStorage
+
+    ids = [7, 3, 7, 11]
+    by_list, by_df = built + "_bylist", built + "_bydf"
+    for d in (by_list, by_df):
+        shutil.copytree(built, d)
+    assert index_build.delete_docs(spark, by_list, ids) == 3
+    assert index_build.delete_docs(
+        spark, by_df, spark.createDataFrame([(i,) for i in ids], "doc_id int")
+    ) == 3
+    sets = []
+    for d in (by_list, by_df):
+        assert len(_tomb_files(d)) == 1
+        sets.append({
+            int(r["doc_id"])
+            for r in IndexStorage(d).read(spark, "deleted_docs").collect()
+        })
+    assert sets[0] == sets[1] == {3, 7, 11}
+    assert index_build.delete_docs(spark, by_list, [5]) == 1
+    assert len(_tomb_files(by_list)) == 2
+
+    empty = built + "_empty"
+    shutil.copytree(built, empty)
+    assert index_build.delete_docs(spark, empty, []) == 0
+    assert index_build.delete_docs(
+        spark, empty, spark.createDataFrame([], "doc_id long")
+    ) == 0
+    assert not IndexStorage(empty).exists("deleted_docs")
+    assert not _tomb_files(empty)
+
+
+def test_stray_tmp_tombstone_file_is_ignored(spark, built, queries, tmp_path):
+    """A ``.tmp-*`` file left in deleted_docs/ by a crashed delete_docs (a
+    torn one, or a whole one never renamed into place) is invisible to
+    every reader of the tombstones."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built, idx)
+    q = queries.collect()[0]
+    ranked = wand.IndexReader(None, idx).search(q["text"], k=K_ALL)
+    dead, unrenamed = ranked[0][1], ranked[1][1]
+    index_build.delete_docs(spark, idx, [dead])
+    tomb_dir = os.path.join(idx, "deleted_docs")
+    pq.write_table(
+        pa.table({"doc_id": pa.array([unrenamed], pa.int64())}),
+        os.path.join(tomb_dir, ".tmp-whole"),
+    )
+    with open(os.path.join(tomb_dir, ".tmp-torn"), "wb") as fh:
+        fh.write(b"PAR1\x00torn")
+
+    reader = wand.IndexReader(None, idx)
+    got = {d for _r, d, _s in reader.search(q["text"], k=K_ALL)}
+    assert dead not in got and unrenamed in got
+    qdf = spark.createDataFrame([(0, q["text"])], "query_id int, text string")
+    for mode in ("wand", "exploded"):
+        got = {
+            did
+            for _q, did in _rows(
+                wand.search_topk(spark, idx, qdf, k=K_ALL, mode=mode)
+            )
+        }
+        assert dead not in got and unrenamed in got, mode
+    probe = " ".join(q["text"].split()[:2])
+    hits = phrase.phrase_search_indexed(spark, idx, probe).collect()
+    assert dead not in {int(r["id"]) for r in hits}
+    purged = str(tmp_path / "purged")
+    index_build.purge_deleted_docs(spark, idx, purged)
+    from clip_as_service_spark.sources.tables import IndexStorage
+
+    live = {
+        int(r["doc_id"])
+        for r in IndexStorage(purged).read(spark, "postings")
+        .select("doc_id").distinct().collect()
+    }
+    assert dead not in live and unrenamed in live

@@ -173,3 +173,30 @@ def test_reader_search_uses_early_stop_when_heavy(index_dir, oracle, monkeypatch
             (r, d) for r, d, _ in expected
         ], q
         assert got_cold == got_warm
+
+
+def test_multi_term_early_stop_nonpositive_threshold_masks_deletes(
+    index_dir, monkeypatch
+):
+    """The phase-1 candidate threshold θ̃/s - rem·s can be ≤ 0 when θ̃ sits
+    just above rem·s. Every doc then enters the candidate set, tombstoned
+    ones (accumulator 0) included, and phase 2 re-scores them. The margin s
+    only widens the set, so exactness must not depend on it: a wide margin
+    opens that window on most stop checks."""
+    monkeypatch.setattr(wand, "_UB_SAFETY", 2.0)
+    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    ran = 0
+    for q in _multi_term_queries()[:8]:
+        terms = sorted(set(tokenize_words(q["text"])))
+        hit = [t for t in terms if reader._fetch_rows([t])]
+        if len(hit) < 2:
+            continue
+        base = _full_decode_topk(reader, hit, K)
+        if len(base) < 3:
+            continue
+        deleted = np.array(sorted(d for _r, d, _s in base[:2]), dtype=np.int64)
+        got = _early_stop_topk(reader, hit, K, deleted=deleted)
+        assert not {d for _r, d, _s in got} & set(deleted.tolist()), q
+        assert got == _full_decode_topk(reader, hit, K, deleted=deleted)
+        ran += 1
+    assert ran >= 3

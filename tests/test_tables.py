@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from clip_as_service_spark.sources.tables import IndexStorage
@@ -65,3 +66,23 @@ def test_swap_crash_after_second_rename_drops_leftover(spark, tmp_path):
     got = sorted(r["v"] for r in store.read(spark, "tbl").collect())
     assert got == list(range(10, 17))
     assert not os.path.exists(final + "__old")
+
+
+def test_write_meta_crash_keeps_old_meta(tmp_path, monkeypatch):
+    """write_meta publishes by rename: a write that dies part-way leaves
+    the previous _meta.json whole and no temp file behind."""
+    import pathlib
+
+    store = IndexStorage(str(tmp_path / "idx"))
+    store.write_meta({"version": 1})
+
+    def torn(self, text):
+        with open(self, "w") as fh:
+            fh.write(text[:3])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pathlib.Path, "write_text", torn)
+    with pytest.raises(OSError, match="disk full"):
+        store.write_meta({"version": 2})
+    assert store.read_meta() == {"version": 1}
+    assert os.listdir(store.root) == ["_meta.json"]
