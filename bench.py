@@ -85,7 +85,7 @@ def main() -> None:
     build_sec = time.perf_counter() - t0
     docs_per_sec = round(n_docs / build_sec, 1) if build_sec > 0 else 0.0
 
-    reader = wand.IndexReader(None, idx_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, idx_dir)
     reader.search("warm up", k=10)
     lat = []
     for _qid, qtext in dq.DOC_QUERIES:

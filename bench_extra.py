@@ -138,11 +138,11 @@ def run_reader() -> None:
         index_build.build_index(
             spark, docs, idx_dir, n_shards=16, doc_id_method="dense"
         )
-    reader = wand.IndexReader(None, idx_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, idx_dir)
     reader.search("warm up", k=10)
     lat = []
     for _rep in range(5):
-        reader2 = wand.IndexReader(None, idx_dir, engine="pyarrow")
+        reader2 = wand.IndexReader(None, idx_dir)
         reader2.search("warm up", k=10)
         for _qid, qtext in dq.DOC_QUERIES:
             t1 = time.perf_counter()

@@ -76,11 +76,10 @@ def cmd_merge(args) -> int:
 
 
 def cmd_search(args) -> int:
-    spark = _spark(args)
-    spark.sparkContext.setLogLevel("WARN")
+    # IndexReader reads the index with pyarrow: no Spark session to start
     from .operators.wand import IndexReader
 
-    reader = IndexReader(spark, args.index, engine=args.engine)
+    reader = IndexReader(None, args.index)
     if args.phrase:
         for doc_id, start_pos in reader.phrase(args.phrase, limit=args.k):
             print(json.dumps({"doc_id": doc_id, "start_pos": start_pos}))
@@ -377,7 +376,6 @@ def main(argv: list[str] | None = None) -> int:
         "--phrase", help="exact phrase lookup (requires build --positions)"
     )
     s.add_argument("-k", type=int, default=10)
-    s.add_argument("--engine", default="pyarrow", choices=["pyarrow", "spark"])
     s.add_argument(
         "--profile", action="store_true",
         help="print per-phase (tokenize/fetch/score) p50/p95 after the results",

@@ -22,13 +22,8 @@ import numpy as np
 BLOCK_SIZE = 128
 
 
-def vbyte_encode(values: np.ndarray) -> bytes:
-    """Encode a non-negative int64 array. Vectorized: compute per-value byte
-    lengths, scatter payload bytes by offset."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # bytes needed per value: ceil(bitlen/7), min 1
+def _vbyte_lengths(v: np.ndarray) -> np.ndarray:
+    """Bytes per uint64 value: ceil(bitlen/7), at least 1."""
     nbits = np.zeros(v.shape, dtype=np.int64)
     tmp = v.copy()
     while True:
@@ -37,13 +32,16 @@ def vbyte_encode(values: np.ndarray) -> bytes:
             break
         nbits[nz] += 1
         tmp = tmp >> np.uint64(7)
-    nbytes = np.maximum(nbits, 1)
+    return np.maximum(nbits, 1)
+
+
+def _vbyte_pack(v: np.ndarray, nbytes: np.ndarray) -> bytes:
+    """Scatter the payload bytes of uint64 values ``v`` by offset, given
+    their byte lengths."""
     offsets = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    max_len = int(nbytes.max())
+    out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
     shifted = v.copy()
-    for byte_i in range(max_len):
+    for byte_i in range(int(nbytes.max())):
         mask = nbytes > byte_i
         idx = offsets[mask] + byte_i
         payload = (shifted[mask] & np.uint64(0x7F)).astype(np.uint8)
@@ -51,6 +49,15 @@ def vbyte_encode(values: np.ndarray) -> bytes:
         out[idx] = payload | np.where(is_last, 0, 0x80).astype(np.uint8)
         shifted = shifted >> np.uint64(7)
     return out.tobytes()
+
+
+def vbyte_encode(values: np.ndarray) -> bytes:
+    """Encode a non-negative int64 array. Vectorized: compute per-value byte
+    lengths, scatter payload bytes by offset."""
+    v = np.asarray(values, dtype=np.uint64)
+    if v.size == 0:
+        return b""
+    return _vbyte_pack(v, _vbyte_lengths(v))
 
 
 def vbyte_decode(data: bytes, n: int) -> np.ndarray:
@@ -100,32 +107,38 @@ def encode_posting_block(
     )
 
 
+def _block_gaps(doc_ids: np.ndarray, block_size: int):
+    """Doc-id gaps of a sorted list, reset to the raw id at every block
+    start (blocks stay independently decodable) → (gaps, block starts)."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    starts = np.arange(0, len(doc_ids), block_size)
+    gaps = np.empty_like(doc_ids)
+    gaps[0] = doc_ids[0]
+    gaps[1:] = np.diff(doc_ids)
+    gaps[starts] = doc_ids[starts]
+    return gaps, starts
+
+
+def _encode_split(
+    values: np.ndarray, starts: np.ndarray, block_size: int
+) -> list[bytes]:
+    """vByte-encode ``values`` in one pass, then slice the buffer into the
+    per-block payloads at the blocks' byte offsets."""
+    v = np.asarray(values, dtype=np.int64).astype(np.uint64)
+    nbytes = _vbyte_lengths(v)
+    buf = _vbyte_pack(v, nbytes)
+    ends = np.cumsum(nbytes)
+    bounds = [0] + ends[np.minimum(starts + block_size, len(v)) - 1].tolist()
+    return [buf[bounds[i] : bounds[i + 1]] for i in range(len(starts))]
+
+
 def encode_doc_gap_blocks(
     doc_ids: np.ndarray, block_size: int = BLOCK_SIZE
 ) -> list[bytes]:
     """Delta-gap + vByte encode a sorted doc-id list into per-block buffers,
     one vectorized pass (block-local gap restart; see encode_posting_blocks)."""
-    n = len(doc_ids)
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    starts = np.arange(0, n, block_size)
-    gaps = np.empty_like(doc_ids)
-    gaps[0] = doc_ids[0]
-    gaps[1:] = np.diff(doc_ids)
-    gaps[starts] = doc_ids[starts]
-    buf = vbyte_encode(gaps)
-    v = gaps.astype(np.uint64)
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp > 0
-        if not nz.any():
-            break
-        nbits[nz] += 1
-        tmp = tmp >> np.uint64(7)
-    nbytes = np.maximum(nbits, 1)
-    ends = np.cumsum(nbytes)
-    bounds = [0] + [int(ends[min(s + block_size, n) - 1]) for s in starts]
-    return [buf[bounds[i] : bounds[i + 1]] for i in range(len(starts))]
+    gaps, starts = _block_gaps(doc_ids, block_size)
+    return _encode_split(gaps, starts, block_size)
 
 
 def encode_posting_blocks(
@@ -142,51 +155,12 @@ def encode_posting_blocks(
     Equivalent to [encode_posting_block(chunk) for chunk in chunks] — pinned
     by tests — but ~block_count× fewer numpy dispatches (head terms at
     10^12 docs have millions of blocks)."""
-    n = len(doc_ids)
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    starts = np.arange(0, n, block_size)
-    gaps = np.empty_like(doc_ids)
-    gaps[0] = doc_ids[0]
-    gaps[1:] = np.diff(doc_ids)
-    gaps[starts] = doc_ids[starts]  # restart: block-local first id is raw
-
-    def _split(values: np.ndarray) -> list[bytes]:
-        buf = vbyte_encode(values)
-        # byte length per value: ceil(bitlen/7) min 1 (mirrors vbyte_encode)
-        v = values.astype(np.uint64)
-        nbits = np.zeros(v.shape, dtype=np.int64)
-        tmp = v.copy()
-        while True:
-            nz = tmp > 0
-            if not nz.any():
-                break
-            nbits[nz] += 1
-            tmp = tmp >> np.uint64(7)
-        nbytes = np.maximum(nbits, 1)
-        ends = np.cumsum(nbytes)
-        bounds = [0] + [int(ends[min(s + block_size, n) - 1]) for s in starts]
-        return [buf[bounds[i] : bounds[i + 1]] for i in range(len(starts))]
-
+    gaps, starts = _block_gaps(doc_ids, block_size)
     return (
-        _split(gaps),
-        _split(np.asarray(tfs, dtype=np.int64)),
-        _split(np.asarray(dls, dtype=np.int64)),
+        _encode_split(gaps, starts, block_size),
+        _encode_split(tfs, starts, block_size),
+        _encode_split(dls, starts, block_size),
     )
-
-
-def decode_doc_gap_blocks_batch(
-    docs_bufs: list[bytes], ns: np.ndarray
-) -> np.ndarray:
-    """Decode many gap-blocks of one posting list in one pass (carry-reset
-    cumsum; see decode_posting_blocks_batch)."""
-    ns = np.asarray(ns, dtype=np.int64)
-    total = int(ns.sum())
-    gaps = vbyte_decode(b"".join(docs_bufs), total)
-    run = np.cumsum(gaps)
-    starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    carry = np.zeros(len(ns), dtype=np.int64)
-    carry[1:] = run[starts[1:] - 1]
-    return run - np.repeat(carry, ns)
 
 
 def decode_posting_blocks_batch(

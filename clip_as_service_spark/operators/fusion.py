@@ -99,7 +99,7 @@ class HybridReader:
         from .ann_index import AnnReader
         from .wand import IndexReader
 
-        self.lex = IndexReader(None, text_index_dir, engine="pyarrow")
+        self.lex = IndexReader(None, text_index_dir)
         self.ann = AnnReader(ann_index_dir)
         self.dim = int(self.ann.meta["dim"])
 

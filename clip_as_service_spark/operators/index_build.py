@@ -28,7 +28,6 @@ wall_ms) rows to build_log; restart skips completed stages.
 
 from __future__ import annotations
 
-import math
 import time
 from typing import Iterator
 
@@ -36,13 +35,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from .. import B, K1
 from ..functions.codec import BLOCK_SIZE, encode_posting_blocks, impact_weights
 from ..sources.tables import IndexStorage
 from . import tokenize as tok
+from .bm25 import _idf_udf
 
 # Block layout (format v2): docs are delta-gap + vByte; tf and dl are vByte
 # (~1-2 bytes each) and the impact weight w = tf·(k1+1)/(tf + k1·(1−b+b·dl/
@@ -57,17 +55,6 @@ BLOCKS_SCHEMA = (
     "first_doc long, last_doc long, max_w double, idf double, "
     "bytes int, docs binary, tfs binary, dls binary"
 )
-
-
-@pandas_udf(DoubleType())
-def _idf_udf(df_col: pd.Series, n_docs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-            for d, n in zip(df_col.astype("int64"), n_docs.astype("int64"))
-        ],
-        dtype="float64",
-    )
 
 
 def build_index(

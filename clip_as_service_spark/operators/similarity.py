@@ -66,39 +66,6 @@ def rh_planes(dim: int, n_bits: int = 16, seed: int = 42) -> "np.ndarray":
     return np.random.default_rng(seed).standard_normal((n_bits, dim))
 
 
-def rh_bucket_col(
-    vec,
-    dim: int,
-    n_bits: int = 16,
-    seed: int = 42,
-    sign_round_dp: int | None = None,
-) -> F.Column:
-    """sign-LSH bucket from RANDOM hyperplanes: bit j = 1 iff vec·r_j ≥ 0,
-    r_j ~ N(0,I) seeded — deterministic, identical on every executor.
-
-    Unlike the axis-aligned variant (bucket_col), random planes split the
-    space isotropically, so 2^n_bits buckets stay near-uniformly occupied on
-    real (anisotropic) embedding distributions — axis planes collapse to a
-    few hot buckets when early dimensions are correlated. The planes fold
-    into the plan as float literals (n_bits·dim doubles ≈ KBs): JVM-side
-    codegen, no Python, no broadcast variable to manage.
-
-    sign_round_dp: round the dot product before taking its sign — used by
-    cross-engine oracle queries so a last-ulp summation-order difference
-    between engines cannot flip a boundary sign (engine-internal use leaves
-    it None: raw sign)."""
-    planes = rh_planes(dim, n_bits, seed)
-    out = None
-    for j in range(n_bits):
-        r = F.array(*[F.lit(float(x)) for x in planes[j]])
-        dot = _dot(vec, r)
-        if sign_round_dp is not None:
-            dot = F.round(dot, sign_round_dp)
-        bit = F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        out = bit if out is None else out + bit
-    return out.cast("int")
-
-
 def rh_buckets_udf(
     dim: int,
     n_bits: int,

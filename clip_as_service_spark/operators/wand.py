@@ -1,30 +1,35 @@
-"""Query path over the compressed index: exact top-k via block-max WAND —
-the *search* verb (SURVEY.md §3.3).
+"""Query path over the compressed index: exact BM25 top-k — the *search*
+verb (SURVEY.md §3.3).
 
 Reference semantics: per-shard local top-k then global merge
 (retriever.md:178-225 ANY/ALL polling); exactly `limit` results
 (tests/test_search.py:41-44); descending order (tests/test_ranker.py:34-35).
 
-Three physical strategies, identical results:
+Every in-memory query is scored by one family of vectorized
+term-at-a-time kernels — numpy over whole decoded blocks, no per-posting
+Python (column-at-a-time scoring, as in "Columnar Formatted Inverted Index
+for Highly-Paralleled, Vectorized Query Processing", ICDE 2025):
 
-- ``IndexReader.search(text, k)`` — interactive low-latency path: the query
-  is tokenized on the driver (vendored tokenizer), term shards are computed
-  driver-side with the Spark-identical pure-Python xxhash64, and ONE Spark
-  job scans the pruned block set; WAND runs on the driver over the collected
-  blocks. Latency = one filtered parquet scan.
+- ``_taat_single_term`` — blocks in descending max_w order, decoded in
+  chunks into a running top-k; stops once no undecoded block can reach the
+  kth score (the block-max bound of Ding & Suel, SIGIR 2011).
+- ``_taat_multi_term`` — dense ids past ``MULTI_TAAT_EARLY_MIN_POSTINGS``:
+  impact-ordered chunked decode across terms, Σ-remaining-bound stop, exact
+  ascending-term re-score of the candidate set.
+- full decode (the rest of ``taat_topk``; ``taat_topk_decoded`` over the
+  reader's decoded-term memo) — every list decoded and folded. Past
+  ``DECODE_MAX_POSTINGS`` postings it folds doc-id windows cut on block
+  boundaries and merges a running top-k, so decoded memory stays bounded.
 
-- ``search_topk(..., mode="wand")`` — batch of queries, one task per query
-  inside applyInPandas. In-task scorer mirrors the reader's crossover:
-  vectorized TAAT while decoded lists fit the memory bound (measured
-  20-30× faster at tens of millions of postings), document-at-a-time WAND
-  with a bounded min-heap beyond it. WAND blocks decode lazily; advancing
-  skips whole blocks via last_doc; pruning uses admissible upper bounds
-  (idf · max block max_w) inflated by 1+1e-9 so float rounding of the UB
-  sum can never prune a true top-k doc → both scorers EXACT.
+Bounds are inflated by 1+1e-9 (``_UB_SAFETY``) so float rounding can never
+stop a decode that a true top-k doc still needs → every kernel is EXACT.
 
-- ``search_topk(..., mode="exploded")`` — decode all candidate blocks via
-  mapInPandas into (term, doc_id, idf·w) rows, ordered-fold sum, window
-  top-k. Shuffle-heavy but fully distributed; the high-QPS batch path.
+Callers: ``IndexReader.search(text, k)`` — interactive, tokenized on the
+driver, block rows read with pyarrow, no Spark job per query; and
+``search_topk(..., mode="wand")`` — batch, one applyInPandas task per query
+running ``taat_topk``. ``mode="exploded"`` is the fully distributed plan
+(decode → (term, doc_id, idf·w) rows → ordered-fold sum → window top-k);
+``mode="auto"`` routes per query by posting volume.
 
 Block rows carry their term's idf (denormalized at build), so no dictionary
 lookup happens at query time; corpus stats ride in _meta.json.
@@ -35,20 +40,16 @@ idf·w summed in ascending-term order; tie-break (score DESC, doc_id ASC).
 
 from __future__ import annotations
 
-import heapq
+import functools
 import time
-from typing import Iterator, Sequence
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.codec import (
-    decode_posting_blocks_batch,
-    impact_weights,
-    vbyte_decode,
-)
+from ..functions.codec import decode_posting_blocks_batch, impact_weights
 from ..functions.hashing import term_shard
 from ..sources.tables import IndexStorage
 from ..textnorm import tokenize_words
@@ -59,70 +60,8 @@ _UB_SAFETY = 1.0 + 1e-9
 
 
 # ---------------------------------------------------------------------------
-# WAND core (shared by driver path and applyInPandas path)
+# vectorized TAAT kernels (shared by the driver path and applyInPandas)
 # ---------------------------------------------------------------------------
-
-
-class _Cursor:
-    __slots__ = (
-        "term", "idf", "ub", "blocks", "bi", "pos", "doc_ids", "ws", "_bm25",
-    )
-
-    def __init__(self, term: str, idf: float, blocks: Sequence, bm25: tuple):
-        # blocks: rows with .n/.first_doc/.last_doc/.max_w/.docs/.tfs/.dls,
-        # sorted by first_doc; bm25 = (avgdl, k1, b) for w recomputation
-        self.term = term
-        self.idf = idf
-        self.blocks = blocks
-        self._bm25 = bm25
-        self.ub = idf * max(b.max_w for b in blocks)
-        self.bi = 0
-        self._load_block()
-
-    def _load_block(self):
-        row = self.blocks[self.bi]
-        self.doc_ids = np.cumsum(vbyte_decode(row.docs, row.n))
-        avgdl, k1, b = self._bm25
-        self.ws = impact_weights(
-            vbyte_decode(row.tfs, row.n), vbyte_decode(row.dls, row.n),
-            avgdl, k1, b,
-        )
-        self.pos = 0
-
-    @property
-    def doc(self) -> int:
-        return int(self.doc_ids[self.pos])
-
-    @property
-    def exhausted(self) -> bool:
-        return self.bi >= len(self.blocks)
-
-    def partial(self) -> float:
-        return self.idf * float(self.ws[self.pos])
-
-    def advance(self) -> bool:
-        self.pos += 1
-        if self.pos >= len(self.doc_ids):
-            self.bi += 1
-            if self.exhausted:
-                return False
-            self._load_block()
-        return True
-
-    def seek(self, target: int) -> bool:
-        """advance to first doc >= target, skipping blocks via last_doc
-        metadata (no decode of skipped blocks)."""
-        skipped = False
-        while self.blocks[self.bi].last_doc < target:
-            self.bi += 1
-            skipped = True
-            if self.exhausted:
-                return False
-        if skipped:
-            self._load_block()
-        idx = int(np.searchsorted(self.doc_ids, target, side="left"))
-        self.pos = idx  # last_doc >= target ⇒ idx < n
-        return True
 
 
 def _mask_deleted(docs: np.ndarray, w: np.ndarray, deleted):
@@ -137,97 +76,12 @@ def _mask_deleted(docs: np.ndarray, w: np.ndarray, deleted):
     return docs[m], w[m]
 
 
-def wand_topk(
-    cursors: list[_Cursor], k: int, deleted=None
-) -> list[tuple[int, int, float]]:
-    """exact top-k [(rank, doc_id, score)] over posting cursors —
-    Block-Max WAND (Ding & Suel, SIGIR 2011 — public algorithm):
-
-    1. pivot by term-level UBs (idf · max over blocks);
-    2. before scoring a pivot, re-check with the CURRENT BLOCKS' max_w — if
-       even those can't reach θ, jump past min(block boundary, next cursor)
-       without decoding (the shallow advance that makes Zipf-head single-
-       and two-term queries skip most of their posting lists);
-    3. bounds are inflated by 1+1e-9 so float rounding can never prune a
-       true top-k doc → EXACT.
-
-    ``deleted``: optional set of tombstoned doc_ids (delete_docs) — a
-    deleted pivot is advanced past without scoring, so it can neither
-    appear in results nor raise θ and shadow a live doc."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-    alive = [c for c in cursors if not c.exhausted]
-    while alive:
-        alive.sort(key=lambda c: c.doc)
-        theta = heap[0][0] if len(heap) >= k else None
-        acc = 0.0
-        pivot = None
-        for i, c in enumerate(alive):
-            acc += c.ub
-            if theta is None or acc * _UB_SAFETY >= theta:
-                pivot = i
-                break
-        if pivot is None:
-            break
-        pivot_doc = alive[pivot].doc
-        candidates = alive[: pivot + 1]
-        if theta is not None:
-            # block-max refinement over the candidates' CURRENT blocks
-            block_ub = 0.0
-            for c in candidates:
-                block_ub += c.idf * c.blocks[c.bi].max_w
-            if block_ub * _UB_SAFETY < theta:
-                # nothing in [pivot_doc, d_next) can reach θ: the only
-                # cursors covering that range are the candidates' current
-                # blocks (cursor pivot+1 starts at its current doc)
-                d_boundary = min(c.blocks[c.bi].last_doc for c in candidates)
-                d_next = d_boundary + 1
-                if pivot + 1 < len(alive):
-                    d_next = min(d_next, alive[pivot + 1].doc)
-                d_next = max(d_next, pivot_doc + 1)
-                for c in candidates:
-                    if not c.exhausted and c.doc < d_next:
-                        c.seek(d_next)
-                alive = [c for c in alive if not c.exhausted]
-                continue
-        if alive[0].doc == pivot_doc:
-            if deleted is not None and pivot_doc in deleted:
-                # tombstoned: advance past without scoring (and without
-                # letting it into the heap where it would raise θ)
-                for c in alive:
-                    if not c.exhausted and c.doc == pivot_doc:
-                        c.advance()
-                alive = [c for c in alive if not c.exhausted]
-                continue
-            parts = []
-            for c in alive:
-                if c.doc != pivot_doc:
-                    break
-                parts.append((c.term, c.partial()))
-            parts.sort(key=lambda p: p[0])  # ascending-term float64 fold
-            score = 0.0
-            for _, p in parts:
-                score += p
-            entry = (score, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, entry)
-            elif entry > heap[0]:
-                heapq.heapreplace(heap, entry)
-            for c in alive:
-                if not c.exhausted and c.doc == pivot_doc:
-                    c.advance()
-            alive = [c for c in alive if not c.exhausted]
-        else:
-            alive[0].seek(pivot_doc)
-            alive = [c for c in alive if not c.exhausted]
-    ordered = sorted(heap, key=lambda e: (-e[0], -e[1]))
-    return [(r, -d, s) for r, (s, d) in enumerate(ordered, 1)]
-
-
 _DECODE_CHUNK_BLOCKS = 4096
 
 
 def _decode_block_group(blks, bm25: tuple):
-    """Batch-decode a list of block rows of ONE term → (docs, w).
+    """Batch-decode a list of block rows → (docs, w), concatenated in row
+    order (blocks decode independently, so the rows may mix terms).
 
     Large groups decode in bounded chunks: vbyte_decode's general path
     allocates several #bytes-sized temporaries, and a Zipf-head term's
@@ -254,6 +108,13 @@ def _decode_block_group_raw(blks, bm25: tuple):
     return docs, impact_weights(tfs, dls, avgdl, k1, b)
 
 
+# the most postings a scorer decodes at once (~16 B/posting decoded, so
+# 250M ⇒ ≤ 4 GB). A module constant read on the driver — by
+# IndexReader.search, and by _make_wand, whose closure captures it for the
+# executors — so an override on the driver reaches every scorer.
+DECODE_MAX_POSTINGS = 250_000_000
+
+
 def taat_topk(
     rows,
     k: int,
@@ -261,33 +122,24 @@ def taat_topk(
     n_docs: int | None = None,
     chunk_blocks: int = 4096,
     deleted=None,
+    max_postings: int | None = None,
 ) -> list[tuple[int, int, float]]:
-    """Vectorized exact term-at-a-time scorer.
+    """Vectorized exact term-at-a-time scorer over a query's block rows.
 
-    Single-term queries take a BLOCK-MAX EARLY-STOP path: blocks sort by
-    max_w DESC and decode in chunks; with one term, a decoded doc's partial
-    IS its exact score, so once k docs beat idf·(best undecoded max_w)
-    (inflated by the 1+1e-9 WAND safety so boundary ties keep decoding), the
-    Zipf-head tail never decodes — exact, and the common worst-latency case
-    ("the"-style head-term queries) skips most of its list.
+    - one term: _taat_single_term's block-max early stop — with one term a
+      decoded doc's partial IS its exact score, so a Zipf-head list stops
+      decoding once k docs beat idf·(best undecoded max_w);
+    - dense ids past ``MULTI_TAAT_EARLY_MIN_POSTINGS``: _taat_multi_term's
+      two-phase early stop (below it a full vectorized decode beats the
+      stop's bookkeeping — a sum-of-remaining-UBs stop with no candidate
+      phase was measured NET-SLOWER at 6.4M docs);
+    - otherwise a full decode, in one pass up to ``max_postings`` postings
+      (default ``DECODE_MAX_POSTINGS``) and in doc-id windows of about
+      that many past it (_taat_windowed).
 
-    Multi-term queries above ``MULTI_TAAT_EARLY_MIN_POSTINGS`` (dense-id
-    indexes only) take the two-phase block-max early-stop path
-    (_taat_multi_term): decode block-chunks ACROSS terms in descending
-    idf·block-max order, stop exactly when the Σ of the terms' remaining
-    block maxima can no longer lift any doc outside the candidate set into
-    the top-k, then re-score only the candidates with the oracle's
-    ascending-term float64 fold — exact, same guarantee the single-term
-    stop gives, vectorized, no per-posting Python. Below the threshold a
-    full vectorized decode is faster than the stop's bookkeeping (a
-    sum-of-remaining-UBs stop with no candidate phase was measured
-    NET-SLOWER at 6.4M docs — this version stops the moment the bound
-    fires and hands the tail to a candidate-driven decode instead of
-    waiting for the bound to close the whole gap). Accumulation of
-    RETURNED scores is always ascending-term (the oracle's float64
+    Returned scores always accumulate ascending-term (the oracle's float64
     association); top-k via lexsort with the (score DESC, doc ASC)
-    tie-break.
-    """
+    tie-break."""
     by_term: dict[str, list] = {}
     for row in rows:
         by_term.setdefault(row.term, []).append(row)
@@ -305,6 +157,11 @@ def taat_topk(
         return _taat_multi_term(
             by_term, k, bm25, n_docs, chunk_blocks, deleted=deleted
         )
+
+    if max_postings is None:
+        max_postings = DECODE_MAX_POSTINGS
+    if total > max_postings:
+        return _taat_windowed(by_term, k, bm25, max_postings, deleted=deleted)
 
     decoded = []
     for term in terms:
@@ -356,37 +213,108 @@ def taat_topk_decoded(
     return _topk_from_arrays(universe, scores, k)
 
 
+def _doc_windows(firsts, lasts, ns, max_postings: int) -> list[tuple[int, int]]:
+    """Cut the doc-id span of blocks (first_doc, last_doc, n arrays) into
+    half-open windows [lo, hi) at block boundaries (first_doc, last_doc+1),
+    greedily widest such that the blocks overlapping a window hold at most
+    ``max_postings`` postings. No window is narrower than one gap between
+    adjacent boundaries, inside which each posting list has at most one
+    block — so a window exceeds the bound only when that gap alone does, by
+    at most one block per list."""
+    cuts = np.unique(np.concatenate((firsts, lasts + 1)))
+    by_first = np.argsort(firsts, kind="stable")
+    by_last = np.argsort(lasts, kind="stable")
+    # postings in blocks starting / ending before each cut; the blocks
+    # overlapping [cuts[i], cuts[j]) hold started[j] - ended[i]
+    started = np.concatenate(([0], np.cumsum(ns[by_first])))[
+        np.searchsorted(firsts[by_first], cuts, side="left")
+    ]
+    ended = np.concatenate(([0], np.cumsum(ns[by_last])))[
+        np.searchsorted(lasts[by_last], cuts, side="left")
+    ]
+    windows = []
+    i, end = 0, len(cuts) - 1
+    while i < end:
+        j = int(np.searchsorted(started, ended[i] + max_postings, "right")) - 1
+        j = min(max(j, i + 1), end)
+        windows.append((int(cuts[i]), int(cuts[j])))
+        i = j
+    return windows
+
+
+def _taat_windowed(
+    by_term: dict[str, list], k: int, bm25: tuple, max_postings: int,
+    deleted=None,
+):
+    """Full-decode fold with bounded memory: per doc-id window
+    (_doc_windows), decode the overlapping blocks of every term in ONE
+    batch, mask them to the window, fold ascending-term
+    (taat_topk_decoded) and merge into a running top-k. Windows are
+    doc-disjoint, so each doc's score is complete inside its window and
+    bit-identical to the single-pass fold; the window's top-k holds every
+    doc of the global top-k that lies in it."""
+    terms = sorted(by_term)
+    blks = [b for t in terms for b in by_term[t]]  # ascending term
+    term_of = np.repeat(
+        np.arange(len(terms)), [len(by_term[t]) for t in terms]
+    )
+    idfs = np.array([float(by_term[t][0].idf) for t in terms])
+    firsts = np.array([b.first_doc for b in blks], dtype=np.int64)
+    lasts = np.array([b.last_doc for b in blks], dtype=np.int64)
+    ns = np.array([b.n for b in blks], dtype=np.int64)
+    best: list = []
+    for lo, hi in _doc_windows(firsts, lasts, ns, max_postings):
+        sel = np.flatnonzero((firsts < hi) & (lasts >= lo))
+        if not len(sel):
+            continue
+        docs, w = _decode_block_group([blks[j] for j in sel], bm25)
+        ti = np.repeat(term_of[sel], ns[sel])
+        m = (docs >= lo) & (docs < hi)
+        docs, w, ti = docs[m], w[m], ti[m]
+        # sel ascends, so ti is sorted: split into per-term runs
+        bounds = np.searchsorted(ti, np.arange(len(terms) + 1))
+        decoded = [
+            (terms[t], docs[a:b], idfs[t] * w[a:b])
+            for t, (a, b) in enumerate(zip(bounds[:-1], bounds[1:]))
+            if b > a
+        ]
+        best += taat_topk_decoded(decoded, k, deleted=deleted)
+        best = sorted(best, key=lambda e: (-e[2], e[1]))[:k]
+    return [(r, d, s) for r, (_, d, s) in enumerate(best, 1)]
+
+
 def _taat_single_term(blks, k: int, bm25: tuple, chunk_blocks: int, deleted=None):
     """Single-term exact top-k with block-max early stop (see taat_topk).
 
-    Tombstoned docs are masked PER CHUNK, before the kth-score threshold is
-    taken — a deleted doc holding the kth slot would inflate θ and stop the
-    decode while live docs that belong in the page are still undecoded."""
+    Keeps a running top-k — the docs at or above the current kth score plus
+    the newly decoded chunk — so memory is bounded by one chunk, not by the
+    list. Tombstoned docs are masked PER CHUNK, before the kth-score
+    threshold is taken — a deleted doc holding the kth slot would inflate θ
+    and stop the decode while live docs that belong in the page are still
+    undecoded."""
     blks = sorted(blks, key=lambda r: -r.max_w)
     idf = float(blks[0].idf)
-    doc_parts: list[np.ndarray] = []
-    score_parts: list[np.ndarray] = []
-    n_seen = 0
-    kth = None
+    kept = None
     i = 0
-    while i < len(blks):
+    while True:
         chunk = blks[i : i + chunk_blocks]
         i += len(chunk)
         docs, w = _decode_block_group(chunk, bm25)
         docs, w = _mask_deleted(docs, w, deleted)
-        doc_parts.append(docs)
-        score_parts.append(idf * w)
-        n_seen += len(docs)
+        scores = idf * w
+        if kept is not None:
+            docs = np.concatenate((kept[0], docs))
+            scores = np.concatenate((kept[1], scores))
         if i >= len(blks):
             break
-        if n_seen >= k:
-            scores = np.concatenate(score_parts) if len(score_parts) > 1 else score_parts[0]
-            kth = -np.partition(-scores, k - 1)[k - 1] if len(scores) >= k else None
-            if kth is not None and idf * blks[i].max_w * _UB_SAFETY < kth:
+        if len(scores) >= k:
+            kth = -np.partition(-scores, k - 1)[k - 1]
+            survive = scores >= kth
+            docs, scores = docs[survive], scores[survive]
+            if idf * blks[i].max_w * _UB_SAFETY < kth:
                 break  # no undecoded doc can reach (or tie) the kth score
-    universe = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    return _topk_from_arrays(universe, scores, k)
+        kept = (docs, scores)
+    return _topk_from_arrays(docs, scores, k)
 
 
 # engage the multi-term early stop only past this candidate volume: below
@@ -419,7 +347,7 @@ def _taat_multi_term(
     impact chunks (a lower bound of the true kth score, since partials only
     grow and the pool is a subset). Once rem < θ̃ no document outside
     C = {d : acc[d] + rem ≥ θ̃} can reach the final top-k — with the same
-    1+1e-9 float inflation the WAND bounds use, applied on both sides.
+    1+1e-9 float inflation the single-term stop uses, applied on both sides.
 
     Phase 2 — finalize: the final top-k ⊆ C, but phase-1 partial sums are
     neither complete nor in the oracle's fold order, so C is re-scored
@@ -592,17 +520,6 @@ def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
     return out
 
 
-def _cursors_from_rows(rows, bm25: tuple) -> list[_Cursor]:
-    by_key: dict[tuple, list] = {}
-    for row in rows:
-        by_key.setdefault((row.term, row.salt), []).append(row)
-    cursors = []
-    for (term, _salt), blks in by_key.items():
-        blks.sort(key=lambda r: r.first_doc)
-        cursors.append(_Cursor(term, float(blks[0].idf), blks, bm25))
-    return cursors
-
-
 # ---------------------------------------------------------------------------
 # interactive driver path (single Spark job per query)
 # ---------------------------------------------------------------------------
@@ -611,42 +528,34 @@ def _cursors_from_rows(rows, bm25: tuple) -> list[_Cursor]:
 class IndexReader:
     """Warm handle on an index for low-latency interactive search.
 
-    Default engine is a direct pyarrow dataset read — shard-dir partition
-    pruning + term row-group skipping in C++, zero Spark jobs per query
-    (the reference serves interactive search from a resident AnnLite index
-    the same way, retriever.md:117-136). Works wherever the driver can read
-    the index store (local disk here; object store on a cluster). Pass
-    ``engine="spark"`` to route the scan through Spark instead. Decoded
-    term cursors are memoized across queries (head terms repeat), and the
-    memo survives a delete-only refresh(): tombstones are masked at use,
-    so live deletes never cost a re-fetch or re-decode.
+    Block rows are read directly with pyarrow — shard-dir partition pruning
+    plus term row-group skipping, zero Spark jobs per query (the reference
+    serves interactive search from a resident AnnLite index the same way,
+    retriever.md:117-136). Works wherever the driver can read the index
+    store (local disk here; object store on a cluster). The leading
+    ``spark`` argument is unused and kept only for call-site compatibility;
+    pass None.
 
-    strategy='auto' crossover: vectorized TAAT (numpy, whole lists decoded)
-    up to ``taat_max_postings``; the per-posting-loop Python WAND only
-    beyond it. The bound is a MEMORY bound, not a latency bound — decoded
-    lists cost ~16 B/posting (default 250M ⇒ ≤4 GB peak), and measured at a
-    12.8M-doc index the heaviest fixture query (36.7M postings) runs in
-    ~14 s under TAAT vs minutes under driver-side Python WAND (the 30-query
-    loop: 129 s TAAT-forced vs >35 min under the old 20M crossover).
-    Posting volumes past the bound belong on the distributed search_topk
-    paths — the same boundary a deployment draws between a resident shard
-    reader and the cluster."""
+    Scoring is the vectorized TAAT family (see the module docstring). Fetched
+    block rows and fully decoded terms are memoized across queries (head
+    terms repeat), and the memo survives a delete-only refresh(): tombstones
+    are masked at use, so live deletes never cost a re-fetch or re-decode.
+    Cold single-term and cold heavy multi-term queries take the early-stop
+    kernels, which decode part of a list and are not memoized; a query over
+    ``DECODE_MAX_POSTINGS`` postings goes to ``taat_topk`` too, whose
+    windowed fold bounds decoded memory (~16 B/posting) instead of
+    memoizing whole lists. Posting volumes that large belong on the
+    distributed search_topk paths — the same boundary a deployment draws
+    between a resident shard reader and the cluster."""
 
     def __init__(
         self,
         spark: SparkSession | None,
         index_dir: str,
-        engine: str = "pyarrow",
-        strategy: str = "auto",
-        taat_max_postings: int = 250_000_000,
         raw_cache_bytes: int | None = None,
         decoded_cache_bytes: int | None = None,
     ):
-        self.spark = spark
         self.store = IndexStorage(index_dir)
-        self.engine = engine
-        self.strategy = strategy
-        self.taat_max_postings = taat_max_postings
         # cache budgets: class defaults suit a few-million-doc shard; SIZE TO
         # THE CORPUS for bigger shards — one Zipf-head term decodes to
         # ~16 B/posting (205 MB at df=12.8M), and a budget smaller than the
@@ -696,7 +605,7 @@ class IndexReader:
         # at construction/refresh; masked out of every scorer. The
         # decoded/raw caches stay UNFILTERED (delete-independent), the
         # mask applies at use.
-        self._deleted_arr = self._deleted_set = None
+        self._deleted_arr = None
         if self.store.exists("deleted_docs"):
             import pyarrow.dataset as pads
 
@@ -710,7 +619,6 @@ class IndexReader:
             )
             if len(ids):
                 self._deleted_arr = ids
-                self._deleted_set = set(int(i) for i in ids)
 
     def _index_snapshot(self) -> tuple:
         """(path, size, mtime_ns) of every file under ``blocks/``, plus the
@@ -747,19 +655,14 @@ class IndexReader:
         self._decoded_cache.clear()
         self._decoded_sizes.clear()
         self._decoded_bytes = 0
-        if self.engine == "pyarrow":
-            # per-shard ParquetFile handles + per-row-group (min, max) term
-            # stats, built once per index change: a fetch then opens no
-            # files and reads no footers — it prunes row groups driver-side
-            # (files are term-sorted at build, so the stats are selective)
-            # and issues direct read_row_groups calls. Measured ~2× faster
-            # per query than re-filtering a hive dataset (which re-evaluates
-            # partition + stats expressions per to_table call).
-            self._pq_files = self._build_pq_handles()
-            self.blocks = None
-        else:
-            self._pq_files = None
-            self.blocks = self.store.read(self.spark, "blocks")
+        # per-shard ParquetFile handles + per-row-group (min, max) term stats,
+        # built once per index change: a fetch then opens no files and reads
+        # no footers — it prunes row groups driver-side (files are
+        # term-sorted at build, so the stats are selective) and issues
+        # direct read_row_groups calls. Measured ~2× faster per query than
+        # re-filtering a hive dataset (which re-evaluates partition + stats
+        # expressions per to_table call).
+        self._pq_files = self._build_pq_handles()
         self._snapshot = snapshot
 
     # cache byte budgets (defaults sized for a long-lived service reader;
@@ -804,37 +707,23 @@ class IndexReader:
         missing = [t for t in terms if t not in self._term_rows_cache]
         if missing:
             shards = sorted({term_shard(t, self.meta["n_shards"]) for t in missing})
-            if self.engine == "pyarrow":
-                import pyarrow as pa
-                import pyarrow.compute as pc
+            import pyarrow as pa
+            import pyarrow.compute as pc
 
-                parts = []
-                for s in shards:
-                    for pf, stats in self._pq_files.get(s, []):
-                        rgs = [
-                            i
-                            for i, (mn, mx) in enumerate(stats)
-                            if mn is None
-                            or any(mn <= t <= mx for t in missing)
-                        ]
-                        if rgs:
-                            part = pf.read_row_groups(
-                                rgs, columns=list(_ARROW_COLS),
-                                use_threads=True,
-                            )
-                            parts.append(
-                                part.filter(pc.field("term").isin(missing))
-                            )
-                tbl = (
-                    pa.concat_tables(parts)
-                    if parts
-                    else None
-                )
-                fetched = _arrow_rows(tbl) if tbl is not None else []
-            else:
-                fetched = self.blocks.where(
-                    F.col("shard").isin(shards) & F.col("term").isin(missing)
-                ).collect()
+            parts = []
+            for s in shards:
+                for pf, stats in self._pq_files.get(s, []):
+                    rgs = [
+                        i
+                        for i, (mn, mx) in enumerate(stats)
+                        if mn is None or any(mn <= t <= mx for t in missing)
+                    ]
+                    if rgs:
+                        part = pf.read_row_groups(
+                            rgs, columns=list(_ARROW_COLS), use_threads=True,
+                        )
+                        parts.append(part.filter(pc.field("term").isin(missing)))
+            fetched = _arrow_rows(pa.concat_tables(parts)) if parts else []
             for t in missing:
                 self._term_rows_cache[t] = []
             for row in fetched:
@@ -943,52 +832,31 @@ class IndexReader:
             entry["total_ms"] = 1000 * (time.perf_counter() - t0)
             self._log_query(entry)
             return []
-        strategy = self.strategy
-        if strategy == "auto":
-            strategy = (
-                "taat"
-                if entry["n_postings"] <= self.taat_max_postings
-                else "wand"
+        entry["strategy"] = "taat"
+        n_docs = (
+            self.meta["n_docs"]
+            if self.meta.get("doc_id_method")
+            in ("dense", "dense_sorted", "row_number")
+            else None
+        )
+        hit_terms = [t for t in terms if self._term_rows_cache.get(t)]
+        cold = [t for t in hit_terms if t not in self._decoded_cache]
+        early_stop = len(hit_terms) == 1 or (
+            n_docs is not None
+            and entry["n_postings"] > MULTI_TAAT_EARLY_MIN_POSTINGS
+        )
+        if entry["n_postings"] > DECODE_MAX_POSTINGS or (cold and early_stop):
+            # over the memory bound (windowed fold), or a cold single-term /
+            # cold heavy dense multi-term query (block-max early stops):
+            # partial or windowed decodes are deliberately NOT memoized —
+            # the memo stores only full lists; warm repeats hit it below
+            out = taat_topk(
+                rows, k, self._bm25, n_docs=n_docs, deleted=self._deleted_arr
             )
-        entry["strategy"] = strategy
-        if strategy == "taat":
-            n_docs = (
-                self.meta["n_docs"]
-                if self.meta.get("doc_id_method")
-                in ("dense", "dense_sorted", "row_number")
-                else None
-            )
-            hit_terms = [t for t in terms if self._term_rows_cache.get(t)]
-            cold = [t for t in hit_terms if t not in self._decoded_cache]
-            if len(hit_terms) == 1 and cold:
-                # cold single-term: block-max early stop (partial decode —
-                # deliberately NOT cached: the memo stores only full lists)
-                out = taat_topk(
-                    rows, k, self._bm25, n_docs=n_docs,
-                    deleted=self._deleted_arr,
-                )
-            elif (
-                len(hit_terms) > 1
-                and cold
-                and n_docs is not None
-                and entry["n_postings"] > MULTI_TAAT_EARLY_MIN_POSTINGS
-            ):
-                # cold heavy multi-term: two-phase block-max early stop
-                # (_taat_multi_term) — like the single-term stop, partial
-                # decodes are not memoized; warm repeats hit the memo path
-                out = taat_topk(
-                    rows, k, self._bm25, n_docs=n_docs,
-                    deleted=self._deleted_arr,
-                )
-            else:
-                out = taat_topk_decoded(
-                    [self._decoded_term(t) for t in hit_terms], k,
-                    n_docs=n_docs, deleted=self._deleted_arr,
-                )
         else:
-            out = wand_topk(
-                _cursors_from_rows(rows, self._bm25), k,
-                deleted=self._deleted_set,
+            out = taat_topk_decoded(
+                [self._decoded_term(t) for t in hit_terms], k,
+                n_docs=n_docs, deleted=self._deleted_arr,
             )
         t_score = time.perf_counter()
         entry["score_ms"] = 1000 * (t_score - t_fetch)
@@ -1134,13 +1002,16 @@ def search_topk(
 ) -> DataFrame:
     """→ (query_id, rank, doc_id, score); queries(query_id, text).
 
-    mode="auto" routes PER QUERY by estimated candidate volume (Σ block n —
-    read from block metadata columns only, never the payloads): queries under
-    ``heavy_postings`` run single-task WAND (parallelism = #queries, skipping
-    pays); heavier queries — a Zipf-head single-term query would serialize
-    its whole posting list into one WAND task — run the fully distributed
-    exploded plan instead. Mirrors the IndexReader driver-side auto strategy
-    (taat_max_postings) with the same crossover logic.
+    mode="wand" runs one applyInPandas task per query: the query's
+    candidate blocks are grouped by query_id and scored by ``taat_topk``
+    (the vectorized TAAT kernels, the reader's scorer; decoded memory
+    bounded by ``DECODE_MAX_POSTINGS``). mode="exploded" is the fully
+    distributed plan (_search_exploded). mode="auto" routes PER QUERY by
+    estimated candidate volume (Σ block n — read from block metadata columns
+    only, never the payloads): queries under ``heavy_postings`` take the
+    per-query task (parallelism = #queries, early stops pay); heavier
+    queries — a Zipf-head single-term query would serialize its whole
+    posting list into one task — take the exploded plan.
 
     NOTE mode="auto" is not fully lazy: the volume estimate runs ONE eager
     Spark job (a metadata-only aggregate) before the returned DataFrame is
@@ -1158,7 +1029,7 @@ def search_topk(
     )
     # merge-on-read doc deletes (delete_docs): tombstoned ids are dropped
     # from every scorer BEFORE ranking. Collected once per call (the table
-    # is delete-sized) and broadcast to the WAND/TAAT closures; the
+    # is delete-sized) and broadcast to the per-query TAAT tasks; the
     # exploded plan anti-joins distributed instead. Corpus stats stay
     # STALE until purge_deleted_docs (Lucene's merge-on-read posture):
     # surviving docs keep their exact pre-delete scores — pinned by test.
@@ -1186,63 +1057,49 @@ def search_topk(
     qt = spark.createDataFrame(qt_rows, "query_id int, term string")
     joined = cand.join(F.broadcast(qt), "term")
 
-    if mode == "wand":
-        return joined.groupBy("query_id").applyInPandas(
+    def per_query(df: DataFrame) -> DataFrame:
+        return df.groupBy("query_id").applyInPandas(
             _make_wand(k, bm25, deleted_bc=deleted_bc, n_docs=dense_n_docs),
             schema=TOPK_SCHEMA,
         )
+
+    if mode == "wand":
+        return per_query(joined)
     if mode == "exploded":
         return _search_exploded(joined, k, bm25, deleted_ids=deleted_ids)
-    if mode == "auto":
-        if routing is None:
-            # volume estimate: one tiny agg over (query_id, n) — parquet
-            # column pruning keeps the binary docs/ws columns unread
-            vols = _query_volumes(joined)
+    if mode != "auto":
+        raise ValueError(f"unknown mode {mode!r}")
+    if routing is None:
+        # volume estimate: one tiny agg over (query_id, n) — parquet column
+        # pruning keeps the binary docs/tfs/dls columns unread
+        routing = _route(joined, heavy_postings)
+    else:
+        # a caller-supplied routing may lag the query set — estimate the
+        # stragglers rather than silently dropping their results
+        unrouted = {r["query_id"] for r in qt_rows} - set(routing)
+        if unrouted:
             routing = {
-                q: ("exploded" if v > heavy_postings else "wand")
-                for q, v in vols.items()
+                **routing,
+                **_route(
+                    joined.filter(F.col("query_id").isin(sorted(unrouted))),
+                    heavy_postings,
+                ),
             }
-        else:
-            # a caller-supplied routing may lag the query set — estimate the
-            # stragglers rather than silently dropping their results
-            unrouted = {r["query_id"] for r in qt_rows} - set(routing)
-            if unrouted:
-                vols = _query_volumes(
-                    joined.filter(F.col("query_id").isin(sorted(unrouted)))
-                )
-                routing = {
-                    **routing,
-                    **{
-                        q: ("exploded" if v > heavy_postings else "wand")
-                        for q, v in vols.items()
-                    },
-                }
-        heavy = sorted(q for q, m in routing.items() if m == "exploded")
-        parts = []
-        if heavy:
-            parts.append(
-                _search_exploded(
-                    joined.filter(F.col("query_id").isin(heavy)), k, bm25,
-                    deleted_ids=deleted_ids,
-                )
+    parts = []
+    heavy = sorted(q for q, m in routing.items() if m == "exploded")
+    if heavy:
+        parts.append(
+            _search_exploded(
+                joined.filter(F.col("query_id").isin(heavy)), k, bm25,
+                deleted_ids=deleted_ids,
             )
-        light = sorted(q for q, m in routing.items() if m == "wand")
-        if light:
-            parts.append(
-                joined.filter(F.col("query_id").isin(light))
-                .groupBy("query_id")
-                .applyInPandas(
-                    _make_wand(k, bm25, deleted_bc=deleted_bc, n_docs=dense_n_docs),
-                    schema=TOPK_SCHEMA,
-                )
-            )
-        if not parts:
-            return spark.createDataFrame([], TOPK_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    raise ValueError(f"unknown mode {mode!r}")
+        )
+    light = sorted(q for q, m in routing.items() if m == "wand")
+    if light:
+        parts.append(per_query(joined.filter(F.col("query_id").isin(light))))
+    if not parts:
+        return spark.createDataFrame([], TOPK_SCHEMA)
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 # one live tombstone broadcast per index_dir (ADVICE r06: a long-lived
@@ -1282,9 +1139,11 @@ def _deleted_broadcast(spark: SparkSession, store: IndexStorage, ids: list):
     return bc
 
 
-def _query_volumes(joined: DataFrame) -> dict[int, int]:
+def _route(joined: DataFrame, heavy_postings: int) -> dict[int, str]:
+    """{query_id: 'exploded' if its candidate postings exceed
+    ``heavy_postings`` else 'wand'} over candidate blocks × query terms."""
     return {
-        r["query_id"]: r["v"]
+        r["query_id"]: "exploded" if r["v"] > heavy_postings else "wand"
         for r in joined.groupBy("query_id").agg(F.sum("n").alias("v")).collect()
     }
 
@@ -1307,25 +1166,16 @@ def query_routing(
     if cand is None or not qt_rows:
         return {}
     qt = spark.createDataFrame(qt_rows, "query_id int, term string")
-    vols = _query_volumes(cand.join(F.broadcast(qt), "term"))
-    return {
-        q: ("exploded" if v > heavy_postings else "wand")
-        for q, v in vols.items()
-    }
-
-
-_BATCH_TAAT_MAX_POSTINGS = 250_000_000  # same memory bound as IndexReader
+    return _route(cand.join(F.broadcast(qt), "term"), heavy_postings)
 
 
 def _make_wand(
-    k: int, bm25: tuple, taat_max: int | None = None, deleted_bc=None,
-    n_docs: int | None = None,
+    k: int, bm25: tuple, deleted_bc=None, n_docs: int | None = None,
 ):
-    # the crossover is read HERE (driver side) and captured by the closure —
-    # executor workers re-import the module, so a module global read inside
-    # the UDF would ignore driver-side overrides
-    if taat_max is None:
-        taat_max = _BATCH_TAAT_MAX_POSTINGS
+    # the memory bound is read HERE (driver side) and captured by the
+    # closure — executor workers re-import the module, so a module global
+    # read inside the UDF would ignore driver-side overrides
+    max_postings = DECODE_MAX_POSTINGS
 
     def _wand(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
@@ -1333,25 +1183,19 @@ def _make_wand(
                 {"query_id": [], "rank": [], "doc_id": [], "score": []}
             )
         # tombstoned doc_ids ride a Spark broadcast (shipped once per
-        # executor, not per task); sorted ndarray for the TAAT mask, set
-        # for WAND's per-pivot membership test
-        del_arr = del_set = None
-        if deleted_bc is not None:
-            del_arr = np.asarray(deleted_bc.value, dtype=np.int64)
-            del_set = set(deleted_bc.value)
+        # executor, not per task) as a sorted list
+        deleted = (
+            np.asarray(deleted_bc.value, dtype=np.int64)
+            if deleted_bc is not None
+            else None
+        )
         query_id = int(pdf["query_id"].iloc[0])
-        rows = list(pdf.itertuples(index=False))
-        # same crossover as the interactive reader: vectorized TAAT while
-        # decoded lists fit (~16 B/posting), per-posting Python WAND only
-        # beyond — measured 20-30× faster at tens of millions of postings
-        if int(pdf["n"].sum()) <= taat_max:
-            # n_docs (dense-id indexes) enables both the direct-array scorer
-            # and the multi-term block-max early stop inside taat_topk
-            result = taat_topk(rows, k, bm25, n_docs=n_docs, deleted=del_arr)
-        else:
-            result = wand_topk(
-                _cursors_from_rows(rows, bm25), k, deleted=del_set
-            )
+        # n_docs (dense-id indexes) enables both the direct-array scorer and
+        # the multi-term block-max early stop inside taat_topk
+        result = taat_topk(
+            list(pdf.itertuples(index=False)), k, bm25, n_docs=n_docs,
+            deleted=deleted, max_postings=max_postings,
+        )
         return pd.DataFrame(
             {
                 "query_id": np.full(len(result), query_id, dtype=np.int64),

@@ -109,7 +109,7 @@ def test_bpe_index_build_and_search_rank_identical(spark, tmp_path):
 
     queries = fixtures.make_queries()[:10]
     # interactive reader path (tokenizes via meta's term_mode)
-    reader = wand.IndexReader(None, out, engine="pyarrow")
+    reader = wand.IndexReader(None, out)
     for q in queries:
         got = reader.search(q["text"], k=5)
         expected = oracle.topk(q["text"], k=5)

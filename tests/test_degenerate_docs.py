@@ -77,7 +77,7 @@ def test_zero_token_docs_counted_in_stats(spark, tmp_path):
     assert meta["n_pages_input"] == 30
     assert meta["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
 
-    reader = wand.IndexReader(spark, out, strategy="taat")
+    reader = wand.IndexReader(None, out)
     # query with a term that appears in the LAST doc by url order (max id)
     last_url = max(p["url"] for p in pages if p["text"].strip())
     last_text = next(p["text"] for p in pages if p["url"] == last_url)

@@ -90,19 +90,17 @@ def test_delete_hides_doc_from_every_surface(spark, pages, built, queries):
     for mode in ("wand", "exploded", "auto"):
         got = _rows(wand.search_topk(spark, idx, queries, k=K_ALL, mode=mode))
         assert got == want, mode
-    # interactive reader, TAAT and WAND strategies
-    for strategy in ("taat", "wand"):
-        reader = wand.IndexReader(None, idx, strategy=strategy)
-        for q in queries.collect():
-            got_q = {
-                did: (rank, round(score, 12))
-                for rank, did, score in reader.search(q["text"], k=K_ALL)
-            }
-            want_q = {
-                did: v for (qid, did), v in want.items()
-                if qid == q["query_id"]
-            }
-            assert got_q == want_q, (strategy, q["text"])
+    # interactive reader
+    reader = wand.IndexReader(None, idx)
+    for q in queries.collect():
+        got_q = {
+            did: (rank, round(score, 12))
+            for rank, did, score in reader.search(q["text"], k=K_ALL)
+        }
+        want_q = {
+            did: v for (qid, did), v in want.items() if qid == q["query_id"]
+        }
+        assert got_q == want_q, q["text"]
     # phrase surfaces: a phrase unique to a deleted doc returns nothing
     victim_text = (
         pages.withColumn("doc_id", F.xxhash64("url"))
@@ -133,12 +131,45 @@ def test_single_term_early_stop_stays_exact_under_delete(
     top = next(did for (_q, did), (rank, _s) in before.items() if rank == 1)
     index_build.delete_docs(spark, idx, [top])
     want = _reranked(before, {top})
-    reader = wand.IndexReader(None, idx, strategy="taat")  # cold caches
+    reader = wand.IndexReader(None, idx)  # cold caches
     got = {
         (0, did): (rank, round(score, 12))
         for rank, did, score in reader.search(term, k=5)
     }
     assert got == {k: v for k, v in want.items() if v[0] <= 5}
+
+
+def test_forced_bound_exact_under_delete(spark, built, queries, monkeypatch):
+    """Hash ids, with each query's top-2 docs tombstoned: under a forced
+    memory bound of a few hundred postings (windowed fold), the reader and
+    search_topk(mode="wand") return the exploded plan's ranking — same ids,
+    same order, bit-equal scores."""
+    import shutil
+
+    idx = built + "_bound"
+    shutil.copytree(built, idx)
+    k = 20
+    before = _rows(wand.search_topk(spark, idx, queries, k=K_ALL, mode="exploded"))
+    index_build.delete_docs(
+        spark, idx, sorted({d for (_q, d), (rank, _s) in before.items() if rank <= 2})
+    )
+
+    def ranked(df):
+        out: dict[int, list] = {}
+        for r in sorted(df.collect(), key=lambda r: (r["query_id"], r["rank"])):
+            out.setdefault(r["query_id"], []).append(
+                (r["rank"], int(r["doc_id"]), r["score"])
+            )
+        return out
+
+    want = ranked(wand.search_topk(spark, idx, queries, k=k, mode="exploded"))
+    assert len(want) == queries.count()
+    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", 300)
+    assert ranked(wand.search_topk(spark, idx, queries, k=k, mode="wand")) == want
+    reader = wand.IndexReader(None, idx)
+    for q in queries.collect():
+        assert reader.search(q["text"], k=k) == want[q["query_id"]], q["text"]
+    assert any(e["n_postings"] > 300 for e in reader.query_log)
 
 
 def test_reader_refresh_picks_up_deletes(spark, pages, built, queries):

@@ -60,13 +60,112 @@ def test_wand_exact_topk(spark, index_dir, oracle):
     _assert_matches_oracle(got, oracle)
 
 
-def test_wand_exact_topk_python_wand_fallback(spark, index_dir, oracle, monkeypatch):
-    """The per-posting Python WAND branch (taken only past the in-task TAAT
-    memory bound) must stay exact — force it by zeroing the crossover."""
-    monkeypatch.setattr(wand, "_BATCH_TAAT_MAX_POSTINGS", 0)
+# a memory bound of a few hundred postings: every multi-term fixture query
+# then folds several doc-id windows instead of one full decode
+FORCED_BOUND = 300
+
+
+def _assert_equals_oracle_exactly(got, expected):
+    """Same ids, same order, bit-equal scores."""
+    assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in expected]
+    assert [s for _, _, s in got] == [s for _, _, s in expected]
+
+
+def _deleted_copy(spark, index_dir, oracle, dst):
+    """A copy of the index with each query's top doc tombstoned → (copy,
+    {query_id: expected top-K over the survivors}) from the oracle (corpus
+    stats stay stale after a delete, so survivors keep their scores)."""
+    import shutil
+
+    shutil.copytree(index_dir, dst)
+    queries = fixtures.make_queries()
+    victims = {
+        top[0][1] for q in queries if (top := oracle.topk(q["text"], k=1))
+    }
+    index_build.delete_docs(spark, dst, sorted(victims))
+    want = {}
+    for q in queries:
+        live = [
+            (d, s)
+            for _r, d, s in oracle.topk(q["text"], k=K + len(victims))
+            if d not in victims
+        ][:K]
+        want[q["query_id"]] = [(r, d, s) for r, (d, s) in enumerate(live, 1)]
+    return dst, want
+
+
+def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
+    """search_topk(mode="wand") under a forced memory bound (windowed fold
+    in every per-query task) stays oracle-exact, with and without
+    tombstones that would otherwise sit in the top-k."""
+    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     queries = fixtures.queries_spark_df(spark)
     got = _collect_topk(wand.search_topk(spark, index_dir, queries, k=K, mode="wand"))
-    _assert_matches_oracle(got, oracle)
+    for q in fixtures.make_queries():
+        _assert_equals_oracle_exactly(
+            got.get(q["query_id"], []), oracle.topk(q["text"], k=K)
+        )
+    idx, want = _deleted_copy(spark, index_dir, oracle, str(tmp_path / "del"))
+    got = _collect_topk(wand.search_topk(spark, idx, queries, k=K, mode="wand"))
+    for qid, expected in want.items():
+        _assert_equals_oracle_exactly(got.get(qid, []), expected)
+
+
+def test_forced_bound_reader_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
+    """IndexReader.search under a forced memory bound (every query over it
+    goes to taat_topk, not the decoded-term memo) stays oracle-exact, cold
+    and warm, with and without tombstones."""
+    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
+    reader = wand.IndexReader(None, index_dir)
+    for q in fixtures.make_queries():
+        expected = oracle.topk(q["text"], k=K)
+        _assert_equals_oracle_exactly(reader.search(q["text"], k=K), expected)
+        _assert_equals_oracle_exactly(reader.search(q["text"], k=K), expected)
+    assert {e["strategy"] for e in reader.query_log} <= {"taat", None}
+    idx, want = _deleted_copy(spark, index_dir, oracle, str(tmp_path / "del"))
+    reader = wand.IndexReader(None, idx)
+    for q in fixtures.make_queries():
+        _assert_equals_oracle_exactly(
+            reader.search(q["text"], k=K), want[q["query_id"]]
+        )
+
+
+def test_windowed_fold_decode_stays_bounded(index_dir, oracle, monkeypatch):
+    """No decode of the windowed fold holds more than the bound plus one
+    block per posting list (a window is never cut finer than one gap
+    between block boundaries, where each list has at most one block)."""
+    from clip_as_service_spark.textnorm import tokenize_words
+
+    reader = wand.IndexReader(None, index_dir)
+    calls = []
+    real = wand._decode_block_group
+
+    def counting(blks, bm25):
+        calls.append(sum(r.n for r in blks))
+        return real(blks, bm25)
+
+    monkeypatch.setattr(wand, "_decode_block_group", counting)
+    windowed = 0
+    for q in fixtures.make_queries():
+        terms = sorted(set(tokenize_words(q["text"])))
+        rows = reader._fetch_rows(terms) if terms else []
+        if len({r.term for r in rows}) < 2:
+            continue
+        max_block: dict[tuple, int] = {}
+        for r in rows:
+            key = (r.term, r.salt)
+            max_block[key] = max(max_block.get(key, 0), r.n)
+        calls.clear()
+        got = wand.taat_topk(
+            rows, K, reader._bm25, n_docs=reader.meta["n_docs"],
+            max_postings=FORCED_BOUND,
+        )
+        _assert_equals_oracle_exactly(got, oracle.topk(q["text"], k=K))
+        assert max(calls) <= FORCED_BOUND + sum(max_block.values()), q
+        if sum(r.n for r in rows) > FORCED_BOUND:
+            assert len(calls) > 1, q
+            windowed += 1
+    assert windowed >= 5
 
 
 def test_auto_mode_routes_heavy_queries_exactly(spark, index_dir, oracle):
@@ -90,12 +189,8 @@ def test_exploded_exact_topk(spark, index_dir, oracle):
     _assert_matches_oracle(got, oracle)
 
 
-@pytest.mark.parametrize(
-    ("engine", "strategy"),
-    [("pyarrow", "taat"), ("pyarrow", "wand"), ("spark", "auto")],
-)
-def test_index_reader_interactive_exact(spark, index_dir, oracle, engine, strategy):
-    reader = wand.IndexReader(spark, index_dir, engine=engine, strategy=strategy)
+def test_index_reader_interactive_exact(spark, index_dir, oracle):
+    reader = wand.IndexReader(None, index_dir)
     for q in fixtures.make_queries()[:20]:
         expected = oracle.topk(q["text"], k=K)
         got = reader.search(q["text"], k=K)
@@ -107,6 +202,30 @@ def test_index_reader_interactive_exact(spark, index_dir, oracle, engine, strate
     assert reader.search(q0["text"], k=K) == reader.search(q0["text"], k=K)
 
 
+def test_cli_search_equals_reader(index_dir, capsys, monkeypatch):
+    """CLI `search` prints IndexReader.search's results as JSON lines, then
+    the profile line — without starting Spark."""
+    import json
+
+    from clip_as_service_spark import __main__ as cli
+
+    def _no_spark(_args):
+        raise AssertionError("search must not start Spark")
+
+    monkeypatch.setattr(cli, "_spark", _no_spark)
+    text = fixtures.make_queries()[0]["text"]
+    assert cli.main(
+        ["search", "--index", index_dir, "--query", text, "-k", str(K), "--profile"]
+    ) == 0
+    lines = [json.loads(x) for x in capsys.readouterr().out.splitlines()]
+    want = wand.IndexReader(None, index_dir).search(text, k=K)
+    assert want
+    assert lines[:-1] == [
+        {"query": "q0", "rank": r, "doc_id": d, "score": s} for r, d, s in want
+    ]
+    assert lines[-1]["profile"]["n_queries"] == 1
+
+
 def test_taat_early_stop_chunked_exact(spark, index_dir, oracle):
     """chunk_blocks=1 forces the early-stop machinery through many rounds
     (bound re-checks, mid-stream stop, phase-B decode of skipped blocks) —
@@ -114,7 +233,7 @@ def test_taat_early_stop_chunked_exact(spark, index_dir, oracle):
     from clip_as_service_spark.operators.wand import taat_topk
     from clip_as_service_spark.textnorm import tokenize_words
 
-    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, index_dir)
     for q in fixtures.make_queries()[:25]:
         terms = sorted(set(tokenize_words(q["text"])))
         rows = reader._fetch_rows(terms) if terms else []
@@ -137,7 +256,7 @@ def test_reader_caches_byte_bounded(spark, index_dir, oracle):
     # budgets are constructor-sizable (deployments size them to the shard's
     # head-term working set); tiny values force constant eviction here
     reader = wand.IndexReader(
-        None, index_dir, engine="pyarrow",
+        None, index_dir,
         raw_cache_bytes=4096, decoded_cache_bytes=4096,
     )
     assert reader.RAW_CACHE_MAX_BYTES == 4096
@@ -173,7 +292,7 @@ def test_reader_oversize_entry_never_sticks(spark, index_dir, oracle):
     budget EVERY entry is oversize: results stay exact, and both caches are
     empty between queries."""
     reader = wand.IndexReader(
-        None, index_dir, engine="pyarrow",
+        None, index_dir,
         raw_cache_bytes=1, decoded_cache_bytes=1,
     )
     for q in fixtures.make_queries()[:10]:
@@ -201,7 +320,7 @@ def test_reader_rejects_v1_index(spark, index_dir, tmp_path):
     meta["version"] = 1
     json.dump(meta, open(meta_path, "w"))
     with pytest.raises(ValueError, match="block format"):
-        wand.IndexReader(None, old, engine="pyarrow")
+        wand.IndexReader(None, old)
 
 
 def test_salting_created_sublists(spark, index_dir):
@@ -361,8 +480,8 @@ def test_merge_carries_and_validates_term_mode(spark, tmp_path):
     # merged BPE index ≡ one BPE build over the union (reader tokenizes BPE
     # on both sides because term_mode rode the meta)
     full = build(pages, str(tmp_path / "bpe_full"), term_mode="bpe")
-    r_merged = wand.IndexReader(None, merged, engine="pyarrow")
-    r_full = wand.IndexReader(None, full, engine="pyarrow")
+    r_merged = wand.IndexReader(None, merged)
+    r_full = wand.IndexReader(None, full)
     hits = 0
     for q in fixtures.make_queries()[:6]:
         got = r_merged.search(q["text"], k=5)

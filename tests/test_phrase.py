@@ -137,7 +137,7 @@ def test_indexed_phrase_search_matches_token_oracle(spark, pos_index):
     # interactive (pyarrow, zero-Spark-jobs) twin must agree exactly
     from clip_as_service_spark.operators import wand
 
-    reader = wand.IndexReader(None, out, engine="pyarrow")
+    reader = wand.IndexReader(None, out)
     assert set(reader.phrase(phrase_text)) == expected
     assert reader.phrase("") == []
     assert reader.phrase("zzzoovterm nothere") == []

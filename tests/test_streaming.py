@@ -104,7 +104,7 @@ def test_stream_compaction_converges_to_batch_build(spark, tmp_path):
     assert len(got_b) > 20
     # the recrawled doc carries its NEW content: the unique token added by
     # the recrawl is findable, under the SAME doc_id as the original url
-    reader = wand.IndexReader(None, compacted, engine="pyarrow")
+    reader = wand.IndexReader(None, compacted)
     hits = reader.search("zz", k=5)
     assert len(hits) == 1
 

@@ -74,7 +74,7 @@ def test_multi_term_early_stop_matches_oracle(index_dir, oracle):
     """chunk_blocks=1 maximizes stop-check rounds; ranks AND scores must be
     identical to the oracle (phase-2 re-scores with the ascending-term
     float64 fold, so scores are bit-equal to the full decode)."""
-    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries():
         terms = sorted(set(tokenize_words(q["text"])))
@@ -96,7 +96,7 @@ def test_multi_term_early_stop_with_deletes(index_dir, oracle):
     """Tombstoning each query's top-2 docs must promote the next live docs
     exactly (mask applied before the θ̃ bound — a dead doc must not stop
     the decode early)."""
-    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries()[:8]:
         terms = sorted(set(tokenize_words(q["text"])))
@@ -123,7 +123,7 @@ def test_multi_term_early_stop_tiny_pool_and_cand_cap(
     hold through both degenerate settings."""
     monkeypatch.setattr(wand, "_TAAT_POOL_MAX", 32)
     monkeypatch.setattr(wand, "_TAAT_CAND_MAX", 8)
-    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries()[:10]:
         terms = sorted(set(tokenize_words(q["text"])))
@@ -139,10 +139,10 @@ def test_multi_term_early_stop_tiny_pool_and_cand_cap(
 
 def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
     """taat_topk engages _taat_multi_term past the postings threshold (and
-    the reader's auto strategy inherits it); forced threshold 0 must keep
+    IndexReader.search inherits it); forced threshold 0 must keep
     every fixture query oracle-exact through the public entry point."""
     monkeypatch.setattr(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0)
-    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, index_dir)
     for q in _multi_term_queries():
         terms = sorted(set(tokenize_words(q["text"])))
         rows = reader._fetch_rows(terms)
@@ -164,7 +164,7 @@ def test_reader_search_uses_early_stop_when_heavy(index_dir, oracle, monkeypatch
     cold multi-term branch routes through the early-stop scorer and stays
     oracle-exact (warm repeats take the memo path — also exact)."""
     monkeypatch.setattr(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0)
-    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, index_dir)
     for q in _multi_term_queries()[:10]:
         expected = oracle.topk(q["text"], k=K)
         got_cold = reader.search(q["text"], k=K)
@@ -184,7 +184,7 @@ def test_multi_term_early_stop_nonpositive_threshold_masks_deletes(
     only widens the set, so exactness must not depend on it: a wide margin
     opens that window on most stop checks."""
     monkeypatch.setattr(wand, "_UB_SAFETY", 2.0)
-    reader = wand.IndexReader(None, index_dir, engine="pyarrow")
+    reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries()[:8]:
         terms = sorted(set(tokenize_words(q["text"])))
