@@ -96,20 +96,15 @@ def main() -> None:
     query_p50_ms = round(1000 * statistics.median(lat), 2)
     query_profile = reader.profile_summary()
 
-    # distributed batch search with per-query auto routing: a low threshold
-    # forces head queries onto the exploded (fully distributed) plan while
-    # tail queries keep single-task WAND — the routed counts evidence both
-    # paths engage
+    # distributed batch search: one TAAT task per query with candidate
+    # blocks. search_topk has one plan, so the routed counts read all
+    # "wand" and "exploded" 0; the keys stay so earlier output still parses
     qdf = spark.createDataFrame(
         [(i, t) for i, t in dq.DOC_QUERIES], "query_id int, text string"
     )
-    routing = wand.query_routing(spark, idx_dir, qdf, heavy_postings=10_000)
+    routing = wand.query_routing(spark, idx_dir, qdf)
     t0 = time.perf_counter()
-    # reuse the routing — search_topk then never re-scans candidate blocks
-    # for the volume estimate
-    n_batch = wand.search_topk(
-        spark, idx_dir, qdf, k=10, mode="auto", routing=routing
-    ).count()
+    n_batch = wand.search_topk(spark, idx_dir, qdf, k=10).count()
     batch_auto_sec = round(time.perf_counter() - t0, 3)
     routed = {
         "wand": sum(1 for m in routing.values() if m == "wand"),

@@ -6,7 +6,7 @@ Usage:
   python bench_extra.py noop [query ...]       # noop-sink isolation (§1.4)
   python bench_extra.py build                  # index build wall + stage log
   python bench_extra.py reader                 # IndexReader latency loop
-  python bench_extra.py batch                  # search_topk auto batch
+  python bench_extra.py batch                  # search_topk batch
   python bench_extra.py ann                    # ANN build + stored probes
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -172,11 +172,9 @@ def run_batch() -> None:
     qdf = spark.createDataFrame(
         [(i, t) for i, t in dq.DOC_QUERIES], "query_id int, text string"
     )
-    routing = wand.query_routing(spark, idx_dir, qdf, heavy_postings=10_000)
+    routing = wand.query_routing(spark, idx_dir, qdf)
     t0 = time.perf_counter()
-    n = wand.search_topk(
-        spark, idx_dir, qdf, k=10, mode="auto", routing=routing
-    ).count()
+    n = wand.search_topk(spark, idx_dir, qdf, k=10).count()
     print(
         json.dumps(
             {

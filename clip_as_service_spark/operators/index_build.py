@@ -563,8 +563,8 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     appended to ``deleted_docs`` as ONE parquet file per call
     (IndexStorage.append_local: no Spark write job, published whole by a
     rename, so a reader never lists a partial file); every query path
-    (search_topk WAND/TAAT/exploded, IndexReader.search/phrase,
-    phrase_search_indexed) masks tombstoned docs BEFORE ranking — snippets
+    (search_topk, IndexReader.search/phrase, phrase_search_indexed)
+    masks tombstoned docs BEFORE ranking — snippets
     inherit via the masked results page. Nothing is rewritten. Collecting
     adds no memory bound: every reader gathers the whole tombstone set on
     the driver anyway.

@@ -26,10 +26,9 @@ stop a decode that a true top-k doc still needs → every kernel is EXACT.
 
 Callers: ``IndexReader.search(text, k)`` — interactive, tokenized on the
 driver, block rows read with pyarrow, no Spark job per query; and
-``search_topk(..., mode="wand")`` — batch, one applyInPandas task per query
-running ``taat_topk``. ``mode="exploded"`` is the fully distributed plan
-(decode → (term, doc_id, idf·w) rows → ordered-fold sum → window top-k);
-``mode="auto"`` routes per query by posting volume.
+``search_topk(spark, index_dir, queries, k)`` — batch, one plan: candidate
+blocks joined to the query terms, one applyInPandas task per query running
+``taat_topk``.
 
 Block rows carry their term's idf (denormalized at build), so no dictionary
 lookup happens at query time; corpus stats ride in _meta.json.
@@ -40,13 +39,11 @@ idf·w summed in ascending-term order; tie-break (score DESC, doc_id ASC).
 
 from __future__ import annotations
 
-import functools
 import time
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import decode_posting_blocks_batch, impact_weights
@@ -110,7 +107,7 @@ def _decode_block_group_raw(blks, bm25: tuple):
 
 # the most postings a scorer decodes at once (~16 B/posting decoded, so
 # 250M ⇒ ≤ 4 GB). A module constant read on the driver — by
-# IndexReader.search, and by _make_wand, whose closure captures it for the
+# IndexReader.search, and by _make_taat, whose closure captures it for the
 # executors — so an override on the driver reaches every scorer.
 DECODE_MAX_POSTINGS = 250_000_000
 
@@ -521,7 +518,7 @@ def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
 
 
 # ---------------------------------------------------------------------------
-# interactive driver path (single Spark job per query)
+# interactive driver path (no Spark job per query)
 # ---------------------------------------------------------------------------
 
 
@@ -544,9 +541,8 @@ class IndexReader:
     kernels, which decode part of a list and are not memoized; a query over
     ``DECODE_MAX_POSTINGS`` postings goes to ``taat_topk`` too, whose
     windowed fold bounds decoded memory (~16 B/posting) instead of
-    memoizing whole lists. Posting volumes that large belong on the
-    distributed search_topk paths — the same boundary a deployment draws
-    between a resident shard reader and the cluster."""
+    memoizing whole lists. Batches of queries belong on search_topk,
+    which runs the same kernels in one Spark task per query."""
 
     def __init__(
         self,
@@ -605,20 +601,8 @@ class IndexReader:
         # at construction/refresh; masked out of every scorer. The
         # decoded/raw caches stay UNFILTERED (delete-independent), the
         # mask applies at use.
-        self._deleted_arr = None
-        if self.store.exists("deleted_docs"):
-            import pyarrow.dataset as pads
-
-            ids = np.unique(
-                np.asarray(
-                    pads.dataset(
-                        self.store.path("deleted_docs"), format="parquet"
-                    ).to_table(columns=["doc_id"]).column("doc_id"),
-                    dtype=np.int64,
-                )
-            )
-            if len(ids):
-                self._deleted_arr = ids
+        ids = self.store.deleted_doc_ids()
+        self._deleted_arr = ids if len(ids) else None
 
     def _index_snapshot(self) -> tuple:
         """(path, size, mtime_ns) of every file under ``blocks/``, plus the
@@ -976,8 +960,16 @@ def _arrow_rows(tbl) -> list[_ArrowRow]:
 
 
 # ---------------------------------------------------------------------------
-# distributed batch paths
+# distributed batch path
 # ---------------------------------------------------------------------------
+
+# the blocks table as _build_blocks_stage writes it. Given to the reader so
+# search_topk starts no schema-inference job (one per call otherwise).
+_BLOCKS_SCHEMA = (
+    "term string, salt int, block_id int, n int, first_doc long, "
+    "last_doc long, max_w double, idf double, bytes int, docs binary, "
+    "tfs binary, dls binary, shard int"
+)
 
 
 def _candidate_blocks(
@@ -986,9 +978,26 @@ def _candidate_blocks(
     if not terms:
         return None
     shards = sorted({term_shard(t, n_shards) for t in terms})
-    return store.read(spark, "blocks").where(
+    return spark.read.schema(_BLOCKS_SCHEMA).parquet(store.path("blocks")).where(
         F.col("shard").isin(shards) & F.col("term").isin(terms)
     )
+
+
+def _query_blocks(spark: SparkSession, store: IndexStorage, meta: dict, queries):
+    """Candidate blocks × query terms as (query_id, term, block columns), or
+    None when no query has a term. The query-terms table is tiny (Q·|q|
+    rows): collected ONCE — the one Spark job before the plan is returned —
+    and rebuilt as a local DataFrame, so no .cache() leaks and the term
+    list for shard pruning falls out of the same pass."""
+    qt_rows = query_terms(
+        queries, meta.get("term_mode", "word"), meta.get("bpe_path")
+    ).collect()
+    terms = sorted({r["term"] for r in qt_rows})
+    cand = _candidate_blocks(spark, store, terms, meta["n_shards"])
+    if cand is None:
+        return None
+    qt = spark.createDataFrame(qt_rows, "query_id int, term string")
+    return cand.join(F.broadcast(qt), "term")
 
 
 def search_topk(
@@ -996,29 +1005,17 @@ def search_topk(
     index_dir: str,
     queries: DataFrame,
     k: int = 10,
-    mode: str = "auto",
-    heavy_postings: int = 20_000_000,
-    routing: dict[int, str] | None = None,
 ) -> DataFrame:
     """→ (query_id, rank, doc_id, score); queries(query_id, text).
 
-    mode="wand" runs one applyInPandas task per query: the query's
-    candidate blocks are grouped by query_id and scored by ``taat_topk``
-    (the vectorized TAAT kernels, the reader's scorer; decoded memory
-    bounded by ``DECODE_MAX_POSTINGS``). mode="exploded" is the fully
-    distributed plan (_search_exploded). mode="auto" routes PER QUERY by
-    estimated candidate volume (Σ block n — read from block metadata columns
-    only, never the payloads): queries under ``heavy_postings`` take the
-    per-query task (parallelism = #queries, early stops pay); heavier
-    queries — a Zipf-head single-term query would serialize its whole
-    posting list into one task — take the exploded plan.
+    One plan: each query's candidate blocks (shard- and term-pruned, joined
+    to the broadcast query terms) are grouped by query_id, and one
+    applyInPandas task per query scores them with ``taat_topk`` — the
+    reader's vectorized TAAT kernels, decoded memory bounded by
+    ``DECODE_MAX_POSTINGS``.
 
-    NOTE mode="auto" is not fully lazy: the volume estimate runs ONE eager
-    Spark job (a metadata-only aggregate) before the returned DataFrame is
-    built (the query-terms collect is eager in every mode — it's the Q·|q|
-    row query table). Callers that already computed ``query_routing`` (bench,
-    ops dashboards) pass it via ``routing`` to skip that job — the candidate
-    block set is then scanned once, not twice."""
+    The only Spark job run before the DataFrame is returned is the
+    query-terms collect; tombstones are read on the driver with pyarrow."""
     store = IndexStorage(index_dir)
     meta = store.read_meta()
     bm25 = (float(meta["avgdl"]), float(meta["k1"]), float(meta["b"]))
@@ -1028,78 +1025,19 @@ def search_topk(
         else None
     )
     # merge-on-read doc deletes (delete_docs): tombstoned ids are dropped
-    # from every scorer BEFORE ranking. Collected once per call (the table
-    # is delete-sized) and broadcast to the per-query TAAT tasks; the
-    # exploded plan anti-joins distributed instead. Corpus stats stay
-    # STALE until purge_deleted_docs (Lucene's merge-on-read posture):
-    # surviving docs keep their exact pre-delete scores — pinned by test.
-    deleted_ids = deleted_bc = None
-    if store.exists("deleted_docs"):
-        deleted_ids = sorted(
-            int(r["doc_id"])
-            for r in store.read(spark, "deleted_docs")
-            .select("doc_id").distinct().collect()
-        )
-        if deleted_ids:
-            deleted_bc = _deleted_broadcast(spark, store, deleted_ids)
-        else:
-            deleted_ids = None
-    # query-terms table is tiny (Q·|q| rows): collect ONCE and rebuild as a
-    # local DataFrame — no .cache() to leak, and the term list for shard
-    # pruning falls out of the same pass
-    qt_rows = query_terms(
-        queries, meta.get("term_mode", "word"), meta.get("bpe_path")
-    ).collect()
-    terms = sorted({r["term"] for r in qt_rows})
-    cand = _candidate_blocks(spark, store, terms, meta["n_shards"])
-    if cand is None or not qt_rows:
+    # from every scorer BEFORE ranking, broadcast to the per-query tasks.
+    # Corpus stats stay STALE until purge_deleted_docs (Lucene's
+    # merge-on-read posture): surviving docs keep their exact pre-delete
+    # scores — pinned by test.
+    deleted = store.deleted_doc_ids()
+    deleted_bc = _deleted_broadcast(spark, store, deleted) if len(deleted) else None
+    joined = _query_blocks(spark, store, meta, queries)
+    if joined is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    qt = spark.createDataFrame(qt_rows, "query_id int, term string")
-    joined = cand.join(F.broadcast(qt), "term")
-
-    def per_query(df: DataFrame) -> DataFrame:
-        return df.groupBy("query_id").applyInPandas(
-            _make_wand(k, bm25, deleted_bc=deleted_bc, n_docs=dense_n_docs),
-            schema=TOPK_SCHEMA,
-        )
-
-    if mode == "wand":
-        return per_query(joined)
-    if mode == "exploded":
-        return _search_exploded(joined, k, bm25, deleted_ids=deleted_ids)
-    if mode != "auto":
-        raise ValueError(f"unknown mode {mode!r}")
-    if routing is None:
-        # volume estimate: one tiny agg over (query_id, n) — parquet column
-        # pruning keeps the binary docs/tfs/dls columns unread
-        routing = _route(joined, heavy_postings)
-    else:
-        # a caller-supplied routing may lag the query set — estimate the
-        # stragglers rather than silently dropping their results
-        unrouted = {r["query_id"] for r in qt_rows} - set(routing)
-        if unrouted:
-            routing = {
-                **routing,
-                **_route(
-                    joined.filter(F.col("query_id").isin(sorted(unrouted))),
-                    heavy_postings,
-                ),
-            }
-    parts = []
-    heavy = sorted(q for q, m in routing.items() if m == "exploded")
-    if heavy:
-        parts.append(
-            _search_exploded(
-                joined.filter(F.col("query_id").isin(heavy)), k, bm25,
-                deleted_ids=deleted_ids,
-            )
-        )
-    light = sorted(q for q, m in routing.items() if m == "wand")
-    if light:
-        parts.append(per_query(joined.filter(F.col("query_id").isin(light))))
-    if not parts:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    return functools.reduce(DataFrame.unionByName, parts)
+    return joined.groupBy("query_id").applyInPandas(
+        _make_taat(k, bm25, deleted_bc=deleted_bc, n_docs=dense_n_docs),
+        schema=TOPK_SCHEMA,
+    )
 
 
 # one live tombstone broadcast per index_dir (ADVICE r06: a long-lived
@@ -1110,7 +1048,7 @@ def search_topk(
 _DELETED_BC_CACHE: dict[str, tuple] = {}
 
 
-def _deleted_broadcast(spark: SparkSession, store: IndexStorage, ids: list):
+def _deleted_broadcast(spark: SparkSession, store: IndexStorage, ids: np.ndarray):
     import glob
     import os
 
@@ -1139,37 +1077,24 @@ def _deleted_broadcast(spark: SparkSession, store: IndexStorage, ids: list):
     return bc
 
 
-def _route(joined: DataFrame, heavy_postings: int) -> dict[int, str]:
-    """{query_id: 'exploded' if its candidate postings exceed
-    ``heavy_postings`` else 'wand'} over candidate blocks × query terms."""
+def query_routing(
+    spark: SparkSession, index_dir: str, queries: DataFrame
+) -> dict[int, str]:
+    """→ {query_id: 'wand'} for every query with candidate blocks.
+    search_topk has one plan, so this reports nothing a caller can act on;
+    it stays only for the routing counts of the benchmark trace
+    (perfbench) and bench.py."""
+    store = IndexStorage(index_dir)
+    joined = _query_blocks(spark, store, store.read_meta(), queries)
+    if joined is None:
+        return {}
     return {
-        r["query_id"]: "exploded" if r["v"] > heavy_postings else "wand"
-        for r in joined.groupBy("query_id").agg(F.sum("n").alias("v")).collect()
+        r["query_id"]: "wand"
+        for r in joined.select("query_id").distinct().collect()
     }
 
 
-def query_routing(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    heavy_postings: int = 20_000_000,
-) -> dict[int, str]:
-    """→ {query_id: 'wand'|'exploded'} — the routing mode='auto' would pick
-    (candidate posting volume vs threshold); exposed for bench/ops reporting."""
-    store = IndexStorage(index_dir)
-    meta = store.read_meta()
-    qt_rows = query_terms(
-        queries, meta.get("term_mode", "word"), meta.get("bpe_path")
-    ).collect()
-    terms = sorted({r["term"] for r in qt_rows})
-    cand = _candidate_blocks(spark, store, terms, meta["n_shards"])
-    if cand is None or not qt_rows:
-        return {}
-    qt = spark.createDataFrame(qt_rows, "query_id int, term string")
-    return _route(cand.join(F.broadcast(qt), "term"), heavy_postings)
-
-
-def _make_wand(
+def _make_taat(
     k: int, bm25: tuple, deleted_bc=None, n_docs: int | None = None,
 ):
     # the memory bound is read HERE (driver side) and captured by the
@@ -1177,18 +1102,14 @@ def _make_wand(
     # read inside the UDF would ignore driver-side overrides
     max_postings = DECODE_MAX_POSTINGS
 
-    def _wand(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _taat(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame(
                 {"query_id": [], "rank": [], "doc_id": [], "score": []}
             )
         # tombstoned doc_ids ride a Spark broadcast (shipped once per
-        # executor, not per task) as a sorted list
-        deleted = (
-            np.asarray(deleted_bc.value, dtype=np.int64)
-            if deleted_bc is not None
-            else None
-        )
+        # executor, not per task) as a sorted int64 ndarray
+        deleted = deleted_bc.value if deleted_bc is not None else None
         query_id = int(pdf["query_id"].iloc[0])
         # n_docs (dense-id indexes) enables both the direct-array scorer and
         # the multi-term block-max early stop inside taat_topk
@@ -1205,75 +1126,4 @@ def _make_wand(
             }
         )
 
-    return _wand
-
-
-def _search_exploded(
-    joined: DataFrame, k: int, bm25: tuple, deleted_ids: list[int] | None = None
-) -> DataFrame:
-    """decode → (query_id, term, doc_id, partial) rows → ordered-fold sum →
-    window top-k. `joined` = candidate blocks × query terms. Tombstoned
-    doc_ids (``deleted_ids``) are dropped from the partials with a
-    broadcast anti-join BEFORE the top-k window — staying distributed, no
-    per-task Python set."""
-    avgdl, k1, b = bm25
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # ONE vectorized decode per Arrow batch (guide §4.2): blocks are
-        # independently decodable, so the whole batch's payloads go through
-        # decode_posting_blocks_batch together and the per-row metadata is
-        # np.repeat-expanded — the previous per-row loop made thousands of
-        # tiny vbyte_decode calls per batch (overhead-bound)
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {"query_id": pd.Series([], dtype="int64"),
-                     "term": pd.Series([], dtype=object),
-                     "doc_id": pd.Series([], dtype="int64"),
-                     "partial": pd.Series([], dtype="float64")}
-                )
-                continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            doc_ids, tfs, dls = decode_posting_blocks_batch(
-                list(pdf["docs"]), list(pdf["tfs"]), list(pdf["dls"]), ns
-            )
-            w = impact_weights(tfs, dls, avgdl, k1, b)
-            partial = np.repeat(pdf["idf"].to_numpy(dtype=np.float64), ns) * w
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(
-                        pdf["query_id"].to_numpy(dtype=np.int64), ns
-                    ),
-                    "term": np.repeat(pdf["term"].to_numpy(dtype=object), ns),
-                    "doc_id": doc_ids,
-                    "partial": partial,
-                }
-            )
-
-    partials = joined.mapInPandas(
-        _decode, schema="query_id int, term string, doc_id long, partial double"
-    )
-    if deleted_ids:
-        dele = joined.sparkSession.createDataFrame(
-            [(d,) for d in deleted_ids], "doc_id long"
-        )
-        partials = partials.join(F.broadcast(dele), "doc_id", "left_anti")
-    scores = (
-        partials.groupBy("query_id", "doc_id")
-        .agg(F.collect_list(F.struct("term", "partial")).alias("parts"))
-        .select(
-            "query_id",
-            "doc_id",
-            F.aggregate(
-                F.array_sort("parts"),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x["partial"],
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _taat

@@ -113,6 +113,22 @@ class IndexStorage:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
 
+    def deleted_doc_ids(self):
+        """Tombstoned doc ids (``deleted_docs``, written by delete_docs) as
+        a sorted, unique int64 ndarray — empty when there are none. Read on
+        the driver with pyarrow, so no Spark job; hidden ``.tmp-*`` files
+        are skipped like every other listing here."""
+        import numpy as np
+
+        if not self.exists("deleted_docs"):
+            return np.empty(0, dtype=np.int64)
+        import pyarrow.dataset as pads
+
+        col = pads.dataset(self.path("deleted_docs"), format="parquet").to_table(
+            columns=["doc_id"]
+        ).column("doc_id")
+        return np.unique(np.asarray(col, dtype=np.int64))
+
     def write_tmp(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> str:

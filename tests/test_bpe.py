@@ -121,7 +121,7 @@ def test_bpe_index_build_and_search_rank_identical(spark, tmp_path):
     qdf = spark.createDataFrame(
         [(q["query_id"], q["text"]) for q in queries], "query_id int, text string"
     )
-    got_rows = wand.search_topk(spark, out, qdf, k=5, mode="wand").collect()
+    got_rows = wand.search_topk(spark, out, qdf, k=5).collect()
     by_q: dict[int, list] = {}
     for r in sorted(got_rows, key=lambda r: (r["query_id"], r["rank"])):
         by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"]))

@@ -2,9 +2,9 @@
 index's merge-on-read twin of the ANN tombstones.
 
 Contract pinned here (Lucene's live-docs posture): a deleted doc
-disappears from EVERY query surface immediately (search_topk in all three
-modes, IndexReader search + phrase, phrase_search_indexed) with NO
-rewrite; surviving docs keep their exact pre-delete scores (corpus stats
+disappears from EVERY query surface immediately (search_topk,
+IndexReader search + phrase, phrase_search_indexed) with NO rewrite;
+surviving docs keep their exact pre-delete scores (corpus stats
 stay stale by design); purge_deleted_docs rebuilds without the dead docs
 and is indistinguishable from a fresh build over the survivors (stats
 refresh there)."""
@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from clip_as_service_spark import fixtures
 from clip_as_service_spark.operators import index_build, phrase, wand
+from clip_as_service_spark.oracle import BM25Oracle
 
 N_PAGES = 120
 K_ALL = 500  # > corpus: the full ranking, so page-boundary churn can't hide rows
@@ -34,6 +35,13 @@ def built(spark, pages, tmp_path_factory):
         doc_id_method="hash", positions=True,
     )
     return out
+
+
+@pytest.fixture(scope="module")
+def oracle(pages):
+    """BM25 over the build's hash ids, doc_id = xxhash64(url)."""
+    rows = pages.select(F.xxhash64("url").alias("doc_id"), "text").collect()
+    return BM25Oracle([(int(r["doc_id"]), r["text"]) for r in rows])
 
 
 @pytest.fixture(scope="module")
@@ -68,6 +76,17 @@ def _reranked(before: dict, deleted: set) -> dict:
     return out
 
 
+def _oracle_live(oracle, text: str, k: int, deleted: set) -> list:
+    """The oracle's top-k over the surviving docs: tombstoned ids removed,
+    ranks recomputed, scores UNCHANGED (stale-stats contract)."""
+    live = [
+        (d, s)
+        for _r, d, s in oracle.topk(text, k=oracle.n_docs)
+        if d not in deleted
+    ][:k]
+    return [(r, d, s) for r, (d, s) in enumerate(live, 1)]
+
+
 def test_delete_hides_doc_from_every_surface(spark, pages, built, queries):
     import shutil
 
@@ -86,10 +105,8 @@ def test_delete_hides_doc_from_every_surface(spark, pages, built, queries):
     assert n == len(victims)
 
     want = _reranked(before, victims)
-    # all three distributed modes
-    for mode in ("wand", "exploded", "auto"):
-        got = _rows(wand.search_topk(spark, idx, queries, k=K_ALL, mode=mode))
-        assert got == want, mode
+    # batch search
+    assert _rows(wand.search_topk(spark, idx, queries, k=K_ALL)) == want
     # interactive reader
     reader = wand.IndexReader(None, idx)
     for q in queries.collect():
@@ -115,44 +132,39 @@ def test_delete_hides_doc_from_every_surface(spark, pages, built, queries):
 
 
 def test_single_term_early_stop_stays_exact_under_delete(
-    spark, pages, built, queries
+    spark, built, queries, oracle
 ):
     """The single-term block-max early stop must mask deleted docs BEFORE
     taking the kth-score threshold: delete the term's best doc and the
-    cold-cache single-term TAAT page must equal the exploded plan's."""
+    cold-cache single-term TAAT page must equal the oracle's ranking of
+    the survivors — same ids, same order, bit-equal scores."""
     import shutil
 
     idx = built + "_single"
     shutil.copytree(built, idx)
     # the most selective single term of the first query
     term = queries.collect()[0]["text"].split()[0]
-    qdf = spark.createDataFrame([(0, term)], "query_id int, text string")
-    before = _rows(wand.search_topk(spark, idx, qdf, k=K_ALL, mode="exploded"))
-    top = next(did for (_q, did), (rank, _s) in before.items() if rank == 1)
+    top = oracle.topk(term, k=1)[0][1]
     index_build.delete_docs(spark, idx, [top])
-    want = _reranked(before, {top})
     reader = wand.IndexReader(None, idx)  # cold caches
-    got = {
-        (0, did): (rank, round(score, 12))
-        for rank, did, score in reader.search(term, k=5)
-    }
-    assert got == {k: v for k, v in want.items() if v[0] <= 5}
+    assert reader.search(term, k=5) == _oracle_live(oracle, term, 5, {top})
 
 
-def test_forced_bound_exact_under_delete(spark, built, queries, monkeypatch):
+def test_forced_bound_exact_under_delete(
+    spark, built, queries, oracle, monkeypatch
+):
     """Hash ids, with each query's top-2 docs tombstoned: under a forced
     memory bound of a few hundred postings (windowed fold), the reader and
-    search_topk(mode="wand") return the exploded plan's ranking — same ids,
+    search_topk return the oracle's ranking of the survivors — same ids,
     same order, bit-equal scores."""
     import shutil
 
     idx = built + "_bound"
     shutil.copytree(built, idx)
     k = 20
-    before = _rows(wand.search_topk(spark, idx, queries, k=K_ALL, mode="exploded"))
-    index_build.delete_docs(
-        spark, idx, sorted({d for (_q, d), (rank, _s) in before.items() if rank <= 2})
-    )
+    qs = queries.collect()
+    victims = {d for q in qs for _r, d, _s in oracle.topk(q["text"], k=2)}
+    index_build.delete_docs(spark, idx, sorted(victims))
 
     def ranked(df):
         out: dict[int, list] = {}
@@ -162,14 +174,51 @@ def test_forced_bound_exact_under_delete(spark, built, queries, monkeypatch):
             )
         return out
 
-    want = ranked(wand.search_topk(spark, idx, queries, k=k, mode="exploded"))
-    assert len(want) == queries.count()
+    want = {q["query_id"]: _oracle_live(oracle, q["text"], k, victims) for q in qs}
+    assert all(want.values())
     monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", 300)
-    assert ranked(wand.search_topk(spark, idx, queries, k=k, mode="wand")) == want
+    assert ranked(wand.search_topk(spark, idx, queries, k=k)) == want
     reader = wand.IndexReader(None, idx)
-    for q in queries.collect():
+    for q in qs:
         assert reader.search(q["text"], k=k) == want[q["query_id"]], q["text"]
     assert any(e["n_postings"] > 300 for e in reader.query_log)
+
+
+def _jobs_started(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_topk_starts_only_the_query_terms_job(spark, built, queries, tmp_path):
+    """Building the search_topk plan starts no Spark job beyond those of
+    the query-terms collect, with and without a tombstone table: no
+    per-query volume aggregate, no Spark read of deleted_docs."""
+    import shutil
+
+    from clip_as_service_spark.operators.bm25 import query_terms
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built, idx)
+    want = _jobs_started(spark, lambda: query_terms(queries).collect())
+    assert want >= 1
+
+    def plan():
+        wand.search_topk(spark, idx, queries, k=5)
+
+    assert _jobs_started(spark, plan) == want
+    top = wand.IndexReader(None, idx).search(queries.first()["text"], k=1)[0][1]
+    index_build.delete_docs(spark, idx, [top])
+    assert _jobs_started(spark, plan) == want
 
 
 def test_reader_refresh_picks_up_deletes(spark, pages, built, queries):
@@ -391,14 +440,8 @@ def test_stray_tmp_tombstone_file_is_ignored(spark, built, queries, tmp_path):
     got = {d for _r, d, _s in reader.search(q["text"], k=K_ALL)}
     assert dead not in got and unrenamed in got
     qdf = spark.createDataFrame([(0, q["text"])], "query_id int, text string")
-    for mode in ("wand", "exploded"):
-        got = {
-            did
-            for _q, did in _rows(
-                wand.search_topk(spark, idx, qdf, k=K_ALL, mode=mode)
-            )
-        }
-        assert dead not in got and unrenamed in got, mode
+    got = {did for _q, did in _rows(wand.search_topk(spark, idx, qdf, k=K_ALL))}
+    assert dead not in got and unrenamed in got
     probe = " ".join(q["text"].split()[:2])
     hits = phrase.phrase_search_indexed(spark, idx, probe).collect()
     assert dead not in {int(r["id"]) for r in hits}

@@ -56,7 +56,7 @@ def _assert_matches_oracle(got, oracle):
 
 def test_wand_exact_topk(spark, index_dir, oracle):
     queries = fixtures.queries_spark_df(spark)
-    got = _collect_topk(wand.search_topk(spark, index_dir, queries, k=K, mode="wand"))
+    got = _collect_topk(wand.search_topk(spark, index_dir, queries, k=K))
     _assert_matches_oracle(got, oracle)
 
 
@@ -95,18 +95,18 @@ def _deleted_copy(spark, index_dir, oracle, dst):
 
 
 def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
-    """search_topk(mode="wand") under a forced memory bound (windowed fold
+    """search_topk under a forced memory bound (windowed fold
     in every per-query task) stays oracle-exact, with and without
     tombstones that would otherwise sit in the top-k."""
     monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     queries = fixtures.queries_spark_df(spark)
-    got = _collect_topk(wand.search_topk(spark, index_dir, queries, k=K, mode="wand"))
+    got = _collect_topk(wand.search_topk(spark, index_dir, queries, k=K))
     for q in fixtures.make_queries():
         _assert_equals_oracle_exactly(
             got.get(q["query_id"], []), oracle.topk(q["text"], k=K)
         )
     idx, want = _deleted_copy(spark, index_dir, oracle, str(tmp_path / "del"))
-    got = _collect_topk(wand.search_topk(spark, idx, queries, k=K, mode="wand"))
+    got = _collect_topk(wand.search_topk(spark, idx, queries, k=K))
     for qid, expected in want.items():
         _assert_equals_oracle_exactly(got.get(qid, []), expected)
 
@@ -166,27 +166,6 @@ def test_windowed_fold_decode_stays_bounded(index_dir, oracle, monkeypatch):
             assert len(calls) > 1, q
             windowed += 1
     assert windowed >= 5
-
-
-def test_auto_mode_routes_heavy_queries_exactly(spark, index_dir, oracle):
-    """mode=auto with a tiny heavy threshold: head-term queries take the
-    distributed exploded plan, tail queries take WAND — the union must be
-    rank-identical to the oracle (routing changes physics, not results)."""
-    queries = fixtures.queries_spark_df(spark)
-    got = _collect_topk(
-        wand.search_topk(
-            spark, index_dir, queries, k=K, mode="auto", heavy_postings=50
-        )
-    )
-    _assert_matches_oracle(got, oracle)
-
-
-def test_exploded_exact_topk(spark, index_dir, oracle):
-    queries = fixtures.queries_spark_df(spark)
-    got = _collect_topk(
-        wand.search_topk(spark, index_dir, queries, k=K, mode="exploded")
-    )
-    _assert_matches_oracle(got, oracle)
 
 
 def test_index_reader_interactive_exact(spark, index_dir, oracle):
@@ -370,7 +349,7 @@ def test_resume_after_kill(spark, tmp_path, oracle, monkeypatch):
         os.path.join(store.path("postings"), "_SUCCESS")
     )
     queries = fixtures.queries_spark_df(spark)
-    got = _collect_topk(wand.search_topk(spark, out, queries, k=K, mode="wand"))
+    got = _collect_topk(wand.search_topk(spark, out, queries, k=K))
     _assert_matches_oracle(got, oracle)
 
 
