@@ -21,6 +21,47 @@ import numpy as np
 
 BLOCK_SIZE = 128
 
+# Block format v2: docs are delta-gap + vByte; tf and dl are vByte (~1-2
+# bytes each) and the impact weight w = tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))
+# is RECOMPUTED at query time by the same vectorized float64 impact_weights
+# the build uses for max_w — bit-identical, and ~60% less payload than the
+# v1 raw-float64 w column (8 B/posting): at 6.4M docs a Zipf-head query
+# fetched ~100 MB of w bytes, dominating interactive fetch latency. Every
+# index records it as ``version`` in _meta.json; both readers check it.
+BLOCK_FORMAT = 2
+
+# the blocks table as the build writes it, ``shard`` last: the order in
+# which the partition column reads back. max_w per block is the WAND /
+# early-stop bound; idf is denormalized per term. Given to the Spark reader
+# so search_topk starts no schema-inference job (one per call otherwise).
+BLOCKS_SCHEMA = (
+    "term string, salt int, block_id int, n int, first_doc long, "
+    "last_doc long, max_w double, idf double, bytes int, docs binary, "
+    "tfs binary, dls binary, shard int"
+)
+
+
+def check_block_format(meta: dict, root: str) -> None:
+    """Raise unless the index at ``root`` was written in BLOCK_FORMAT — an
+    older payload layout would decode into garbage scores."""
+    if meta.get("version") != BLOCK_FORMAT:
+        raise ValueError(
+            f"index at {root} has block format v{meta.get('version')}; "
+            f"this reader needs v{BLOCK_FORMAT} (vByte tf/dl payloads) — "
+            "rebuild the index"
+        )
+
+
+def bm25_params(meta: dict) -> tuple[float, float, float]:
+    """(avgdl, k1, b) of an index — the arguments of impact_weights."""
+    return float(meta["avgdl"]), float(meta["k1"]), float(meta["b"])
+
+
+def dense_ids(meta: dict) -> bool:
+    """True when the index's doc ids are exactly 1..N: the build asserts
+    it, and the scorers then use a direct N-slot score array."""
+    return meta.get("doc_id_method") in ("dense", "dense_sorted", "row_number")
+
 
 def _vbyte_lengths(v: np.ndarray) -> np.ndarray:
     """Bytes per uint64 value: ceil(bitlen/7), at least 1."""

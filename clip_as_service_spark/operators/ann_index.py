@@ -1272,20 +1272,6 @@ def _ensure_in_filter_threshold(spark: SparkSession, needed: int) -> None:
         spark.conf.set(key, str(needed))
 
 
-def _topk(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("rank").cast("int").alias("rank"),
-            "vec_id", "cosine",
-        )
-    )
-
-
 def rh_topk_stored(
     spark: SparkSession,
     index_dir: str,
@@ -1387,7 +1373,7 @@ def rh_topk_stored(
         "vec_id",
         sim.cosine_col(F.col("embedding"), F.col(q_vec_col)).alias("cosine"),
     )
-    return _topk(scored, k)
+    return sim._topk(scored, k)
 
 
 def _fetch_exact_vectors(
@@ -1496,7 +1482,7 @@ def _pq_probe_topk(
             ),
         )
     )
-    return _topk(scored, k)
+    return sim._topk(scored, k)
 
 
 def ivf_topk_stored(
@@ -1562,4 +1548,4 @@ def ivf_topk_stored(
         "vec_id",
         sim.cosine_col(F.col("embedding"), F.col(q_vec_col)).alias("cosine"),
     ).dropDuplicates(["query_id", "vec_id"])
-    return _topk(scored, k)
+    return sim._topk(scored, k)

@@ -22,14 +22,21 @@ Scale shape: the groupBy(term, salt) shuffle is the build's only big shuffle
 after the postings agg; its key space is uniform *after* salting. Blocks are
 written partitioned by shard so query-time term lookups prune directories.
 
+One path makes every index: build_index, merge_indexes,
+purge_deleted_docs and compact_streamed_index all write _meta.json with
+_write_meta and run stages 2-4 with _postings_to_blocks (the last three
+through _index_from_postings, which also writes their postings table).
+
 Lineage (north rule): every stage appends (stage, shard, rows, bytes,
-wall_ms) rows to build_log; restart skips completed stages.
+wall_ms) rows to build_log; restart skips completed stages, and a
+restarted build keeps the _meta.json it first wrote.
 """
 
 from __future__ import annotations
 
+import functools
 import time
-from typing import Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -37,25 +44,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import B, K1
-from ..functions.codec import BLOCK_SIZE, encode_posting_blocks, impact_weights
+from ..functions.codec import (
+    BLOCK_FORMAT,
+    BLOCK_SIZE,
+    dense_ids,
+    encode_posting_blocks,
+    impact_weights,
+)
 from ..sources.tables import IndexStorage
 from . import tokenize as tok
 from .bm25 import _idf_udf
-
-# Block layout (format v2): docs are delta-gap + vByte; tf and dl are vByte
-# (~1-2 bytes each) and the impact weight w = tf·(k1+1)/(tf + k1·(1−b+b·dl/
-# avgdl)) is RECOMPUTED at query time by the same vectorized float64
-# impact_weights the build uses for max_w — bit-identical, and ~60% less
-# payload than the v1 raw-float64 w column (8 B/posting): at 6.4M docs a
-# Zipf-head query fetched ~100 MB of w bytes, dominating interactive fetch
-# latency. max_w per block is the WAND/early-stop bound; idf is denormalized
-# per term.
-BLOCKS_SCHEMA = (
-    "term string, shard int, salt int, block_id int, n int, "
-    "first_doc long, last_doc long, max_w double, idf double, "
-    "bytes int, docs binary, tfs binary, dls binary"
-)
-
 
 def build_index(
     spark: SparkSession,
@@ -87,23 +85,11 @@ def build_index(
     raises — use 'hash' or 'dense_sorted'. A post-build cross-check asserts
     the positional table's (n_docs, max_doc_id) equal the stats stage's."""
     store = IndexStorage(out_dir)
-    if not store.has_meta():
-        store.write_meta(
-            {
-                "n_shards": n_shards,
-                "block_size": BLOCK_SIZE,
-                "k1": K1,
-                "b": B,
-                "salt_cutoff": salt_cutoff,
-                "target_sublist": target_sublist,
-                "doc_id_method": doc_id_method,
-                "term_mode": term_mode,
-                "bpe_path": bpe_path,
-                "positions": positions,
-                "version": 2,  # block format v2: vByte tf+dl payloads, w recomputed
-            }
-        )
-    meta = store.read_meta()
+    meta = _write_meta(
+        store, n_shards=n_shards, salt_cutoff=salt_cutoff,
+        target_sublist=target_sublist, doc_id_method=doc_id_method,
+        term_mode=term_mode, bpe_path=bpe_path, positions=positions,
+    )
     n_shards = meta["n_shards"]
     if not store.exists("postings") and meta.get("term_mode", "word") != term_mode:
         # the param only drives stage 1; a mismatch before stage 1 means the
@@ -189,30 +175,80 @@ def build_index(
     if with_ids is not None and hasattr(with_ids, "unpersist"):
         with_ids.unpersist()
 
+    return _postings_to_blocks(spark, store)
+
+
+def _write_meta(store: IndexStorage, **fields) -> dict:
+    """The one writer of a new index's _meta.json: the caller's ``fields``
+    plus the block format's own (block_size, k1, b, version). An existing
+    meta (a resumed build) is kept as written. → the meta on disk."""
+    if not store.has_meta():
+        store.write_meta(
+            dict(fields, block_size=BLOCK_SIZE, k1=K1, b=B, version=BLOCK_FORMAT)
+        )
+    return store.read_meta()
+
+
+def _checkpoint(
+    spark: SparkSession,
+    store: IndexStorage,
+    table: str,
+    make_df: Callable[[], DataFrame],
+    partition_by: list[str] | None = None,
+) -> None:
+    """Write ``table`` from the DataFrame ``make_df()`` returns and log it to
+    build_log — unless the table's checkpoint already exists."""
+    if store.exists(table):
+        return
+    t0 = time.perf_counter()
+    store.write(make_df(), table, partition_by=partition_by)
+    _log(spark, store, table, t0)
+
+
+def _index_from_postings(
+    spark: SparkSession,
+    out_dir: str,
+    postings: Callable[[], DataFrame],
+    **fields,
+) -> IndexStorage:
+    """Make an index at ``out_dir`` from an existing postings table — the
+    shared path of merge_indexes, purge_deleted_docs and
+    compact_streamed_index: write the meta (``fields``, see _write_meta),
+    write the stage-1 ``postings`` checkpoint from the ``postings()``
+    DataFrame if it is missing, then run stages 2-4. Resumable like
+    build_index: every step skips what an earlier call completed."""
+    store = IndexStorage(out_dir)
+    _write_meta(store, **fields)
+    _checkpoint(spark, store, "postings", postings)
+    return _postings_to_blocks(spark, store)
+
+
+def _postings_to_blocks(spark: SparkSession, store: IndexStorage) -> IndexStorage:
+    """Stages 2-4 over the index's postings checkpoint, each skipped when
+    its own checkpoint exists."""
+    meta = store.read_meta()
+    n_shards = meta["n_shards"]
     postings = store.read(spark, "postings")
 
     # -- stage 2: corpus stats — ONE job over postings (the per-doc group
     # and the global fold fuse into a two-level aggregate; a separate
     # doclens checkpoint would cost a full extra write+scan of an N-row
     # table for a single downstream row) -------------------------------------
-    if not store.exists("stats"):
-        t0 = time.perf_counter()
-        stats = (
-            postings.groupBy("doc_id")
-            .agg(F.first("dl").alias("dl"))
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("dl").alias("total_dl"),
-                F.max("doc_id").alias("max_doc_id"),
-            )
-            .withColumn("avgdl", F.col("total_dl") / F.col("n_docs"))
+    _checkpoint(
+        spark, store, "stats",
+        lambda: postings.groupBy("doc_id")
+        .agg(F.first("dl").alias("dl"))
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("dl").alias("total_dl"),
+            F.max("doc_id").alias("max_doc_id"),
         )
-        store.write(stats, "stats")
-        _log(spark, store, "stats", t0)
+        .withColumn("avgdl", F.col("total_dl") / F.col("n_docs")),
+    )
 
     stats_row = store.read(spark, "stats").collect()[0]
     n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
-    if meta["doc_id_method"] in ("dense", "dense_sorted", "row_number"):
+    if dense_ids(meta):
         # dense ids must be exactly 1..N — catches a non-deterministic source
         # plan between _dense_ids' count pass and id pass (the double-scan
         # hazard) before any downstream stage trusts the ids
@@ -271,13 +307,12 @@ def build_index(
         store.write_meta(meta)
 
     # -- stage 3: term dictionary (df + idf) --------------------------------
-    if not store.exists("termdf"):
-        t0 = time.perf_counter()
-        tdf = tok.term_df(postings).withColumn(
+    _checkpoint(
+        spark, store, "termdf",
+        lambda: tok.term_df(postings).withColumn(
             "idf", _idf_udf(F.col("df"), F.lit(n_docs))
-        )
-        store.write(tdf, "termdf")
-        _log(spark, store, "termdf", t0)
+        ),
+    )
 
     # -- stage 4: compressed block build ------------------------------------
     if not store.exists("blocks"):
@@ -506,14 +541,14 @@ def merge_indexes(
     re-tokenizing (the expensive Python stage) and re-derives the global
     stages — corpus stats, idf, and re-blocked posting lists — because BM25
     weights depend on corpus-wide N/avgdl/df. unionByName is the shard-merge
-    op (SURVEY.md §2.7); everything downstream reuses the single-build path,
-    so the merged index is bit-identical to a from-scratch build over the
-    union of pages (asserted in tests).
+    op (SURVEY.md §2.7); the union becomes the postings checkpoint of
+    _index_from_postings, the path every index takes to its blocks, so the
+    merged index is bit-identical to a from-scratch build over the union of
+    pages (asserted in tests).
 
     doc_ids must be content-derived (doc_id_method='hash') for merge to be
     meaningful across partial builds; duplicate urls across parts are the
     caller's contract (streaming dedup handles the ingest case)."""
-    store = IndexStorage(out_dir)
     parts = [IndexStorage(d) for d in input_dirs]
     metas = [p.read_meta() for p in parts]
     if any(m["doc_id_method"] != "hash" for m in metas):
@@ -527,33 +562,16 @@ def merge_indexes(
             f"merge requires identical term_mode/bpe_path across parts; got {sorted(modes)}"
         )
     (term_mode, bpe_path), = modes
-    if not store.has_meta():
-        store.write_meta(
-            {
-                "n_shards": n_shards,
-                "block_size": BLOCK_SIZE,
-                "k1": K1,
-                "b": B,
-                "salt_cutoff": salt_cutoff,
-                "target_sublist": target_sublist,
-                "doc_id_method": "hash",
-                "term_mode": term_mode,
-                "bpe_path": bpe_path,
-                "merged_from": [p.root for p in parts],
-                "version": 2,  # block format v2: vByte tf+dl payloads, w recomputed
-            }
-        )
-    if not store.exists("postings"):
-        t0 = time.perf_counter()
-        merged = None
-        for p in parts:
-            df = p.read(spark, "postings")
-            merged = df if merged is None else merged.unionByName(df)
-        store.write(merged, "postings")
-        _log(spark, store, "postings", t0)
-    # stages 2-4 re-derive global stats/idf/blocks over the merged postings;
-    # build_index skips stage 1 because its checkpoint now exists
-    return _resume_from_postings(spark, store)
+    return _index_from_postings(
+        spark, out_dir,
+        lambda: functools.reduce(
+            DataFrame.unionByName, [p.read(spark, "postings") for p in parts]
+        ),
+        n_shards=n_shards, salt_cutoff=salt_cutoff,
+        target_sublist=target_sublist, doc_id_method="hash",
+        term_mode=term_mode, bpe_path=bpe_path,
+        merged_from=[p.root for p in parts],
+    )
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
@@ -631,8 +649,9 @@ def purge_deleted_docs(
     """Physically rebuild an index WITHOUT its tombstoned docs — the merge
     step of the merge-on-read delete story. The stage-1 postings
     checkpoint (and the positional table, if built) is anti-joined against
-    deleted_docs and written into ``out_dir``; stages 2-4 re-derive
-    corpus stats, idf, and blocks over the survivors — so N/avgdl/df
+    deleted_docs and written into ``out_dir``; _index_from_postings, the
+    path every index takes to its blocks, re-derives corpus stats, idf,
+    and blocks over the survivors (stages 2-4) — so N/avgdl/df
     REFRESH here (scores shift to their true post-delete values), the
     tokenize stage never re-runs, and the result is bit-identical to a
     fresh build over the surviving pages (test-pinned). The built-in
@@ -644,52 +663,24 @@ def purge_deleted_docs(
     meta = src.read_meta()
     if not src.exists("deleted_docs"):
         raise ValueError(f"index at {index_dir} has no deleted_docs table")
-    store = IndexStorage(out_dir)
-    if not store.has_meta():
-        store.write_meta(
-            {
-                "n_shards": meta["n_shards"],
-                "block_size": meta.get("block_size", BLOCK_SIZE),
-                "k1": meta.get("k1", K1),
-                "b": meta.get("b", B),
-                "salt_cutoff": meta["salt_cutoff"],
-                "target_sublist": meta["target_sublist"],
-                "doc_id_method": meta["doc_id_method"],
-                "term_mode": meta.get("term_mode", "word"),
-                "bpe_path": meta.get("bpe_path"),
-                "positions": bool(meta.get("positions")),
-                "purged_from": src.root,
-                "version": 2,
-            }
-        )
     tomb = src.read(spark, "deleted_docs").select("doc_id").distinct()
-    if not store.exists("postings"):
-        t0 = time.perf_counter()
-        live = src.read(spark, "postings").join(
+
+    def live(table: str) -> Callable[[], DataFrame]:
+        return lambda: src.read(spark, table).join(
             F.broadcast(tomb), "doc_id", "left_anti"
         )
-        store.write(live, "postings")
-        _log(spark, store, "postings", t0)
-    if meta.get("positions") and not store.exists("positions"):
-        t0 = time.perf_counter()
-        live_pos = src.read(spark, "positions").join(
-            F.broadcast(tomb), "doc_id", "left_anti"
+
+    if meta.get("positions"):
+        _checkpoint(
+            spark, IndexStorage(out_dir), "positions", live("positions"),
+            partition_by=["shard"],
         )
-        store.write(live_pos, "positions", partition_by=["shard"])
-        _log(spark, store, "positions", t0)
-    return _resume_from_postings(spark, store)
-
-
-def _resume_from_postings(spark: SparkSession, store: IndexStorage) -> IndexStorage:
-    """Run stages 1b-4 for an index whose postings checkpoint exists."""
-
-    class _NoPages:
-        def __getattr__(self, item):  # pragma: no cover - must never be touched
-            raise AssertionError("pages must not be read when postings exist")
-
-    return build_index(
-        spark,
-        _NoPages(),  # type: ignore[arg-type]
-        store.root,
-        n_shards=store.read_meta()["n_shards"],
+    return _index_from_postings(
+        spark, out_dir, live("postings"),
+        n_shards=meta["n_shards"], salt_cutoff=meta["salt_cutoff"],
+        target_sublist=meta["target_sublist"],
+        doc_id_method=meta["doc_id_method"],
+        term_mode=meta.get("term_mode", "word"),
+        bpe_path=meta.get("bpe_path"),
+        positions=bool(meta.get("positions")), purged_from=src.root,
     )

@@ -48,6 +48,22 @@ def cosine_col(a, b) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, cosine) rows → each query's top k as (query_id,
+    rank, vec_id, cosine): cosine descending, ties to the smaller vec_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("vec_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", F.col("rank").cast("int").alias("rank"),
+            "vec_id", "cosine",
+        )
+    )
+
+
 def bucket_col(vec, n_bits: int = 8) -> F.Column:
     """sign-LSH bucket: bit j = 1 iff vec[j] >= 0 (axis-aligned planes)."""
     bits = [
@@ -183,12 +199,7 @@ def rh_bucketed_topk(
         F.col(id_col).alias("vec_id"),
         cosine_col(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "cosine")
-    )
+    return _topk(scored, k)
 
 
 def _table_bucket(
@@ -231,12 +242,7 @@ def cosine_topk(
         F.col(id_col).alias("vec_id"),
         cosine_col(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "cosine")
-    )
+    return _topk(scored, k)
 
 
 def bucketed_topk(
@@ -261,12 +267,7 @@ def bucketed_topk(
         F.col(id_col).alias("vec_id"),
         cosine_col(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "cosine")
-    )
+    return _topk(scored, k)
 
 
 def auto_n_bits(n_vectors: int, target_bucket: int = 256) -> int:
@@ -406,12 +407,7 @@ def ivf_topk(
         F.col(id_col).alias("vec_id"),
         cosine_col(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
     ).dropDuplicates(["query_id", "vec_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "cosine")
-    )
+    return _topk(scored, k)
 
 
 def _lloyd_train_arrow(

@@ -46,7 +46,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import decode_posting_blocks_batch, impact_weights
+from ..functions.codec import (
+    BLOCKS_SCHEMA,
+    bm25_params,
+    check_block_format,
+    decode_posting_blocks_batch,
+    dense_ids,
+    impact_weights,
+)
 from ..functions.hashing import term_shard
 from ..sources.tables import IndexStorage
 from ..textnorm import tokenize_words
@@ -623,16 +630,10 @@ class IndexReader:
         import json
 
         meta = json.loads(snapshot[1])
-        if meta.get("version") != 2:
-            raise ValueError(
-                f"index at {self.store.root} has block format "
-                f"v{meta.get('version')}; this reader needs v2 "
-                "(vByte tf/dl payloads) — rebuild the index"
-            )
+        check_block_format(meta, self.store.root)
         self.meta = meta
-        self._bm25 = (
-            float(meta["avgdl"]), float(meta["k1"]), float(meta["b"])
-        )
+        self._bm25 = bm25_params(meta)
+        self._n_docs = int(meta["n_docs"]) if dense_ids(meta) else None
         self._term_rows_cache.clear()
         self._raw_sizes.clear()
         self._raw_bytes = 0
@@ -817,12 +818,7 @@ class IndexReader:
             self._log_query(entry)
             return []
         entry["strategy"] = "taat"
-        n_docs = (
-            self.meta["n_docs"]
-            if self.meta.get("doc_id_method")
-            in ("dense", "dense_sorted", "row_number")
-            else None
-        )
+        n_docs = self._n_docs
         hit_terms = [t for t in terms if self._term_rows_cache.get(t)]
         cold = [t for t in hit_terms if t not in self._decoded_cache]
         early_stop = len(hit_terms) == 1 or (
@@ -963,22 +959,13 @@ def _arrow_rows(tbl) -> list[_ArrowRow]:
 # distributed batch path
 # ---------------------------------------------------------------------------
 
-# the blocks table as _build_blocks_stage writes it. Given to the reader so
-# search_topk starts no schema-inference job (one per call otherwise).
-_BLOCKS_SCHEMA = (
-    "term string, salt int, block_id int, n int, first_doc long, "
-    "last_doc long, max_w double, idf double, bytes int, docs binary, "
-    "tfs binary, dls binary, shard int"
-)
-
-
 def _candidate_blocks(
     spark: SparkSession, store: IndexStorage, terms: list[str], n_shards: int
 ) -> DataFrame | None:
     if not terms:
         return None
     shards = sorted({term_shard(t, n_shards) for t in terms})
-    return spark.read.schema(_BLOCKS_SCHEMA).parquet(store.path("blocks")).where(
+    return spark.read.schema(BLOCKS_SCHEMA).parquet(store.path("blocks")).where(
         F.col("shard").isin(shards) & F.col("term").isin(terms)
     )
 
@@ -1018,12 +1005,9 @@ def search_topk(
     query-terms collect; tombstones are read on the driver with pyarrow."""
     store = IndexStorage(index_dir)
     meta = store.read_meta()
-    bm25 = (float(meta["avgdl"]), float(meta["k1"]), float(meta["b"]))
-    dense_n_docs = (
-        int(meta["n_docs"])
-        if meta.get("doc_id_method") in ("dense", "dense_sorted", "row_number")
-        else None
-    )
+    check_block_format(meta, store.root)
+    bm25 = bm25_params(meta)
+    dense_n_docs = int(meta["n_docs"]) if dense_ids(meta) else None
     # merge-on-read doc deletes (delete_docs): tombstoned ids are dropped
     # from every scorer BEFORE ranking, broadcast to the per-query tasks.
     # Corpus stats stay STALE until purge_deleted_docs (Lucene's

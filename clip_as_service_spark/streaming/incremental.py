@@ -134,13 +134,11 @@ def compact_streamed_index(
     are the caller's contract (as merge_indexes documents for urls).
 
     Scale shape: one groupBy(doc_id).max join (hash-keyed, no skew — doc_id
-    is a hash) + the shared resumable stages 2-4. The output is a normal
-    IndexStorage: mergeable with batch-built partial indexes via
+    is a hash), then index_build._index_from_postings — the resumable path
+    every index takes from its postings checkpoint to blocks. The output is
+    a normal IndexStorage: mergeable with batch-built partial indexes via
     merge_indexes (both use doc_id_method='hash')."""
-    from ..functions.codec import BLOCK_SIZE
-    from ..operators.index_build import _resume_from_postings
-    from ..sources.tables import IndexStorage
-    from .. import B, K1
+    from ..operators.index_build import _index_from_postings
 
     posts = spark.read.parquet(postings_dir)
     if "warc_ts" in posts.columns:
@@ -192,26 +190,12 @@ def compact_streamed_index(
                 "Latest-crawl-wins cannot order them; give crawls distinct "
                 "warc_ts (or dedupe upstream) and re-compact."
             )
-    store = IndexStorage(out_dir)
-    if not store.has_meta():
-        store.write_meta(
-            {
-                "n_shards": n_shards,
-                "block_size": BLOCK_SIZE,
-                "k1": K1,
-                "b": B,
-                "salt_cutoff": salt_cutoff,
-                "target_sublist": target_sublist,
-                "doc_id_method": "hash",
-                "term_mode": term_mode,
-                "bpe_path": bpe_path,
-                "compacted_from": postings_dir,
-                "version": 2,
-            }
-        )
-    if not store.exists("postings"):
-        store.write(posts, "postings")
-    return _resume_from_postings(spark, store)
+    return _index_from_postings(
+        spark, out_dir, lambda: posts,
+        n_shards=n_shards, salt_cutoff=salt_cutoff,
+        target_sublist=target_sublist, doc_id_method="hash",
+        term_mode=term_mode, bpe_path=bpe_path, compacted_from=postings_dir,
+    )
 
 
 EMBEDDINGS_SCHEMA = StructType(

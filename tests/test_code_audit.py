@@ -1,7 +1,8 @@
 """North-rule audit (BASELINE.md): no per-row Python anywhere in the
 build/query paths — every Python crossing must be a vectorized pandas/Arrow
 UDF (pandas_udf / applyInPandas / mapInPandas). Bans row-at-a-time
-``F.udf`` and RDD lambda transforms in the engine package."""
+``F.udf`` and RDD lambda transforms in the engine package — and pins that
+the block-format version is written from its one constant."""
 
 import re
 from pathlib import Path
@@ -16,6 +17,9 @@ BANNED = [
     (r"\.rdd\.mapPartitions\(", "rdd.mapPartitions"),
     (r"\.foreach\(", "driver-side foreach"),
     (r"\.toLocalIterator\(", "driver-side row iteration"),
+    # the block format is one constant (functions/codec.py BLOCK_FORMAT),
+    # written by one meta writer and checked by both readers
+    (r'"version":\s*2\b', "block-format literal; use BLOCK_FORMAT"),
 ]
 
 # driver-side .collect() is allowed only where results are provably small

@@ -287,7 +287,8 @@ def test_reader_oversize_entry_never_sticks(spark, index_dir, oracle):
 
 def test_reader_rejects_v1_index(spark, index_dir, tmp_path):
     """A v1 (raw-weight payload) index must be rejected loudly, not decoded
-    into garbage scores."""
+    into garbage scores — by the interactive reader and by search_topk,
+    before it returns a plan."""
     import json
     import os
     import shutil
@@ -300,6 +301,8 @@ def test_reader_rejects_v1_index(spark, index_dir, tmp_path):
     json.dump(meta, open(meta_path, "w"))
     with pytest.raises(ValueError, match="block format"):
         wand.IndexReader(None, old)
+    with pytest.raises(ValueError, match="block format"):
+        wand.search_topk(spark, old, fixtures.queries_spark_df(spark), k=K)
 
 
 def test_salting_created_sublists(spark, index_dir):

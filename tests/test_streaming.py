@@ -107,6 +107,16 @@ def test_stream_compaction_converges_to_batch_build(spark, tmp_path):
     reader = wand.IndexReader(None, compacted)
     hits = reader.search("zz", k=5)
     assert len(hits) == 1
+    # compaction logs the same build stages as the batch build
+    from clip_as_service_spark.sources.tables import IndexStorage
+
+    def stages(d):
+        return {
+            r["stage"]
+            for r in index_build.iter_build_log(spark, IndexStorage(d))
+        }
+
+    assert stages(compacted) == stages(batch_dir)
 
 
 def test_stream_compaction_ts_tie_conflict_raises(spark, tmp_path):
