@@ -212,7 +212,7 @@ def main() -> None:
             "- Round-1 → round-2 at local[32], same 6.4M-doc input: 24,024 → "
             "~40,000 docs/s. Fixes: blocks-write sub-splitting (write tasks "
             "≈ 2×cores independent of n_shards — the r01 write chain "
-            "anti-scaled 2× at 32 cores, tools/profile_stage4.py), the "
+            "anti-scaled 2× at 32 cores), the "
             "doclens stage folded into the stats aggregate, and honest "
             "level confinement.\n"
         )

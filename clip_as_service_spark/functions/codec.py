@@ -6,9 +6,10 @@ The index analog of the reference's low-precision/size engineering
 with per-block metadata (first/last doc id, max impact weight) enabling
 block-max WAND skipping (O8 analog).
 
-All encode/decode is numpy array code over whole blocks — these functions
-run inside Arrow-batched pandas UDFs (applyInPandas), never per-row Python
-in Spark's loop.
+All encode/decode is numpy array code over whole blocks, never per-row
+Python in Spark's loop: the build's mapInArrow pack hands
+encode_posting_groups the flattened posting lists of a whole Arrow batch of
+groups, and the readers decode many blocks per call.
 
 vByte: little-endian base-128; 7 payload bits per byte, high bit set on all
 but the terminal byte of each value (classic format, e.g. Scholer et al.,
@@ -17,7 +18,10 @@ but the terminal byte of each value (classic format, e.g. Scholer et al.,
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 
@@ -63,42 +67,40 @@ def dense_ids(meta: dict) -> bool:
     return meta.get("doc_id_method") in ("dense", "dense_sorted", "row_number")
 
 
+# smallest uint64 value needing 2, 3, ... 10 vByte bytes
+_VBYTE_BOUNDS = np.array([1 << (7 * i) for i in range(1, 10)], dtype=np.uint64)
+
+
 def _vbyte_lengths(v: np.ndarray) -> np.ndarray:
     """Bytes per uint64 value: ceil(bitlen/7), at least 1."""
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp > 0
-        if not nz.any():
+    nbytes = np.ones(len(v), dtype=np.int64)
+    for bound in _VBYTE_BOUNDS:
+        more = v >= bound
+        if not more.any():
             break
-        nbits[nz] += 1
-        tmp = tmp >> np.uint64(7)
-    return np.maximum(nbits, 1)
+        nbytes += more
+    return nbytes
 
 
-def _vbyte_pack(v: np.ndarray, nbytes: np.ndarray) -> bytes:
+def _vbyte_pack(v: np.ndarray, nbytes: np.ndarray) -> np.ndarray:
     """Scatter the payload bytes of uint64 values ``v`` by offset, given
-    their byte lengths."""
-    offsets = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
-    shifted = v.copy()
-    for byte_i in range(int(nbytes.max())):
-        mask = nbytes > byte_i
-        idx = offsets[mask] + byte_i
-        payload = (shifted[mask] & np.uint64(0x7F)).astype(np.uint8)
-        is_last = nbytes[mask] == byte_i + 1
-        out[idx] = payload | np.where(is_last, 0, 0x80).astype(np.uint8)
-        shifted = shifted >> np.uint64(7)
-    return out.tobytes()
+    their byte lengths → uint8 array. Each pass writes the next byte of the
+    values not yet finished, so the work is the output size."""
+    out = np.empty(int(nbytes.sum()), dtype=np.uint8)
+    at = np.cumsum(nbytes) - nbytes
+    left = nbytes
+    while len(v):
+        more = left > 1
+        out[at] = (v & np.uint64(0x7F)).astype(np.uint8) | (more.astype(np.uint8) << 7)
+        v, at, left = v[more] >> np.uint64(7), at[more] + 1, left[more] - 1
+    return out
 
 
 def vbyte_encode(values: np.ndarray) -> bytes:
     """Encode a non-negative int64 array. Vectorized: compute per-value byte
     lengths, scatter payload bytes by offset."""
     v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    return _vbyte_pack(v, _vbyte_lengths(v))
+    return _vbyte_pack(v, _vbyte_lengths(v)).tobytes()
 
 
 def vbyte_decode(data: bytes, n: int) -> np.ndarray:
@@ -148,60 +150,95 @@ def encode_posting_block(
     )
 
 
-def _block_gaps(doc_ids: np.ndarray, block_size: int):
-    """Doc-id gaps of a sorted list, reset to the raw id at every block
-    start (blocks stay independently decodable) → (gaps, block starts)."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    starts = np.arange(0, len(doc_ids), block_size)
-    gaps = np.empty_like(doc_ids)
-    gaps[0] = doc_ids[0]
-    gaps[1:] = np.diff(doc_ids)
-    gaps[starts] = doc_ids[starts]
-    return gaps, starts
+class EncodedBlocks(NamedTuple):
+    """Blocks of many posting lists, in input group order and block_id
+    order within a group."""
+
+    group: np.ndarray
+    block_id: np.ndarray
+    n: np.ndarray
+    first_doc: np.ndarray
+    last_doc: np.ndarray
+    max_w: np.ndarray
+    docs: pa.BinaryArray
+    tfs: pa.BinaryArray
+    dls: pa.BinaryArray
 
 
-def _encode_split(
-    values: np.ndarray, starts: np.ndarray, block_size: int
-) -> list[bytes]:
-    """vByte-encode ``values`` in one pass, then slice the buffer into the
-    per-block payloads at the blocks' byte offsets."""
-    v = np.asarray(values, dtype=np.int64).astype(np.uint64)
+def _encode_payloads(columns: list[np.ndarray], cuts: np.ndarray):
+    """vByte-encode equal-length ``columns`` in ONE pass over their
+    concatenation → one Arrow binary array per column, with one element
+    per block [cuts[i], cuts[i+1])."""
+    n = len(columns[0])
+    v = np.concatenate(columns).astype(np.uint64)
     nbytes = _vbyte_lengths(v)
-    buf = _vbyte_pack(v, nbytes)
-    ends = np.cumsum(nbytes)
-    bounds = [0] + ends[np.minimum(starts + block_size, len(v)) - 1].tolist()
-    return [buf[bounds[i] : bounds[i + 1]] for i in range(len(starts))]
+    ends = np.concatenate(([0], np.cumsum(nbytes)))
+    if ends[-1] > 2**31 - 1:
+        raise ValueError("payload exceeds one Arrow binary array (2 GiB)")
+    data = pa.py_buffer(_vbyte_pack(v, nbytes))
+    arrays = []
+    for i in range(len(columns)):
+        b = ends[cuts + i * n]
+        # each array gets its own slice of the buffer, offsets from 0: Spark
+        # mis-reads a binary array whose offsets start past 0
+        arrays.append(pa.BinaryArray.from_buffers(
+            pa.binary(), len(cuts) - 1,
+            [None, pa.py_buffer((b - b[0]).astype(np.int32)), data.slice(b[0], b[-1] - b[0])],
+        ))
+    return arrays
 
 
-def encode_doc_gap_blocks(
-    doc_ids: np.ndarray, block_size: int = BLOCK_SIZE
-) -> list[bytes]:
-    """Delta-gap + vByte encode a sorted doc-id list into per-block buffers,
-    one vectorized pass (block-local gap restart; see encode_posting_blocks)."""
-    gaps, starts = _block_gaps(doc_ids, block_size)
-    return _encode_split(gaps, starts, block_size)
-
-
-def encode_posting_blocks(
+def encode_posting_groups(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-) -> tuple[list[bytes], list[bytes], list[bytes]]:
-    """Encode a whole posting list into blocks in ONE vectorized pass per
-    payload (vs per-block calls): gaps are computed globally with a reset to
-    the raw doc id at each block start (blocks stay independently
-    decodable), then per-value byte lengths give the slice offsets.
+    group_starts: np.ndarray,
+    bm25: tuple[float, float, float],
+) -> EncodedBlocks:
+    """Encode MANY posting lists into blocks, one vectorized pass per
+    payload. The lists arrive concatenated, group g being
+    ``[group_starts[g], group_starts[g+1])``, doc ids in any order within a
+    group. One lexsort orders every group by doc id; a block starts at each
+    group start and every BLOCK_SIZE postings within a group, so none
+    crosses a group, and its doc gaps restart from the raw id (blocks stay
+    independently decodable). ``max_w`` is the block max of impact_weights
+    under ``bm25`` = (avgdl, k1, b). Equal to encode_posting_block over
+    each sorted BLOCK_SIZE chunk of each group — pinned by tests."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    n = len(doc_ids)
+    group_starts = np.asarray(group_starts, dtype=np.int64)
+    gid = np.repeat(np.arange(len(group_starts)), np.diff(group_starts, append=n))
+    order = np.lexsort((doc_ids, gid))
+    doc_ids = doc_ids[order]
+    tfs = np.asarray(tfs, dtype=np.int64)[order]
+    dls = np.asarray(dls, dtype=np.int64)[order]
 
-    Equivalent to [encode_posting_block(chunk) for chunk in chunks] — pinned
-    by tests — but ~block_count× fewer numpy dispatches (head terms at
-    10^12 docs have millions of blocks)."""
-    gaps, starts = _block_gaps(doc_ids, block_size)
-    return (
-        _encode_split(gaps, starts, block_size),
-        _encode_split(tfs, starts, block_size),
-        _encode_split(dls, starts, block_size),
+    rank = np.arange(n) - group_starts[gid]  # position within its group
+    starts = np.flatnonzero(rank % BLOCK_SIZE == 0)
+    cuts = np.append(starts, n)  # blocks tile the postings
+    gaps = np.diff(doc_ids, prepend=0)
+    gaps[starts] = doc_ids[starts]
+    w = impact_weights(tfs, dls, *bm25)
+    payloads = _encode_payloads([gaps, tfs, dls], cuts)
+    return EncodedBlocks(
+        gid[starts],
+        (rank[starts] // BLOCK_SIZE).astype(np.int32),
+        np.diff(cuts).astype(np.int32),
+        doc_ids[starts],
+        doc_ids[cuts[1:] - 1],
+        np.maximum.reduceat(w, starts) if n else w,
+        *payloads,
     )
+
+
+def encode_posting_blocks(
+    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray
+) -> tuple[list[bytes], list[bytes], list[bytes]]:
+    """Encode one posting list into per-block (docs, tfs, dls) payloads —
+    the one-group call of encode_posting_groups (its max_w, computed under
+    placeholder BM25 parameters, is dropped)."""
+    enc = encode_posting_groups(doc_ids, tfs, dls, [0], (1.0, 1.0, 1.0))
+    return enc.docs.to_pylist(), enc.tfs.to_pylist(), enc.dls.to_pylist()
 
 
 def decode_posting_blocks_batch(

@@ -6,7 +6,8 @@ Stages (each a durable, idempotent parquet write; `_SUCCESS` = checkpoint):
   1. postings — tokenize + groupBy(term, doc_id) [the one Python crossing]
   2. stats    — exact N, Σdl, avgdl
   3. termdf   — (term, df, idf); idf via Python math.log (bit-identity)
-  4. blocks   — per-(term, salt) sorted doc lists → BLOCK_SIZE-doc blocks,
+  4. blocks   — per-(term, salt) doc lists → a mapInArrow pack, one Arrow
+                batch of groups per encoder call: BLOCK_SIZE-doc blocks,
                 delta-gap + vByte docs/tfs/dls, per-block (first/last doc,
                 max impact weight) → partitioned by shard=pmod(xxhash64(term))
 
@@ -28,32 +29,56 @@ _write_meta and run stages 2-4 with _postings_to_blocks (the last three
 through _index_from_postings, which also writes their postings table).
 
 Lineage (north rule): every stage appends (stage, shard, rows, bytes,
-wall_ms) rows to build_log; restart skips completed stages, and a
-restarted build keeps the _meta.json it first wrote.
+wall_ms) rows to build_log, counted from the parquet footers on the driver
+(no Spark job); restart skips completed stages, and a restarted build keeps
+the _meta.json it first wrote.
 """
 
 from __future__ import annotations
 
 import functools
 import time
+from collections import Counter
 from typing import Callable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import B, K1
 from ..functions.codec import (
     BLOCK_FORMAT,
     BLOCK_SIZE,
     dense_ids,
-    encode_posting_blocks,
-    impact_weights,
+    encode_posting_groups,
 )
 from ..sources.tables import IndexStorage
 from . import tokenize as tok
 from .bm25 import _idf_udf
+
+# Postings per encoder call in the stage-4 pack: an Arrow batch of up to
+# maxRecordsPerBatch groups is cut at group boundaries so the pack's numpy
+# working set (~100 B/posting) and each output batch's binary columns (int32
+# offsets, ≤10 B/posting) stay bounded. A larger group goes alone.
+PACK_MAX_POSTINGS = 1 << 20
+
+# the pack's output: block rows keyed by tid (term and idf attach after)
+_PACK_SCHEMA = pa.schema([
+    ("tid", pa.int64()), ("salt", pa.int32()), ("block_id", pa.int32()),
+    ("n", pa.int32()), ("first_doc", pa.int64()), ("last_doc", pa.int64()),
+    ("max_w", pa.float64()), ("docs", pa.binary()), ("tfs", pa.binary()),
+    ("dls", pa.binary()),
+])
+
+BUILD_LOG_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("shard", pa.int32()), ("rows", pa.int64()),
+    ("bytes", pa.int64()), ("wall_ms", pa.int32()),
+])
+
 
 def build_index(
     spark: SparkSession,
@@ -142,7 +167,7 @@ def build_index(
             # under compensating partition drift between the two scans)
             meta["n_pages_input"] = int(id_counts["n_pages"])
             store.write_meta(meta)
-        _log(spark, store, "postings", t0)
+        _log(store, "postings", t0)
 
     # -- optional stage 1b: positional table (indexed phrase search) --------
     if positions and not meta.get("positions"):
@@ -171,7 +196,7 @@ def build_index(
         _phrase.build_positions_index(
             spark, with_ids, store, n_shards, text_col=text_col
         )
-        _log(spark, store, "positions", t0)
+        _log(store, "positions", t0)
     if with_ids is not None and hasattr(with_ids, "unpersist"):
         with_ids.unpersist()
 
@@ -190,7 +215,6 @@ def _write_meta(store: IndexStorage, **fields) -> dict:
 
 
 def _checkpoint(
-    spark: SparkSession,
     store: IndexStorage,
     table: str,
     make_df: Callable[[], DataFrame],
@@ -202,7 +226,7 @@ def _checkpoint(
         return
     t0 = time.perf_counter()
     store.write(make_df(), table, partition_by=partition_by)
-    _log(spark, store, table, t0)
+    _log(store, table, t0)
 
 
 def _index_from_postings(
@@ -219,7 +243,7 @@ def _index_from_postings(
     build_index: every step skips what an earlier call completed."""
     store = IndexStorage(out_dir)
     _write_meta(store, **fields)
-    _checkpoint(spark, store, "postings", postings)
+    _checkpoint(store, "postings", postings)
     return _postings_to_blocks(spark, store)
 
 
@@ -235,7 +259,7 @@ def _postings_to_blocks(spark: SparkSession, store: IndexStorage) -> IndexStorag
     # doclens checkpoint would cost a full extra write+scan of an N-row
     # table for a single downstream row) -------------------------------------
     _checkpoint(
-        spark, store, "stats",
+        store, "stats",
         lambda: postings.groupBy("doc_id")
         .agg(F.first("dl").alias("dl"))
         .agg(
@@ -246,7 +270,7 @@ def _postings_to_blocks(spark: SparkSession, store: IndexStorage) -> IndexStorag
         .withColumn("avgdl", F.col("total_dl") / F.col("n_docs")),
     )
 
-    stats_row = store.read(spark, "stats").collect()[0]
+    stats_row = _read_stats(store)
     n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
     if dense_ids(meta):
         # dense ids must be exactly 1..N — catches a non-deterministic source
@@ -308,7 +332,7 @@ def _postings_to_blocks(spark: SparkSession, store: IndexStorage) -> IndexStorag
 
     # -- stage 3: term dictionary (df + idf) --------------------------------
     _checkpoint(
-        spark, store, "termdf",
+        store, "termdf",
         lambda: tok.term_df(postings).withColumn(
             "idf", _idf_udf(F.col("df"), F.lit(n_docs))
         ),
@@ -328,7 +352,7 @@ def _postings_to_blocks(spark: SparkSession, store: IndexStorage) -> IndexStorag
             # restore even on failure: the override must not leak into the
             # caller's session when the blocks write aborts
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-        _log(spark, store, "blocks", t0, per_shard=True)
+        _log(store, "blocks", t0, per_shard=True)
 
     return store
 
@@ -341,7 +365,7 @@ def _build_blocks_stage(
     avgdl: float,
     n_shards: int,
 ) -> None:
-    """Stage 4 body: salted groupBy → JVM-side packing → partitioned write."""
+    """Stage 4 body: salted groupBy → Arrow-batch pack → partitioned write."""
     tdf = store.read(spark, "termdf")
     salt_cutoff = meta["salt_cutoff"]
     target = meta["target_sublist"]
@@ -384,68 +408,24 @@ def _build_blocks_stage(
         ).otherwise(F.lit(0)),
     )
 
-    # hierarchical merge: the grouping/packing happens entirely JVM-SIDE
-    # (groupBy + collect_list with map-side partial aggregation); Python
-    # sees ONE ROW PER (tid, salt) GROUP with the posting arrays as bulk
-    # Arrow buffers. Rationale: the JVM→Python row boundary costs ~30 µs
-    # per row in this runtime (measured: a noop mapInPandas over 110M
-    # rows = 105 s on 32 cores), so the 10^8 posting rows must never
-    # individually cross into Python — only the ~10^4 group rows do.
-    # Group sizes are bounded by construction: salting caps every
-    # (tid, salt) sub-list at ~target_sublist postings.
+    # hierarchical merge: the grouping happens entirely JVM-SIDE (groupBy +
+    # collect_list with map-side partial aggregation); Python sees ONE ARROW
+    # BATCH of (tid, salt) groups at a time, as flat list buffers, and
+    # encodes it in one numpy pass per payload. Each crossing into Python
+    # has a fixed cost — ~30 µs per row (a noop mapInPandas over 110M rows =
+    # 105 s on 32 cores), ~0.6 ms per group for a per-group encode plus
+    # pandas frame — so neither posting rows nor groups cross one at a
+    # time. Salting caps every (tid, salt) group at ~target_sublist postings.
     grouped = p.groupBy("tid", "salt").agg(
         F.collect_list("doc_id").alias("doc_ids"),
         F.collect_list("tf").alias("tfs_a"),
         F.collect_list("dl").alias("dls_a"),
     )
-
-    def _build_blocks(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                yield _encode_group(row)
-
-    def _encode_group(row) -> pd.DataFrame:
-        tid = int(row.tid)
-        salt = int(row.salt)
-        doc_ids = np.asarray(row.doc_ids, dtype=np.int64)
-        tfs = np.asarray(row.tfs_a, dtype=np.int64)
-        dls = np.asarray(row.dls_a, dtype=np.int64)
-        order = np.argsort(doc_ids, kind="stable")
-        doc_ids = doc_ids[order]
-        tfs = tfs[order]
-        dls = dls[order]
-        n = len(doc_ids)
-        docs_b, tfs_b, dls_b = encode_posting_blocks(doc_ids, tfs, dls)
-        w = impact_weights(tfs, dls, avgdl, K1, B)
-        starts = np.arange(0, n, BLOCK_SIZE)
-        ends = np.minimum(starts + BLOCK_SIZE, n)
-        max_w = np.maximum.reduceat(w, starts)
-        return pd.DataFrame(
-            {
-                "tid": np.full(len(starts), tid, dtype=np.int64),
-                "salt": np.full(len(starts), salt, dtype=np.int32),
-                "block_id": np.arange(len(starts), dtype=np.int32),
-                "n": (ends - starts).astype(np.int32),
-                "first_doc": doc_ids[starts],
-                "last_doc": doc_ids[ends - 1],
-                "max_w": max_w,
-                "bytes": np.array(
-                    [len(a) + len(b) + len(c) for a, b, c in zip(docs_b, tfs_b, dls_b)],
-                    dtype=np.int32,
-                ),
-                "docs": docs_b,
-                "tfs": tfs_b,
-                "dls": dls_b,
-            }
-        )
-
-    merged = grouped.mapInPandas(
-        _build_blocks,
-        schema=(
-            "tid long, salt int, block_id int, n int, first_doc long, "
-            "last_doc long, max_w double, bytes int, docs binary, "
-            "tfs binary, dls binary"
+    merged = grouped.mapInArrow(
+        functools.partial(
+            _pack_blocks, bm25=(avgdl, K1, B), max_postings=PACK_MAX_POSTINGS
         ),
+        from_arrow_schema(_PACK_SCHEMA),
     )
     # re-attach term string + idf via a LONG-key broadcast join on the
     # ~1000× smaller block-row table; shard derives from the term
@@ -454,8 +434,9 @@ def _build_blocks_stage(
     ).select(
         "term",
         F.pmod(F.xxhash64("term"), F.lit(n_shards)).cast("int").alias("shard"),
-        "salt", "block_id", "n", "first_doc", "last_doc", "max_w",
-        "idf", "bytes", "docs", "tfs", "dls",
+        "salt", "block_id", "n", "first_doc", "last_doc", "max_w", "idf",
+        (F.length("docs") + F.length("tfs") + F.length("dls")).alias("bytes"),
+        "docs", "tfs", "dls",
     )
     # co-locate shards before the partitioned write, but DECOUPLE write
     # parallelism from n_shards: repartitioning on shard alone caps the
@@ -488,38 +469,68 @@ def _build_blocks_stage(
     store.write(blocks, "blocks", partition_by=["shard"])
 
 
-def _log(
-    spark: SparkSession,
-    store: IndexStorage,
-    stage: str,
-    t0: float,
-    per_shard: bool = False,
-):
-    """Append per-stage (and for blocks, per-shard) lineage + metrics rows."""
+def _pack_blocks(batches, bm25: tuple[float, float, float], max_postings: int):
+    """mapInArrow body of stage 4: Arrow batches of (tid, salt, doc_ids,
+    tfs_a, dls_a) groups → block rows (_PACK_SCHEMA), one encoder call and
+    output batch per slice of ≤ ``max_postings`` postings (or one larger
+    group). List columns are read zero-copy: flat values plus offsets."""
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        lists = batch.column("doc_ids")
+        offsets = np.asarray(lists.offsets, dtype=np.int64)
+        offsets -= offsets[0]
+        doc_ids = lists.flatten().to_numpy()
+        tfs = batch.column("tfs_a").flatten().to_numpy()
+        dls = batch.column("dls_a").flatten().to_numpy()
+        tids = batch.column("tid").to_numpy()
+        salts = batch.column("salt").to_numpy()
+        g0 = 0
+        while g0 < batch.num_rows:
+            g1 = int(np.searchsorted(offsets, offsets[g0] + max_postings, "right"))
+            g1 = max(g1 - 1, g0 + 1)
+            lo, hi = offsets[g0], offsets[g1]
+            enc = encode_posting_groups(
+                doc_ids[lo:hi], tfs[lo:hi], dls[lo:hi], offsets[g0:g1] - lo, bm25
+            )
+            group = enc.group + g0
+            yield pa.RecordBatch.from_arrays(
+                [tids[group], salts[group], *enc[1:]], schema=_PACK_SCHEMA
+            )
+            g0 = g1
+
+
+def _read_stats(store: IndexStorage) -> dict:
+    """The stats row, read with pyarrow: no Spark job."""
+    return store.dataset("stats").to_table().to_pylist()[0]
+
+
+def _log(store: IndexStorage, stage: str, t0: float, per_shard: bool = False):
+    """Append a stage's lineage rows to build_log (BUILD_LOG_SCHEMA): one
+    (stage, -1, rows, null, wall_ms) row, or per shard with the summed
+    ``bytes`` (blocks). Read on the driver with pyarrow — rows from the
+    parquet footers, bytes from the small int column, never the payloads —
+    and written with append_local: no Spark job."""
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    df = store.read(spark, stage)
-    if per_shard and "shard" in df.columns:
-        # `bytes` is a plain int column written by the block builder, so the
-        # metrics pass reads two small columns — never the binary payloads
-        sizes = df.groupBy("shard").agg(
-            F.count("*").alias("rows"), F.sum("bytes").alias("bytes")
-        )
-        log = sizes.select(
-            F.lit(stage).alias("stage"),
-            F.col("shard").cast("int").alias("shard"),
-            F.col("rows").cast("long").alias("rows"),
-            F.col("bytes").cast("long").alias("bytes"),
-            F.lit(wall_ms).alias("wall_ms"),
-        )
+    ds = store.dataset(stage)
+    if per_shard:
+        rows, nbytes = Counter(), Counter()
+        for frag in ds.get_fragments():
+            shard = pads.get_partition_keys(frag.partition_expression)["shard"]
+            rows[shard] += frag.count_rows()
+            col = frag.to_table(columns=["bytes"])["bytes"]
+            nbytes[shard] += pc.sum(col, min_count=0).as_py()
+        shards = sorted(rows)
+        log = {"shard": shards, "rows": [rows[i] for i in shards],
+               "bytes": [nbytes[i] for i in shards]}
     else:
-        log = df.agg(F.count("*").alias("rows")).select(
-            F.lit(stage).alias("stage"),
-            F.lit(-1).cast("int").alias("shard"),
-            F.col("rows").cast("long").alias("rows"),
-            F.lit(None).cast("long").alias("bytes"),
-            F.lit(wall_ms).alias("wall_ms"),
-        )
-    store.append(log, "build_log")
+        log = {"shard": [-1], "rows": [ds.count_rows()], "bytes": [None]}
+    n = len(log["shard"])
+    store.append_local(
+        pa.table({"stage": [stage] * n, **log, "wall_ms": [wall_ms] * n},
+                 schema=BUILD_LOG_SCHEMA),
+        "build_log",
+    )
 
 
 def iter_build_log(spark: SparkSession, store: IndexStorage):
@@ -600,8 +611,6 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     of delete_ann_vectors: a zero-row tombstone table would make every
     later query pay the tombstone load for nothing, and purge runnable on
     an index with no deletes). Returns tombstones written."""
-    import pyarrow as pa
-
     if isinstance(doc_ids, DataFrame):
         doc_ids = [
             r[0]
@@ -672,7 +681,7 @@ def purge_deleted_docs(
 
     if meta.get("positions"):
         _checkpoint(
-            spark, IndexStorage(out_dir), "positions", live("positions"),
+            IndexStorage(out_dir), "positions", live("positions"),
             partition_by=["shard"],
         )
     return _index_from_postings(

@@ -113,6 +113,15 @@ class IndexStorage:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
 
+    def dataset(self, table: str):
+        """``table`` as a pyarrow dataset, for driver-side reads that start
+        no Spark job. Hive partitioning exposes partition columns (shard);
+        files named ``_*`` or ``.*`` (markers, crash-left tmps) are skipped,
+        as in Spark's listing."""
+        import pyarrow.dataset as pads
+
+        return pads.dataset(self.path(table), format="parquet", partitioning="hive")
+
     def deleted_doc_ids(self):
         """Tombstoned doc ids (``deleted_docs``, written by delete_docs) as
         a sorted, unique int64 ndarray — empty when there are none. Read on
@@ -122,11 +131,7 @@ class IndexStorage:
 
         if not self.exists("deleted_docs"):
             return np.empty(0, dtype=np.int64)
-        import pyarrow.dataset as pads
-
-        col = pads.dataset(self.path("deleted_docs"), format="parquet").to_table(
-            columns=["doc_id"]
-        ).column("doc_id")
+        col = self.dataset("deleted_docs").to_table(columns=["doc_id"]).column("doc_id")
         return np.unique(np.asarray(col, dtype=np.int64))
 
     def write_tmp(

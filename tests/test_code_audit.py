@@ -1,6 +1,6 @@
 """North-rule audit (BASELINE.md): no per-row Python anywhere in the
 build/query paths — every Python crossing must be a vectorized pandas/Arrow
-UDF (pandas_udf / applyInPandas / mapInPandas). Bans row-at-a-time
+UDF (pandas_udf / applyInPandas / mapInPandas / mapInArrow). Bans row-at-a-time
 ``F.udf`` and RDD lambda transforms in the engine package — and pins that
 the block-format version is written from its one constant."""
 
@@ -42,6 +42,6 @@ def test_vectorized_udfs_present():
     text = (PKG / "functions" / "text.py").read_text()
     assert "pandas_udf" in text
     blocks = (PKG / "operators" / "index_build.py").read_text()
-    assert "mapInPandas" in blocks and "collect_list" in blocks
+    assert "mapInArrow" in blocks and "collect_list" in blocks
     wand = (PKG / "operators" / "wand.py").read_text()
     assert "applyInPandas" in wand

@@ -9,6 +9,7 @@ from clip_as_service_spark.functions.codec import (
     BLOCK_SIZE,
     decode_posting_block,
     encode_posting_block,
+    encode_posting_groups,
     impact_weights,
     vbyte_decode,
     vbyte_encode,
@@ -140,6 +141,46 @@ def test_batch_decode_roundtrip(ids):
     assert d2.tolist() == doc_ids.tolist()
     assert t2.tolist() == tfs.tolist()
     assert l2.tolist() == dls.tolist()
+
+
+@pytest.mark.parametrize("seed", range(12))
+def test_group_encode_equals_per_block(seed):
+    """Many groups in one call: every group's blocks equal
+    encode_posting_block over its sorted BLOCK_SIZE chunks, none crosses a
+    group, and max_w is the per-block max of impact_weights, bit for bit."""
+    rng = np.random.default_rng(seed)
+    sizes = rng.permutation(
+        [1, BLOCK_SIZE, BLOCK_SIZE + 1, *rng.integers(1, 3 * BLOCK_SIZE, 4)]
+    )
+    groups = []
+    for size in sizes:
+        base = int(rng.choice([0, 2**62 - 2**20]))  # ids near 2^62 too
+        ids = base + np.cumsum(rng.integers(1, 1000, size))
+        groups.append(
+            (rng.permutation(ids), rng.integers(1, 100, size), rng.integers(1, 5000, size))
+        )
+    bm25 = (97.5, 1.2, 0.75)
+    enc = encode_posting_groups(
+        *(np.concatenate([g[i] for g in groups]) for i in range(3)),
+        np.concatenate(([0], np.cumsum(sizes)[:-1])),
+        bm25,
+    )
+
+    i = 0
+    for g, (ids, tfs, dls) in enumerate(groups):
+        order = np.argsort(ids)
+        ids, tfs, dls = ids[order], tfs[order], dls[order]
+        for block_id, s in enumerate(range(0, len(ids), BLOCK_SIZE)):
+            chunk = slice(s, s + BLOCK_SIZE)
+            assert (enc.group[i], enc.block_id[i]) == (g, block_id)
+            assert enc.n[i] == len(ids[chunk])
+            assert (enc.first_doc[i], enc.last_doc[i]) == (ids[chunk][0], ids[chunk][-1])
+            got = tuple(col[i].as_py() for col in (enc.docs, enc.tfs, enc.dls))
+            assert got == encode_posting_block(ids[chunk], tfs[chunk], dls[chunk])
+            w = impact_weights(tfs[chunk], dls[chunk], *bm25)
+            assert enc.max_w[i] == np.maximum.reduce(w)
+            i += 1
+    assert i == len(enc.n)  # no block beyond the groups' own
 
 
 def test_block_max_admissible():

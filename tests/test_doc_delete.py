@@ -184,22 +184,9 @@ def test_forced_bound_exact_under_delete(
     assert any(e["n_postings"] > 300 for e in reader.query_log)
 
 
-def _jobs_started(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` starts, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_search_topk_starts_only_the_query_terms_job(spark, built, queries, tmp_path):
+def test_search_topk_starts_only_the_query_terms_job(
+    spark, built, queries, tmp_path, jobs_started
+):
     """Building the search_topk plan starts no Spark job beyond those of
     the query-terms collect, with and without a tombstone table: no
     per-query volume aggregate, no Spark read of deleted_docs."""
@@ -209,16 +196,16 @@ def test_search_topk_starts_only_the_query_terms_job(spark, built, queries, tmp_
 
     idx = str(tmp_path / "idx")
     shutil.copytree(built, idx)
-    want = _jobs_started(spark, lambda: query_terms(queries).collect())
+    want = jobs_started(lambda: query_terms(queries).collect())
     assert want >= 1
 
     def plan():
         wand.search_topk(spark, idx, queries, k=5)
 
-    assert _jobs_started(spark, plan) == want
+    assert jobs_started(plan) == want
     top = wand.IndexReader(None, idx).search(queries.first()["text"], k=1)[0][1]
     index_build.delete_docs(spark, idx, [top])
-    assert _jobs_started(spark, plan) == want
+    assert jobs_started(plan) == want
 
 
 def test_reader_refresh_picks_up_deletes(spark, pages, built, queries):

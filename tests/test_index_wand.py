@@ -320,6 +320,128 @@ def test_build_log_lineage(spark, index_dir):
     assert all(r["wall_ms"] >= 0 for r in rows)
 
 
+def test_build_log_schema_and_row_counts(spark, index_dir):
+    """build_log keeps its schema, and its rows (per shard, with the
+    summed ``bytes``, for blocks) equal each table's own counts."""
+    from pyspark.sql import functions as F
+
+    store = IndexStorage(index_dir)
+    log = store.dataset("build_log").to_table()
+    assert log.schema == index_build.BUILD_LOG_SCHEMA
+    rows = log.to_pylist()
+    for stage in ("postings", "stats", "termdf"):
+        (row,) = [r for r in rows if r["stage"] == stage]
+        assert (row["shard"], row["bytes"]) == (-1, None)
+        assert row["rows"] == store.read(spark, stage).count()
+    per_shard = {
+        r["shard"]: (r["rows"], r["bytes"]) for r in rows if r["stage"] == "blocks"
+    }
+    want = {
+        r["shard"]: (r["rows"], r["bytes"])
+        for r in store.read(spark, "blocks")
+        .groupBy("shard")
+        .agg(F.count("*").alias("rows"), F.sum("bytes").alias("bytes"))
+        .collect()
+    }
+    assert per_shard == want
+
+
+def test_log_and_stats_read_start_no_job(index_dir, tmp_path, jobs_started):
+    import shutil
+    import time
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    store = IndexStorage(idx)
+    t0 = time.perf_counter()
+    assert jobs_started(lambda: index_build._read_stats(store)) == 0
+    assert jobs_started(lambda: index_build._log(store, "termdf", t0)) == 0
+    assert jobs_started(lambda: index_build._log(store, "blocks", t0, per_shard=True)) == 0
+
+
+# Spark jobs of a build_index of the test corpus, in a warm session, from a
+# pages DataFrame not yet executed (its sort range-partitioners sample once)
+WARM_BUILD_JOBS = 23
+
+
+def test_warm_build_job_count(spark, tmp_path, index_dir, jobs_started):
+    """The build runs no job beyond its stages' own: _log, the stats read
+    and the pack's bookkeeping add none."""
+    pages = fixtures.pages_spark_df(spark, N_PAGES, partitions=6)
+    out = str(tmp_path / "idx")
+    n = jobs_started(lambda: index_build.build_index(spark, pages, out, **SALT_KW))
+    assert n <= WARM_BUILD_JOBS
+
+
+def _pack_batch(sizes):
+    """An Arrow batch shaped like stage 4's grouped input: one
+    (tid, salt, doc_ids, tfs_a, dls_a) row per group, ids unsorted."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(0)
+    lists = {"doc_ids": [], "tfs_a": [], "dls_a": []}
+    for size in sizes:
+        lists["doc_ids"].append(rng.permutation(size * 3)[:size] + 1)
+        lists["tfs_a"].append(rng.integers(1, 20, size))
+        lists["dls_a"].append(rng.integers(1, 400, size))
+    return pa.RecordBatch.from_pydict({
+        "tid": pa.array(rng.integers(-(2**62), 2**62, len(sizes)), pa.int64()),
+        "salt": pa.array(rng.integers(0, 3, len(sizes)), pa.int32()),
+        **{k: pa.array([v.tolist() for v in vs], pa.list_(pa.int64()))
+           for k, vs in lists.items()},
+    })
+
+
+def test_pack_slices_stay_within_bound(monkeypatch):
+    """_pack_blocks cuts each batch at group boundaries: every encoder call
+    holds at most max_postings postings or is one group, and the output
+    equals one call over the whole batch — also from sliced batches."""
+    import pyarrow as pa
+
+    from clip_as_service_spark import B, K1
+
+    batch = _pack_batch([1, 3, 40, 7, 300, 2, 5, 33, 128, 129])
+    calls = []
+    encode = index_build.encode_posting_groups
+
+    def spy(doc_ids, tfs, dls, group_starts, bm25):
+        calls.append((len(doc_ids), len(group_starts)))
+        return encode(doc_ids, tfs, dls, group_starts, bm25)
+
+    monkeypatch.setattr(index_build, "encode_posting_groups", spy)
+    bm25 = (50.0, K1, B)
+
+    def pack(batches, limit):
+        calls.clear()
+        return pa.Table.from_batches(
+            index_build._pack_blocks(batches, bm25, limit), index_build._PACK_SCHEMA
+        )
+
+    whole = pack([batch], 1 << 20)
+    assert len(calls) == 1
+    small = pack([batch.slice(0, 4), batch.slice(4)], 45)
+    assert len(calls) > 2
+    assert all(n <= 45 or groups == 1 for n, groups in calls)
+    assert (300, 1) in calls
+    assert small.equals(whole)
+
+
+def test_small_pack_bound_build_is_byte_equal(spark, tmp_path, index_dir, monkeypatch):
+    """A build whose pack slices every batch into many encoder calls writes
+    the same blocks table as the fixture build."""
+    monkeypatch.setattr(index_build, "PACK_MAX_POSTINGS", 50)
+    out = str(tmp_path / "idx")
+    pages = fixtures.pages_spark_df(spark, N_PAGES, partitions=6)
+    index_build.build_index(spark, pages, out, **SALT_KW)
+
+    def blocks(d):
+        keys = [(k, "ascending") for k in ("term", "salt", "block_id")]
+        return IndexStorage(d).dataset("blocks").to_table().sort_by(keys)
+
+    assert blocks(out).equals(blocks(index_dir))
+
+
 def test_resume_after_kill(spark, tmp_path, oracle, monkeypatch):
     """Kill during stage 3 (termdf) → resume → identical results, earlier
     stages not rebuilt (north rule resumability)."""
