@@ -96,9 +96,9 @@ def main() -> None:
     query_p50_ms = round(1000 * statistics.median(lat), 2)
     query_profile = reader.profile_summary()
 
-    # distributed batch search: one TAAT task per query with candidate
-    # blocks. search_topk has one plan, so the routed counts read all
-    # "wand" and "exploded" 0; the keys stay so earlier output still parses
+    # batch search: IndexReader.search in each search_topk task. It has one
+    # path, so the routed counts read all "wand" and "exploded" 0; the keys
+    # stay so earlier output still parses
     qdf = spark.createDataFrame(
         [(i, t) for i, t in dq.DOC_QUERIES], "query_id int, text string"
     )

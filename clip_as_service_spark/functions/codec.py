@@ -34,17 +34,6 @@ BLOCK_SIZE = 128
 # index records it as ``version`` in _meta.json; both readers check it.
 BLOCK_FORMAT = 2
 
-# the blocks table as the build writes it, ``shard`` last: the order in
-# which the partition column reads back. max_w per block is the WAND /
-# early-stop bound; idf is denormalized per term. Given to the Spark reader
-# so search_topk starts no schema-inference job (one per call otherwise).
-BLOCKS_SCHEMA = (
-    "term string, salt int, block_id int, n int, first_doc long, "
-    "last_doc long, max_w double, idf double, bytes int, docs binary, "
-    "tfs binary, dls binary, shard int"
-)
-
-
 def check_block_format(meta: dict, root: str) -> None:
     """Raise unless the index at ``root`` was written in BLOCK_FORMAT — an
     older payload layout would decode into garbage scores."""

@@ -179,7 +179,7 @@ def hybrid_search_stored(
     of the oracle-checked brute-force `hybrid_topk` gate query.
 
     ``queries``: (query_id, text). The lexical arm scores the block index
-    with wand.search_topk (one TAAT task per query); the semantic arm
+    with wand.search_topk (IndexReader.search in each task); the semantic arm
     encodes the query text with the deterministic hash-embed verb at the
     ANN index's own dim and probes the persisted RH tables (or IVF cells,
     ``ann_method="ivf"``) — both arms read ONLY their pruned slices of the

@@ -74,6 +74,11 @@ _PACK_SCHEMA = pa.schema([
     ("dls", pa.binary()),
 ])
 
+# the postings and termdf tables as the build writes them: read with these,
+# they start no schema-inference job
+POSTINGS_SCHEMA = "term string, doc_id long, tf int, dl int"
+TERMDF_SCHEMA = "term string, df long, idf double"
+
 BUILD_LOG_SCHEMA = pa.schema([
     ("stage", pa.string()), ("shard", pa.int32()), ("rows", pa.int64()),
     ("bytes", pa.int64()), ("wall_ms", pa.int32()),
@@ -252,7 +257,7 @@ def _postings_to_blocks(spark: SparkSession, store: IndexStorage) -> IndexStorag
     its own checkpoint exists."""
     meta = store.read_meta()
     n_shards = meta["n_shards"]
-    postings = store.read(spark, "postings")
+    postings = store.read(spark, "postings", POSTINGS_SCHEMA)
 
     # -- stage 2: corpus stats — ONE job over postings (the per-doc group
     # and the global fold fuse into a two-level aggregate; a separate
@@ -366,7 +371,7 @@ def _build_blocks_stage(
     n_shards: int,
 ) -> None:
     """Stage 4 body: salted groupBy → Arrow-batch pack → partitioned write."""
-    tdf = store.read(spark, "termdf")
+    tdf = store.read(spark, "termdf", TERMDF_SCHEMA)
     salt_cutoff = meta["salt_cutoff"]
     target = meta["target_sublist"]
     # The ENTIRE heavy path below is keyed on tid = xxhash64(term), not
@@ -576,7 +581,8 @@ def merge_indexes(
     return _index_from_postings(
         spark, out_dir,
         lambda: functools.reduce(
-            DataFrame.unionByName, [p.read(spark, "postings") for p in parts]
+            DataFrame.unionByName,
+            [p.read(spark, "postings", POSTINGS_SCHEMA) for p in parts],
         ),
         n_shards=n_shards, salt_cutoff=salt_cutoff,
         target_sublist=target_sublist, doc_id_method="hash",

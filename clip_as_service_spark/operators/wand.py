@@ -24,11 +24,11 @@ for Highly-Paralleled, Vectorized Query Processing", ICDE 2025):
 Bounds are inflated by 1+1e-9 (``_UB_SAFETY``) so float rounding can never
 stop a decode that a true top-k doc still needs → every kernel is EXACT.
 
-Callers: ``IndexReader.search(text, k)`` — interactive, tokenized on the
-driver, block rows read with pyarrow, no Spark job per query; and
-``search_topk(spark, index_dir, queries, k)`` — batch, one plan: candidate
-blocks joined to the query terms, one applyInPandas task per query running
-``taat_topk``.
+One caller: ``IndexReader.search(text, k)`` — tokenized with the index's
+own vocabulary, block rows read with pyarrow, no Spark job per query. The
+batch verb ``search_topk(spark, index_dir, queries, k)`` runs it inside
+Spark tasks: each task searches its share of the query rows with a reader
+cached in its Python worker.
 
 Block rows carry their term's idf (denormalized at build), so no dictionary
 lookup happens at query time; corpus stats ride in _meta.json.
@@ -39,15 +39,16 @@ idf·w summed in ascending-term order; tie-break (score DESC, doc_id ASC).
 
 from __future__ import annotations
 
+import functools
+import os
 import time
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.codec import (
-    BLOCKS_SCHEMA,
     bm25_params,
     check_block_format,
     decode_posting_blocks_batch,
@@ -57,14 +58,16 @@ from ..functions.codec import (
 from ..functions.hashing import term_shard
 from ..sources.tables import IndexStorage
 from ..textnorm import tokenize_words
-from .bm25 import query_terms
 
-TOPK_SCHEMA = "query_id int, rank int, doc_id long, score double"
+TOPK_SCHEMA = pa.schema([
+    ("query_id", pa.int32()), ("rank", pa.int32()),
+    ("doc_id", pa.int64()), ("score", pa.float64()),
+])
 _UB_SAFETY = 1.0 + 1e-9
 
 
 # ---------------------------------------------------------------------------
-# vectorized TAAT kernels (shared by the driver path and applyInPandas)
+# vectorized TAAT kernels
 # ---------------------------------------------------------------------------
 
 
@@ -113,9 +116,9 @@ def _decode_block_group_raw(blks, bm25: tuple):
 
 
 # the most postings a scorer decodes at once (~16 B/posting decoded, so
-# 250M ⇒ ≤ 4 GB). A module constant read on the driver — by
-# IndexReader.search, and by _make_taat, whose closure captures it for the
-# executors — so an override on the driver reaches every scorer.
+# 250M ⇒ ≤ 4 GB). IndexReader.search reads it per query unless the
+# reader's max_postings is set, as search_topk's tasks set it to the
+# driver's value.
 DECODE_MAX_POSTINGS = 250_000_000
 
 
@@ -525,7 +528,7 @@ def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
 
 
 # ---------------------------------------------------------------------------
-# interactive driver path (no Spark job per query)
+# the reader: one query at a time, no Spark job
 # ---------------------------------------------------------------------------
 
 
@@ -535,10 +538,10 @@ class IndexReader:
     Block rows are read directly with pyarrow — shard-dir partition pruning
     plus term row-group skipping, zero Spark jobs per query (the reference
     serves interactive search from a resident AnnLite index the same way,
-    retriever.md:117-136). Works wherever the driver can read the index
-    store (local disk here; object store on a cluster). The leading
-    ``spark`` argument is unused and kept only for call-site compatibility;
-    pass None.
+    retriever.md:117-136). Works wherever the driver or an executor can
+    read the index store (local disk here; object store on a cluster).
+    The leading ``spark`` argument is unused and kept only for call-site
+    compatibility; pass None.
 
     Scoring is the vectorized TAAT family (see the module docstring). Fetched
     block rows and fully decoded terms are memoized across queries (head
@@ -549,7 +552,10 @@ class IndexReader:
     ``DECODE_MAX_POSTINGS`` postings goes to ``taat_topk`` too, whose
     windowed fold bounds decoded memory (~16 B/posting) instead of
     memoizing whole lists. Batches of queries belong on search_topk,
-    which runs the same kernels in one Spark task per query."""
+    whose Spark tasks each run this reader's search over their rows."""
+
+    # this reader's decode bound; None reads DECODE_MAX_POSTINGS per query
+    max_postings: int | None = None
 
     def __init__(
         self,
@@ -614,14 +620,12 @@ class IndexReader:
     def _index_snapshot(self) -> tuple:
         """(path, size, mtime_ns) of every file under ``blocks/``, plus the
         bytes of ``_meta.json``: everything meta, handles and caches read."""
-        import os as _os
-
         files = []
-        for dp, _, fns in _os.walk(self.store.path("blocks")):
+        for dp, _, fns in os.walk(self.store.path("blocks")):
             for f in fns:
-                st = _os.stat(_os.path.join(dp, f))
+                st = os.stat(os.path.join(dp, f))
                 files.append((dp, f, st.st_size, st.st_mtime_ns))
-        with open(_os.path.join(self.store.root, "_meta.json"), "rb") as fh:
+        with open(os.path.join(self.store.root, "_meta.json"), "rb") as fh:
             return tuple(sorted(files)), fh.read()
 
     def _reload(self, snapshot: tuple) -> None:
@@ -663,18 +667,17 @@ class IndexReader:
         for the blocks table — the reader's warm file map (rebuilt by
         refresh(), so appended files are picked up there)."""
         import glob as _glob
-        import os as _os
 
         import pyarrow.parquet as _pq
 
         out: dict[int, list] = {}
         root = self.store.path("blocks")
-        for d in sorted(_os.listdir(root)):
+        for d in sorted(os.listdir(root)):
             if not d.startswith("shard="):
                 continue
             shard = int(d.split("=", 1)[1])
             handles = []
-            for f in sorted(_glob.glob(_os.path.join(root, d, "*.parquet"))):
+            for f in sorted(_glob.glob(os.path.join(root, d, "*.parquet"))):
                 pf = _pq.ParquetFile(f)
                 md = pf.metadata
                 ti = list(md.schema.names).index("term")
@@ -692,7 +695,6 @@ class IndexReader:
         missing = [t for t in terms if t not in self._term_rows_cache]
         if missing:
             shards = sorted({term_shard(t, self.meta["n_shards"]) for t in missing})
-            import pyarrow as pa
             import pyarrow.compute as pc
 
             parts = []
@@ -825,13 +827,17 @@ class IndexReader:
             n_docs is not None
             and entry["n_postings"] > MULTI_TAAT_EARLY_MIN_POSTINGS
         )
-        if entry["n_postings"] > DECODE_MAX_POSTINGS or (cold and early_stop):
+        bound = (
+            DECODE_MAX_POSTINGS if self.max_postings is None else self.max_postings
+        )
+        if entry["n_postings"] > bound or (cold and early_stop):
             # over the memory bound (windowed fold), or a cold single-term /
             # cold heavy dense multi-term query (block-max early stops):
             # partial or windowed decodes are deliberately NOT memoized —
             # the memo stores only full lists; warm repeats hit it below
             out = taat_topk(
-                rows, k, self._bm25, n_docs=n_docs, deleted=self._deleted_arr
+                rows, k, self._bm25, n_docs=n_docs, deleted=self._deleted_arr,
+                max_postings=bound,
             )
         else:
             out = taat_topk_decoded(
@@ -956,35 +962,8 @@ def _arrow_rows(tbl) -> list[_ArrowRow]:
 
 
 # ---------------------------------------------------------------------------
-# distributed batch path
+# batch path: IndexReader.search in each Spark task
 # ---------------------------------------------------------------------------
-
-def _candidate_blocks(
-    spark: SparkSession, store: IndexStorage, terms: list[str], n_shards: int
-) -> DataFrame | None:
-    if not terms:
-        return None
-    shards = sorted({term_shard(t, n_shards) for t in terms})
-    return spark.read.schema(BLOCKS_SCHEMA).parquet(store.path("blocks")).where(
-        F.col("shard").isin(shards) & F.col("term").isin(terms)
-    )
-
-
-def _query_blocks(spark: SparkSession, store: IndexStorage, meta: dict, queries):
-    """Candidate blocks × query terms as (query_id, term, block columns), or
-    None when no query has a term. The query-terms table is tiny (Q·|q|
-    rows): collected ONCE — the one Spark job before the plan is returned —
-    and rebuilt as a local DataFrame, so no .cache() leaks and the term
-    list for shard pruning falls out of the same pass."""
-    qt_rows = query_terms(
-        queries, meta.get("term_mode", "word"), meta.get("bpe_path")
-    ).collect()
-    terms = sorted({r["term"] for r in qt_rows})
-    cand = _candidate_blocks(spark, store, terms, meta["n_shards"])
-    if cand is None:
-        return None
-    qt = spark.createDataFrame(qt_rows, "query_id int, term string")
-    return cand.join(F.broadcast(qt), "term")
 
 
 def search_topk(
@@ -995,119 +974,68 @@ def search_topk(
 ) -> DataFrame:
     """→ (query_id, rank, doc_id, score); queries(query_id, text).
 
-    One plan: each query's candidate blocks (shard- and term-pruned, joined
-    to the broadcast query terms) are grouped by query_id, and one
-    applyInPandas task per query scores them with ``taat_topk`` — the
-    reader's vectorized TAAT kernels, decoded memory bounded by
-    ``DECODE_MAX_POSTINGS``.
-
-    The only Spark job run before the DataFrame is returned is the
-    query-terms collect; tombstones are read on the driver with pyarrow."""
-    store = IndexStorage(index_dir)
-    meta = store.read_meta()
-    check_block_format(meta, store.root)
-    bm25 = bm25_params(meta)
-    dense_n_docs = int(meta["n_docs"]) if dense_ids(meta) else None
-    # merge-on-read doc deletes (delete_docs): tombstoned ids are dropped
-    # from every scorer BEFORE ranking, broadcast to the per-query tasks.
-    # Corpus stats stay STALE until purge_deleted_docs (Lucene's
-    # merge-on-read posture): surviving docs keep their exact pre-delete
-    # scores — pinned by test.
-    deleted = store.deleted_doc_ids()
-    deleted_bc = _deleted_broadcast(spark, store, deleted) if len(deleted) else None
-    joined = _query_blocks(spark, store, meta, queries)
-    if joined is None:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    return joined.groupBy("query_id").applyInPandas(
-        _make_taat(k, bm25, deleted_bc=deleted_bc, n_docs=dense_n_docs),
-        schema=TOPK_SCHEMA,
+    Each task runs ``IndexReader.search(text, k)`` over its query rows with
+    its Python worker's cached reader (_search_batches): one stage, no
+    exchange. A query whose text is null or has no indexed term gives no
+    rows. Building the plan checks the block format and starts no Spark
+    job; as with any Spark read, the index and its tombstones are read when
+    the DataFrame runs, not when it is built."""
+    # absolute: a task's working directory need not be the driver's
+    store = IndexStorage(os.path.abspath(index_dir))
+    check_block_format(store.read_meta(), store.root)
+    return queries.select("query_id", "text").mapInArrow(
+        functools.partial(
+            _search_batches, index_dir=store.root, k=k,
+            max_postings=DECODE_MAX_POSTINGS,
+        ),
+        from_arrow_schema(TOPK_SCHEMA),
     )
 
 
-# one live tombstone broadcast per index_dir (ADVICE r06: a long-lived
-# driver serving many queries against an index with deletes used to create
-# a NEW broadcast per search_topk call and never release it). Keyed on a
-# fingerprint of the tombstone file set (names + mtimes), so new deletes
-# refresh the broadcast and the superseded one is destroyed.
-_DELETED_BC_CACHE: dict[str, tuple] = {}
+# the reader a Python worker keeps between tasks: the last index it searched
+_task_reader: IndexReader | None = None
 
 
-def _deleted_broadcast(spark: SparkSession, store: IndexStorage, ids: np.ndarray):
-    import glob
-    import os
-
-    sig_src = sorted(
-        (os.path.basename(f), os.path.getmtime(f))
-        for f in glob.glob(os.path.join(store.path("deleted_docs"), "*.parquet"))
-    )
-    app = spark.sparkContext.applicationId
-    key = (app, store.root)
-    # entries of a stopped SparkContext are dead weight: drop them
-    for k in [k for k in _DELETED_BC_CACHE if k[0] != app]:
-        del _DELETED_BC_CACHE[k]
-    sig = (tuple(sig_src), len(ids))
-    hit = _DELETED_BC_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    if hit is not None:
-        # superseded: release executor copies; tasks in flight from earlier
-        # plans have already materialized their value
-        import contextlib
-
-        with contextlib.suppress(Exception):
-            hit[1].unpersist(blocking=False)
-    bc = spark.sparkContext.broadcast(ids)
-    _DELETED_BC_CACHE[key] = (sig, bc)
-    return bc
+def _search_batches(batches, index_dir: str, k: int, max_postings: int):
+    """mapInArrow body of search_topk: (query_id, text) batches →
+    TOPK_SCHEMA batches. The worker's reader is reused if it holds
+    ``index_dir`` and refreshed first, so each task sees the deletes and
+    rebuilds made before it. ``max_postings`` is the driver's
+    DECODE_MAX_POSTINGS: a worker imports this module afresh, so a
+    driver-side override reaches it only this way."""
+    global _task_reader
+    reader = _task_reader
+    if reader is None or reader.store.root != index_dir:
+        reader = _task_reader = IndexReader(None, index_dir)
+    else:
+        reader.refresh()
+    reader.max_postings = max_postings
+    for batch in batches:
+        qids, texts = batch.column("query_id"), batch.column("text")
+        rows = [
+            (qid, *hit)
+            for qid, text in zip(qids.to_pylist(), texts.to_pylist())
+            if text is not None
+            for hit in reader.search(text, k)
+        ]
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(zip(*rows), TOPK_SCHEMA)],
+                schema=TOPK_SCHEMA,
+            )
 
 
 def query_routing(
     spark: SparkSession, index_dir: str, queries: DataFrame
 ) -> dict[int, str]:
-    """→ {query_id: 'wand'} for every query with candidate blocks.
-    search_topk has one plan, so this reports nothing a caller can act on;
-    it stays only for the routing counts of the benchmark trace
-    (perfbench) and bench.py."""
-    store = IndexStorage(index_dir)
-    joined = _query_blocks(spark, store, store.read_meta(), queries)
-    if joined is None:
-        return {}
+    """→ {query_id: 'wand'} for every query with an indexed term, found on
+    the driver: one collect of (query_id, text), then the reader's
+    tokenizer and term fetch. search_topk has one path, so this reports
+    nothing a caller can act on; it stays only for the routing counts of
+    the benchmark trace (perfbench) and bench.py."""
+    reader = IndexReader(None, index_dir)
     return {
-        r["query_id"]: "wand"
-        for r in joined.select("query_id").distinct().collect()
+        qid: "wand"
+        for qid, text in queries.select("query_id", "text").collect()
+        if text and reader._fetch_rows(sorted(set(reader._tokenize_query(text))))
     }
-
-
-def _make_taat(
-    k: int, bm25: tuple, deleted_bc=None, n_docs: int | None = None,
-):
-    # the memory bound is read HERE (driver side) and captured by the
-    # closure — executor workers re-import the module, so a module global
-    # read inside the UDF would ignore driver-side overrides
-    max_postings = DECODE_MAX_POSTINGS
-
-    def _taat(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "rank": [], "doc_id": [], "score": []}
-            )
-        # tombstoned doc_ids ride a Spark broadcast (shipped once per
-        # executor, not per task) as a sorted int64 ndarray
-        deleted = deleted_bc.value if deleted_bc is not None else None
-        query_id = int(pdf["query_id"].iloc[0])
-        # n_docs (dense-id indexes) enables both the direct-array scorer and
-        # the multi-term block-max early stop inside taat_topk
-        result = taat_topk(
-            list(pdf.itertuples(index=False)), k, bm25, n_docs=n_docs,
-            deleted=deleted, max_postings=max_postings,
-        )
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(result), query_id, dtype=np.int64),
-                "rank": np.array([r for r, _, _ in result], dtype=np.int64),
-                "doc_id": np.array([d for _, d, _ in result], dtype=np.int64),
-                "score": np.array([s for _, _, s in result], dtype=np.float64),
-            }
-        )
-
-    return _taat

@@ -110,8 +110,13 @@ class IndexStorage:
         _publish(final, lambda tmp: pq.write_table(tbl, tmp))
         open(os.path.join(d, "_SUCCESS"), "a").close()
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+    def read(
+        self, spark: SparkSession, table: str, schema: str | None = None
+    ) -> DataFrame:
+        """``table`` as a DataFrame. Given the ``schema`` it was written
+        with, the read starts no schema-inference job."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def dataset(self, table: str):
         """``table`` as a pyarrow dataset, for driver-side reads that start

@@ -13,14 +13,14 @@ def spark():
 
 
 @pytest.fixture
-def jobs_started(spark):
-    """→ ``count(fn)``: the number of Spark jobs ``fn()`` starts, counted
-    through a job group."""
+def job_stages(spark):
+    """→ ``stages(fn)``: the stage count of each Spark job ``fn()`` starts,
+    counted through a job group."""
     import uuid
 
     sc = spark.sparkContext
 
-    def count(fn) -> int:
+    def stages(fn) -> list[int]:
         group = f"count-{uuid.uuid4().hex}"
         sc.setJobGroup(group, "job count")
         try:
@@ -28,6 +28,16 @@ def jobs_started(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        tracker = sc.statusTracker()
+        return [
+            len(tracker.getJobInfo(j).stageIds)
+            for j in tracker.getJobIdsForGroup(group)
+        ]
 
-    return count
+    return stages
+
+
+@pytest.fixture
+def jobs_started(job_stages):
+    """→ ``count(fn)``: the number of Spark jobs ``fn()`` starts."""
+    return lambda fn: len(job_stages(fn))

@@ -44,4 +44,4 @@ def test_vectorized_udfs_present():
     blocks = (PKG / "operators" / "index_build.py").read_text()
     assert "mapInArrow" in blocks and "collect_list" in blocks
     wand = (PKG / "operators" / "wand.py").read_text()
-    assert "applyInPandas" in wand
+    assert "mapInArrow" in wand

@@ -184,28 +184,25 @@ def test_forced_bound_exact_under_delete(
     assert any(e["n_postings"] > 300 for e in reader.query_log)
 
 
-def test_search_topk_starts_only_the_query_terms_job(
-    spark, built, queries, tmp_path, jobs_started
+def test_search_topk_plan_starts_no_job(
+    spark, built, queries, tmp_path, jobs_started, job_stages
 ):
-    """Building the search_topk plan starts no Spark job beyond those of
-    the query-terms collect, with and without a tombstone table: no
-    per-query volume aggregate, no Spark read of deleted_docs."""
+    """Building the search_topk plan starts no Spark job, with and without
+    a tombstone table: tombstones and blocks are read by the tasks. Its
+    collect is one job of one stage — no exchange."""
     import shutil
-
-    from clip_as_service_spark.operators.bm25 import query_terms
 
     idx = str(tmp_path / "idx")
     shutil.copytree(built, idx)
-    want = jobs_started(lambda: query_terms(queries).collect())
-    assert want >= 1
 
     def plan():
-        wand.search_topk(spark, idx, queries, k=5)
+        return wand.search_topk(spark, idx, queries, k=5)
 
-    assert jobs_started(plan) == want
+    assert jobs_started(plan) == 0
     top = wand.IndexReader(None, idx).search(queries.first()["text"], k=1)[0][1]
     index_build.delete_docs(spark, idx, [top])
-    assert jobs_started(plan) == want
+    assert jobs_started(plan) == 0
+    assert job_stages(plan().collect) == [1]
 
 
 def test_reader_refresh_picks_up_deletes(spark, pages, built, queries):

@@ -111,6 +111,105 @@ def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatc
         _assert_equals_oracle_exactly(got.get(qid, []), expected)
 
 
+def _query_batch(queries):
+    import pyarrow as pa
+
+    schema = pa.schema([("query_id", pa.int32()), ("text", pa.string())])
+    return pa.RecordBatch.from_pylist(queries, schema=schema)
+
+
+def _batch_topk(batches) -> dict:
+    out: dict = {}
+    for b in batches:
+        for r in b.to_pylist():
+            out.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"])
+            )
+    return out
+
+
+def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
+    """search_topk's task body, run in-process with a forced bound: the
+    bound it is given (not the worker's module constant) reaches the
+    reader, so multi-term queries take the windowed fold, decoding in
+    several windows, and the rows stay oracle-exact."""
+    monkeypatch.setattr(wand, "_task_reader", None)
+    decodes, windowed = [], []
+    real_decode, real_windowed = wand._decode_block_group, wand._taat_windowed
+
+    def counting_decode(blks, bm25):
+        decodes.append(sum(r.n for r in blks))
+        return real_decode(blks, bm25)
+
+    def counting_windowed(*args, **kw):
+        start = len(decodes)
+        out = real_windowed(*args, **kw)
+        windowed.append(len(decodes) - start)
+        return out
+
+    monkeypatch.setattr(wand, "_decode_block_group", counting_decode)
+    monkeypatch.setattr(wand, "_taat_windowed", counting_windowed)
+    queries = fixtures.make_queries()
+    got = _batch_topk(wand._search_batches(
+        [_query_batch(queries)], index_dir=index_dir, k=K,
+        max_postings=FORCED_BOUND,
+    ))
+    for q in queries:
+        _assert_equals_oracle_exactly(
+            got.get(q["query_id"], []), oracle.topk(q["text"], k=K)
+        )
+    assert len(windowed) >= 5
+    assert min(windowed) > 1
+
+
+def test_search_topk_sees_an_in_place_rebuild(
+    spark, index_dir, tmp_path, monkeypatch
+):
+    """A worker's cached reader reloads when the index it holds is rebuilt
+    in place: search_topk on the same directory, and the task body run
+    twice in one process, return the rebuilt index's answers."""
+    import shutil
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    queries = fixtures.make_queries()
+    qdf = fixtures.queries_spark_df(spark)
+    monkeypatch.setattr(wand, "_task_reader", None)
+
+    def in_process():
+        return _batch_topk(wand._search_batches(
+            [_query_batch(queries)], index_dir=idx, k=K,
+            max_postings=wand.DECODE_MAX_POSTINGS,
+        ))
+
+    assert _collect_topk(wand.search_topk(spark, idx, qdf, k=K)) == in_process()
+    shutil.rmtree(idx)
+    small = N_PAGES // 2
+    index_build.build_index(
+        spark, fixtures.pages_spark_df(spark, small, partitions=3), idx, **SALT_KW
+    )
+    rebuilt = BM25Oracle.from_pages(fixtures.make_pages(small))
+    batch = _collect_topk(wand.search_topk(spark, idx, qdf, k=K))
+    for got in (batch, in_process()):
+        for q in queries:
+            _assert_equals_oracle_exactly(
+                got.get(q["query_id"], []), rebuilt.topk(q["text"], k=K)
+            )
+
+
+def test_null_query_text_gives_no_rows(spark, index_dir, oracle):
+    """A query row whose text is null returns no rows and raises nothing;
+    the other rows are answered as usual."""
+    text = fixtures.make_queries()[0]["text"]
+    qdf = spark.createDataFrame(
+        [(1, None), (2, text)], "query_id int, text string"
+    )
+    got = _collect_topk(wand.search_topk(spark, index_dir, qdf, k=K))
+    assert list(got) == [2]
+    _assert_equals_oracle_exactly(got[2], oracle.topk(text, k=K))
+    assert wand.query_routing(spark, index_dir, qdf) == {2: "wand"}
+
+
 def test_forced_bound_reader_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
     """IndexReader.search under a forced memory bound (every query over it
     goes to taat_topk, not the decoded-term memo) stays oracle-exact, cold
@@ -361,7 +460,7 @@ def test_log_and_stats_read_start_no_job(index_dir, tmp_path, jobs_started):
 
 # Spark jobs of a build_index of the test corpus, in a warm session, from a
 # pages DataFrame not yet executed (its sort range-partitioners sample once)
-WARM_BUILD_JOBS = 23
+WARM_BUILD_JOBS = 21
 
 
 def test_warm_build_job_count(spark, tmp_path, index_dir, jobs_started):
@@ -371,6 +470,18 @@ def test_warm_build_job_count(spark, tmp_path, index_dir, jobs_started):
     out = str(tmp_path / "idx")
     n = jobs_started(lambda: index_build.build_index(spark, pages, out, **SALT_KW))
     assert n <= WARM_BUILD_JOBS
+
+
+def test_build_read_schemas_match_the_written_tables(spark, index_dir):
+    """The schemas the build reads postings and termdf with (to skip
+    schema inference) are the ones those tables are written with."""
+    store = IndexStorage(index_dir)
+    for table, schema in (
+        ("postings", index_build.POSTINGS_SCHEMA),
+        ("termdf", index_build.TERMDF_SCHEMA),
+    ):
+        inferred = store.read(spark, table).schema.simpleString()
+        assert store.read(spark, table, schema).schema.simpleString() == inferred
 
 
 def _pack_batch(sizes):
