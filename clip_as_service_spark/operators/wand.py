@@ -994,6 +994,8 @@ def search_topk(
 
 # the reader a Python worker keeps between tasks: the last index it searched
 _task_reader: IndexReader | None = None
+# queries per term fetch: a row group is read once per chunk, not per query
+FETCH_CHUNK_QUERIES = 64
 
 
 def _search_batches(batches, index_dir: str, k: int, max_postings: int):
@@ -1011,13 +1013,13 @@ def _search_batches(batches, index_dir: str, k: int, max_postings: int):
         reader.refresh()
     reader.max_postings = max_postings
     for batch in batches:
-        qids, texts = batch.column("query_id"), batch.column("text")
-        rows = [
-            (qid, *hit)
-            for qid, text in zip(qids.to_pylist(), texts.to_pylist())
-            if text is not None
-            for hit in reader.search(text, k)
-        ]
+        cols = [batch.column(c).to_pylist() for c in ("query_id", "text")]
+        queries = [(qid, text) for qid, text in zip(*cols) if text is not None]
+        rows = []
+        for i in range(0, len(queries), FETCH_CHUNK_QUERIES):
+            chunk = queries[i : i + FETCH_CHUNK_QUERIES]
+            reader._fetch_rows(sorted({t for _, q in chunk for t in reader._tokenize_query(q)}))
+            rows += [(qid, *hit) for qid, text in chunk for hit in reader.search(text, k)]
         if rows:
             yield pa.RecordBatch.from_arrays(
                 [pa.array(c, f.type) for c, f in zip(zip(*rows), TOPK_SCHEMA)],

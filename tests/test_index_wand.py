@@ -4,6 +4,7 @@ partition-invariance (SURVEY.md §7 hard parts 1-4)."""
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 
@@ -160,6 +161,41 @@ def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
         )
     assert len(windowed) >= 5
     assert min(windowed) > 1
+
+
+def test_batch_task_fetches_terms_per_chunk(index_dir, oracle, monkeypatch):
+    """search_topk's task body fetches the terms of each chunk of queries
+    together: a new reader over make_queries() in chunks of 16 reads each
+    blocks file at most once per chunk (once per query would read it far
+    more often), and the rows stay oracle-exact."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(wand, "_task_reader", None)
+    monkeypatch.setattr(wand, "FETCH_CHUNK_QUERIES", 16)
+    reads = []
+    real_read = pq.ParquetFile.read_row_groups
+
+    def counting_read(self, *args, **kw):
+        reads.append(self)
+        return real_read(self, *args, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counting_read)
+    queries = fixtures.make_queries()
+    got = _batch_topk(wand._search_batches(
+        [_query_batch(queries)], index_dir=index_dir, k=K,
+        max_postings=wand.DECODE_MAX_POSTINGS,
+    ))
+    for q in queries:
+        _assert_equals_oracle_exactly(
+            got.get(q["query_id"], []), oracle.topk(q["text"], k=K)
+        )
+    n_files = len(glob.glob(
+        os.path.join(IndexStorage(index_dir).path("blocks"), "*", "*.parquet")
+    ))
+    n_chunks = -(-len(queries) // 16)
+    assert 0 < len(reads) <= n_files * n_chunks
 
 
 def test_search_topk_sees_an_in_place_rebuild(
