@@ -8,18 +8,23 @@ Reference semantics: per-shard local top-k then global merge
 Every in-memory query is scored by one family of vectorized
 term-at-a-time kernels — numpy over whole decoded blocks, no per-posting
 Python (column-at-a-time scoring, as in "Columnar Formatted Inverted Index
-for Highly-Paralleled, Vectorized Query Processing", ICDE 2025):
+for Highly-Paralleled, Vectorized Query Processing", ICDE 2025), and
+``taat_topk`` alone picks the kernel for a query's block rows:
 
+- ``_fold`` — the exact ascending-term fold of decoded lists, over a direct
+  array when the doc span touched fits ``DECODE_MAX_POSTINGS`` slots, over
+  the distinct docs past it: the full decode (lists from the reader's
+  memo or decoded into it), each window and the multi-term re-score.
 - ``_taat_single_term`` — blocks in descending max_w order, decoded in
   chunks into a running top-k; stops once no undecoded block can reach the
   kth score (the block-max bound of Ding & Suel, SIGIR 2011).
-- ``_taat_multi_term`` — dense ids past ``MULTI_TAAT_EARLY_MIN_POSTINGS``:
-  impact-ordered chunked decode across terms, Σ-remaining-bound stop, exact
-  ascending-term re-score of the candidate set.
-- full decode (the rest of ``taat_topk``; ``taat_topk_decoded`` over the
-  reader's decoded-term memo) — every list decoded and folded. Past
-  ``DECODE_MAX_POSTINGS`` postings it folds doc-id windows cut on block
-  boundaries and merges a running top-k, so decoded memory stays bounded.
+- ``_taat_multi_term`` — past ``MULTI_TAAT_EARLY_MIN_POSTINGS``, when the
+  span fits one array: impact-ordered chunked decode across terms,
+  Σ-remaining-bound stop, exact ascending-term re-score of the candidate
+  set.
+- ``_taat_windowed`` — past ``DECODE_MAX_POSTINGS`` postings: folds doc-id
+  windows cut on block boundaries and merges a running top-k, so decoded
+  memory stays bounded.
 
 Bounds are inflated by 1+1e-9 (``_UB_SAFETY``) so float rounding can never
 stop a decode that a true top-k doc still needs → every kernel is EXACT.
@@ -52,7 +57,6 @@ from ..functions.codec import (
     bm25_params,
     check_block_format,
     decode_posting_blocks_batch,
-    dense_ids,
     impact_weights,
 )
 from ..functions.hashing import term_shard
@@ -116,108 +120,125 @@ def _decode_block_group_raw(blks, bm25: tuple):
 
 
 # the most postings a scorer decodes at once (~16 B/posting decoded, so
-# 250M ⇒ ≤ 4 GB). IndexReader.search reads it per query unless the
-# reader's max_postings is set, as search_topk's tasks set it to the
-# driver's value.
+# 250M ⇒ ≤ 4 GB) and the most slots of a score array (8 B/slot): a fold
+# and the multi-term stop use a direct array over the doc span a query
+# touches only up to this many slots, so a dense-id index with more docs
+# folds sparse and skips the multi-term stop. IndexReader.search reads it
+# per query unless the reader's max_postings is set, as search_topk's
+# tasks set it to the driver's value.
 DECODE_MAX_POSTINGS = 250_000_000
 
 
 def taat_topk(
-    rows,
-    k: int,
-    bm25: tuple,
-    n_docs: int | None = None,
-    chunk_blocks: int = 4096,
-    deleted=None,
-    max_postings: int | None = None,
+    rows, k: int, bm25: tuple, deleted=None, max_postings: int | None = None,
+    memo: _ByteCache | None = None,
 ) -> list[tuple[int, int, float]]:
-    """Vectorized exact term-at-a-time scorer over a query's block rows.
+    """Vectorized exact term-at-a-time scorer over a query's block rows —
+    the one function that picks a kernel.
 
+    - every term in ``memo`` (decoded terms kept across queries) and at
+      most ``max_postings`` postings: a fold of the memoized lists;
     - one term: _taat_single_term's block-max early stop — with one term a
       decoded doc's partial IS its exact score, so a Zipf-head list stops
       decoding once k docs beat idf·(best undecoded max_w);
-    - dense ids past ``MULTI_TAAT_EARLY_MIN_POSTINGS``: _taat_multi_term's
-      two-phase early stop (below it a full vectorized decode beats the
-      stop's bookkeeping — a sum-of-remaining-UBs stop with no candidate
-      phase was measured NET-SLOWER at 6.4M docs);
-    - otherwise a full decode, in one pass up to ``max_postings`` postings
-      (default ``DECODE_MAX_POSTINGS``) and in doc-id windows of about
-      that many past it (_taat_windowed).
+    - past ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over a doc span of at
+      most ``max_postings``: _taat_multi_term's two-phase early stop (below
+      it a full vectorized decode beats the stop's bookkeeping — a
+      sum-of-remaining-UBs stop with no candidate phase was measured
+      NET-SLOWER at 6.4M docs);
+    - past ``max_postings`` (default ``DECODE_MAX_POSTINGS``) postings:
+      doc-id windows of about that many (_taat_windowed);
+    - otherwise a full decode, each list read from ``memo`` or decoded and
+      remembered there. The early stops and the windows decode part of a
+      list at a time, so they leave ``memo`` alone.
 
     Returned scores always accumulate ascending-term (the oracle's float64
     association); top-k via lexsort with the (score DESC, doc ASC)
     tie-break."""
-    by_term: dict[str, list] = {}
-    for row in rows:
-        by_term.setdefault(row.term, []).append(row)
-    if not by_term:
+    terms = sorted({row.term for row in rows})
+    if not terms:
         return []
-    terms = sorted(by_term)
-
-    if len(terms) == 1:
-        return _taat_single_term(
-            by_term[terms[0]], k, bm25, chunk_blocks, deleted=deleted
-        )
-
-    total = sum(r.n for r in rows)
-    if n_docs is not None and total > MULTI_TAAT_EARLY_MIN_POSTINGS:
-        return _taat_multi_term(
-            by_term, k, bm25, n_docs, chunk_blocks, deleted=deleted
-        )
-
     if max_postings is None:
         max_postings = DECODE_MAX_POSTINGS
-    if total > max_postings:
-        return _taat_windowed(by_term, k, bm25, max_postings, deleted=deleted)
+    warm = memo is not None and all(t in memo for t in terms)
+    # the memo's lists hold every posting of their terms
+    total = sum(len(memo[t][0]) for t in terms) if warm else sum(r.n for r in rows)
+    if not warm or total > max_postings:
+        by_term: dict[str, list] = {}
+        for row in rows:
+            by_term.setdefault(row.term, []).append(row)
+        if len(terms) == 1:
+            return _taat_single_term(by_term[terms[0]], k, bm25, deleted=deleted)
+        if total > MULTI_TAAT_EARLY_MIN_POSTINGS:
+            lo, hi = _span(rows)
+            if hi - lo <= max_postings:
+                return _taat_multi_term(by_term, k, bm25, deleted=deleted)
+        if total > max_postings:
+            return _taat_windowed(by_term, k, bm25, max_postings, deleted=deleted)
 
-    decoded = []
-    for term in terms:
-        # batch-decode the whole term's blocks in one vectorized pass
-        # (sub-salt lists decode together: carry resets at every block)
-        blks = by_term[term]
-        docs, w = _decode_block_group(blks, bm25)
-        decoded.append((term, docs, blks[0].idf * w))
-    return taat_topk_decoded(decoded, k, n_docs=n_docs, deleted=deleted)
+    entries = []
+    for t in terms:
+        entry = memo.get(t) if memo is not None else None
+        if entry is None:  # not warm, so by_term is set
+            # batch-decode the whole term's blocks in one vectorized pass
+            # (sub-salt lists decode together: carry resets at every block)
+            blks = by_term[t]
+            docs, w = _decode_block_group(blks, bm25)
+            entry = (docs, blks[0].idf * w, int(docs.min()), int(docs.max()) + 1)
+            if memo is not None:
+                memo.put(t, entry, docs.nbytes + entry[1].nbytes + 64)
+        entries.append(entry)
+    lo = min(e[2] for e in entries)
+    hi = max(e[3] for e in entries)
+    return _fold(
+        [e[:2] for e in entries], k,
+        (lo, hi) if hi - lo <= max_postings else None, deleted=deleted,
+    )
 
 
-def taat_topk_decoded(
-    decoded: list, k: int, n_docs: int | None = None, deleted=None
-) -> list[tuple[int, int, float]]:
-    """Exact top-k from pre-decoded per-term postings: `decoded` is
-    [(term, docs, idf·w)] in ASCENDING-TERM order (the oracle's float64
-    association). Split out so IndexReader can memoize decoded terms across
-    queries (head terms repeat; decode dominates warm latency).
+def _span(blks) -> tuple[int, int]:
+    """[lo, hi): the doc ids the blocks ``blks`` cover."""
+    return min(b.first_doc for b in blks), max(b.last_doc for b in blks) + 1
 
-    ``deleted`` (sorted int64 ndarray): tombstoned doc_ids masked out of
-    each term's postings BEFORE accumulation — the memoized decoded lists
-    stay unfiltered (delete-independent), the mask applies at use."""
-    if not decoded:
-        return []
+
+def _fold(decoded: list, k: int, universe, deleted=None):
+    """Exact top-k of per-term postings ``decoded`` = [(docs, idf·w)] in
+    ASCENDING-TERM order (the oracle's float64 association), with the
+    sorted tombstones ``deleted`` masked out BEFORE accumulation.
+
+    ``universe`` says which docs get a score slot:
+    - (lo, hi), every doc in [lo, hi): a direct array, doc_id - lo IS the
+      slot — no unique/searchsorted;
+    - a sorted doc-id ndarray: those docs only, postings of others dropped
+      (_taat_multi_term's candidate set);
+    - None: the sorted distinct docs.
+
+    BM25 partials are > 0, so score 0 ⇔ no query term matched (reference
+    invariant tests/test_search.py:41-44)."""
     if deleted is not None and len(deleted):
-        decoded = [
-            (t,) + _mask_deleted(d, w, deleted) for t, d, w in decoded
-        ]
-        decoded = [(t, d, w) for t, d, w in decoded if len(d)]
-        if not decoded:
-            return []
-    if n_docs is not None:
-        # dense-id mode: doc_id IS the array index — no unique/searchsorted.
-        # BM25 partials are strictly > 0, so score 0 ⇔ no query term matched
-        # (non-candidates stay out of the top-k, reference invariant
-        # tests/test_search.py:41-44). Sized by max(n_docs, max decoded id)
-        # so an index whose stats undercount can never IndexError.
-        max_seen = max(int(d.max()) for _t, d, _w in decoded)
-        dense = np.zeros(max(n_docs, max_seen) + 1, dtype=np.float64)
-        for _term, docs, partials in decoded:  # ascending-term accumulation
-            dense[docs] += partials
-        universe = np.flatnonzero(dense > 0.0)
-        scores = dense[universe]
-    else:
-        universe = np.unique(np.concatenate([d for _t, d, _w in decoded]))
-        scores = np.zeros(len(universe), dtype=np.float64)
-        for _term, docs, partials in decoded:  # ascending-term accumulation
-            scores[np.searchsorted(universe, docs)] += partials
-    return _topk_from_arrays(universe, scores, k)
+        decoded = [_mask_deleted(d, w, deleted) for d, w in decoded]
+    if isinstance(universe, tuple):
+        lo, hi = universe
+        acc = np.zeros(hi - lo, dtype=np.float64)
+        for docs, partials in decoded:  # ascending-term accumulation
+            acc[docs - lo] += partials
+        slots = np.flatnonzero(acc > 0.0)
+        return _topk_from_arrays(slots + lo, acc[slots], k)
+    subset = universe is not None
+    if not subset:
+        universe = np.unique(np.concatenate([d for d, _w in decoded]))
+    if not len(universe):
+        return []
+    scores = np.zeros(len(universe), dtype=np.float64)
+    for docs, partials in decoded:  # ascending-term accumulation
+        idxs = np.searchsorted(universe, docs)
+        if subset:
+            np.clip(idxs, 0, len(universe) - 1, out=idxs)
+            m = universe[idxs] == docs
+            idxs, partials = idxs[m], partials[m]
+        scores[idxs] += partials
+    live = scores > 0.0
+    return _topk_from_arrays(universe[live], scores[live], k)
 
 
 def _doc_windows(firsts, lasts, ns, max_postings: int) -> list[tuple[int, int]]:
@@ -255,11 +276,15 @@ def _taat_windowed(
 ):
     """Full-decode fold with bounded memory: per doc-id window
     (_doc_windows), decode the overlapping blocks of every term in ONE
-    batch, mask them to the window, fold ascending-term
-    (taat_topk_decoded) and merge into a running top-k. Windows are
-    doc-disjoint, so each doc's score is complete inside its window and
-    bit-identical to the single-pass fold; the window's top-k holds every
-    doc of the global top-k that lies in it."""
+    batch, mask them to the window, fold ascending-term (_fold) and merge
+    into a running top-k. Windows are doc-disjoint, so each doc's score is
+    complete inside its window and bit-identical to the single-pass fold;
+    the window's top-k holds every doc of the global top-k that lies in it.
+
+    A window that spans at most ``max_postings`` docs folds over a direct
+    array. One that decodes more postings than that (a gap between block
+    boundaries can) folds in slices of at most ``max_postings`` distinct
+    docs, so no score array outgrows the bound."""
     terms = sorted(by_term)
     blks = [b for t in terms for b in by_term[t]]  # ascending term
     term_of = np.repeat(
@@ -274,28 +299,33 @@ def _taat_windowed(
         sel = np.flatnonzero((firsts < hi) & (lasts >= lo))
         if not len(sel):
             continue
-        docs, w = _decode_block_group([blks[j] for j in sel], bm25)
-        ti = np.repeat(term_of[sel], ns[sel])
-        m = (docs >= lo) & (docs < hi)
-        docs, w, ti = docs[m], w[m], ti[m]
-        # sel ascends, so ti is sorted: split into per-term runs
-        bounds = np.searchsorted(ti, np.arange(len(terms) + 1))
-        decoded = [
-            (terms[t], docs[a:b], idfs[t] * w[a:b])
-            for t, (a, b) in enumerate(zip(bounds[:-1], bounds[1:]))
-            if b > a
-        ]
-        best += taat_topk_decoded(decoded, k, deleted=deleted)
-        best = sorted(best, key=lambda e: (-e[2], e[1]))[:k]
+        all_docs, all_w = _decode_block_group([blks[j] for j in sel], bm25)
+        all_ti = np.repeat(term_of[sel], ns[sel])
+        cuts = [lo, hi]
+        if len(all_docs) > max_postings:
+            inside = np.unique(all_docs[(all_docs >= lo) & (all_docs < hi)])
+            cuts[1:1] = inside[max_postings::max_postings].tolist()
+        for a, b in zip(cuts[:-1], cuts[1:]):
+            m = (all_docs >= a) & (all_docs < b)
+            docs, w, ti = all_docs[m], all_w[m], all_ti[m]
+            # sel ascends, so ti is sorted: split into per-term runs
+            runs = np.searchsorted(ti, np.arange(len(terms) + 1))
+            decoded = [
+                (docs[i:j], idfs[t] * w[i:j])
+                for t, (i, j) in enumerate(zip(runs[:-1], runs[1:]))
+            ]
+            span = (a, b) if b - a <= max_postings else None
+            best += _fold(decoded, k, span, deleted=deleted)
+            best = sorted(best, key=lambda e: (-e[2], e[1]))[:k]
     return [(r, d, s) for r, (_, d, s) in enumerate(best, 1)]
 
 
-def _taat_single_term(blks, k: int, bm25: tuple, chunk_blocks: int, deleted=None):
+def _taat_single_term(blks, k: int, bm25: tuple, deleted=None):
     """Single-term exact top-k with block-max early stop (see taat_topk).
 
     Keeps a running top-k — the docs at or above the current kth score plus
-    the newly decoded chunk — so memory is bounded by one chunk, not by the
-    list. Tombstoned docs are masked PER CHUNK, before the kth-score
+    the newly decoded chunk of ``_DECODE_CHUNK_BLOCKS`` blocks — so memory
+    is bounded by one chunk, not by the list. Tombstoned docs are masked PER CHUNK, before the kth-score
     threshold is taken — a deleted doc holding the kth slot would inflate θ
     and stop the decode while live docs that belong in the page are still
     undecoded."""
@@ -304,7 +334,7 @@ def _taat_single_term(blks, k: int, bm25: tuple, chunk_blocks: int, deleted=None
     kept = None
     i = 0
     while True:
-        chunk = blks[i : i + chunk_blocks]
+        chunk = blks[i : i + _DECODE_CHUNK_BLOCKS]
         i += len(chunk)
         docs, w = _decode_block_group(chunk, bm25)
         docs, w = _mask_deleted(docs, w, deleted)
@@ -340,14 +370,13 @@ _TAAT_CAND_MAX = 65_536
 _TAAT_MAX_CAND_SCANS = 3
 
 
-def _taat_multi_term(
-    by_term: dict[str, list], k: int, bm25: tuple, n_docs: int,
-    chunk_blocks: int, deleted=None,
-):
-    """Multi-term exact top-k with a block-max early stop (dense ids).
+def _taat_multi_term(by_term: dict[str, list], k: int, bm25: tuple, deleted=None):
+    """Multi-term exact top-k with a block-max early stop, for a query
+    whose doc span is small enough for one direct array (taat_topk).
 
-    Phase 1 — bound: decode block-chunks across ALL query terms in
-    descending idf·block-max impact order into a dense accumulator.
+    Phase 1 — bound: decode chunks of ``_DECODE_CHUNK_BLOCKS`` blocks
+    across ALL query terms in descending idf·block-max impact order into a
+    direct accumulator over the span, offset by its low end.
     rem = Σ_t idf_t · (max_w of t's best undecoded block) bounds how much
     ANY document's score can still grow (each doc has ≤1 posting per term).
     θ̃ = kth-best accumulated score over a pool of docs seen in the highest-
@@ -361,7 +390,7 @@ def _taat_multi_term(
     EXACTLY: per term (ascending), decode only the blocks whose
     [first_doc, last_doc] span intersects C (vectorized searchsorted over
     the block metadata — the impact-ordered tail almost never overlaps a
-    k-sized candidate set), mask to C, accumulate ascending-term. Scores
+    k-sized candidate set), then fold them over C (_fold). Scores
     are bit-identical to the full-decode fold. If the bound never closes a
     small candidate set, the fully-decoded bound accumulator still locates
     the top-k region (rem = 0, same addends as the exact fold to within
@@ -389,8 +418,7 @@ def _taat_multi_term(
             imps.append(idf * b.max_w)
     order = np.argsort(-np.asarray(imps, dtype=np.float64), kind="stable")
 
-    max_last = max(b.last_doc for b in flat_blocks)
-    dense_size = max(n_docs, int(max_last)) + 1
+    lo, hi = _span(flat_blocks)
     ptr = [0] * len(entries)  # per-term decoded-block count (own desc order)
     # BOUND accumulator: impact-order partial sums — same addends as the
     # exact fold, so its values differ from exact scores only in addition
@@ -399,8 +427,8 @@ def _taat_multi_term(
     # the oracle's ascending-term order, so returned scores are exact. One
     # full scatter total (incremental), and decoded chunks are NOT retained
     # — peak memory is the accumulator, not 16 B/posting of pieces.
-    dense = np.zeros(dense_size, dtype=np.float64)
-    # θ̃ pool: docs of the FIRST (highest-impact) chunk, frozen — the true
+    dense = np.zeros(hi - lo, dtype=np.float64)
+    # θ̃ pool: slots of the FIRST (highest-impact) chunk, frozen — the true
     # top-k almost always carries a high-impact posting, and a weaker pool
     # only DELAYS the stop (θ̃ = kth of a subset ≤ kth overall), never
     # breaks it
@@ -411,7 +439,7 @@ def _taat_multi_term(
     cand_scans = 0
     i = 0
     while i < len(order):
-        chunk_idx = order[i : i + chunk_blocks]
+        chunk_idx = order[i : i + _DECODE_CHUNK_BLOCKS]
         i += len(chunk_idx)
         by_ti: dict[int, list] = {}
         for j in chunk_idx:
@@ -422,10 +450,11 @@ def _taat_multi_term(
             docs, w = _decode_block_group(blks, bm25)
             docs, w = _mask_deleted(docs, w, deleted)
             pw = entries[ti][1] * w
-            dense[docs] += pw
+            slots = docs - lo
+            dense[slots] += pw
             ptr[ti] += len(blks)
             if chunk_docs is not None:
-                chunk_docs.append(docs)
+                chunk_docs.append(slots)
                 chunk_pws.append(pw)
         if pool is None:
             if chunk_docs:
@@ -455,7 +484,7 @@ def _taat_multi_term(
             ):
                 cand = np.flatnonzero(
                     dense >= theta / _UB_SAFETY - rem * _UB_SAFETY
-                )
+                ) + lo
                 if len(cand) <= _TAAT_CAND_MAX:
                     stopped = True
                     break
@@ -475,16 +504,12 @@ def _taat_multi_term(
         # phase 2 re-scores that small set exactly. No second scatter.
         if not dense.any():
             return []
-        kth = (
-            -np.partition(-dense, k - 1)[k - 1]
-            if dense_size > k
-            else 0.0
-        )
+        kth = -np.partition(-dense, k - 1)[k - 1] if len(dense) > k else 0.0
         if kth <= 0.0:
             # fewer than k scored docs — the candidate set IS the universe
-            cand = np.flatnonzero(dense > 0.0)
+            cand = np.flatnonzero(dense > 0.0) + lo
         else:
-            cand = np.flatnonzero(dense >= kth / _UB_SAFETY)
+            cand = np.flatnonzero(dense >= kth / _UB_SAFETY) + lo
 
     if deleted is not None and len(deleted):
         # a phase-1 threshold ≤ 0 admits accumulator-0 docs, tombstones
@@ -492,22 +517,18 @@ def _taat_multi_term(
         cand = np.setdiff1d(cand, deleted, assume_unique=True)
 
     # phase 2: exact ascending-term fold over the candidate set only
-    scores = np.zeros(len(cand), dtype=np.float64)
+    decoded = []
     for _t, idf, blks in entries:
         firsts = np.array([b.first_doc for b in blks], dtype=np.int64)
         lasts = np.array([b.last_doc for b in blks], dtype=np.int64)
-        lo = np.searchsorted(cand, firsts, side="left")
-        hi = np.searchsorted(cand, lasts, side="right")
-        sel = np.flatnonzero(hi > lo)
-        if not len(sel):
-            continue
-        docs, w = _decode_block_group([blks[j] for j in sel], bm25)
-        idxs = np.searchsorted(cand, docs)
-        np.clip(idxs, 0, len(cand) - 1, out=idxs)
-        m = cand[idxs] == docs
-        scores[idxs[m]] += idf * w[m]
-    live = scores > 0.0
-    return _topk_from_arrays(cand[live], scores[live], k)
+        sel = np.flatnonzero(
+            np.searchsorted(cand, lasts, side="right")
+            > np.searchsorted(cand, firsts, side="left")
+        )
+        if len(sel):
+            docs, w = _decode_block_group([blks[j] for j in sel], bm25)
+            decoded.append((docs, idf * w))
+    return _fold(decoded, k, cand)
 
 
 def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
@@ -532,6 +553,30 @@ def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
 # ---------------------------------------------------------------------------
 
 
+class _ByteCache(dict):
+    """A dict within ``max_bytes``: ``put`` evicts the oldest entries (FIFO)
+    until the new one fits, and keeps no value larger than the whole budget
+    — caching it would empty the cache and still overflow it; the caller
+    holds its own reference for the query in flight."""
+
+    def __init__(self, max_bytes: int):
+        super().__init__()
+        self.max_bytes = max_bytes
+        self.nbytes = 0
+        self._sizes: dict = {}
+
+    def put(self, key, value, nbytes: int) -> None:
+        if nbytes > self.max_bytes:
+            return
+        while self.nbytes + nbytes > self.max_bytes:
+            old = next(iter(self))
+            del self[old]
+            self.nbytes -= self._sizes.pop(old)
+        self[key] = value
+        self._sizes[key] = nbytes
+        self.nbytes += nbytes
+
+
 class IndexReader:
     """Warm handle on an index for low-latency interactive search.
 
@@ -543,16 +588,17 @@ class IndexReader:
     The leading ``spark`` argument is unused and kept only for call-site
     compatibility; pass None.
 
-    Scoring is the vectorized TAAT family (see the module docstring). Fetched
+    Each query is one ``taat_topk`` call (see the module docstring). Fetched
     block rows and fully decoded terms are memoized across queries (head
     terms repeat), and the memo survives a delete-only refresh(): tombstones
     are masked at use, so live deletes never cost a re-fetch or re-decode.
-    Cold single-term and cold heavy multi-term queries take the early-stop
-    kernels, which decode part of a list and are not memoized; a query over
-    ``DECODE_MAX_POSTINGS`` postings goes to ``taat_topk`` too, whose
-    windowed fold bounds decoded memory (~16 B/posting) instead of
-    memoizing whole lists. Batches of queries belong on search_topk,
-    whose Spark tasks each run this reader's search over their rows."""
+    A query whose terms are all memoized folds the memo; otherwise cold
+    single-term queries and cold multi-term ones past
+    ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over a span within the bound
+    take the early stops, and queries over ``DECODE_MAX_POSTINGS`` postings
+    the windowed fold; these decode part of a list and are not memoized.
+    Batches of queries belong on search_topk, whose Spark tasks each run
+    this reader's search over their rows."""
 
     # this reader's decode bound; None reads DECODE_MAX_POSTINGS per query
     max_postings: int | None = None
@@ -576,21 +622,6 @@ class IndexReader:
         if decoded_cache_bytes is not None:
             self.DECODED_CACHE_MAX_BYTES = decoded_cache_bytes
         self.query_log: list[dict] = []
-        # both caches are BYTE-budgeted, not entry-counted: Zipf-head terms
-        # are exactly the entries that repeat AND are the largest (millions
-        # of postings each), so an entry cap alone lets a long-lived reader
-        # grow to many GB. Eviction is FIFO (dict order) — an LRU buys
-        # little when the hot set is the Zipf head.
-        self._term_rows_cache: dict[str, list] = {}
-        self._raw_sizes: dict[str, int] = {}
-        self._raw_bytes = 0
-        # decoded-term memo: head terms repeat across interactive queries, and
-        # decode (vByte + impact_weights) dominates warm latency — cache the
-        # decoded (docs, idf·w) per term (~16 B/posting; reset when refresh()
-        # finds the index changed)
-        self._decoded_cache: dict[str, tuple] = {}
-        self._decoded_sizes: dict[str, int] = {}
-        self._decoded_bytes = 0
         self._snapshot = None
         self.refresh()
 
@@ -630,20 +661,23 @@ class IndexReader:
 
     def _reload(self, snapshot: tuple) -> None:
         """Load meta and file handles of the index ``snapshot`` describes,
-        emptying both term caches."""
+        with empty term caches."""
         import json
 
         meta = json.loads(snapshot[1])
         check_block_format(meta, self.store.root)
         self.meta = meta
         self._bm25 = bm25_params(meta)
-        self._n_docs = int(meta["n_docs"]) if dense_ids(meta) else None
-        self._term_rows_cache.clear()
-        self._raw_sizes.clear()
-        self._raw_bytes = 0
-        self._decoded_cache.clear()
-        self._decoded_sizes.clear()
-        self._decoded_bytes = 0
+        # both caches are BYTE-budgeted, not entry-counted: Zipf-head terms
+        # are exactly the entries that repeat AND are the largest (millions
+        # of postings each), so an entry cap alone lets a long-lived reader
+        # grow to many GB. Eviction is FIFO (dict order) — an LRU buys
+        # little when the hot set is the Zipf head.
+        self._term_rows_cache = _ByteCache(self.RAW_CACHE_MAX_BYTES)
+        # decoded-term memo (taat_topk): head terms repeat, and decode
+        # dominates warm latency — (docs, idf·w, min doc, max doc + 1) per
+        # fully decoded term, ~16 B/posting
+        self._decoded_cache = _ByteCache(self.DECODED_CACHE_MAX_BYTES)
         # per-shard ParquetFile handles + per-row-group (min, max) term stats,
         # built once per index change: a fetch then opens no files and reads
         # no footers — it prunes row groups driver-side (files are
@@ -692,11 +726,15 @@ class IndexReader:
         return out
 
     def _fetch_rows(self, terms: list[str]) -> list:
-        missing = [t for t in terms if t not in self._term_rows_cache]
+        """The block rows of ``terms``, in term order: cached ones from the
+        raw cache, the rest read in one pass over the row groups whose term
+        range holds one of them, and remembered there."""
+        rows = {t: self._term_rows_cache.get(t) for t in terms}
+        missing = [t for t, r in rows.items() if r is None]
         if missing:
-            shards = sorted({term_shard(t, self.meta["n_shards"]) for t in missing})
             import pyarrow.compute as pc
 
+            shards = sorted({term_shard(t, self.meta["n_shards"]) for t in missing})
             parts = []
             for s in shards:
                 for pf, stats in self._pq_files.get(s, []):
@@ -709,77 +747,17 @@ class IndexReader:
                         part = pf.read_row_groups(
                             rgs, columns=list(_ARROW_COLS), use_threads=True,
                         )
-                        parts.append(part.filter(pc.field("term").isin(missing)))
-            fetched = _arrow_rows(pa.concat_tables(parts)) if parts else []
+                        keep = pc.is_in(part["term"], value_set=pa.array(missing))
+                        parts.append(part.filter(keep))
             for t in missing:
-                self._term_rows_cache[t] = []
-            for row in fetched:
-                self._term_rows_cache[row.term].append(row)
+                rows[t] = []
+            for row in _arrow_rows(pa.concat_tables(parts)) if parts else []:
+                rows[row.term].append(row)
             for t in missing:
-                nbytes = sum(
-                    len(r.docs) + len(r.tfs) + len(r.dls) + 64
-                    for r in self._term_rows_cache[t]
-                )
-                self._raw_sizes[t] = nbytes
-                self._raw_bytes += nbytes
-            # evict FIFO down to budget — but never a term of the CURRENT
-            # query (its rows are read by _decoded_term right after this);
-            # search() re-trims unprotected at query end so a protected
-            # over-budget entry doesn't linger past its query
-            self._trim_raw_cache(protect=set(terms))
-        out = []
-        for t in terms:
-            out.extend(self._term_rows_cache.get(t, []))
-        return out
-
-    def _trim_raw_cache(self, protect: set = frozenset()) -> None:
-        """Bring the raw cache within budget. Entries whose size ALONE
-        exceeds the budget are dropped first (FIFO trimming would otherwise
-        empty the whole cache around them and still stay over budget — the
-        one-Zipf-head-term pathology), then FIFO down to the budget."""
-        for key in [
-            k
-            for k, s in self._raw_sizes.items()
-            if s > self.RAW_CACHE_MAX_BYTES and k not in protect
-        ]:
-            del self._term_rows_cache[key]
-            self._raw_bytes -= self._raw_sizes.pop(key)
-        for key in list(self._term_rows_cache):
-            if self._raw_bytes <= self.RAW_CACHE_MAX_BYTES:
-                break
-            if key in protect:
-                continue
-            del self._term_rows_cache[key]
-            self._raw_bytes -= self._raw_sizes.pop(key)
-
-    def _decoded_term(self, t: str) -> tuple:
-        """(term, docs, idf·w) — full decode of one term's blocks, memoized.
-
-        Eviction needs no protect-set: callers hold references to the
-        returned tuples, so evicting an entry mid-query only drops the memo,
-        never the data in flight."""
-        hit = self._decoded_cache.get(t)
-        if hit is None:
-            blks = self._term_rows_cache[t]
-            docs, w = _decode_block_group(blks, self._bm25)
-            hit = (t, docs, float(blks[0].idf) * w)
-            nbytes = int(docs.nbytes + hit[2].nbytes) + 64
-            if nbytes > self.DECODED_CACHE_MAX_BYTES:
-                # a single over-budget entry can never fit: caching it would
-                # empty the cache AND leave it over budget until the next
-                # insert — return uncached (callers hold the reference)
-                return hit
-            while (
-                self._decoded_bytes + nbytes > self.DECODED_CACHE_MAX_BYTES
-                and self._decoded_cache
-            ):
-                old = next(iter(self._decoded_cache))
-                del self._decoded_cache[old]
-                self._decoded_bytes -= self._decoded_sizes.pop(old)
-            self._decoded_cache[t] = hit
-            self._decoded_sizes[t] = nbytes
-            self._decoded_bytes += nbytes
-        return hit
+                self._term_rows_cache.put(t, rows[t], sum(
+                    len(r.docs) + len(r.tfs) + len(r.dls) + 64 for r in rows[t]
+                ))
+        return [r for t in terms for r in rows[t]]
 
     def _tokenize_query(self, text: str) -> list[str]:
         """Query terms in the INDEX's vocabulary: word tokens by default,
@@ -820,37 +798,14 @@ class IndexReader:
             self._log_query(entry)
             return []
         entry["strategy"] = "taat"
-        n_docs = self._n_docs
-        hit_terms = [t for t in terms if self._term_rows_cache.get(t)]
-        cold = [t for t in hit_terms if t not in self._decoded_cache]
-        early_stop = len(hit_terms) == 1 or (
-            n_docs is not None
-            and entry["n_postings"] > MULTI_TAAT_EARLY_MIN_POSTINGS
+        out = taat_topk(
+            rows, k, self._bm25, deleted=self._deleted_arr,
+            max_postings=self.max_postings, memo=self._decoded_cache,
         )
-        bound = (
-            DECODE_MAX_POSTINGS if self.max_postings is None else self.max_postings
-        )
-        if entry["n_postings"] > bound or (cold and early_stop):
-            # over the memory bound (windowed fold), or a cold single-term /
-            # cold heavy dense multi-term query (block-max early stops):
-            # partial or windowed decodes are deliberately NOT memoized —
-            # the memo stores only full lists; warm repeats hit it below
-            out = taat_topk(
-                rows, k, self._bm25, n_docs=n_docs, deleted=self._deleted_arr,
-                max_postings=bound,
-            )
-        else:
-            out = taat_topk_decoded(
-                [self._decoded_term(t) for t in hit_terms], k,
-                n_docs=n_docs, deleted=self._deleted_arr,
-            )
         t_score = time.perf_counter()
         entry["score_ms"] = 1000 * (t_score - t_fetch)
         entry["total_ms"] = 1000 * (t_score - t0)
         self._log_query(entry)
-        # end-of-query trim with no protect set: evicts any current-query
-        # entry whose size alone exceeds the budget (kept in-flight above)
-        self._trim_raw_cache()
         return out
 
     def _log_query(self, entry: dict) -> None:

@@ -2,7 +2,8 @@
 build/query paths — every Python crossing must be a vectorized pandas/Arrow
 UDF (pandas_udf / applyInPandas / mapInPandas / mapInArrow). Bans row-at-a-time
 ``F.udf`` and RDD lambda transforms in the engine package — and pins that
-the block-format version is written from its one constant."""
+the block-format version is written from its one constant and that one
+function picks the scorer kernel."""
 
 import re
 from pathlib import Path
@@ -45,3 +46,27 @@ def test_vectorized_udfs_present():
     assert "mapInArrow" in blocks and "collect_list" in blocks
     wand = (PKG / "operators" / "wand.py").read_text()
     assert "mapInArrow" in wand
+
+
+def test_one_function_picks_the_scorer_kernel():
+    """``taat_topk`` is the only scorer entry in wand.py: no second fold
+    entry, no kernel argument sized by the corpus or the chunking, no
+    separate cache trim, and IndexReader.search names no kernel and no
+    routing threshold — it calls taat_topk once."""
+    import ast
+
+    text = (PKG / "operators" / "wand.py").read_text()
+    for name in ("taat_topk_decoded", "n_docs", "chunk_blocks", "_trim_raw_cache"):
+        assert name not in text, name
+    reader = next(
+        n for n in ast.parse(text).body
+        if isinstance(n, ast.ClassDef) and n.name == "IndexReader"
+    )
+    search = next(
+        n for n in reader.body
+        if isinstance(n, ast.FunctionDef) and n.name == "search"
+    )
+    source = ast.get_source_segment(text, search)
+    assert "_taat_" not in source
+    assert "MULTI_TAAT_EARLY_MIN_POSTINGS" not in source
+    assert source.count("taat_topk(") == 1

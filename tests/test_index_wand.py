@@ -248,7 +248,7 @@ def test_null_query_text_gives_no_rows(spark, index_dir, oracle):
 
 def test_forced_bound_reader_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
     """IndexReader.search under a forced memory bound (every query over it
-    goes to taat_topk, not the decoded-term memo) stays oracle-exact, cold
+    takes the windowed fold, not the decoded-term memo) stays oracle-exact, cold
     and warm, with and without tombstones."""
     monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     reader = wand.IndexReader(None, index_dir)
@@ -291,16 +291,59 @@ def test_windowed_fold_decode_stays_bounded(index_dir, oracle, monkeypatch):
             key = (r.term, r.salt)
             max_block[key] = max(max_block.get(key, 0), r.n)
         calls.clear()
-        got = wand.taat_topk(
-            rows, K, reader._bm25, n_docs=reader.meta["n_docs"],
-            max_postings=FORCED_BOUND,
-        )
+        got = wand.taat_topk(rows, K, reader._bm25, max_postings=FORCED_BOUND)
         _assert_equals_oracle_exactly(got, oracle.topk(q["text"], k=K))
         assert max(calls) <= FORCED_BOUND + sum(max_block.values()), q
         if sum(r.n for r in rows) > FORCED_BOUND:
             assert len(calls) > 1, q
             windowed += 1
     assert windowed >= 5
+
+
+class _ZerosSizes:
+    """Stands in for numpy in wand: records the length of every array
+    ``zeros`` allocates, passes everything else through."""
+
+    def __init__(self):
+        import numpy
+
+        self._np = numpy
+        self.sizes: list[int] = []
+
+    def __getattr__(self, name):
+        return getattr(self._np, name)
+
+    def zeros(self, shape, *args, **kw):
+        self.sizes.append(int(self._np.prod(shape)))
+        return self._np.zeros(shape, *args, **kw)
+
+
+def test_score_arrays_stay_within_the_bound(index_dir, oracle, monkeypatch):
+    """With DECODE_MAX_POSTINGS forced below the 200-doc span, no score
+    array wand allocates has more slots than the bound: reader searches,
+    cold and warm, and taat_topk with the multi-term early stop forced on.
+    Every answer stays oracle-exact."""
+    from clip_as_service_spark.textnorm import tokenize_words
+
+    bound = 100
+    arrays = _ZerosSizes()
+    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", bound)
+    monkeypatch.setattr(wand, "np", arrays)
+    queries = fixtures.make_queries()
+    reader = wand.IndexReader(None, index_dir)
+    for q in queries + queries:  # cold, then warm
+        _assert_equals_oracle_exactly(
+            reader.search(q["text"], k=K), oracle.topk(q["text"], k=K)
+        )
+    monkeypatch.setattr(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0)
+    for q in queries:
+        terms = sorted(set(tokenize_words(q["text"])))
+        rows = reader._fetch_rows(terms) if terms else []
+        _assert_equals_oracle_exactly(
+            wand.taat_topk(rows, K, reader._bm25), oracle.topk(q["text"], k=K)
+        )
+    assert arrays.sizes
+    assert max(arrays.sizes) <= bound
 
 
 def test_index_reader_interactive_exact(spark, index_dir, oracle):
@@ -340,23 +383,21 @@ def test_cli_search_equals_reader(index_dir, capsys, monkeypatch):
     assert lines[-1]["profile"]["n_queries"] == 1
 
 
-def test_taat_early_stop_chunked_exact(spark, index_dir, oracle):
-    """chunk_blocks=1 forces the early-stop machinery through many rounds
+def test_taat_early_stop_chunked_exact(spark, index_dir, oracle, monkeypatch):
+    """One-block chunks force the early-stop machinery through many rounds
     (bound re-checks, mid-stream stop, phase-B decode of skipped blocks) —
     results must stay rank- and score-identical to the oracle."""
     from clip_as_service_spark.operators.wand import taat_topk
     from clip_as_service_spark.textnorm import tokenize_words
 
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", 1)
     reader = wand.IndexReader(None, index_dir)
     for q in fixtures.make_queries()[:25]:
         terms = sorted(set(tokenize_words(q["text"])))
         rows = reader._fetch_rows(terms) if terms else []
         if not rows:
             continue
-        got = taat_topk(
-            rows, K, reader._bm25,
-            n_docs=reader.meta["n_docs"], chunk_blocks=1,
-        )
+        got = taat_topk(rows, K, reader._bm25)
         expected = oracle.topk(q["text"], k=K)
         assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in expected], q
         for (_, _, se), (_, _, sg) in zip(expected, got):
@@ -382,13 +423,14 @@ def test_reader_caches_byte_bounded(spark, index_dir, oracle):
     )
     for t in vocab:  # one-term queries: many distinct terms through search
         reader.search(t, k=K)
-    assert reader._decoded_bytes <= reader.DECODED_CACHE_MAX_BYTES
-    assert len(reader._decoded_cache) < len(vocab)  # eviction happened
-    assert sum(reader._decoded_sizes.values()) == reader._decoded_bytes
-    # raw cache: bounded up to the protected (current-query) terms
-    assert len(reader._term_rows_cache) < len(vocab)
-    assert sum(reader._raw_sizes.values()) == reader._raw_bytes
-    assert set(reader._raw_sizes) == set(reader._term_rows_cache)
+    for cache, budget in (
+        (reader._decoded_cache, reader.DECODED_CACHE_MAX_BYTES),
+        (reader._term_rows_cache, reader.RAW_CACHE_MAX_BYTES),
+    ):
+        assert cache.nbytes <= budget
+        assert len(cache) < len(vocab)  # eviction happened
+        assert sum(cache._sizes.values()) == cache.nbytes
+        assert set(cache._sizes) == set(cache)
     assert len(reader.query_log) == 5  # rotated, oldest dropped
     # correctness after heavy eviction: full oracle rank+score identity
     for q in queries[:10]:
@@ -413,10 +455,10 @@ def test_reader_oversize_entry_never_sticks(spark, index_dir, oracle):
         got = reader.search(q["text"], k=K)
         expected = oracle.topk(q["text"], k=K)
         assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in expected]
-        assert reader._decoded_bytes == 0 and not reader._decoded_cache
+        assert reader._decoded_cache.nbytes == 0 and not reader._decoded_cache
         # zero-byte entries (terms with no postings) may stay — they cost
         # nothing; everything with actual payload must be gone
-        assert reader._raw_bytes == 0
+        assert reader._term_rows_cache.nbytes == 0
         assert all(not rows for rows in reader._term_rows_cache.values())
 
 

@@ -44,36 +44,27 @@ def _multi_term_queries():
 
 
 def _full_decode_topk(reader, terms, k, deleted=None):
+    """taat_topk's full decode: the multi-term fixture queries stay below
+    MULTI_TAAT_EARLY_MIN_POSTINGS and DECODE_MAX_POSTINGS."""
     rows = reader._fetch_rows(terms)
-    by_term: dict[str, list] = {}
-    for r in rows:
-        by_term.setdefault(r.term, []).append(r)
-    decoded = []
-    for t in sorted(by_term):
-        blks = by_term[t]
-        docs, w = wand._decode_block_group(blks, reader._bm25)
-        decoded.append((t, docs, blks[0].idf * w))
-    return wand.taat_topk_decoded(
-        decoded, k, n_docs=reader.meta["n_docs"], deleted=deleted
-    )
+    assert len({r.term for r in rows}) > 1
+    return wand.taat_topk(rows, k, reader._bm25, deleted=deleted)
 
 
-def _early_stop_topk(reader, terms, k, chunk_blocks=1, deleted=None):
+def _early_stop_topk(reader, terms, k, deleted=None):
     rows = reader._fetch_rows(terms)
     by_term: dict[str, list] = {}
     for r in rows:
         by_term.setdefault(r.term, []).append(r)
     assert len(by_term) > 1
-    return wand._taat_multi_term(
-        by_term, k, reader._bm25, reader.meta["n_docs"],
-        chunk_blocks, deleted=deleted,
-    )
+    return wand._taat_multi_term(by_term, k, reader._bm25, deleted=deleted)
 
 
-def test_multi_term_early_stop_matches_oracle(index_dir, oracle):
-    """chunk_blocks=1 maximizes stop-check rounds; ranks AND scores must be
+def test_multi_term_early_stop_matches_oracle(index_dir, oracle, monkeypatch):
+    """One-block chunks maximize stop-check rounds; ranks AND scores must be
     identical to the oracle (phase-2 re-scores with the ascending-term
     float64 fold, so scores are bit-equal to the full decode)."""
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", 1)
     reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries():
@@ -92,10 +83,11 @@ def test_multi_term_early_stop_matches_oracle(index_dir, oracle):
     assert ran >= 5
 
 
-def test_multi_term_early_stop_with_deletes(index_dir, oracle):
+def test_multi_term_early_stop_with_deletes(index_dir, oracle, monkeypatch):
     """Tombstoning each query's top-2 docs must promote the next live docs
     exactly (mask applied before the θ̃ bound — a dead doc must not stop
     the decode early)."""
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", 1)
     reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries()[:8]:
@@ -123,6 +115,7 @@ def test_multi_term_early_stop_tiny_pool_and_cand_cap(
     hold through both degenerate settings."""
     monkeypatch.setattr(wand, "_TAAT_POOL_MAX", 32)
     monkeypatch.setattr(wand, "_TAAT_CAND_MAX", 8)
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", 2)
     reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries()[:10]:
@@ -130,7 +123,7 @@ def test_multi_term_early_stop_tiny_pool_and_cand_cap(
         hit = [t for t in terms if reader._fetch_rows([t])]
         if len(hit) < 2:
             continue
-        got = _early_stop_topk(reader, hit, K, chunk_blocks=2)
+        got = _early_stop_topk(reader, hit, K)
         full = _full_decode_topk(reader, hit, K)
         assert got == full
         ran += 1
@@ -148,9 +141,7 @@ def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
         rows = reader._fetch_rows(terms)
         if not rows:
             continue
-        got = wand.taat_topk(
-            rows, K, reader._bm25, n_docs=reader.meta["n_docs"]
-        )
+        got = wand.taat_topk(rows, K, reader._bm25)
         expected = oracle.topk(q["text"], k=K)
         assert [(r, d) for r, d, _ in got] == [
             (r, d) for r, d, _ in expected
@@ -184,6 +175,7 @@ def test_multi_term_early_stop_nonpositive_threshold_masks_deletes(
     only widens the set, so exactness must not depend on it: a wide margin
     opens that window on most stop checks."""
     monkeypatch.setattr(wand, "_UB_SAFETY", 2.0)
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", 1)
     reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries()[:8]:
