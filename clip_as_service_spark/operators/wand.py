@@ -325,10 +325,10 @@ def _taat_single_term(blks, k: int, bm25: tuple, deleted=None):
 
     Keeps a running top-k — the docs at or above the current kth score plus
     the newly decoded chunk of ``_DECODE_CHUNK_BLOCKS`` blocks — so memory
-    is bounded by one chunk, not by the list. Tombstoned docs are masked PER CHUNK, before the kth-score
-    threshold is taken — a deleted doc holding the kth slot would inflate θ
-    and stop the decode while live docs that belong in the page are still
-    undecoded."""
+    is bounded by one chunk, not by the list. Tombstoned docs are masked
+    PER CHUNK, before the kth-score threshold is taken — a deleted doc
+    holding the kth slot would inflate θ and stop the decode while live
+    docs that belong in the page are still undecoded."""
     blks = sorted(blks, key=lambda r: -r.max_w)
     idf = float(blks[0].idf)
     kept = None
