@@ -8,6 +8,18 @@ Design notes (100 TB target):
 - shuffle.partitions defaults to 2×cores locally; on a real cluster this is
   sized so a shuffle partition of (term, doc_id, tf) rows fits in executor
   memory (~128 MB target per partition).
+- Python workers come from ``worker_daemon``, PySpark's own daemon started
+  with zipimport's cache invalidation fixed. PySpark calls
+  ``importlib.invalidate_caches()`` before every task, and before Python
+  3.13 each of a worker's 16 cached zipimporters then re-reads the
+  1,328-entry directory of ``pyspark.zip``: ~155 ms of CPU per task, which
+  was most of a ``search_topk`` batch (8 tasks on 4 cores; the searches
+  themselves take 15-50 ms per task). The daemon forks every worker, so
+  all of them inherit the fix; the driver's zipimport is untouched.
+- Workers import this package from where the driver did: its parent
+  directory leads ``spark.executorEnv.PYTHONPATH`` (merged with a caller's
+  value), so neither the daemon nor a pickled package function depends on
+  the JVM's working directory.
 """
 
 from __future__ import annotations
@@ -32,11 +44,13 @@ def get_spark(
 
     # -Xss must reach the JVM LAUNCH (builder configs apply after the local
     # JVM exists, so spark.driver.extraJavaOptions alone is too late):
-    # inject through PYSPARK_SUBMIT_ARGS while the gateway is still unborn.
+    # inject through PYSPARK_SUBMIT_ARGS while the gateway is still unborn,
+    # and put the caller's value back once it is up.
     # See the inFilterThreshold note below for why the depth matters.
     from pyspark import SparkContext
 
-    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    prior_submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS")
+    submit_args = prior_submit_args or ""
     if SparkContext._active_spark_context is None and "--driver-java-options" not in submit_args:
         os.environ["PYSPARK_SUBMIT_ARGS"] = (
             '--driver-java-options "-Xss16m" ' + (submit_args or "pyspark-shell")
@@ -104,6 +118,9 @@ def get_spark(
         # cores × (agg hash maps + shuffle buffers), not like a cluster driver
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # see the module docstring: workers fork from a daemon that stops
+        # every task re-reading pyspark.zip
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
     )
     # shuffle spill dir: prefer tmpfs when present so local-mode benchmarks
@@ -111,12 +128,22 @@ def get_spark(
     # shuffle over per-node local disks)
     if os.path.isdir("/dev/shm"):
         builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [package_parent, conf.get("spark.executorEnv.PYTHONPATH")])
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    from pyspark import SparkContext
 
     fresh = SparkContext._active_spark_context is None
-    spark = builder.getOrCreate()
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if prior_submit_args is None:
+            os.environ.pop("PYSPARK_SUBMIT_ARGS", None)
+        else:
+            os.environ["PYSPARK_SUBMIT_ARGS"] = prior_submit_args
     if fresh and os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
         _warmup(spark)
     return spark

@@ -1,8 +1,8 @@
 """Differential test of the query paths against oracle.BM25Oracle: one
 seeded corpus with salted head terms, built with dense and with hash doc
-ids, searched with and without tombstones taken from the top-k. Every path
-must return the oracle's doc ids in the oracle's order with bit-equal
-float64 scores:
+ids, and merged (merge_indexes) from two hash-id halves of it, searched
+with and without tombstones taken from the top-k. Every path must return
+the oracle's doc ids in the oracle's order with bit-equal float64 scores:
 
 - IndexReader.search, cold and then warm (decoded-term memo);
 - the same with ``DECODE_MAX_POSTINGS`` forced below the doc span the
@@ -12,7 +12,7 @@ float64 scores:
   block per chunk;
 - search_topk, one Spark call per index.
 
-Merge, purge, stream compaction and BPE indexes have their own tests."""
+Purge, stream compaction and BPE indexes have their own tests."""
 
 from __future__ import annotations
 
@@ -38,6 +38,7 @@ PATHS = {
     },
 }
 ID_METHODS = ("dense_sorted", "hash")
+INDEXES = ID_METHODS + ("merged",)
 
 
 def _oracle(spark, pages, ids: str) -> BM25Oracle:
@@ -60,17 +61,26 @@ def _live_topk(oracle: BM25Oracle, text: str, deleted: set) -> list:
 
 @pytest.fixture(scope="module")
 def indexes(spark, tmp_path_factory) -> dict:
-    """{ids: [(index_dir, {query_id: expected top-K})]}: the plain index,
-    then a copy with each query's top doc tombstoned."""
+    """{index: [(index_dir, {query_id: expected top-K})]}: the plain
+    index, then a copy with each query's top doc tombstoned."""
     root = tmp_path_factory.mktemp("differential")
     pages = fixtures.pages_spark_df(spark, N_PAGES, partitions=6).cache()
     queries = fixtures.make_queries()
     out = {}
-    for ids in ID_METHODS:
+    for ids in INDEXES:
         idx = str(root / ids)
-        index_build.build_index(
-            spark, pages, idx, doc_id_method=ids, **BUILD_KW
-        )
+        if ids == "merged":
+            halves = [str(root / f"half{h}") for h in range(2)]
+            for h, half in enumerate(halves):
+                index_build.build_index(
+                    spark, pages.filter(F.pmod(F.xxhash64("url"), 2) == h),
+                    half, doc_id_method="hash", **BUILD_KW,
+                )
+            index_build.merge_indexes(spark, halves, idx, **BUILD_KW)
+        else:
+            index_build.build_index(
+                spark, pages, idx, doc_id_method=ids, **BUILD_KW
+            )
         oracle = _oracle(spark, pages, ids)
         victims = {
             top[0][1] for q in queries if (top := oracle.topk(q["text"], k=1))
@@ -94,7 +104,7 @@ def _assert_exact(got: list, expected: list, what: str) -> None:
 
 
 @pytest.mark.parametrize("path", sorted(PATHS))
-@pytest.mark.parametrize("ids", ID_METHODS)
+@pytest.mark.parametrize("ids", INDEXES)
 def test_reader_matches_oracle(indexes, ids, path, monkeypatch):
     for name, value in PATHS[path].items():
         monkeypatch.setattr(wand, name, value)
@@ -108,7 +118,7 @@ def test_reader_matches_oracle(indexes, ids, path, monkeypatch):
                 )
 
 
-@pytest.mark.parametrize("ids", ID_METHODS)
+@pytest.mark.parametrize("ids", INDEXES)
 def test_search_topk_matches_oracle(spark, indexes, ids):
     qdf = fixtures.queries_spark_df(spark)
     for idx, want in indexes[ids]:
