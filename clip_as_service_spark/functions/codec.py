@@ -51,8 +51,8 @@ def bm25_params(meta: dict) -> tuple[float, float, float]:
 
 
 def dense_ids(meta: dict) -> bool:
-    """True when the index's doc ids are exactly 1..N: the build asserts
-    it, and the scorers then use a direct N-slot score array."""
+    """True when the index's doc ids are 1..N as built, with the gaps of
+    purged docs after purge_deleted_docs: the build asserts it."""
     return meta.get("doc_id_method") in ("dense", "dense_sorted", "row_number")
 
 

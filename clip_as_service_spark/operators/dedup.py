@@ -548,10 +548,3 @@ def _cc_star(edges: DataFrame, nodes: DataFrame, max_iter: int) -> DataFrame:
     return nodes.join(labels, "id", "left").select(
         "id", F.coalesce("cluster_id", "id").alias("cluster_id")
     )
-
-
-def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """→ (text_hash, n_copies, keep_id): md5 content groups, min-id survivor."""
-    return df.groupBy(F.md5(F.col(text_col)).alias("text_hash")).agg(
-        F.count("*").alias("n_copies"), F.min(id_col).alias("keep_id")
-    )

@@ -278,18 +278,20 @@ def _postings_to_blocks(spark: SparkSession, store: IndexStorage) -> IndexStorag
     stats_row = _read_stats(store)
     n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
     if dense_ids(meta):
-        # dense ids must be exactly 1..N — catches a non-deterministic source
-        # plan between _dense_ids' count pass and id pass (the double-scan
-        # hazard) before any downstream stage trusts the ids
+        # no id above the bound (N, or the purged source's: a purge keeps
+        # ids with their gaps) and one id per page counted — catches a
+        # non-deterministic source plan between _dense_ids' count pass and
+        # id pass (the double-scan hazard) before any stage trusts the ids
         max_id = int(stats_row["max_doc_id"] or 0)
+        bound = meta.get("doc_id_bound", n_docs)
         n_pages = meta.get("n_pages_input")
-        if max_id != n_docs or (n_pages is not None and n_docs != n_pages):
+        if max_id > bound or (n_pages is not None and n_docs != n_pages):
             raise AssertionError(
-                f"dense doc_id invariant violated: max(doc_id)={max_id}, "
-                f"distinct ids={n_docs}, count-pass pages={n_pages}; all "
-                "three must agree (a duplicate id under compensating "
-                "partition drift shrinks max AND distinct together, so the "
-                "count-pass total is the anchor). Source plan is not "
+                f"dense doc_id invariant violated: max(doc_id)={max_id} > "
+                f"bound {bound}, or distinct ids={n_docs} != pages {n_pages} "
+                "(a duplicate id under compensating partition drift shrinks "
+                "max AND distinct together, so the count-pass total is the "
+                "anchor). Source plan is not "
                 "deterministic across the id-assignment double scan — "
                 "persist the input or use doc_id_method='hash'."
             )
@@ -597,12 +599,12 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     live-docs posture). The distinct ids are collected on the driver and
     appended to ``deleted_docs`` as ONE parquet file per call
     (IndexStorage.append_local: no Spark write job, published whole by a
-    rename, so a reader never lists a partial file); every query path
-    (search_topk, IndexReader.search/phrase, phrase_search_indexed)
-    masks tombstoned docs BEFORE ranking — snippets
-    inherit via the masked results page. Nothing is rewritten. Collecting
-    adds no memory bound: every reader gathers the whole tombstone set on
-    the driver anyway.
+    rename under a unique name, so a reader never lists a partial file and
+    reads a file once); every query path (search_topk,
+    IndexReader.search/phrase, phrase_search_indexed) masks tombstoned
+    docs BEFORE ranking — snippets inherit via the masked results page.
+    Nothing is rewritten. Collecting adds no memory bound: every reader
+    gathers the whole tombstone set on the driver anyway.
 
     Stats semantics, stated: idf/avgdl/N stay those of the FULL corpus
     until purge_deleted_docs — surviving docs keep their exact pre-delete
@@ -672,6 +674,9 @@ def purge_deleted_docs(
     fresh build over the surviving pages (test-pinned). The built-in
     positions↔stats cross-check validates the purge for free.
 
+    Dense ids keep their gaps; stage 2 checks them against the source's
+    id bound, stamped in the meta.
+
     Same out-of-place posture as compact_streamed_index: the source index
     keeps serving (with tombstone masking) until the caller swaps dirs."""
     src = IndexStorage(index_dir)
@@ -685,6 +690,10 @@ def purge_deleted_docs(
             F.broadcast(tomb), "doc_id", "left_anti"
         )
 
+    bound = (
+        {"doc_id_bound": meta.get("doc_id_bound", meta["n_docs"])}
+        if dense_ids(meta) else {}
+    )
     if meta.get("positions"):
         _checkpoint(
             IndexStorage(out_dir), "positions", live("positions"),
@@ -697,5 +706,5 @@ def purge_deleted_docs(
         doc_id_method=meta["doc_id_method"],
         term_mode=meta.get("term_mode", "word"),
         bpe_path=meta.get("bpe_path"),
-        positions=bool(meta.get("positions")), purged_from=src.root,
+        positions=bool(meta.get("positions")), purged_from=src.root, **bound,
     )

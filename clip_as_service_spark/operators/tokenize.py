@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokenize_udf
-
 
 def assign_doc_ids(
     pages: DataFrame, method: str = "dense", counts_out: dict | None = None
@@ -104,13 +102,6 @@ def _dense_ids(
         with_pid.join(F.broadcast(offsets_df), "_pid")
         .withColumn("doc_id", (F.col("_offset") + local_rank + 1).cast("long"))
         .drop("_pid", "_mid", "_offset")
-    )
-
-
-def tokenize_pages(pages_with_ids: DataFrame, text_col: str = "text") -> DataFrame:
-    """→ (doc_id, terms:array<string>) via the byte-identity tokenizer."""
-    return pages_with_ids.select(
-        "doc_id", tokenize_udf(F.col(text_col)).alias("terms")
     )
 
 

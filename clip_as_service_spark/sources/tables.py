@@ -127,17 +127,31 @@ class IndexStorage:
 
         return pads.dataset(self.path(table), format="parquet", partitioning="hive")
 
-    def deleted_doc_ids(self):
-        """Tombstoned doc ids (``deleted_docs``, written by delete_docs) as
-        a sorted, unique int64 ndarray — empty when there are none. Read on
-        the driver with pyarrow, so no Spark job; hidden ``.tmp-*`` files
-        are skipped like every other listing here."""
+    def deleted_doc_ids(self, known: tuple | None = None) -> tuple:
+        """Tombstoned doc ids (``deleted_docs``, written by delete_docs) →
+        ``(files, ids)``: the tombstone file names and their ids, sorted and
+        unique (int64). Given ``known``, an earlier result, only the files it
+        lacks are read — delete_docs never rewrites a file — or all of them
+        if one of its files is gone. Read on the driver with pyarrow, so no
+        Spark job; ``_*``/``.*`` names (the marker, crash-left ``.tmp-*``
+        files) are skipped like every other listing here."""
         import numpy as np
+        import pyarrow.parquet as pq
 
-        if not self.exists("deleted_docs"):
-            return np.empty(0, dtype=np.int64)
-        col = self.dataset("deleted_docs").to_table(columns=["doc_id"]).column("doc_id")
-        return np.unique(np.asarray(col, dtype=np.int64))
+        d = self.path("deleted_docs")
+        listed = frozenset(
+            f for f in (os.listdir(d) if self.exists("deleted_docs") else ())
+            if not f.startswith(("_", "."))
+        )
+        if known is None or not known[0] <= listed:
+            known = frozenset(), np.empty(0, dtype=np.int64)
+        new = [
+            pq.ParquetFile(os.path.join(d, f)).read(columns=["doc_id"])
+            .column("doc_id").to_numpy()
+            for f in listed - known[0]
+        ]
+        ids = np.union1d(known[1], np.concatenate(new)) if new else known[1]
+        return listed, ids
 
     def write_tmp(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None

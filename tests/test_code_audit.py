@@ -70,3 +70,47 @@ def test_one_function_picks_the_scorer_kernel():
     assert "_taat_" not in source
     assert "MULTI_TAAT_EARLY_MIN_POSTINGS" not in source
     assert source.count("taat_topk(") == 1
+
+
+def test_tombstones_go_through_one_membership_helper():
+    """Every tombstone membership test in wand.py is a call of the one
+    sorted-membership helper ``_tombstoned`` (np.isin only inside it, no
+    in1d or setdiff1d, no second mask helper), and ``_fold`` masks once per
+    query: nothing in its per-term loops touches the tombstones."""
+    import ast
+
+    text = (PKG / "operators" / "wand.py").read_text()
+    for name in ("np.in1d(", "np.setdiff1d(", "_mask_deleted"):
+        assert name not in text, name
+    funcs = {
+        n.name: n for n in ast.walk(ast.parse(text))
+        if isinstance(n, ast.FunctionDef)
+    }
+    isin_in = {
+        name for name, f in funcs.items()
+        if any(
+            isinstance(c, ast.Attribute) and c.attr == "isin"
+            and getattr(c.value, "id", None) == "np"
+            for c in ast.walk(f)
+        )
+    }
+    assert isin_in == {"_tombstoned"}, isin_in
+    callers = {
+        name for name, f in funcs.items()
+        if any(
+            isinstance(c, ast.Call) and getattr(c.func, "id", None) == "_tombstoned"
+            for c in ast.walk(f)
+        )
+    }
+    assert callers == {
+        "_fold", "_taat_single_term", "_taat_multi_term", "phrase"
+    }, callers
+    loops = (
+        n for n in ast.walk(funcs["_fold"])
+        if isinstance(n, (ast.For, ast.ListComp, ast.GeneratorExp))
+    )
+    for loop in loops:
+        names = {n.id for n in ast.walk(loop) if isinstance(n, ast.Name)}
+        assert not names & {"deleted", "_tombstoned"}, (
+            ast.get_source_segment(text, loop)
+        )

@@ -12,12 +12,18 @@ the oracle's doc ids in the oracle's order with bit-equal float64 scores:
   block per chunk;
 - search_topk, one Spark call per index.
 
+A tombstone-heavy case deletes ids drawn over the whole corpus in many
+delete_docs calls and checks a held reader refreshed after each call
+(warm) and, every third call, a new reader (cold) and search_topk's task
+body, on every path above, against the oracle minus the deleted ids.
+
 Purge, stream compaction and BPE indexes have their own tests."""
 
 from __future__ import annotations
 
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,8 +67,8 @@ def _live_topk(oracle: BM25Oracle, text: str, deleted: set) -> list:
 
 @pytest.fixture(scope="module")
 def indexes(spark, tmp_path_factory) -> dict:
-    """{index: [(index_dir, {query_id: expected top-K})]}: the plain
-    index, then a copy with each query's top doc tombstoned."""
+    """{index: (oracle, [(index_dir, {query_id: expected top-K})])}: the
+    plain index, then a copy with each query's top doc tombstoned."""
     root = tmp_path_factory.mktemp("differential")
     pages = fixtures.pages_spark_df(spark, N_PAGES, partitions=6).cache()
     queries = fixtures.make_queries()
@@ -88,12 +94,12 @@ def indexes(spark, tmp_path_factory) -> dict:
         deleted = idx + "_deleted"
         shutil.copytree(idx, deleted)
         index_build.delete_docs(spark, deleted, sorted(victims))
-        out[ids] = [
+        out[ids] = (oracle, [
             (idx, {q["query_id"]: _live_topk(oracle, q["text"], set())
                    for q in queries}),
             (deleted, {q["query_id"]: _live_topk(oracle, q["text"], victims)
                        for q in queries}),
-        ]
+        ])
     pages.unpersist()
     return out
 
@@ -109,7 +115,7 @@ def test_reader_matches_oracle(indexes, ids, path, monkeypatch):
     for name, value in PATHS[path].items():
         monkeypatch.setattr(wand, name, value)
     texts = {q["query_id"]: q["text"] for q in fixtures.make_queries()}
-    for idx, want in indexes[ids]:
+    for idx, want in indexes[ids][1]:
         reader = wand.IndexReader(None, idx)
         for state in ("cold", "warm"):
             for qid, text in texts.items():
@@ -121,7 +127,7 @@ def test_reader_matches_oracle(indexes, ids, path, monkeypatch):
 @pytest.mark.parametrize("ids", INDEXES)
 def test_search_topk_matches_oracle(spark, indexes, ids):
     qdf = fixtures.queries_spark_df(spark)
-    for idx, want in indexes[ids]:
+    for idx, want in indexes[ids][1]:
         got: dict = {}
         rows = wand.search_topk(spark, idx, qdf, k=K).collect()
         for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
@@ -130,3 +136,65 @@ def test_search_topk_matches_oracle(spark, indexes, ids):
             )
         for qid, expected in want.items():
             _assert_exact(got.get(qid, []), expected, f"{idx} query {qid}")
+
+
+# the tombstone-heavy case: this many delete_docs calls of this many ids
+DELETE_CALLS = 30
+DELETE_PER_CALL = 3
+
+
+def _query_batch(queries: list):
+    import pyarrow as pa
+
+    schema = pa.schema([("query_id", pa.int32()), ("text", pa.string())])
+    return pa.RecordBatch.from_pylist(queries, schema=schema)
+
+
+@pytest.mark.parametrize("path", sorted(PATHS))
+@pytest.mark.parametrize("ids", ID_METHODS)
+def test_many_deletes_match_oracle(spark, indexes, ids, path, tmp_path, monkeypatch):
+    """DELETE_CALLS delete_docs calls, each of ids drawn over the whole
+    corpus (every fifth also repeats a deleted id and adds an absent one).
+    After each call one held reader, refreshed, answers warm; after every
+    third, also a new reader, cold, and search_topk's task body with the
+    worker's reader. Each equals the oracle's ranking of the survivors, bit
+    for bit."""
+    for name, value in PATHS[path].items():
+        monkeypatch.setattr(wand, name, value)
+    monkeypatch.setattr(wand, "_task_reader", None)
+    oracle, [(plain, _want), _deleted] = indexes[ids]
+    idx = str(tmp_path / "idx")
+    shutil.copytree(plain, idx)
+    queries = fixtures.make_queries()
+    docs = sorted(oracle.doc_ids)
+    order = np.random.default_rng(7).permutation(docs).tolist()
+    absent = min(set(range(1, len(docs) + 2)) - set(docs))
+    held = wand.IndexReader(None, idx)
+    deleted: set = set()
+    for c in range(DELETE_CALLS):
+        batch = order[c * DELETE_PER_CALL : (c + 1) * DELETE_PER_CALL]
+        extra = [order[0], absent] if c % 5 == 4 else []
+        index_build.delete_docs(spark, idx, batch + extra)
+        deleted |= set(batch)
+        held.refresh()
+        got = {"warm": {q["query_id"]: held.search(q["text"], k=K) for q in queries}}
+        if c % 3 == 2:
+            cold = wand.IndexReader(None, idx)
+            got["cold"] = {q["query_id"]: cold.search(q["text"], k=K) for q in queries}
+            got["task"] = task = {}
+            for b in wand._search_batches(
+                [_query_batch(queries)], index_dir=idx, k=K,
+                max_postings=wand.DECODE_MAX_POSTINGS,
+            ):
+                for r in b.to_pylist():
+                    task.setdefault(r["query_id"], []).append(
+                        (r["rank"], r["doc_id"], r["score"])
+                    )
+        for q in queries:
+            want = _live_topk(oracle, q["text"], deleted)
+            for reader, answers in got.items():
+                _assert_exact(
+                    answers.get(q["query_id"], []), want,
+                    f"{reader} after call {c}: {q['text']!r}",
+                )
+    assert len(deleted) == DELETE_CALLS * DELETE_PER_CALL

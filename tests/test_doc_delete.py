@@ -439,3 +439,162 @@ def test_stray_tmp_tombstone_file_is_ignored(spark, built, queries, tmp_path):
         .select("doc_id").distinct().collect()
     }
     assert dead not in live and unrenamed in live
+
+
+def _tomb_files_read(monkeypatch) -> list:
+    """Count the ``deleted_docs`` parquet files pyarrow opens, through a
+    dataset (every file it covers) or a ParquetFile; → the list the counts
+    go to."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    counts = []
+    real_dataset, real_file = pads.dataset, pq.ParquetFile.__init__
+
+    def dataset(source, *args, **kw):
+        ds = real_dataset(source, *args, **kw)
+        counts.append(sum("deleted_docs" in f for f in ds.files))
+        return ds
+
+    def parquet_file(self, source, *args, **kw):
+        counts.append(int("deleted_docs" in str(source)))
+        real_file(self, source, *args, **kw)
+
+    monkeypatch.setattr(pads, "dataset", dataset)
+    monkeypatch.setattr(pq.ParquetFile, "__init__", parquet_file)
+    return counts
+
+
+def test_refresh_reads_only_new_tombstone_files(
+    spark, built, queries, tmp_path, monkeypatch
+):
+    """After N delete_docs calls, one more call plus refresh() reads
+    exactly one tombstone file — the new one — and masks every id."""
+    import shutil
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built, idx)
+    reader = wand.IndexReader(None, idx)
+    q = queries.collect()[0]["text"]
+    ranked = [d for _r, d, _s in reader.search(q, k=K_ALL)]
+    n = 6
+    for d in ranked[:n]:
+        index_build.delete_docs(spark, idx, [d])
+        reader.refresh()
+    reads = _tomb_files_read(monkeypatch)
+    index_build.delete_docs(spark, idx, [ranked[n]])
+    reader.refresh()
+    assert sum(reads) == 1
+    assert len(_tomb_files(idx)) == n + 1
+    got = {d for _r, d, _s in reader.search(q, k=K_ALL)}
+    assert got == set(ranked[n + 1:])
+
+
+def test_refresh_after_tombstone_files_removed_or_replaced(
+    spark, built, queries, tmp_path
+):
+    """refresh() answers with exactly the tombstones on disk when files
+    the reader has read are gone: one of them removed, all of them
+    removed, or the whole table replaced by other files."""
+    import os
+    import shutil
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built, idx)
+    reader = wand.IndexReader(None, idx)
+    q = queries.collect()[0]["text"]
+    ranked = [d for _r, d, _s in reader.search(q, k=K_ALL)]
+    a, b, c, d = ranked[:4]
+
+    def check(on_disk: set) -> None:
+        reader.refresh()
+        held = reader._deleted_arr
+        assert set(() if held is None else held.tolist()) == on_disk
+        got = reader.search(q, k=K_ALL)
+        assert got == wand.IndexReader(None, idx).search(q, k=K_ALL)
+        assert {doc for _r, doc, _s in got} == set(ranked) - on_disk
+
+    index_build.delete_docs(spark, idx, [a])
+    first = set(_tomb_files(idx))
+    index_build.delete_docs(spark, idx, [b])
+    check({a, b})
+    # one file the reader has read is removed, and a new one published
+    (gone,) = first
+    os.remove(gone)
+    index_build.delete_docs(spark, idx, [c])
+    check({b, c})
+    # every tombstone file removed
+    shutil.rmtree(os.path.join(idx, "deleted_docs"))
+    check(set())
+    # the table replaced by another index's tombstones
+    other = str(tmp_path / "other")
+    shutil.copytree(built, other)
+    index_build.delete_docs(spark, other, [d])
+    index_build.delete_docs(spark, idx, [a])
+    check({a})
+    shutil.rmtree(os.path.join(idx, "deleted_docs"))
+    shutil.copytree(
+        os.path.join(other, "deleted_docs"), os.path.join(idx, "deleted_docs")
+    )
+    check({d})
+
+
+def test_purge_dense_ids_matches_oracle_over_survivors(spark, pages, tmp_path):
+    """A dense_sorted index purged of tombstones spread over its id range
+    keeps the surviving ids, gaps and all: the purge completes, a second
+    delete-and-purge of the purged index does too, and each purged index
+    searches bit-equal to the oracle over its surviving pages (stats
+    refreshed). Absent and repeated tombstones count once or not at all."""
+    from clip_as_service_spark.sources.tables import IndexStorage
+
+    idx = str(tmp_path / "dense")
+    index_build.build_index(
+        spark, pages, idx, n_shards=4, salt_cutoff=30, target_sublist=20,
+        doc_id_method="dense_sorted",
+    )
+    by_url = sorted(fixtures.make_pages(N_PAGES), key=lambda r: r["url"])
+    docs = [(i, r["text"]) for i, r in enumerate(by_url, 1)]
+    texts = [q["text"] for q in fixtures.make_queries()]
+
+    def purge_and_check(src: str, dst: str, victims: set) -> None:
+        index_build.purge_deleted_docs(spark, src, dst)
+        oracle = BM25Oracle([(i, t) for i, t in docs if i not in victims])
+        meta = IndexStorage(dst).read_meta()
+        assert meta["n_docs"] == N_PAGES - len(victims)
+        reader = wand.IndexReader(None, dst)
+        for text in texts:
+            assert reader.search(text, k=10) == oracle.topk(text, k=10), text
+
+    first = {1, 2, 40, 77, N_PAGES}
+    index_build.delete_docs(spark, idx, sorted(first) + [N_PAGES + 50])
+    index_build.delete_docs(spark, idx, [40])
+    purged = str(tmp_path / "purged")
+    purge_and_check(idx, purged, first)
+    second = {3, N_PAGES - 1}
+    index_build.delete_docs(spark, purged, sorted(second) + [2])
+    purge_and_check(purged, str(tmp_path / "purged2"), first | second)
+
+
+def test_tombstone_membership_on_both_methods():
+    """wand._tombstoned answers set membership whichever method it takes:
+    the lookup table (a chunk of ≥ 8192 docs whose tombstones span ≤ 32
+    ids per doc) or the binary search (shorter chunks, wider spans, hash
+    ids), with docs below, inside and above the tombstones' range."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    tables = set()
+    for n, span in (
+        (20_000, 30_000), (8192, 32 * 8192), (8191, 30_000),
+        (20_000, 10**9), (300, 1000), (5000, 2**62),
+    ):
+        docs = rng.integers(-span // 4, span + span // 4, size=n)
+        deleted = np.unique(np.concatenate((
+            rng.choice(docs, size=100), rng.integers(0, span, size=200),
+        )))
+        deleted = deleted[(deleted >= 0) & (deleted <= span)]
+        tables.add(n >= 8192 and int(deleted[-1]) - int(deleted[0]) <= 32 * n)
+        dead = set(deleted.tolist())
+        want = np.array([d in dead for d in docs.tolist()])
+        assert (wand._tombstoned(docs, deleted) == want).all(), (n, span)
+    assert tables == {True, False}

@@ -133,9 +133,12 @@ def test_multi_term_early_stop_tiny_pool_and_cand_cap(
 def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
     """taat_topk engages _taat_multi_term past the postings threshold (and
     IndexReader.search inherits it); forced threshold 0 must keep
-    every fixture query oracle-exact through the public entry point."""
+    every fixture query oracle-exact through the public entry point. An
+    empty tombstone array answers as None does, whichever kernel runs:
+    the multi-term stop, the windows (bound 8) or the single-term stop."""
     monkeypatch.setattr(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0)
     reader = wand.IndexReader(None, index_dir)
+    empty = np.empty(0, dtype=np.int64)
     for q in _multi_term_queries():
         terms = sorted(set(tokenize_words(q["text"])))
         rows = reader._fetch_rows(terms)
@@ -148,6 +151,10 @@ def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
         ], q
         for (_, _, se), (_, _, sg) in zip(expected, got):
             assert sg == pytest.approx(se, rel=1e-12)
+        for part, bound in ((rows, None), (rows, 8), (rows[:1], None)):
+            assert wand.taat_topk(
+                part, K, reader._bm25, deleted=empty, max_postings=bound
+            ) == wand.taat_topk(part, K, reader._bm25, max_postings=bound), q
 
 
 def test_reader_search_uses_early_stop_when_heavy(index_dir, oracle, monkeypatch):
