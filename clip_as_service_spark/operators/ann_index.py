@@ -34,7 +34,7 @@ stored and recomputed results are identical — pinned by tests.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import IndexStorage
@@ -1462,14 +1462,10 @@ def _pq_probe_topk(
         approx = _pq.pq_score(
             cand.select(q_id_col, "vec_id", "pq_code"), lut, q_norms, q_id_col
         )
-        w = Window.partitionBy(q_id_col).orderBy(
-            F.desc("approx_cos"), F.asc("vec_id")
-        )
-        surv = (
-            approx.withColumn("_pr", F.row_number().over(w))
-            .filter(F.col("_pr") <= rerank)
-            .select(q_id_col, "vec_id")
-        )
+        surv = sim.topk_rows(
+            approx, q_id_col, [F.desc("approx_cos"), F.asc("vec_id")],
+            rerank, "_pr",
+        ).select(q_id_col, "vec_id")
     vecs = _fetch_exact_vectors(spark, store, surv)
     scored = (
         surv.join(F.broadcast(q_only), q_id_col)

@@ -28,13 +28,14 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from .. import B, K1
 from ..functions.text import make_tokenize_udf
+from .similarity import topk_rows
 
 
 @pandas_udf(DoubleType())
@@ -121,11 +122,6 @@ def score_topk(
         )
     )
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return topk_rows(
+        scores, "query_id", [F.desc("score"), F.asc("doc_id")], k
+    ).select("query_id", "rank", "doc_id", "score")

@@ -22,8 +22,10 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .similarity import topk_rows
 
 
 def rrf_fuse(
@@ -67,14 +69,11 @@ def rrf_fuse(
             for c in rank_cols
         ],
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("rank").cast("int").alias("rank"),
-            "doc_id", "rrf", *rank_cols,
-        )
+    return topk_rows(
+        fused, "query_id", [F.desc("rrf"), F.asc("doc_id")], k
+    ).select(
+        "query_id", F.col("rank").cast("int").alias("rank"),
+        "doc_id", "rrf", *rank_cols,
     )
 
 

@@ -48,6 +48,11 @@ def _sub_slices(vec_col, dim: int, m: int) -> list:
 
 
 def _dot(a, b) -> F.Column:
+    """Σ a[i]·b[i] in the arrays' own element type. Not similarity._dot,
+    which casts each element to double first: ann_index's query-norm
+    call passes the caller's query vectors, array<float> in the test
+    corpora, whose float products would then change and move the
+    approximate scores that pick the rerank pool."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )

@@ -48,19 +48,24 @@ def cosine_col(a, b) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def topk_rows(
+    df: DataFrame, partition: str, order: list, k: int, rank: str = "rank"
+) -> DataFrame:
+    """The first ``k`` rows of each ``partition`` group by the ``order``
+    columns, numbered from 1 in column ``rank`` (row_number: the engine's
+    one top-k window; ``order`` ends in a unique column, so ties rank
+    deterministically)."""
+    w = Window.partitionBy(partition).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
 def _topk(scored: DataFrame, k: int) -> DataFrame:
     """(query_id, vec_id, cosine) rows → each query's top k as (query_id,
     rank, vec_id, cosine): cosine descending, ties to the smaller vec_id."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("rank").cast("int").alias("rank"),
-            "vec_id", "cosine",
-        )
+    return topk_rows(
+        scored, "query_id", [F.desc("cosine"), F.asc("vec_id")], k
+    ).select(
+        "query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "cosine",
     )
 
 
@@ -694,12 +699,9 @@ def _nearest_cells(
     joined = vecs.crossJoin(F.broadcast(centroids)).withColumn(
         "_ccos", F.round(cosine_col(F.col(vec_col), F.col(c_vec_col)), 9)
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_ccos"), F.asc(c_id_col))
-    return (
-        joined.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= n_nearest)
-        .drop("_ccos", rank_col, c_vec_col)
-    )
+    return topk_rows(
+        joined, id_col, [F.desc("_ccos"), F.asc(c_id_col)], n_nearest, rank_col
+    ).drop("_ccos", rank_col, c_vec_col)
 
 
 def cosine_pairs(

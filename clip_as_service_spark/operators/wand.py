@@ -7,9 +7,10 @@ Reference semantics: per-shard local top-k then global merge
 
 Every in-memory query is scored by one family of vectorized
 term-at-a-time kernels — numpy over whole decoded blocks, no per-posting
-Python (column-at-a-time scoring, as in "Columnar Formatted Inverted Index
-for Highly-Paralleled, Vectorized Query Processing", ICDE 2025), and
-``taat_topk`` alone picks the kernel for a query's block rows:
+or per-block Python (column-at-a-time scoring, as in "Columnar Formatted
+Inverted Index for Highly-Paralleled, Vectorized Query Processing", ICDE
+2025), and ``taat_topk`` alone picks the kernel for a query's terms, each
+fetched as block arrays (``_Term``) that the kernels index:
 
 - ``_fold`` — the exact ascending-term fold of decoded lists, over a direct
   array when the doc span touched fits ``DECODE_MAX_POSTINGS`` slots, over
@@ -30,7 +31,7 @@ Bounds are inflated by 1+1e-9 (``_UB_SAFETY``) so float rounding can never
 stop a decode that a true top-k doc still needs → every kernel is EXACT.
 
 One caller: ``IndexReader.search(text, k)`` — tokenized with the index's
-own vocabulary, block rows read with pyarrow, no Spark job per query. The
+own vocabulary, blocks read with pyarrow, no Spark job per query. The
 batch verb ``search_topk(spark, index_dir, queries, k)`` runs it inside
 Spark tasks: each task searches its share of the query rows with a reader
 cached in its Python worker.
@@ -44,6 +45,7 @@ idf·w summed in ascending-term order; tie-break (score DESC, doc_id ASC).
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import os
 import time
@@ -95,64 +97,98 @@ def _tombstoned(docs: np.ndarray, deleted: np.ndarray) -> np.ndarray:
 _DECODE_CHUNK_BLOCKS = 4096
 
 
-def _decode_block_group(blks, bm25: tuple):
-    """Batch-decode a list of block rows → (docs, w), concatenated in row
-    order (blocks decode independently, so the rows may mix terms).
+@dataclasses.dataclass(slots=True)
+class _Term:
+    """One term's fetched blocks as columns, one element per block: numpy
+    ``n``, ``first_doc``, ``last_doc`` and ``max_w``, and the vByte
+    payloads ``docs``, ``tfs`` and ``dls`` as Arrow binary arrays."""
 
-    Large groups decode in bounded chunks: vbyte_decode's general path
-    allocates several #bytes-sized temporaries, and a Zipf-head term's
-    single-shot decode (millions of postings) was measured ~4× slower than
-    the same blocks in 4096-block chunks (memory traffic, not ALU). Outputs
-    are identical — blocks decode independently."""
-    if len(blks) <= _DECODE_CHUNK_BLOCKS:
-        return _decode_block_group_raw(blks, bm25)
-    doc_parts = []
-    w_parts = []
-    for i in range(0, len(blks), _DECODE_CHUNK_BLOCKS):
-        d, w = _decode_block_group_raw(blks[i : i + _DECODE_CHUNK_BLOCKS], bm25)
-        doc_parts.append(d)
-        w_parts.append(w)
-    return np.concatenate(doc_parts), np.concatenate(w_parts)
+    term: str
+    idf: float
+    postings: int  # n.sum()
+    n: np.ndarray
+    first_doc: np.ndarray
+    last_doc: np.ndarray
+    max_w: np.ndarray
+    docs: pa.BinaryArray
+    tfs: pa.BinaryArray
+    dls: pa.BinaryArray
+
+    @property
+    def nbytes(self) -> int:  # the raw cache's charge: 4 arrays, 3 binary
+        cols = (self.docs, self.tfs, self.dls)
+        return 44 * len(self.n) + sum(c.total_values_length for c in cols)
 
 
-def _decode_block_group_raw(blks, bm25: tuple):
-    avgdl, k1, b = bm25
-    ns = np.array([r.n for r in blks], dtype=np.int64)
-    docs, tfs, dls = decode_posting_blocks_batch(
-        [r.docs for r in blks], [r.tfs for r in blks], [r.dls for r in blks], ns
-    )
-    return docs, impact_weights(tfs, dls, avgdl, k1, b)
+def _payload(col: pa.BinaryArray, sel: np.ndarray) -> pa.Buffer:
+    """The bytes of the elements of ``col`` at positions ``sel``, back to
+    back: a slice of the data buffer of ``col`` (for a run of consecutive
+    positions) or of a ``take``."""
+    first = int(sel[0])
+    run = int(sel[-1]) - first == len(sel) - 1
+    col = col.slice(first, len(sel)) if run else col.take(sel)
+    _, offsets, data = col.buffers()
+    start = np.frombuffer(offsets, np.int32, 1, 4 * col.offset)[0]
+    return data.slice(int(start), col.total_values_length)
+
+
+def _decode_blocks(picks: list, bm25: tuple):
+    """Batch-decode the blocks ``picks`` = [(term, block positions)] →
+    (docs, w), concatenated in pick order: several terms' blocks per
+    decode call, each payload passed as one buffer per term.
+
+    A call holds at most ``_DECODE_CHUNK_BLOCKS`` blocks: vbyte_decode's
+    general path allocates several #bytes-sized temporaries, and a
+    Zipf-head term's single-shot decode (millions of postings) was measured
+    ~4× slower than in 4096-block chunks (memory traffic, not ALU)."""
+    pieces = [
+        (t, sel[i : i + _DECODE_CHUNK_BLOCKS])
+        for t, sel in picks for i in range(0, len(sel), _DECODE_CHUNK_BLOCKS)
+    ]
+    docs, w = [], []
+    while pieces:
+        call, size = [], 0
+        while pieces and size + len(pieces[0][1]) <= _DECODE_CHUNK_BLOCKS:
+            size += len(pieces[0][1])
+            call.append(pieces.pop(0))
+        d, tfs, dls = decode_posting_blocks_batch(
+            *([_payload(getattr(t, c), sel) for t, sel in call]
+              for c in ("docs", "tfs", "dls")),
+            np.concatenate([t.n[sel] for t, sel in call]),
+        )
+        docs.append(d)
+        w.append(impact_weights(tfs, dls, *bm25))
+    return np.concatenate(docs), np.concatenate(w)
 
 
 # the most postings a scorer decodes at once (~16 B/posting decoded, so
 # 250M ⇒ ≤ 4 GB) and the most slots of a score array (8 B/slot): a fold
 # and the multi-term stop use a direct array over the doc span a query
 # touches only up to this many slots, so a dense-id index with more docs
-# folds sparse and skips the multi-term stop. IndexReader.search reads it
-# per query unless the reader's max_postings is set, as search_topk's
-# tasks set it to the driver's value.
+# folds sparse and skips the multi-term stop.
 DECODE_MAX_POSTINGS = 250_000_000
 
 
 def taat_topk(
-    rows, k: int, bm25: tuple, deleted=None, max_postings: int | None = None,
+    terms: list[_Term], k: int, bm25: tuple, deleted=None,
     memo: _ByteCache | None = None,
 ) -> list[tuple[int, int, float]]:
-    """Vectorized exact term-at-a-time scorer over a query's block rows —
-    the one function that picks a kernel.
+    """Vectorized exact term-at-a-time scorer over a query's fetched terms
+    (distinct, as ``IndexReader._fetch_rows`` returns them) — the one
+    function that picks a kernel.
 
     - every term in ``memo`` (decoded terms kept across queries) and at
-      most ``max_postings`` postings: a fold of the memoized lists;
+      most ``DECODE_MAX_POSTINGS`` postings: a fold of the memoized lists;
     - one term: _taat_single_term's block-max early stop — with one term a
       decoded doc's partial IS its exact score, so a Zipf-head list stops
       decoding once k docs beat idf·(best undecoded max_w);
     - past ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over a doc span of at
-      most ``max_postings``: _taat_multi_term's two-phase early stop (below
-      it a full vectorized decode beats the stop's bookkeeping — a
+      most ``DECODE_MAX_POSTINGS``: _taat_multi_term's two-phase early stop
+      (below it a full vectorized decode beats the stop's bookkeeping — a
       sum-of-remaining-UBs stop with no candidate phase was measured
       NET-SLOWER at 6.4M docs);
-    - past ``max_postings`` (default ``DECODE_MAX_POSTINGS``) postings:
-      doc-id windows of about that many (_taat_windowed);
+    - past ``DECODE_MAX_POSTINGS`` postings: doc-id windows of about that
+      many (_taat_windowed);
     - otherwise a full decode, each list read from ``memo`` or decoded and
       remembered there. The early stops and the windows decode part of a
       list at a time, so they leave ``memo`` alone.
@@ -161,52 +197,41 @@ def taat_topk(
     Returned scores always accumulate ascending-term (the oracle's float64
     association); top-k via lexsort with the (score DESC, doc ASC)
     tie-break."""
-    terms = sorted({row.term for row in rows})
     if not terms:
         return []
+    terms = sorted(terms, key=lambda t: t.term)
     if deleted is not None and not len(deleted):
         deleted = None
-    if max_postings is None:
-        max_postings = DECODE_MAX_POSTINGS
-    warm = memo is not None and all(t in memo for t in terms)
-    # the memo's lists hold every posting of their terms
-    total = sum(len(memo[t][0]) for t in terms) if warm else sum(r.n for r in rows)
-    if not warm or total > max_postings:
-        by_term: dict[str, list] = {}
-        for row in rows:
-            by_term.setdefault(row.term, []).append(row)
+    bound = DECODE_MAX_POSTINGS
+    warm = memo is not None and all(t.term in memo for t in terms)
+    total = sum(t.postings for t in terms)
+    if not warm or total > bound:
         if len(terms) == 1:
-            return _taat_single_term(by_term[terms[0]], k, bm25, deleted=deleted)
+            return _taat_single_term(terms[0], k, bm25, deleted=deleted)
         if total > MULTI_TAAT_EARLY_MIN_POSTINGS:
-            lo, hi = _span(rows)
-            if hi - lo <= max_postings:
-                return _taat_multi_term(by_term, k, bm25, deleted=deleted)
-        if total > max_postings:
-            return _taat_windowed(by_term, k, bm25, max_postings, deleted=deleted)
+            lo = min(int(t.first_doc.min()) for t in terms)
+            if max(int(t.last_doc.max()) for t in terms) + 1 - lo <= bound:
+                return _taat_multi_term(terms, k, bm25, deleted=deleted)
+        if total > bound:
+            return _taat_windowed(terms, k, bm25, deleted=deleted)
 
     entries = []
     for t in terms:
-        entry = memo.get(t) if memo is not None else None
-        if entry is None:  # not warm, so by_term is set
+        entry = memo.get(t.term) if memo is not None else None
+        if entry is None:
             # batch-decode the whole term's blocks in one vectorized pass
             # (sub-salt lists decode together: carry resets at every block)
-            blks = by_term[t]
-            docs, w = _decode_block_group(blks, bm25)
-            entry = (docs, blks[0].idf * w, int(docs.min()), int(docs.max()) + 1)
+            docs, w = _decode_blocks([(t, np.arange(len(t.n)))], bm25)
+            entry = (docs, t.idf * w, int(docs.min()), int(docs.max()) + 1)
             if memo is not None:
-                memo.put(t, entry, docs.nbytes + entry[1].nbytes + 64)
+                memo.put(t.term, entry, docs.nbytes + entry[1].nbytes + 64)
         entries.append(entry)
     lo = min(e[2] for e in entries)
     hi = max(e[3] for e in entries)
     return _fold(
         [e[:2] for e in entries], k,
-        (lo, hi) if hi - lo <= max_postings else None, deleted=deleted,
+        (lo, hi) if hi - lo <= bound else None, deleted=deleted,
     )
-
-
-def _span(blks) -> tuple[int, int]:
-    """[lo, hi): the doc ids the blocks ``blks`` cover."""
-    return min(b.first_doc for b in blks), max(b.last_doc for b in blks) + 1
 
 
 def _fold(decoded: list, k: int, universe, deleted=None):
@@ -255,11 +280,11 @@ def _fold(decoded: list, k: int, universe, deleted=None):
     return _topk_from_arrays(universe[live], scores[live], k)
 
 
-def _doc_windows(firsts, lasts, ns, max_postings: int) -> list[tuple[int, int]]:
+def _doc_windows(firsts, lasts, ns, bound: int) -> list[tuple[int, int]]:
     """Cut the doc-id span of blocks (first_doc, last_doc, n arrays) into
     half-open windows [lo, hi) at block boundaries (first_doc, last_doc+1),
     greedily widest such that the blocks overlapping a window hold at most
-    ``max_postings`` postings. No window is narrower than one gap between
+    ``bound`` postings. No window is narrower than one gap between
     adjacent boundaries, inside which each posting list has at most one
     block — so a window exceeds the bound only when that gap alone does, by
     at most one block per list."""
@@ -277,17 +302,14 @@ def _doc_windows(firsts, lasts, ns, max_postings: int) -> list[tuple[int, int]]:
     windows = []
     i, end = 0, len(cuts) - 1
     while i < end:
-        j = int(np.searchsorted(started, ended[i] + max_postings, "right")) - 1
+        j = int(np.searchsorted(started, ended[i] + bound, "right")) - 1
         j = min(max(j, i + 1), end)
         windows.append((int(cuts[i]), int(cuts[j])))
         i = j
     return windows
 
 
-def _taat_windowed(
-    by_term: dict[str, list], k: int, bm25: tuple, max_postings: int,
-    deleted=None,
-):
+def _taat_windowed(terms: list[_Term], k: int, bm25: tuple, deleted=None):
     """Full-decode fold with bounded memory: per doc-id window
     (_doc_windows), decode the overlapping blocks of every term in ONE
     batch, mask them to the window, fold ascending-term (_fold) and merge
@@ -295,30 +317,32 @@ def _taat_windowed(
     complete inside its window and bit-identical to the single-pass fold;
     the window's top-k holds every doc of the global top-k that lies in it.
 
-    A window that spans at most ``max_postings`` docs folds over a direct
-    array. One that decodes more postings than that (a gap between block
-    boundaries can) folds in slices of at most ``max_postings`` distinct
+    A window that spans at most ``DECODE_MAX_POSTINGS`` docs folds over a
+    direct array. One that decodes more postings than that (a gap between
+    block boundaries can) folds in slices of at most that many distinct
     docs, so no score array outgrows the bound."""
-    terms = sorted(by_term)
-    blks = [b for t in terms for b in by_term[t]]  # ascending term
-    term_of = np.repeat(
-        np.arange(len(terms)), [len(by_term[t]) for t in terms]
-    )
-    idfs = np.array([float(by_term[t][0].idf) for t in terms])
-    firsts = np.array([b.first_doc for b in blks], dtype=np.int64)
-    lasts = np.array([b.last_doc for b in blks], dtype=np.int64)
-    ns = np.array([b.n for b in blks], dtype=np.int64)
+    bound = DECODE_MAX_POSTINGS
+    # term i's blocks are [starts[i], starts[i + 1]) of the concatenation
+    starts = np.cumsum([0] + [len(t.n) for t in terms])
+    firsts, lasts, ns = (np.concatenate([getattr(t, c) for t in terms])
+                         for c in ("first_doc", "last_doc", "n"))
+    term_of = np.repeat(np.arange(len(terms)), np.diff(starts))
+    idfs = np.array([t.idf for t in terms])
     best: list = []
-    for lo, hi in _doc_windows(firsts, lasts, ns, max_postings):
+    for lo, hi in _doc_windows(firsts, lasts, ns, bound):
         sel = np.flatnonzero((firsts < hi) & (lasts >= lo))
         if not len(sel):
             continue
-        all_docs, all_w = _decode_block_group([blks[j] for j in sel], bm25)
+        at = np.searchsorted(sel, starts)
+        all_docs, all_w = _decode_blocks([
+            (t, sel[i:j] - start)
+            for t, i, j, start in zip(terms, at[:-1], at[1:], starts)
+        ], bm25)
         all_ti = np.repeat(term_of[sel], ns[sel])
         cuts = [lo, hi]
-        if len(all_docs) > max_postings:
+        if len(all_docs) > bound:
             inside = np.unique(all_docs[(all_docs >= lo) & (all_docs < hi)])
-            cuts[1:1] = inside[max_postings::max_postings].tolist()
+            cuts[1:1] = inside[bound::bound].tolist()
         for a, b in zip(cuts[:-1], cuts[1:]):
             m = (all_docs >= a) & (all_docs < b)
             docs, w, ti = all_docs[m], all_w[m], all_ti[m]
@@ -328,13 +352,13 @@ def _taat_windowed(
                 (docs[i:j], idfs[t] * w[i:j])
                 for t, (i, j) in enumerate(zip(runs[:-1], runs[1:]))
             ]
-            span = (a, b) if b - a <= max_postings else None
+            span = (a, b) if b - a <= bound else None
             best += _fold(decoded, k, span, deleted=deleted)
             best = sorted(best, key=lambda e: (-e[2], e[1]))[:k]
     return [(r, d, s) for r, (_, d, s) in enumerate(best, 1)]
 
 
-def _taat_single_term(blks, k: int, bm25: tuple, deleted=None):
+def _taat_single_term(t: _Term, k: int, bm25: tuple, deleted=None):
     """Single-term exact top-k with block-max early stop (see taat_topk).
 
     Keeps a running top-k — the docs at or above the current kth score plus
@@ -343,28 +367,27 @@ def _taat_single_term(blks, k: int, bm25: tuple, deleted=None):
     PER CHUNK, before the kth-score threshold is taken — a deleted doc
     holding the kth slot would inflate θ and stop the decode while live
     docs that belong in the page are still undecoded."""
-    blks = sorted(blks, key=lambda r: -r.max_w)
-    idf = float(blks[0].idf)
+    order = np.argsort(-t.max_w, kind="stable")
     kept = None
     i = 0
     while True:
-        chunk = blks[i : i + _DECODE_CHUNK_BLOCKS]
+        chunk = order[i : i + _DECODE_CHUNK_BLOCKS]
         i += len(chunk)
-        docs, w = _decode_block_group(chunk, bm25)
+        docs, w = _decode_blocks([(t, chunk)], bm25)
         if deleted is not None:
             live = ~_tombstoned(docs, deleted)
             docs, w = docs[live], w[live]
-        scores = idf * w
+        scores = t.idf * w
         if kept is not None:
             docs = np.concatenate((kept[0], docs))
             scores = np.concatenate((kept[1], scores))
-        if i >= len(blks):
+        if i >= len(order):
             break
         if len(scores) >= k:
             kth = -np.partition(-scores, k - 1)[k - 1]
             survive = scores >= kth
             docs, scores = docs[survive], scores[survive]
-            if idf * blks[i].max_w * _UB_SAFETY < kth:
+            if t.idf * t.max_w[order[i]] * _UB_SAFETY < kth:
                 break  # no undecoded doc can reach (or tie) the kth score
         kept = (docs, scores)
     return _topk_from_arrays(docs, scores, k)
@@ -386,7 +409,7 @@ _TAAT_CAND_MAX = 65_536
 _TAAT_MAX_CAND_SCANS = 3
 
 
-def _taat_multi_term(by_term: dict[str, list], k: int, bm25: tuple, deleted=None):
+def _taat_multi_term(terms: list[_Term], k: int, bm25: tuple, deleted=None):
     """Multi-term exact top-k with a block-max early stop, for a query
     whose doc span is small enough for one direct array (taat_topk).
 
@@ -405,7 +428,7 @@ def _taat_multi_term(by_term: dict[str, list], k: int, bm25: tuple, deleted=None
     neither complete nor in the oracle's fold order, so C is re-scored
     EXACTLY: per term (ascending), decode only the blocks whose
     [first_doc, last_doc] span intersects C (vectorized searchsorted over
-    the block metadata — the impact-ordered tail almost never overlaps a
+    the block arrays — the impact-ordered tail almost never overlaps a
     k-sized candidate set), then fold them over C (_fold). Scores
     are bit-identical to the full-decode fold. If the bound never closes a
     small candidate set, the fully-decoded bound accumulator still locates
@@ -419,24 +442,17 @@ def _taat_multi_term(by_term: dict[str, list], k: int, bm25: tuple, deleted=None
     belong in the page are undecoded — same invariant as the single-term
     stop), and by the phase-2 fold: a phase-1 threshold ≤ 0 admits
     accumulator-0 docs, tombstones among them."""
-    terms = sorted(by_term)
-    entries = []  # (term, idf, blocks sorted by max_w desc) — ascending term
-    for t in terms:
-        blks = sorted(by_term[t], key=lambda r: -r.max_w)
-        entries.append((t, float(blks[0].idf), blks))
-    # global impact-desc decode order, consistent with each term's own order
-    flat_blocks: list = []
-    flat_ti: list[int] = []
-    imps: list[float] = []
-    for ti, (_t, idf, blks) in enumerate(entries):
-        for b in blks:
-            flat_blocks.append(b)
-            flat_ti.append(ti)
-            imps.append(idf * b.max_w)
-    order = np.argsort(-np.asarray(imps, dtype=np.float64), kind="stable")
+    # each term's blocks by max_w desc, then the global impact-desc decode
+    # order (stable: consistent with each term's own) over their concatenation
+    orders = [np.argsort(-t.max_w, kind="stable") for t in terms]
+    flat_ti = np.repeat(np.arange(len(terms)), [len(o) for o in orders])
+    flat_blk = np.concatenate(orders)
+    imps = np.concatenate([t.idf * t.max_w[o] for t, o in zip(terms, orders)])
+    order = np.argsort(-imps, kind="stable")
 
-    lo, hi = _span(flat_blocks)
-    ptr = [0] * len(entries)  # per-term decoded-block count (own desc order)
+    lo = min(int(t.first_doc.min()) for t in terms)
+    hi = max(int(t.last_doc.max()) for t in terms) + 1
+    ptr = [0] * len(terms)  # per-term decoded-block count (own desc order)
     # BOUND accumulator: impact-order partial sums — same addends as the
     # exact fold, so its values differ from exact scores only in addition
     # order (last-ulp); used ONLY for the θ̃/candidate bounds, with the
@@ -456,22 +472,21 @@ def _taat_multi_term(by_term: dict[str, list], k: int, bm25: tuple, deleted=None
     cand_scans = 0
     i = 0
     while i < len(order):
-        chunk_idx = order[i : i + _DECODE_CHUNK_BLOCKS]
-        i += len(chunk_idx)
-        by_ti: dict[int, list] = {}
-        for j in chunk_idx:
-            by_ti.setdefault(flat_ti[j], []).append(flat_blocks[j])
+        chunk = order[i : i + _DECODE_CHUNK_BLOCKS]
+        i += len(chunk)
+        chunk_ti, chunk_blk = flat_ti[chunk], flat_blk[chunk]
         chunk_docs = [] if pool is None else None
         chunk_pws = [] if pool is None else None
-        for ti, blks in sorted(by_ti.items()):
-            docs, w = _decode_block_group(blks, bm25)
+        for ti in np.unique(chunk_ti).tolist():  # ascending term
+            sel = chunk_blk[chunk_ti == ti]
+            docs, w = _decode_blocks([(terms[ti], sel)], bm25)
             if deleted is not None:
                 live = ~_tombstoned(docs, deleted)
                 docs, w = docs[live], w[live]
-            pw = entries[ti][1] * w
+            pw = terms[ti].idf * w
             slots = docs - lo
             dense[slots] += pw
-            ptr[ti] += len(blks)
+            ptr[ti] += len(sel)
             if chunk_docs is not None:
                 chunk_docs.append(slots)
                 chunk_pws.append(pw)
@@ -490,9 +505,9 @@ def _taat_multi_term(by_term: dict[str, list], k: int, bm25: tuple, deleted=None
         if i >= len(order):
             break
         rem = 0.0
-        for ti, (_t, idf, blks) in enumerate(entries):
-            if ptr[ti] < len(blks):
-                rem += idf * blks[ptr[ti]].max_w
+        for t, o, p in zip(terms, orders, ptr):
+            if p < len(o):
+                rem += t.idf * t.max_w[o[p]]
         if len(pool) >= k and cand_scans < _TAAT_MAX_CAND_SCANS:
             pool_scores = dense[pool]
             theta = -np.partition(-pool_scores, k - 1)[k - 1]
@@ -532,16 +547,14 @@ def _taat_multi_term(by_term: dict[str, list], k: int, bm25: tuple, deleted=None
 
     # phase 2: exact ascending-term fold over the candidate set only
     decoded = []
-    for _t, idf, blks in entries:
-        firsts = np.array([b.first_doc for b in blks], dtype=np.int64)
-        lasts = np.array([b.last_doc for b in blks], dtype=np.int64)
+    for t in terms:
         sel = np.flatnonzero(
-            np.searchsorted(cand, lasts, side="right")
-            > np.searchsorted(cand, firsts, side="left")
+            np.searchsorted(cand, t.last_doc, side="right")
+            > np.searchsorted(cand, t.first_doc, side="left")
         )
         if len(sel):
-            docs, w = _decode_block_group([blks[j] for j in sel], bm25)
-            decoded.append((docs, idf * w))
+            docs, w = _decode_blocks([(t, sel)], bm25)
+            decoded.append((docs, t.idf * w))
     return _fold(decoded, k, cand, deleted=deleted)
 
 
@@ -556,10 +569,7 @@ def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
         kth_score = -np.partition(-scores, k - 1)[k - 1]
         cand = np.flatnonzero(scores >= kth_score)
         order = cand[np.lexsort((universe[cand], -scores[cand]))]
-    out = []
-    for i in order[:k]:
-        out.append((len(out) + 1, int(universe[i]), float(scores[i])))
-    return out
+    return [(r, int(universe[i]), float(scores[i])) for r, i in enumerate(order[:k], 1)]
 
 
 # ---------------------------------------------------------------------------
@@ -594,7 +604,7 @@ class _ByteCache(dict):
 class IndexReader:
     """Warm handle on an index for low-latency interactive search.
 
-    Block rows are read directly with pyarrow — shard-dir partition pruning
+    Blocks are read directly with pyarrow — shard-dir partition pruning
     plus term row-group skipping, zero Spark jobs per query (the reference
     serves interactive search from a resident AnnLite index the same way,
     retriever.md:117-136). Works wherever the driver or an executor can
@@ -602,20 +612,13 @@ class IndexReader:
     The leading ``spark`` argument is unused and kept only for call-site
     compatibility; pass None.
 
-    Each query is one ``taat_topk`` call (see the module docstring). Fetched
-    block rows and fully decoded terms are memoized across queries (head
-    terms repeat), and the memo survives a delete-only refresh(): tombstones
-    are masked at use, so live deletes never cost a re-fetch or re-decode.
-    A query whose terms are all memoized folds the memo; otherwise cold
-    single-term queries and cold multi-term ones past
-    ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over a span within the bound
-    take the early stops, and queries over ``DECODE_MAX_POSTINGS`` postings
-    the windowed fold; these decode part of a list and are not memoized.
-    Batches of queries belong on search_topk, whose Spark tasks each run
-    this reader's search over their rows."""
-
-    # this reader's decode bound; None reads DECODE_MAX_POSTINGS per query
-    max_postings: int | None = None
+    Each query is one ``taat_topk`` call over its fetched terms, each a
+    ``_Term`` of block arrays. Fetched terms and fully decoded terms are
+    memoized across queries (head terms repeat), and both survive a
+    delete-only refresh(): tombstones are masked at use, so live deletes
+    never cost a re-fetch or re-decode. Batches of queries belong on
+    search_topk, whose Spark tasks each run this reader's search over
+    their rows."""
 
     def __init__(
         self,
@@ -689,6 +692,7 @@ class IndexReader:
         # of postings each), so an entry cap alone lets a long-lived reader
         # grow to many GB. Eviction is FIFO (dict order) — an LRU buys
         # little when the hot set is the Zipf head.
+        # _fetch_rows: a _Term per term found, None per term not found
         self._term_rows_cache = _ByteCache(self.RAW_CACHE_MAX_BYTES)
         # decoded-term memo (taat_topk): head terms repeat, and decode
         # dominates warm latency — (docs, idf·w, min doc, max doc + 1) per
@@ -741,39 +745,58 @@ class IndexReader:
             out[shard] = handles
         return out
 
-    def _fetch_rows(self, terms: list[str]) -> list:
-        """The block rows of ``terms``, in term order: cached ones from the
-        raw cache, the rest read in one pass over the row groups whose term
-        range holds one of them, and remembered there."""
-        rows = {t: self._term_rows_cache.get(t) for t in terms}
-        missing = [t for t, r in rows.items() if r is None]
+    def _fetch_rows(self, terms: list[str]) -> list[_Term]:
+        """The ``_Term`` of each of ``terms`` found in the index, in term
+        order: cached ones from the raw cache, the rest read
+        (``_read_terms``) and remembered there (a term not found as None)."""
+        cache = self._term_rows_cache
+        got = {t: cache[t] for t in terms if t in cache}
+        missing = [t for t in terms if t not in got]
         if missing:
-            import pyarrow.compute as pc
+            read = self._read_terms(missing)
+            for t in missing:
+                got[t] = entry = read.get(t)
+                cache.put(t, entry, entry.nbytes if entry else 0)
+        return [got[t] for t in terms if got[t] is not None]
 
-            shards = sorted({term_shard(t, self.meta["n_shards"]) for t in missing})
-            parts = []
-            for s in shards:
-                for pf, stats in self._pq_files.get(s, []):
-                    rgs = [
-                        i
-                        for i, (mn, mx) in enumerate(stats)
-                        if mn is None or any(mn <= t <= mx for t in missing)
-                    ]
-                    if rgs:
-                        part = pf.read_row_groups(
-                            rgs, columns=list(_ARROW_COLS), use_threads=True,
-                        )
-                        keep = pc.is_in(part["term"], value_set=pa.array(missing))
-                        parts.append(part.filter(keep))
-            for t in missing:
-                rows[t] = []
-            for row in _arrow_rows(pa.concat_tables(parts)) if parts else []:
-                rows[row.term].append(row)
-            for t in missing:
-                self._term_rows_cache.put(t, rows[t], sum(
-                    len(r.docs) + len(r.tfs) + len(r.dls) + 64 for r in rows[t]
-                ))
-        return [r for t in terms for r in rows[t]]
+    def _read_terms(self, names: list[str]) -> dict[str, _Term]:
+        """{name: _Term} for each of ``names`` in the index, read in one pass
+        over the row groups whose term range holds one of them. A term's
+        blocks are copied out of the read: a slice would keep the whole
+        read alive while the raw cache charges only the term."""
+        import pyarrow.compute as pc
+
+        parts = []
+        for s in sorted({term_shard(t, self.meta["n_shards"]) for t in names}):
+            for pf, stats in self._pq_files.get(s, []):
+                rgs = [i for i, (mn, mx) in enumerate(stats)
+                       if mn is None or any(mn <= t <= mx for t in names)]
+                if rgs:
+                    parts.append(pf.read_row_groups(rgs, columns=[
+                        "term", "n", "first_doc", "last_doc", "max_w", "idf",
+                        "docs", "tfs", "dls",
+                    ], use_threads=True))
+        if not parts:
+            return {}
+        tbl = pa.concat_tables(parts)
+        pos = pc.index_in(tbl["term"], value_set=pa.array(names))
+        pos = pc.fill_null(pos, -1).to_numpy()
+        runs: dict[str, list] = {}  # usually one: a term's blocks sit in one file
+        starts = np.flatnonzero(np.diff(pos, prepend=-2))
+        for a, b in zip(starts.tolist(), [*starts[1:].tolist(), len(pos)]):
+            if pos[a] >= 0:
+                runs.setdefault(names[pos[a]], []).append((a, b))
+        n = tbl["n"].to_numpy().astype(np.int64)
+        arrays = [n, *(tbl[c].to_numpy() for c in ("first_doc", "last_doc", "max_w"))]
+        payloads = [tbl[c] for c in ("docs", "tfs", "dls")]
+        idf = tbl["idf"].to_numpy()
+        return {t: _Term(
+            t, float(idf[spans[0][0]]), sum(int(n[a:b].sum()) for a, b in spans),
+            *(np.concatenate([x[a:b] for a, b in spans]) for x in arrays),
+            *(pa.concat_arrays([
+                c for a, b in spans for c in col.slice(a, b - a).chunks
+            ]) for col in payloads),
+        ) for t, spans in runs.items()}
 
     def _tokenize_query(self, text: str) -> list[str]:
         """Query terms in the INDEX's vocabulary: word tokens by default,
@@ -804,19 +827,19 @@ class IndexReader:
         if not terms:
             self._log_query(entry)
             return []
-        rows = self._fetch_rows(terms)
+        fetched = self._fetch_rows(terms)
         t_fetch = time.perf_counter()
         entry["fetch_ms"] = 1000 * (t_fetch - t_tok)
-        entry["n_blocks"] = len(rows)
-        entry["n_postings"] = sum(r.n for r in rows)
-        if not rows:
+        entry["n_blocks"] = sum(len(t.n) for t in fetched)
+        entry["n_postings"] = sum(t.postings for t in fetched)
+        if not fetched:
             entry["total_ms"] = 1000 * (time.perf_counter() - t0)
             self._log_query(entry)
             return []
         entry["strategy"] = "taat"
         out = taat_topk(
-            rows, k, self._bm25, deleted=self._deleted_arr,
-            max_postings=self.max_postings, memo=self._decoded_cache,
+            fetched, k, self._bm25, deleted=self._deleted_arr,
+            memo=self._decoded_cache,
         )
         t_score = time.perf_counter()
         entry["score_ms"] = 1000 * (t_score - t_fetch)
@@ -911,24 +934,6 @@ class IndexReader:
         return out
 
 
-_ARROW_COLS = (
-    "term", "salt", "block_id", "n", "first_doc", "last_doc",
-    "max_w", "idf", "docs", "tfs", "dls",
-)
-
-
-# a namedtuple constructs ~3× faster than a setattr-loop class over the
-# hundreds of thousands of block rows a Zipf-head fetch returns
-import collections as _collections
-
-_ArrowRow = _collections.namedtuple("_ArrowRow", _ARROW_COLS)
-
-
-def _arrow_rows(tbl) -> list[_ArrowRow]:
-    cols = [tbl.column(name).to_pylist() for name in _ARROW_COLS]
-    return list(map(_ArrowRow._make, zip(*cols)))
-
-
 # ---------------------------------------------------------------------------
 # batch path: IndexReader.search in each Spark task
 # ---------------------------------------------------------------------------
@@ -952,10 +957,7 @@ def search_topk(
     store = IndexStorage(os.path.abspath(index_dir))
     check_block_format(store.read_meta(), store.root)
     return queries.select("query_id", "text").mapInArrow(
-        functools.partial(
-            _search_batches, index_dir=store.root, k=k,
-            max_postings=DECODE_MAX_POSTINGS,
-        ),
+        functools.partial(_search_batches, index_dir=store.root, k=k),
         from_arrow_schema(TOPK_SCHEMA),
     )
 
@@ -966,20 +968,17 @@ _task_reader: IndexReader | None = None
 FETCH_CHUNK_QUERIES = 64
 
 
-def _search_batches(batches, index_dir: str, k: int, max_postings: int):
+def _search_batches(batches, index_dir: str, k: int):
     """mapInArrow body of search_topk: (query_id, text) batches →
     TOPK_SCHEMA batches. The worker's reader is reused if it holds
     ``index_dir`` and refreshed first, so each task sees the deletes and
-    rebuilds made before it. ``max_postings`` is the driver's
-    DECODE_MAX_POSTINGS: a worker imports this module afresh, so a
-    driver-side override reaches it only this way."""
+    rebuilds made before it."""
     global _task_reader
     reader = _task_reader
     if reader is None or reader.store.root != index_dir:
         reader = _task_reader = IndexReader(None, index_dir)
     else:
         reader.refresh()
-    reader.max_postings = max_postings
     for batch in batches:
         cols = [batch.column(c).to_pylist() for c in ("query_id", "text")]
         queries = [(qid, text) for qid, text in zip(*cols) if text is not None]

@@ -213,18 +213,14 @@ scored AS (
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: BM25 top-10 per query, rank + rounded score."""
     scores = _bm25_scores(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("doc_id")
-    )
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("rank").cast("int").alias("rank"),
-            F.round("score", 6).alias("score"),
-        )
+    return _sim.topk_rows(
+        scores, "query_id",
+        [F.desc(F.round(F.col("score"), 9)), F.asc("doc_id")], TOPK,
+    ).select(
+        "query_id",
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("rank").cast("int").alias("rank"),
+        F.round("score", 6).alias("score"),
     )
 
 
@@ -526,15 +522,10 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/W2: per-key descending rank with deterministic tie-break, ≤3."""
     orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "o_custkey", "o_orderkey", "o_totalprice", F.col("rn").cast("int").alias("rn")
-        )
+    return _sim.topk_rows(
+        orders, "o_custkey", [F.desc("o_totalprice"), F.asc("o_orderkey")], 3, "rn"
+    ).select(
+        "o_custkey", "o_orderkey", "o_totalprice", F.col("rn").cast("int").alias("rn")
     )
 
 
@@ -767,16 +758,11 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.encode import hash_embed
 
     bm25 = _bm25_scores(spark, sf_dir)
-    wb = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("doc_id")
-    )
-    lex = (
-        bm25.withColumn("rank_bm25", F.row_number().over(wb))
-        .filter(F.col("rank_bm25") <= HYBRID_POOL)
-        .select(
-            "query_id", F.col("doc_id").cast("long").alias("doc_id"),
-            "rank_bm25",
-        )
+    lex = _sim.topk_rows(
+        bm25, "query_id", [F.desc(F.round(F.col("score"), 9)), F.asc("doc_id")],
+        HYBRID_POOL, "rank_bm25",
+    ).select(
+        "query_id", F.col("doc_id").cast("long").alias("doc_id"), "rank_bm25",
     )
 
     qe = hash_embed(_queries_df(spark), "query_id", "qtext", dim=HYBRID_DIM)
@@ -798,14 +784,10 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("long").alias("doc_id"),
         _sim.cosine_col(F.col("demb"), F.col("qvec")).alias("cosine"),
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("doc_id")
-    )
-    sem = (
-        cos.withColumn("rank_cos", F.row_number().over(wc))
-        .filter(F.col("rank_cos") <= HYBRID_POOL)
-        .select("query_id", "doc_id", "rank_cos")
-    )
+    sem = _sim.topk_rows(
+        cos, "query_id", [F.desc(F.round(F.col("cosine"), 9)), F.asc("doc_id")],
+        HYBRID_POOL, "rank_cos",
+    ).select("query_id", "doc_id", "rank_cos")
 
     from ..operators.fusion import rrf_fuse
 
@@ -1026,11 +1008,8 @@ def q_softmax_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     executors/helper.py:12-17; invariant: per-query scores sum to 1,
     tests/test_ranker.py:59-61). Computed over each query's BM25 top-10."""
     scores = _bm25_scores(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("doc_id")
-    )
-    top = scores.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOPK
+    top = _sim.topk_rows(
+        scores, "query_id", [F.desc(F.round(F.col("score"), 9)), F.asc("doc_id")], TOPK
     )
     grp = Window.partitionBy("query_id")
     ex = F.exp(F.col("score") - F.max("score").over(grp))
@@ -1392,24 +1371,25 @@ def _ann_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ann_page(out: DataFrame) -> DataFrame:
+    """An ANN top-k re-ranked on cosine rounded to 9 places, for
+    cross-engine stability, ties to the smaller vec_id → (query_id, rank,
+    vec_id, cosine rounded to 4 places)."""
+    return _sim.topk_rows(
+        out.drop("rank"), "query_id",
+        [F.desc(F.round(F.col("cosine"), 9)), F.asc("vec_id")], ANN_K,
+    ).select(
+        F.col("query_id").cast("long").alias("query_id"),
+        F.col("rank").cast("int").alias("rank"),
+        "vec_id",
+        F.round("cosine", 4).alias("cosine"),
+    )
+
+
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     out = _sim.cosine_topk(emb, _ann_queries(spark, sf_dir), k=ANN_K)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("vec_id")
-    )
-    # re-rank on rounded cosine for cross-engine stability
-    return (
-        out.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _ann_page(out)
 
 
 SQL_ANN_COSINE_TOPK = f"""
@@ -1431,20 +1411,7 @@ def q_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _sim.bucketed_topk(
         emb, _ann_queries(spark, sf_dir), k=ANN_K, n_bits=LSH_BITS
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("vec_id")
-    )
-    return (
-        out.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _ann_page(out)
 
 
 def _sql_bucket(tbl_alias: str = "") -> str:
@@ -1573,20 +1540,7 @@ def q_ann_rh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _ann.rh_topk_stored(
         spark, _ann_store(spark, sf_dir), _ann_queries(spark, sf_dir), k=ANN_K
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("vec_id")
-    )
-    return (
-        out.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _ann_page(out)
 
 
 def _sql_ann_rh_topk(filter_label: int | None = None) -> str:
@@ -1666,20 +1620,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _ann_store_pq(spark, sf_dir), _ann_queries(spark, sf_dir),
         k=ANN_K, rerank=None,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("vec_id")
-    )
-    return (
-        out.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _ann_page(out)
 
 
 ANN_FILTER_LABEL = 0
@@ -1700,20 +1641,7 @@ def q_ann_rh_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=ANN_K,
         where=f"label = {ANN_FILTER_LABEL}",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("vec_id")
-    )
-    return (
-        out.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _ann_page(out)
 
 
 SQL_ANN_RH_TOPK_FILTERED = _sql_ann_rh_topk(filter_label=ANN_FILTER_LABEL)
@@ -1782,20 +1710,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=ANN_K,
         nprobe=IVF_NPROBE,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 9)), F.asc("vec_id")
-    )
-    return (
-        out.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _ann_page(out)
 
 
 _SQL_EMB_COMPONENTS_L = """

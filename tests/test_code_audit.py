@@ -114,3 +114,33 @@ def test_tombstones_go_through_one_membership_helper():
         assert not names & {"deleted", "_tombstoned"}, (
             ast.get_source_segment(text, loop)
         )
+
+
+def test_kernels_index_term_arrays():
+    """The reader keeps each fetched term as block arrays (``_Term``) and
+    the kernels index them: wand.py defines no namedtuple, turns no blocks
+    column into Python objects (``to_pylist`` only on _search_batches'
+    query columns, no ``as_py``/``to_pydict``), and no function takes a
+    ``max_postings`` argument — the kernels read DECODE_MAX_POSTINGS when
+    called."""
+    import ast
+
+    text = (PKG / "operators" / "wand.py").read_text()
+    for name in ("namedtuple", "NamedTuple", "as_py(", "to_pydict("):
+        assert name not in text, name
+    funcs = [
+        n for n in ast.walk(ast.parse(text))
+        if isinstance(n, (ast.FunctionDef, ast.Lambda))
+    ]
+    calls = [
+        (f, c) for f in funcs for c in ast.walk(f)
+        if isinstance(c, ast.Attribute) and c.attr == "to_pylist"
+    ]
+    assert text.count("to_pylist") == len(calls) == 1
+    (f, call), = calls
+    assert f.name == "_search_batches"
+    assert ast.get_source_segment(text, call) == "batch.column(c).to_pylist"
+    for f in funcs:
+        a = f.args
+        names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+        assert "max_postings" not in names, getattr(f, "name", "lambda")

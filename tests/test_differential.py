@@ -1,8 +1,10 @@
 """Differential test of the query paths against oracle.BM25Oracle: one
 seeded corpus with salted head terms, built with dense and with hash doc
-ids, and merged (merge_indexes) from two hash-id halves of it, searched
-with and without tombstones taken from the top-k. Every path must return
-the oracle's doc ids in the oracle's order with bit-equal float64 scores:
+ids, merged (merge_indexes) from two hash-id halves of it, purged
+(purge_deleted_docs) of docs spread over its dense id range, and built
+with a BPE vocabulary (term_mode='bpe'), each searched with and without
+tombstones taken from the top-k. Every path must return the oracle's doc
+ids in the oracle's order with bit-equal float64 scores:
 
 - IndexReader.search, cold and then warm (decoded-term memo);
 - the same with ``DECODE_MAX_POSTINGS`` forced below the doc span the
@@ -17,7 +19,7 @@ delete_docs calls and checks a held reader refreshed after each call
 (warm) and, every third call, a new reader (cold) and search_topk's task
 body, on every path above, against the oracle minus the deleted ids.
 
-Purge, stream compaction and BPE indexes have their own tests."""
+Stream compaction has its own tests."""
 
 from __future__ import annotations
 
@@ -30,6 +32,7 @@ from pyspark.sql import functions as F
 from clip_as_service_spark import fixtures
 from clip_as_service_spark.operators import index_build, wand
 from clip_as_service_spark.oracle import BM25Oracle
+from clip_as_service_spark.textnorm import get_bpe, tokenize_bpe_terms
 
 N_PAGES = 200
 K = 10
@@ -44,12 +47,26 @@ PATHS = {
     },
 }
 ID_METHODS = ("dense_sorted", "hash")
-INDEXES = ID_METHODS + ("merged",)
+INDEXES = ID_METHODS + ("merged", "purged", "bpe")
+# the dense ids the purged index drops: spread over the id range, both
+# ends included
+PURGED = frozenset(range(1, N_PAGES + 1, 9)) | {N_PAGES}
 
 
 def _oracle(spark, pages, ids: str) -> BM25Oracle:
     if ids == "dense_sorted":  # doc_id = row_number over url
         return BM25Oracle.from_pages(fixtures.make_pages(N_PAGES))
+    if ids == "purged":  # the dense ids of the surviving pages, gaps kept
+        by_url = sorted(fixtures.make_pages(N_PAGES), key=lambda r: r["url"])
+        return BM25Oracle([
+            (i, r["text"]) for i, r in enumerate(by_url, 1) if i not in PURGED
+        ])
+    if ids == "bpe":
+        bpe = get_bpe(None)
+        return BM25Oracle.from_pages(
+            fixtures.make_pages(N_PAGES),
+            tokenizer=lambda t: tokenize_bpe_terms(t, bpe),
+        )
     rows = pages.select(F.xxhash64("url").alias("doc_id"), "text").collect()
     return BM25Oracle([(int(r["doc_id"]), r["text"]) for r in rows])
 
@@ -83,6 +100,16 @@ def indexes(spark, tmp_path_factory) -> dict:
                     half, doc_id_method="hash", **BUILD_KW,
                 )
             index_build.merge_indexes(spark, halves, idx, **BUILD_KW)
+        elif ids == "purged":  # from the dense_sorted index, built first
+            src = str(root / "purge_src")
+            shutil.copytree(str(root / "dense_sorted"), src)
+            index_build.delete_docs(spark, src, sorted(PURGED))
+            index_build.purge_deleted_docs(spark, src, idx)
+        elif ids == "bpe":
+            index_build.build_index(
+                spark, pages, idx, doc_id_method="dense_sorted",
+                term_mode="bpe", **BUILD_KW,
+            )
         else:
             index_build.build_index(
                 spark, pages, idx, doc_id_method=ids, **BUILD_KW
@@ -184,7 +211,6 @@ def test_many_deletes_match_oracle(spark, indexes, ids, path, tmp_path, monkeypa
             got["task"] = task = {}
             for b in wand._search_batches(
                 [_query_batch(queries)], index_dir=idx, k=K,
-                max_postings=wand.DECODE_MAX_POSTINGS,
             ):
                 for r in b.to_pylist():
                     task.setdefault(r["query_id"], []).append(

@@ -155,9 +155,13 @@ def test_forced_bound_exact_under_delete(
 ):
     """Hash ids, with each query's top-2 docs tombstoned: under a forced
     memory bound of a few hundred postings (windowed fold), the reader and
-    search_topk return the oracle's ranking of the survivors — same ids,
-    same order, bit-equal scores."""
+    search_topk's task body (run in-process: a Spark worker imports the
+    module afresh, so the bound is forced where the body runs) return the
+    oracle's ranking of the survivors — same ids, same order, bit-equal
+    scores."""
     import shutil
+
+    import pyarrow as pa
 
     idx = built + "_bound"
     shutil.copytree(built, idx)
@@ -166,18 +170,21 @@ def test_forced_bound_exact_under_delete(
     victims = {d for q in qs for _r, d, _s in oracle.topk(q["text"], k=2)}
     index_build.delete_docs(spark, idx, sorted(victims))
 
-    def ranked(df):
-        out: dict[int, list] = {}
-        for r in sorted(df.collect(), key=lambda r: (r["query_id"], r["rank"])):
-            out.setdefault(r["query_id"], []).append(
-                (r["rank"], int(r["doc_id"]), r["score"])
-            )
-        return out
-
     want = {q["query_id"]: _oracle_live(oracle, q["text"], k, victims) for q in qs}
     assert all(want.values())
     monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", 300)
-    assert ranked(wand.search_topk(spark, idx, queries, k=k)) == want
+    monkeypatch.setattr(wand, "_task_reader", None)
+    batch = pa.RecordBatch.from_pylist(
+        [q.asDict() for q in qs],
+        schema=pa.schema([("query_id", pa.int32()), ("text", pa.string())]),
+    )
+    task: dict[int, list] = {}
+    for b in wand._search_batches([batch], index_dir=idx, k=k):
+        for r in b.to_pylist():
+            task.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"])
+            )
+    assert task == want
     reader = wand.IndexReader(None, idx)
     for q in qs:
         assert reader.search(q["text"], k=k) == want[q["query_id"]], q["text"]

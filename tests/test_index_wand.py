@@ -95,23 +95,6 @@ def _deleted_copy(spark, index_dir, oracle, dst):
     return dst, want
 
 
-def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
-    """search_topk under a forced memory bound (windowed fold
-    in every per-query task) stays oracle-exact, with and without
-    tombstones that would otherwise sit in the top-k."""
-    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
-    queries = fixtures.queries_spark_df(spark)
-    got = _collect_topk(wand.search_topk(spark, index_dir, queries, k=K))
-    for q in fixtures.make_queries():
-        _assert_equals_oracle_exactly(
-            got.get(q["query_id"], []), oracle.topk(q["text"], k=K)
-        )
-    idx, want = _deleted_copy(spark, index_dir, oracle, str(tmp_path / "del"))
-    got = _collect_topk(wand.search_topk(spark, idx, queries, k=K))
-    for qid, expected in want.items():
-        _assert_equals_oracle_exactly(got.get(qid, []), expected)
-
-
 def _query_batch(queries):
     import pyarrow as pa
 
@@ -129,18 +112,20 @@ def _batch_topk(batches) -> dict:
     return out
 
 
-def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
-    """search_topk's task body, run in-process with a forced bound: the
-    bound it is given (not the worker's module constant) reaches the
-    reader, so multi-term queries take the windowed fold, decoding in
-    several windows, and the rows stay oracle-exact."""
+def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
+    """search_topk's task body, run in-process under a forced memory bound
+    (a Spark worker imports the module afresh, so the bound is forced
+    where the body runs): multi-term queries take the windowed fold,
+    decoding in several windows, and the rows stay oracle-exact, with and
+    without tombstones that would otherwise sit in the top-k."""
+    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     monkeypatch.setattr(wand, "_task_reader", None)
     decodes, windowed = [], []
-    real_decode, real_windowed = wand._decode_block_group, wand._taat_windowed
+    real_decode, real_windowed = wand._decode_blocks, wand._taat_windowed
 
-    def counting_decode(blks, bm25):
-        decodes.append(sum(r.n for r in blks))
-        return real_decode(blks, bm25)
+    def counting_decode(picks, bm25):
+        decodes.append(sum(int(t.n[sel].sum()) for t, sel in picks))
+        return real_decode(picks, bm25)
 
     def counting_windowed(*args, **kw):
         start = len(decodes)
@@ -148,12 +133,11 @@ def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
         windowed.append(len(decodes) - start)
         return out
 
-    monkeypatch.setattr(wand, "_decode_block_group", counting_decode)
+    monkeypatch.setattr(wand, "_decode_blocks", counting_decode)
     monkeypatch.setattr(wand, "_taat_windowed", counting_windowed)
     queries = fixtures.make_queries()
     got = _batch_topk(wand._search_batches(
         [_query_batch(queries)], index_dir=index_dir, k=K,
-        max_postings=FORCED_BOUND,
     ))
     for q in queries:
         _assert_equals_oracle_exactly(
@@ -161,6 +145,12 @@ def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
         )
     assert len(windowed) >= 5
     assert min(windowed) > 1
+    idx, want = _deleted_copy(spark, index_dir, oracle, str(tmp_path / "del"))
+    got = _batch_topk(wand._search_batches(
+        [_query_batch(queries)], index_dir=idx, k=K,
+    ))
+    for qid, expected in want.items():
+        _assert_equals_oracle_exactly(got.get(qid, []), expected)
 
 
 def test_batch_task_fetches_terms_per_chunk(index_dir, oracle, monkeypatch):
@@ -185,7 +175,6 @@ def test_batch_task_fetches_terms_per_chunk(index_dir, oracle, monkeypatch):
     queries = fixtures.make_queries()
     got = _batch_topk(wand._search_batches(
         [_query_batch(queries)], index_dir=index_dir, k=K,
-        max_postings=wand.DECODE_MAX_POSTINGS,
     ))
     for q in queries:
         _assert_equals_oracle_exactly(
@@ -215,7 +204,6 @@ def test_search_topk_sees_an_in_place_rebuild(
     def in_process():
         return _batch_topk(wand._search_batches(
             [_query_batch(queries)], index_dir=idx, k=K,
-            max_postings=wand.DECODE_MAX_POSTINGS,
         ))
 
     assert _collect_topk(wand.search_topk(spark, idx, qdf, k=K)) == in_process()
@@ -269,32 +257,38 @@ def test_windowed_fold_decode_stays_bounded(index_dir, oracle, monkeypatch):
     """No decode of the windowed fold holds more than the bound plus one
     block per posting list (a window is never cut finer than one gap
     between block boundaries, where each list has at most one block)."""
+    import pyarrow.compute as pc
+
     from clip_as_service_spark.textnorm import tokenize_words
 
+    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     reader = wand.IndexReader(None, index_dir)
+    blocks = IndexStorage(index_dir).dataset("blocks")
     calls = []
-    real = wand._decode_block_group
+    real = wand._decode_blocks
 
-    def counting(blks, bm25):
-        calls.append(sum(r.n for r in blks))
-        return real(blks, bm25)
+    def counting(picks, bm25):
+        calls.append(sum(int(t.n[sel].sum()) for t, sel in picks))
+        return real(picks, bm25)
 
-    monkeypatch.setattr(wand, "_decode_block_group", counting)
+    monkeypatch.setattr(wand, "_decode_blocks", counting)
     windowed = 0
     for q in fixtures.make_queries():
         terms = sorted(set(tokenize_words(q["text"])))
-        rows = reader._fetch_rows(terms) if terms else []
-        if len({r.term for r in rows}) < 2:
+        fetched = reader._fetch_rows(terms) if terms else []
+        if len(fetched) < 2:
             continue
         max_block: dict[tuple, int] = {}
-        for r in rows:
-            key = (r.term, r.salt)
-            max_block[key] = max(max_block.get(key, 0), r.n)
+        for r in blocks.to_table(
+            columns=["term", "salt", "n"], filter=pc.field("term").isin(terms)
+        ).to_pylist():
+            key = (r["term"], r["salt"])
+            max_block[key] = max(max_block.get(key, 0), r["n"])
         calls.clear()
-        got = wand.taat_topk(rows, K, reader._bm25, max_postings=FORCED_BOUND)
+        got = wand.taat_topk(fetched, K, reader._bm25)
         _assert_equals_oracle_exactly(got, oracle.topk(q["text"], k=K))
         assert max(calls) <= FORCED_BOUND + sum(max_block.values()), q
-        if sum(r.n for r in rows) > FORCED_BOUND:
+        if sum(int(t.n.sum()) for t in fetched) > FORCED_BOUND:
             assert len(calls) > 1, q
             windowed += 1
     assert windowed >= 5
@@ -381,6 +375,42 @@ def test_cli_search_equals_reader(index_dir, capsys, monkeypatch):
         {"query": "q0", "rank": r, "doc_id": d, "score": s} for r, d, s in want
     ]
     assert lines[-1]["profile"]["n_queries"] == 1
+
+
+def test_fetch_joins_a_term_split_over_files(index_dir, oracle, tmp_path):
+    """A term whose blocks sit in two files of its shard, each file read
+    as its own part, is fetched whole: the fetch joins its runs of rows
+    into one _Term equal to the unsplit one, and searches stay
+    oracle-exact."""
+    import glob
+    import shutil
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    path = max(
+        glob.glob(os.path.join(idx, "blocks", "*", "*.parquet")),
+        key=os.path.getsize,
+    )
+    tbl = pq.read_table(path)
+    terms = tbl["term"].to_pylist()
+    cut = next(i for i in range(1, len(terms)) if terms[i] == terms[i - 1])
+    os.remove(path)  # the later rows sort first: the runs arrive reversed
+    pq.write_table(tbl.slice(cut), path.replace(".parquet", "-0.parquet"))
+    pq.write_table(tbl.slice(0, cut), path.replace(".parquet", "-1.parquet"))
+    (split,) = wand.IndexReader(None, idx)._fetch_rows([terms[cut]])
+    (whole,) = wand.IndexReader(None, index_dir)._fetch_rows([terms[cut]])
+    order = np.argsort(split.first_doc)
+    assert np.array_equal(split.first_doc[order], np.sort(whole.first_doc))
+    assert split.docs.take(order).equals(whole.docs.take(np.argsort(whole.first_doc)))
+    assert len(split.n) == terms.count(terms[cut]) and split.idf == whole.idf
+    reader = wand.IndexReader(None, idx)
+    for q in fixtures.make_queries():
+        _assert_equals_oracle_exactly(
+            reader.search(q["text"], k=K), oracle.topk(q["text"], k=K)
+        )
 
 
 def test_taat_early_stop_chunked_exact(spark, index_dir, oracle, monkeypatch):

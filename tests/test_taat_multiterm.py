@@ -46,18 +46,15 @@ def _multi_term_queries():
 def _full_decode_topk(reader, terms, k, deleted=None):
     """taat_topk's full decode: the multi-term fixture queries stay below
     MULTI_TAAT_EARLY_MIN_POSTINGS and DECODE_MAX_POSTINGS."""
-    rows = reader._fetch_rows(terms)
-    assert len({r.term for r in rows}) > 1
-    return wand.taat_topk(rows, k, reader._bm25, deleted=deleted)
+    fetched = reader._fetch_rows(terms)
+    assert len(fetched) > 1
+    return wand.taat_topk(fetched, k, reader._bm25, deleted=deleted)
 
 
 def _early_stop_topk(reader, terms, k, deleted=None):
-    rows = reader._fetch_rows(terms)
-    by_term: dict[str, list] = {}
-    for r in rows:
-        by_term.setdefault(r.term, []).append(r)
-    assert len(by_term) > 1
-    return wand._taat_multi_term(by_term, k, reader._bm25, deleted=deleted)
+    fetched = reader._fetch_rows(terms)  # ascending term
+    assert len(fetched) > 1
+    return wand._taat_multi_term(fetched, k, reader._bm25, deleted=deleted)
 
 
 def test_multi_term_early_stop_matches_oracle(index_dir, oracle, monkeypatch):
@@ -135,8 +132,10 @@ def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
     IndexReader.search inherits it); forced threshold 0 must keep
     every fixture query oracle-exact through the public entry point. An
     empty tombstone array answers as None does, whichever kernel runs:
-    the multi-term stop, the windows (bound 8) or the single-term stop."""
+    the multi-term stop, the windows (bound 8) or the single-term stop
+    (the first term alone)."""
     monkeypatch.setattr(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0)
+    real_bound = wand.DECODE_MAX_POSTINGS
     reader = wand.IndexReader(None, index_dir)
     empty = np.empty(0, dtype=np.int64)
     for q in _multi_term_queries():
@@ -151,10 +150,12 @@ def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
         ], q
         for (_, _, se), (_, _, sg) in zip(expected, got):
             assert sg == pytest.approx(se, rel=1e-12)
-        for part, bound in ((rows, None), (rows, 8), (rows[:1], None)):
+        for part, bound in ((rows, real_bound), (rows, 8), (rows[:1], real_bound)):
+            monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", bound)
             assert wand.taat_topk(
-                part, K, reader._bm25, deleted=empty, max_postings=bound
-            ) == wand.taat_topk(part, K, reader._bm25, max_postings=bound), q
+                part, K, reader._bm25, deleted=empty
+            ) == wand.taat_topk(part, K, reader._bm25), q
+        monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", real_bound)
 
 
 def test_reader_search_uses_early_stop_when_heavy(index_dir, oracle, monkeypatch):
