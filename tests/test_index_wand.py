@@ -112,12 +112,12 @@ def _batch_topk(batches) -> dict:
     return out
 
 
-def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
+def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
     """search_topk's task body, run in-process under a forced memory bound
     (a Spark worker imports the module afresh, so the bound is forced
-    where the body runs): multi-term queries take the windowed fold,
-    decoding in several windows, and the rows stay oracle-exact, with and
-    without tombstones that would otherwise sit in the top-k."""
+    where the body runs): the kernels read the bound in force when they
+    are called, so multi-term queries take the windowed fold, decoding in
+    several windows, and the rows stay oracle-exact."""
     monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     monkeypatch.setattr(wand, "_task_reader", None)
     decodes, windowed = [], []
@@ -145,9 +145,18 @@ def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatc
         )
     assert len(windowed) >= 5
     assert min(windowed) > 1
+
+
+def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
+    """search_topk's task body, run in-process under a forced memory bound
+    over a copy with tombstones that would otherwise sit in the top-k,
+    stays oracle-exact (the untombstoned index under the same bound is
+    test_batch_task_applies_the_driver_bound)."""
+    monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
+    monkeypatch.setattr(wand, "_task_reader", None)
     idx, want = _deleted_copy(spark, index_dir, oracle, str(tmp_path / "del"))
     got = _batch_topk(wand._search_batches(
-        [_query_batch(queries)], index_dir=idx, k=K,
+        [_query_batch(fixtures.make_queries())], index_dir=idx, k=K,
     ))
     for qid, expected in want.items():
         _assert_equals_oracle_exactly(got.get(qid, []), expected)
