@@ -122,10 +122,11 @@ class _Term:
 
 def _payload(col: pa.BinaryArray, sel: np.ndarray) -> pa.Buffer:
     """The bytes of the elements of ``col`` at positions ``sel``, back to
-    back: a slice of the data buffer of ``col`` (for a run of consecutive
-    positions) or of a ``take``."""
+    back: a slice of the data buffer of ``col`` (when ``sel`` ascends by
+    one, as a whole term's or a window's blocks do) or of a ``take`` (in
+    ``sel``'s order, as the impact-ordered early stops pick them)."""
     first = int(sel[0])
-    run = int(sel[-1]) - first == len(sel) - 1
+    run = bool((np.diff(sel) == 1).all())
     col = col.slice(first, len(sel)) if run else col.take(sel)
     _, offsets, data = col.buffers()
     start = np.frombuffer(offsets, np.int32, 1, 4 * col.offset)[0]
@@ -310,10 +311,11 @@ def _doc_windows(firsts, lasts, ns, bound: int) -> list[tuple[int, int]]:
 
 
 def _taat_windowed(terms: list[_Term], k: int, bm25: tuple, deleted=None):
-    """Full-decode fold with bounded memory: per doc-id window
-    (_doc_windows), decode the overlapping blocks of every term in ONE
-    batch, mask them to the window, fold ascending-term (_fold) and merge
-    into a running top-k. Windows are doc-disjoint, so each doc's score is
+    """Full-decode fold with bounded memory over ``terms``, distinct and in
+    ascending term order (taat_topk sorts them; the fold order is the
+    oracle's): per doc-id window (_doc_windows), decode the overlapping
+    blocks of every term in ONE batch, mask them to the window, fold
+    ascending-term (_fold) and merge into a running top-k. Windows are doc-disjoint, so each doc's score is
     complete inside its window and bit-identical to the single-pass fold;
     the window's top-k holds every doc of the global top-k that lies in it.
 
@@ -412,6 +414,8 @@ _TAAT_MAX_CAND_SCANS = 3
 def _taat_multi_term(terms: list[_Term], k: int, bm25: tuple, deleted=None):
     """Multi-term exact top-k with a block-max early stop, for a query
     whose doc span is small enough for one direct array (taat_topk).
+    ``terms``: distinct and in ascending term order, as taat_topk sorts
+    them — phase 2 folds in that order.
 
     Phase 1 — bound: decode chunks of ``_DECODE_CHUNK_BLOCKS`` blocks
     across ALL query terms in descending idf·block-max impact order into a

@@ -200,3 +200,60 @@ def test_multi_term_early_stop_nonpositive_threshold_masks_deletes(
         assert got == _full_decode_topk(reader, hit, K, deleted=deleted)
         ran += 1
     assert ran >= 3
+
+
+def test_decode_blocks_in_any_block_order(index_dir):
+    """The early stops pick blocks in impact order, not file order, so a
+    selection can permute a run of blocks or have a gap between ends that
+    look like a run. Decoding it, alone or beside another term's, must
+    equal decoding its blocks one at a time in the selection's order. The
+    fixture's salted blocks differ in length, so blocks read as the wrong
+    run would decode with the wrong carry boundaries."""
+    reader = wand.IndexReader(None, index_dir)
+    t, u = sorted(
+        reader._fetch_rows(["hello", "kuni", "luco", "world"]),
+        key=lambda t: -len(t.n),
+    )[:2]
+    assert len(t.n) >= 8 and len(set(t.n[:4].tolist())) > 1
+    last = len(t.n) - 1
+    sels = [
+        [0, 2, 1, 3], [1, 6, 3], [3, 2, 1, 0], [2, 3, 4, 5], [last, 0],
+        list(range(last, -1, -1)),
+    ]
+
+    def one_by_one(picks):
+        parts = [
+            wand._decode_blocks([(term, np.array([b]))], reader._bm25)
+            for term, sel in picks for b in sel
+        ]
+        return tuple(np.concatenate(p) for p in zip(*parts))
+
+    for picks in [[(t, s)] for s in sels] + [[(t, [4, 0, 2]), (u, [2, 0, 1])]]:
+        picks = [(term, np.array(sel)) for term, sel in picks]
+        got = wand._decode_blocks(picks, reader._bm25)
+        want = one_by_one(picks)
+        for g, w in zip(got, want):
+            np.testing.assert_array_equal(g, w, err_msg=str(picks))
+
+
+@pytest.mark.parametrize("chunk", [3, 5])
+def test_early_stops_exact_with_multi_block_chunks(
+    index_dir, oracle, monkeypatch, chunk
+):
+    """Chunks of several blocks hand the decoder each chunk's blocks in
+    impact order. Both early stops must stay bit-equal to the oracle: the
+    multi-term stop on each multi-term query, the single-term stop on each
+    of its terms."""
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", chunk)
+    reader = wand.IndexReader(None, index_dir)
+    ran = 0
+    for q in _multi_term_queries():
+        fetched = reader._fetch_rows(sorted(set(tokenize_words(q["text"]))))
+        for t in fetched:
+            got = wand._taat_single_term(t, K, reader._bm25)
+            assert got == oracle.topk(t.term, k=K), t.term
+        if len(fetched) > 1:
+            got = wand._taat_multi_term(fetched, K, reader._bm25)
+            assert got == oracle.topk(q["text"], k=K), q
+            ran += 1
+    assert ran >= 5
