@@ -5,27 +5,23 @@ Reference semantics: per-shard local top-k then global merge
 (retriever.md:178-225 ANY/ALL polling); exactly `limit` results
 (tests/test_search.py:41-44); descending order (tests/test_ranker.py:34-35).
 
-Every in-memory query is scored by one family of vectorized
-term-at-a-time kernels — numpy over whole decoded blocks, no per-posting
-or per-block Python (column-at-a-time scoring, as in "Columnar Formatted
-Inverted Index for Highly-Paralleled, Vectorized Query Processing", ICDE
-2025), and ``taat_topk`` alone picks the kernel for a query's terms, each
-fetched as block arrays (``_Term``) that the kernels index:
+Every in-memory query is scored by vectorized term-at-a-time kernels —
+numpy over whole decoded blocks, no per-posting or per-block Python
+(column-at-a-time scoring, as in "Columnar Formatted Inverted Index for
+Highly-Paralleled, Vectorized Query Processing", ICDE 2025), and
+``taat_topk`` alone picks one of two for a query's terms, each fetched as
+block arrays (``_Term``) that the kernels index:
 
-- ``_fold`` — the exact ascending-term fold of decoded lists, over a direct
-  array when the doc span touched fits ``DECODE_MAX_POSTINGS`` slots, over
-  the distinct docs past it: the full decode (lists from the reader's
-  memo or decoded into it), each window and the multi-term re-score.
-- ``_taat_single_term`` — blocks in descending max_w order, decoded in
-  chunks into a running top-k; stops once no undecoded block can reach the
-  kth score (the block-max bound of Ding & Suel, SIGIR 2011).
-- ``_taat_multi_term`` — past ``MULTI_TAAT_EARLY_MIN_POSTINGS``, when the
-  span fits one array: impact-ordered chunked decode across terms,
-  Σ-remaining-bound stop, exact ascending-term re-score of the candidate
-  set.
-- ``_taat_windowed`` — past ``DECODE_MAX_POSTINGS`` postings: folds doc-id
-  windows cut on block boundaries and merges a running top-k, so decoded
-  memory stays bounded.
+- ``_taat_stop`` — the block-max early stop (Ding & Suel, SIGIR 2011), one
+  rule for any number of terms: blocks decoded in chunks in descending
+  idf·max_w order until the Σ-remaining bound cannot reach the kth score.
+  One term keeps a running top-k; several keep a bound accumulator and
+  hand the surviving candidates to ``_fold_blocks``.
+- ``_fold_blocks`` — the one exact fold over block arrays: select blocks
+  (all, or those holding a candidate), decode them in doc-id windows of
+  at most ``DECODE_MAX_POSTINGS`` postings, fold each ascending-term with
+  ``_fold`` into a running top-k; a single window reads and fills the
+  reader's decoded-term memo.
 
 Bounds are inflated by 1+1e-9 (``_UB_SAFETY``) so float rounding can never
 stop a decode that a true top-k doc still needs → every kernel is EXACT.
@@ -124,7 +120,7 @@ def _payload(col: pa.BinaryArray, sel: np.ndarray) -> pa.Buffer:
     """The bytes of the elements of ``col`` at positions ``sel``, back to
     back: a slice of the data buffer of ``col`` (when ``sel`` ascends by
     one, as a whole term's or a window's blocks do) or of a ``take`` (in
-    ``sel``'s order, as the impact-ordered early stops pick them)."""
+    ``sel``'s order, as the impact-ordered early stop picks them)."""
     first = int(sel[0])
     run = bool((np.diff(sel) == 1).all())
     col = col.slice(first, len(sel)) if run else col.take(sel)
@@ -172,67 +168,56 @@ DECODE_MAX_POSTINGS = 250_000_000
 
 def taat_topk(
     terms: list[_Term], k: int, bm25: tuple, deleted=None,
-    memo: _ByteCache | None = None,
+    memo: _ByteCache | None = None, log: dict | None = None,
 ) -> list[tuple[int, int, float]]:
     """Vectorized exact term-at-a-time scorer over a query's fetched terms
     (distinct, as ``IndexReader._fetch_rows`` returns them) — the one
     function that picks a kernel.
 
     - every term in ``memo`` (decoded terms kept across queries) and at
-      most ``DECODE_MAX_POSTINGS`` postings: a fold of the memoized lists;
-    - one term: _taat_single_term's block-max early stop — with one term a
-      decoded doc's partial IS its exact score, so a Zipf-head list stops
-      decoding once k docs beat idf·(best undecoded max_w);
-    - past ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over a doc span of at
-      most ``DECODE_MAX_POSTINGS``: _taat_multi_term's two-phase early stop
-      (below it a full vectorized decode beats the stop's bookkeeping — a
+      most ``DECODE_MAX_POSTINGS`` postings: _fold_blocks folds the
+      memoized lists;
+    - otherwise, when the query has more blocks than one decode chunk (or
+      the fold could not fill ``memo``: none given, or more postings than
+      that), the block-max early stop (_taat_stop): for one term always —
+      a Zipf-head list stops once k docs beat idf·(best undecoded max_w) —
+      and for several past ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over
+      a doc span of at most ``DECODE_MAX_POSTINGS`` (below it a full
+      vectorized decode beats the stop's bookkeeping — a
       sum-of-remaining-UBs stop with no candidate phase was measured
       NET-SLOWER at 6.4M docs);
-    - past ``DECODE_MAX_POSTINGS`` postings: doc-id windows of about that
-      many (_taat_windowed);
-    - otherwise a full decode, each list read from ``memo`` or decoded and
-      remembered there. The early stops and the windows decode part of a
-      list at a time, so they leave ``memo`` alone.
+    - anything else: _fold_blocks over every block, in doc-id windows past
+      ``DECODE_MAX_POSTINGS`` postings; in one window each list is read
+      from ``memo`` or decoded whole and remembered there, so a query
+      within one chunk is warm the next time.
 
     ``deleted``: the sorted tombstones; None or empty when there are none.
-    Returned scores always accumulate ascending-term (the oracle's float64
-    association); top-k via lexsort with the (score DESC, doc ASC)
-    tie-break."""
+    ``log``, when given, receives ``kernel`` — ``memo`` (nothing decoded),
+    ``fold`` (one window), ``windows``, ``stop`` (closed early) or
+    ``stop_open`` (decoded every block) — and ``decoded_blocks``, the
+    blocks this call decoded. Returned scores always accumulate
+    ascending-term (the oracle's float64 association); top-k via lexsort
+    with the (score DESC, doc ASC) tie-break."""
+    log = {} if log is None else log
+    log.update(kernel=None, decoded_blocks=0)
     if not terms:
         return []
     terms = sorted(terms, key=lambda t: t.term)
     if deleted is not None and not len(deleted):
         deleted = None
     bound = DECODE_MAX_POSTINGS
-    warm = memo is not None and all(t.term in memo for t in terms)
     total = sum(t.postings for t in terms)
-    if not warm or total > bound:
+    fills = memo is not None and total <= bound  # the fold memoizes in one window
+    warm = fills and all(t.term in memo for t in terms)
+    blocks = sum(len(t.n) for t in terms)
+    if not warm and (not fills or blocks > _DECODE_CHUNK_BLOCKS):
         if len(terms) == 1:
-            return _taat_single_term(terms[0], k, bm25, deleted=deleted)
+            return _taat_stop(terms, k, bm25, deleted, log)
         if total > MULTI_TAAT_EARLY_MIN_POSTINGS:
             lo = min(int(t.first_doc.min()) for t in terms)
             if max(int(t.last_doc.max()) for t in terms) + 1 - lo <= bound:
-                return _taat_multi_term(terms, k, bm25, deleted=deleted)
-        if total > bound:
-            return _taat_windowed(terms, k, bm25, deleted=deleted)
-
-    entries = []
-    for t in terms:
-        entry = memo.get(t.term) if memo is not None else None
-        if entry is None:
-            # batch-decode the whole term's blocks in one vectorized pass
-            # (sub-salt lists decode together: carry resets at every block)
-            docs, w = _decode_blocks([(t, np.arange(len(t.n)))], bm25)
-            entry = (docs, t.idf * w, int(docs.min()), int(docs.max()) + 1)
-            if memo is not None:
-                memo.put(t.term, entry, docs.nbytes + entry[1].nbytes + 64)
-        entries.append(entry)
-    lo = min(e[2] for e in entries)
-    hi = max(e[3] for e in entries)
-    return _fold(
-        [e[:2] for e in entries], k,
-        (lo, hi) if hi - lo <= bound else None, deleted=deleted,
-    )
+                return _taat_stop(terms, k, bm25, deleted, log)
+    return _fold_blocks(terms, k, bm25, deleted, log, memo=memo)
 
 
 def _fold(decoded: list, k: int, universe, deleted=None):
@@ -244,7 +229,7 @@ def _fold(decoded: list, k: int, universe, deleted=None):
     - (lo, hi), every doc in [lo, hi): a direct array, doc_id - lo IS the
       slot — no unique/searchsorted;
     - a sorted doc-id ndarray: those docs only, postings of others dropped
-      (_taat_multi_term's candidate set);
+      (_taat_stop's candidate set);
     - None: the sorted distinct docs.
 
     Tombstones are masked once, after accumulation: their slots are
@@ -310,89 +295,98 @@ def _doc_windows(firsts, lasts, ns, bound: int) -> list[tuple[int, int]]:
     return windows
 
 
-def _taat_windowed(terms: list[_Term], k: int, bm25: tuple, deleted=None):
-    """Full-decode fold with bounded memory over ``terms``, distinct and in
-    ascending term order (taat_topk sorts them; the fold order is the
-    oracle's): per doc-id window (_doc_windows), decode the overlapping
-    blocks of every term in ONE batch, mask them to the window, fold
-    ascending-term (_fold) and merge into a running top-k. Windows are doc-disjoint, so each doc's score is
-    complete inside its window and bit-identical to the single-pass fold;
-    the window's top-k holds every doc of the global top-k that lies in it.
+def _fold_blocks(terms, k: int, bm25: tuple, deleted, log: dict, cand=None, memo=None):
+    """Exact top-k of ``terms`` (distinct and in ascending term order, as
+    taat_topk sorts them: the fold order is the oracle's) over their
+    blocks: all of them, or, given the sorted doc ids ``cand``, the blocks
+    whose [first_doc, last_doc] holds a candidate, every other doc dropped
+    (_taat_stop's re-score).
 
-    A window that spans at most ``DECODE_MAX_POSTINGS`` docs folds over a
-    direct array. One that decodes more postings than that (a gap between
-    block boundaries can) folds in slices of at most that many distinct
-    docs, so no score array outgrows the bound."""
+    The selection is cut into doc-id windows (_doc_windows) — one unless it
+    holds more than ``DECODE_MAX_POSTINGS`` postings, so decoded memory
+    stays bounded. Each window decodes in ONE call and folds ascending-term
+    (_fold), and the folds' top-k merge. Windows are doc-disjoint, so each
+    doc's score is complete inside its window and bit-identical to the
+    single-pass fold; a window's top-k holds every doc of the global top-k
+    that lies in it. A window that decodes more postings than the
+    bound (a gap between block boundaries can) folds in slices of at most
+    that many distinct docs, so no score array outgrows the bound.
+
+    In a single window a list in ``memo`` is not decoded, and a list
+    decoded whole is remembered there as (docs, idf·w, min doc,
+    max doc + 1) in arrays of its own, not views of the shared decode."""
     bound = DECODE_MAX_POSTINGS
-    # term i's blocks are [starts[i], starts[i + 1]) of the concatenation
-    starts = np.cumsum([0] + [len(t.n) for t in terms])
-    firsts, lasts, ns = (np.concatenate([getattr(t, c) for t in terms])
-                         for c in ("first_doc", "last_doc", "n"))
-    term_of = np.repeat(np.arange(len(terms)), np.diff(starts))
-    idfs = np.array([t.idf for t in terms])
-    best: list = []
-    for lo, hi in _doc_windows(firsts, lasts, ns, bound):
-        sel = np.flatnonzero((firsts < hi) & (lasts >= lo))
-        if not len(sel):
+    if cand is None:
+        sels = [np.arange(len(t.n)) for t in terms]
+        postings = sum(t.postings for t in terms)
+    else:
+        sels = [np.flatnonzero(
+            np.searchsorted(cand, t.last_doc, side="right")
+            > np.searchsorted(cand, t.first_doc, side="left")
+        ) for t in terms]
+        postings = sum(int(t.n[s].sum()) for t, s in zip(terms, sels))
+    windows = [None]
+    if postings > bound:
+        # term i's selected blocks are [starts[i], starts[i + 1]) of these
+        starts = np.cumsum([0] + [len(s) for s in sels])
+        blk = np.concatenate(sels)
+        firsts, lasts, ns = (
+            np.concatenate([getattr(t, c)[s] for t, s in zip(terms, sels)])
+            for c in ("first_doc", "last_doc", "n")
+        )
+        windows = _doc_windows(firsts, lasts, ns, bound)
+    found = []  # each fold's top-k
+    for win in windows:
+        picks, got = sels, [None] * len(terms)
+        if win is not None:  # the selected blocks overlapping the window
+            sel = np.flatnonzero((firsts < win[1]) & (lasts >= win[0]))
+            at = np.searchsorted(sel, starts)
+            picks = [blk[sel[a:b]] for a, b in zip(at[:-1], at[1:])]
+        elif memo is not None:
+            got = [memo.get(t.term) for t in terms]
+        todo = [i for i, e in enumerate(got) if e is None and len(picks[i])]
+        if todo:
+            docs, w = _decode_blocks([(terms[i], picks[i]) for i in todo], bm25)
+            log["decoded_blocks"] += sum(len(picks[i]) for i in todo)
+            ends = np.cumsum([int(terms[i].n[picks[i]].sum()) for i in todo])
+            if win is not None:  # the window's postings only
+                m = (docs >= win[0]) & (docs < win[1])
+                ends = np.cumsum(m)[ends - 1]
+                docs, w = docs[m], w[m]
+            span = win or (int(docs.min()), int(docs.max()) + 1)
+            for i, a, b in zip(todo, [0, *ends[:-1].tolist()], ends.tolist()):
+                t, d = terms[i], docs[a:b]
+                got[i] = e = (d, t.idf * w[a:b], *span)
+                if win is None and memo is not None and len(picks[i]) == len(t.n):
+                    if len(todo) > 1:  # its own array, not a view of the decode
+                        d = d.copy()
+                    memo.put(
+                        t.term, (d, e[1], int(d.min()), int(d.max()) + 1),
+                        d.nbytes + e[1].nbytes + 64,
+                    )
+        got = [e for e in got if e is not None]
+        if not got:
             continue
-        at = np.searchsorted(sel, starts)
-        all_docs, all_w = _decode_blocks([
-            (t, sel[i:j] - start)
-            for t, i, j, start in zip(terms, at[:-1], at[1:], starts)
-        ], bm25)
-        all_ti = np.repeat(term_of[sel], ns[sel])
-        cuts = [lo, hi]
-        if len(all_docs) > bound:
-            inside = np.unique(all_docs[(all_docs >= lo) & (all_docs < hi)])
-            cuts[1:1] = inside[bound::bound].tolist()
-        for a, b in zip(cuts[:-1], cuts[1:]):
-            m = (all_docs >= a) & (all_docs < b)
-            docs, w, ti = all_docs[m], all_w[m], all_ti[m]
-            # sel ascends, so ti is sorted: split into per-term runs
-            runs = np.searchsorted(ti, np.arange(len(terms) + 1))
-            decoded = [
-                (docs[i:j], idfs[t] * w[i:j])
-                for t, (i, j) in enumerate(zip(runs[:-1], runs[1:]))
-            ]
-            span = (a, b) if b - a <= bound else None
-            best += _fold(decoded, k, span, deleted=deleted)
-            best = sorted(best, key=lambda e: (-e[2], e[1]))[:k]
-    return [(r, d, s) for r, (_, d, s) in enumerate(best, 1)]
-
-
-def _taat_single_term(t: _Term, k: int, bm25: tuple, deleted=None):
-    """Single-term exact top-k with block-max early stop (see taat_topk).
-
-    Keeps a running top-k — the docs at or above the current kth score plus
-    the newly decoded chunk of ``_DECODE_CHUNK_BLOCKS`` blocks — so memory
-    is bounded by one chunk, not by the list. Tombstoned docs are masked
-    PER CHUNK, before the kth-score threshold is taken — a deleted doc
-    holding the kth slot would inflate θ and stop the decode while live
-    docs that belong in the page are still undecoded."""
-    order = np.argsort(-t.max_w, kind="stable")
-    kept = None
-    i = 0
-    while True:
-        chunk = order[i : i + _DECODE_CHUNK_BLOCKS]
-        i += len(chunk)
-        docs, w = _decode_blocks([(t, chunk)], bm25)
-        if deleted is not None:
-            live = ~_tombstoned(docs, deleted)
-            docs, w = docs[live], w[live]
-        scores = t.idf * w
-        if kept is not None:
-            docs = np.concatenate((kept[0], docs))
-            scores = np.concatenate((kept[1], scores))
-        if i >= len(order):
-            break
-        if len(scores) >= k:
-            kth = -np.partition(-scores, k - 1)[k - 1]
-            survive = scores >= kth
-            docs, scores = docs[survive], scores[survive]
-            if t.idf * t.max_w[order[i]] * _UB_SAFETY < kth:
-                break  # no undecoded doc can reach (or tie) the kth score
-        kept = (docs, scores)
-    return _topk_from_arrays(docs, scores, k)
+        # the docs the lists span: the window, or their own min and max
+        cuts = [min(e[2] for e in got), max(e[3] for e in got)]
+        if win is not None and len(docs) > bound:
+            cuts[1:1] = np.unique(docs)[bound::bound].tolist()
+        for a, b in zip(cuts, cuts[1:]):
+            part = [e[:2] for e in got]
+            if len(cuts) > 2:
+                part = [(d[m], pw[m]) for d, pw in part for m in [(d >= a) & (d < b)]]
+            universe = (
+                cand[(cand >= a) & (cand < b)] if cand is not None
+                else (a, b) if b - a <= bound else None
+            )
+            found.append(_fold(part, k, universe, deleted=deleted))
+    log["kernel"] = (
+        "windows" if len(windows) > 1 else "fold" if log["decoded_blocks"] else "memo"
+    )
+    if len(found) == 1:
+        return found[0]
+    best = sorted((h for hits in found for h in hits), key=lambda e: (-e[2], e[1]))
+    return [(r, d, s) for r, (_, d, s) in enumerate(best[:k], 1)]
 
 
 # engage the multi-term early stop only past this candidate volume: below
@@ -411,155 +405,125 @@ _TAAT_CAND_MAX = 65_536
 _TAAT_MAX_CAND_SCANS = 3
 
 
-def _taat_multi_term(terms: list[_Term], k: int, bm25: tuple, deleted=None):
-    """Multi-term exact top-k with a block-max early stop, for a query
-    whose doc span is small enough for one direct array (taat_topk).
-    ``terms``: distinct and in ascending term order, as taat_topk sorts
-    them — phase 2 folds in that order.
+def _taat_stop(terms: list[_Term], k: int, bm25: tuple, deleted, log: dict):
+    """Exact top-k of ``terms`` (distinct and in ascending term order, as
+    taat_topk sorts them) with the block-max early stop.
 
-    Phase 1 — bound: decode chunks of ``_DECODE_CHUNK_BLOCKS`` blocks
-    across ALL query terms in descending idf·block-max impact order into a
-    direct accumulator over the span, offset by its low end.
-    rem = Σ_t idf_t · (max_w of t's best undecoded block) bounds how much
-    ANY document's score can still grow (each doc has ≤1 posting per term).
-    θ̃ = kth-best accumulated score over a pool of docs seen in the highest-
-    impact chunks (a lower bound of the true kth score, since partials only
-    grow and the pool is a subset). Once rem < θ̃ no document outside
-    C = {d : acc[d] + rem ≥ θ̃} can reach the final top-k — with the same
-    1+1e-9 float inflation the single-term stop uses, applied on both sides.
+    Each term's blocks are ordered by max_w, descending, and one stable
+    order by idf·max_w runs across all terms (for one term it is the
+    term's own order). Chunks of ``_DECODE_CHUNK_BLOCKS`` blocks of it
+    decode in one call each. rem = Σ_t idf_t · (max_w of t's best
+    undecoded block) bounds how much ANY doc's score can still grow (each
+    doc has ≤1 posting per term). Tombstoned docs are masked per chunk,
+    BEFORE a threshold is taken: a deleted doc holding the kth slot would
+    inflate it and stop the decode while live docs that belong in the
+    page are still undecoded.
 
-    Phase 2 — finalize: the final top-k ⊆ C, but phase-1 partial sums are
-    neither complete nor in the oracle's fold order, so C is re-scored
-    EXACTLY: per term (ascending), decode only the blocks whose
-    [first_doc, last_doc] span intersects C (vectorized searchsorted over
-    the block arrays — the impact-ordered tail almost never overlaps a
-    k-sized candidate set), then fold them over C (_fold). Scores
-    are bit-identical to the full-decode fold. If the bound never closes a
-    small candidate set, the fully-decoded bound accumulator still locates
-    the top-k region (rem = 0, same addends as the exact fold to within
-    addition order, margins keep boundary ties) and phase 2 re-scores just
-    that region — the worst case pays one scatter plus bookkeeping, never
-    a second full accumulation.
-
-    Tombstoned docs are masked per decoded chunk BEFORE θ̃ is taken (a
-    deleted doc inflating θ̃ could stop the decode while live docs that
-    belong in the page are undecoded — same invariant as the single-term
-    stop), and by the phase-2 fold: a phase-1 threshold ≤ 0 admits
-    accumulator-0 docs, tombstones among them."""
-    # each term's blocks by max_w desc, then the global impact-desc decode
-    # order (stable: consistent with each term's own) over their concatenation
+    - One term: a decoded doc's partial IS its exact score. A running
+      top-k (the docs at or above the kth score plus the new chunk, so
+      memory is one chunk, not the list) stops once rem < the kth score.
+    - Several terms, over a doc span that fits one direct array: a bound
+      accumulator offset by the span's low end sums the partials in
+      impact order — the exact fold's addends, so it differs from exact
+      scores only in addition order (last-ulp) and serves ONLY the
+      bounds, with the 1+1e-9 margins on both sides absorbing that noise.
+      θ̃ = kth-best accumulated score over a pool of the first chunk's
+      docs (frozen: a weaker pool only DELAYS the stop). Once rem < θ̃ no
+      doc outside C = {d : acc[d] + rem ≥ θ̃} can reach the top-k; when C
+      is small the decode stops. A set too broad is scanned again only
+      once rem has halved, and never after ``_TAAT_MAX_CAND_SCANS``
+      scans; a decode that runs to the end takes C from the full
+      accumulator (rem = 0, margins keep every boundary tie). Either way
+      _fold_blocks re-scores C EXACTLY, decoding only the blocks that
+      hold a member — one scatter in the worst case, never a second full
+      accumulation. Its fold also masks the tombstones: a threshold ≤ 0
+      admits accumulator-0 docs, tombstones among them."""
     orders = [np.argsort(-t.max_w, kind="stable") for t in terms]
     flat_ti = np.repeat(np.arange(len(terms)), [len(o) for o in orders])
     flat_blk = np.concatenate(orders)
-    imps = np.concatenate([t.idf * t.max_w[o] for t, o in zip(terms, orders)])
-    order = np.argsort(-imps, kind="stable")
-
-    lo = min(int(t.first_doc.min()) for t in terms)
-    hi = max(int(t.last_doc.max()) for t in terms) + 1
-    ptr = [0] * len(terms)  # per-term decoded-block count (own desc order)
-    # BOUND accumulator: impact-order partial sums — same addends as the
-    # exact fold, so its values differ from exact scores only in addition
-    # order (last-ulp); used ONLY for the θ̃/candidate bounds, with the
-    # 1+1e-9 margins absorbing that noise. Phase 2 re-scores candidates in
-    # the oracle's ascending-term order, so returned scores are exact. One
-    # full scatter total (incremental), and decoded chunks are NOT retained
-    # — peak memory is the accumulator, not 16 B/posting of pieces.
-    dense = np.zeros(hi - lo, dtype=np.float64)
-    # θ̃ pool: slots of the FIRST (highest-impact) chunk, frozen — the true
-    # top-k almost always carries a high-impact posting, and a weaker pool
-    # only DELAYS the stop (θ̃ = kth of a subset ≤ kth overall), never
-    # breaks it
-    pool: np.ndarray | None = None
-    cand = None
-    stopped = False
-    next_check_rem = float("inf")
-    cand_scans = 0
-    i = 0
-    while i < len(order):
+    order = np.argsort(-np.concatenate(
+        [t.idf * t.max_w[o] for t, o in zip(terms, orders)]
+    ), kind="stable")
+    ptr = np.zeros(len(terms), dtype=np.int64)  # blocks decoded per term
+    dense = kept = pool = cand = None
+    if len(terms) > 1:
+        lo = min(int(t.first_doc.min()) for t in terms)
+        dense = np.zeros(max(int(t.last_doc.max()) for t in terms) + 1 - lo)
+    next_check_rem, cand_scans, i = float("inf"), 0, 0
+    while True:
         chunk = order[i : i + _DECODE_CHUNK_BLOCKS]
         i += len(chunk)
-        chunk_ti, chunk_blk = flat_ti[chunk], flat_blk[chunk]
-        chunk_docs = [] if pool is None else None
-        chunk_pws = [] if pool is None else None
-        for ti in np.unique(chunk_ti).tolist():  # ascending term
-            sel = chunk_blk[chunk_ti == ti]
-            docs, w = _decode_blocks([(terms[ti], sel)], bm25)
-            if deleted is not None:
-                live = ~_tombstoned(docs, deleted)
-                docs, w = docs[live], w[live]
-            pw = terms[ti].idf * w
+        cti = flat_ti[chunk]
+        ptr += np.bincount(cti, minlength=len(terms))
+        picks = [
+            (terms[ti], flat_blk[chunk[cti == ti]])
+            for ti in np.unique(cti).tolist()  # ascending term
+        ]
+        docs, w = _decode_blocks(picks, bm25)
+        log["decoded_blocks"] += len(chunk)
+        ends = np.cumsum([int(t.n[s].sum()) for t, s in picks])
+        if deleted is not None:
+            live = ~_tombstoned(docs, deleted)
+            ends = np.cumsum(live)[ends - 1]
+            docs, w = docs[live], w[live]
+        segs = [slice(a, b) for a, b in zip([0, *ends[:-1].tolist()], ends.tolist())]
+        for (t, _), seg in zip(picks, segs):
+            w[seg] *= t.idf  # w is now the partials idf·w
+        if dense is None:
+            if kept is not None:
+                docs = np.concatenate((kept[0], docs))
+                w = np.concatenate((kept[1], w))
+        else:
             slots = docs - lo
-            dense[slots] += pw
-            ptr[ti] += len(sel)
-            if chunk_docs is not None:
-                chunk_docs.append(slots)
-                chunk_pws.append(pw)
-        if pool is None:
-            if chunk_docs:
-                cd = np.concatenate(chunk_docs)
-                cw = np.concatenate(chunk_pws)
-                if len(cd) > _TAAT_POOL_MAX:
-                    top = np.argpartition(-cw, _TAAT_POOL_MAX - 1)[
-                        :_TAAT_POOL_MAX
-                    ]
-                    cd = cd[top]
-                pool = np.unique(cd)
-            else:
-                pool = np.empty(0, dtype=np.int64)
+            # one term's segment at a time: dense[slots] += w applies only
+            # one of a repeated slot, and a doc repeats when two of its
+            # terms share a chunk
+            for seg in segs:
+                dense[slots[seg]] += w[seg]
+            if pool is None:
+                if len(slots) > _TAAT_POOL_MAX:
+                    top = np.argpartition(-w, _TAAT_POOL_MAX - 1)[:_TAAT_POOL_MAX]
+                    slots = slots[top]
+                pool = np.unique(slots)
         if i >= len(order):
             break
         rem = 0.0
-        for t, o, p in zip(terms, orders, ptr):
+        for t, o, p in zip(terms, orders, ptr.tolist()):
             if p < len(o):
                 rem += t.idf * t.max_w[o[p]]
-        if len(pool) >= k and cand_scans < _TAAT_MAX_CAND_SCANS:
-            pool_scores = dense[pool]
-            theta = -np.partition(-pool_scores, k - 1)[k - 1]
-            if (
-                theta > 0.0
-                and rem * _UB_SAFETY < theta
-                and rem <= next_check_rem
-            ):
+        if dense is None:
+            if len(w) >= k:
+                kth = -np.partition(-w, k - 1)[k - 1]
+                survive = w >= kth
+                docs, w = docs[survive], w[survive]
+                if rem * _UB_SAFETY < kth:
+                    break  # no undecoded doc can reach (or tie) the kth score
+            kept = (docs, w)
+        elif len(pool) >= k and cand_scans < _TAAT_MAX_CAND_SCANS:
+            theta = -np.partition(-dense[pool], k - 1)[k - 1]
+            if theta > 0.0 and rem * _UB_SAFETY < theta and rem <= next_check_rem:
                 cand = np.flatnonzero(
                     dense >= theta / _UB_SAFETY - rem * _UB_SAFETY
                 ) + lo
                 if len(cand) <= _TAAT_CAND_MAX:
-                    stopped = True
                     break
-                # candidate set still too broad: decode on, pay the next
-                # full-array scan only once the bound has tightened, and
-                # give up on early stopping after a few failed scans (flat
-                # impact distributions never close the set — the end-of-
-                # decode candidate finalize is then the cheap path)
+                # still too broad: decode on, scan again once the bound
+                # has tightened, and give up after a few scans (flat impact
+                # distributions never close the set)
                 cand_scans += 1
                 next_check_rem = rem * 0.5
-
-    if not stopped:
-        # everything decoded (the bound never closed a small candidate
-        # set): finalize CANDIDATE-DRIVEN anyway — with rem = 0 the kth
-        # largest bound value locates the top-k region to within float
-        # noise, the margins keep every possible member and tie in, and
-        # phase 2 re-scores that small set exactly. No second scatter.
-        if not dense.any():
-            return []
-        kth = -np.partition(-dense, k - 1)[k - 1] if len(dense) > k else 0.0
-        if kth <= 0.0:
-            # fewer than k scored docs — the candidate set IS the universe
-            cand = np.flatnonzero(dense > 0.0) + lo
-        else:
-            cand = np.flatnonzero(dense >= kth / _UB_SAFETY) + lo
-
-    # phase 2: exact ascending-term fold over the candidate set only
-    decoded = []
-    for t in terms:
-        sel = np.flatnonzero(
-            np.searchsorted(cand, t.last_doc, side="right")
-            > np.searchsorted(cand, t.first_doc, side="left")
-        )
-        if len(sel):
-            docs, w = _decode_blocks([(t, sel)], bm25)
-            decoded.append((docs, t.idf * w))
-    return _fold(decoded, k, cand, deleted=deleted)
+    kernel = "stop" if i < len(order) else "stop_open"
+    if dense is None:
+        hits = _topk_from_arrays(docs, w, k)
+    else:
+        if i >= len(order):  # C from the fully decoded accumulator
+            kth = -np.partition(-dense, k - 1)[k - 1] if len(dense) > k else 0.0
+            cand = np.flatnonzero(
+                dense >= kth / _UB_SAFETY if kth > 0.0 else dense > 0.0
+            ) + lo
+        hits = _fold_blocks(terms, k, bm25, deleted, log, cand=cand)
+    log["kernel"] = kernel
+    return hits
 
 
 def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
@@ -815,8 +779,9 @@ class IndexReader:
     def search(self, text: str, k: int = 10) -> list[tuple[int, int, float]]:
         """→ [(rank, doc_id, score)] — exact BM25 top-k for one query.
 
-        Per-call phase timings (tokenize / block fetch / score) append to
-        ``self.query_log`` — the query-side analog of build_log lineage
+        Per-call phase timings (tokenize / block fetch / score), with the
+        kernel that ran and the blocks it decoded (taat_topk's ``log``),
+        append to ``self.query_log`` — the query-side analog of build_log lineage
         (reference client.py:68-120 reports roundtrip/gateway/model timing
         per call the same way); ``profile_summary()`` aggregates."""
         t0 = time.perf_counter()
@@ -824,7 +789,7 @@ class IndexReader:
         t_tok = time.perf_counter()
         entry = {
             "n_terms": len(terms), "strategy": None,
-            "n_blocks": 0, "n_postings": 0,
+            "n_blocks": 0, "n_postings": 0, "kernel": None, "decoded_blocks": 0,
             "tokenize_ms": 1000 * (t_tok - t0),
             "fetch_ms": 0.0, "score_ms": 0.0, "total_ms": 0.0,
         }
@@ -843,7 +808,7 @@ class IndexReader:
         entry["strategy"] = "taat"
         out = taat_topk(
             fetched, k, self._bm25, deleted=self._deleted_arr,
-            memo=self._decoded_cache,
+            memo=self._decoded_cache, log=entry,
         )
         t_score = time.perf_counter()
         entry["score_ms"] = 1000 * (t_score - t_fetch)

@@ -102,9 +102,7 @@ def test_tombstones_go_through_one_membership_helper():
             for c in ast.walk(f)
         )
     }
-    assert callers == {
-        "_fold", "_taat_single_term", "_taat_multi_term", "phrase"
-    }, callers
+    assert callers == {"_fold", "_taat_stop", "phrase"}, callers
     loops = (
         n for n in ast.walk(funcs["_fold"])
         if isinstance(n, (ast.For, ast.ListComp, ast.GeneratorExp))
@@ -114,6 +112,29 @@ def test_tombstones_go_through_one_membership_helper():
         assert not names & {"deleted", "_tombstoned"}, (
             ast.get_source_segment(text, loop)
         )
+
+
+def test_one_early_stop_and_one_block_fold():
+    """wand.py has one early stop (``_taat_stop``) and one fold over block
+    arrays (``_fold_blocks``): none of the per-case kernels they replaced
+    is defined, and only those two call the block decoder."""
+    import ast
+
+    text = (PKG / "operators" / "wand.py").read_text()
+    funcs = {
+        n.name: n for n in ast.walk(ast.parse(text))
+        if isinstance(n, ast.FunctionDef)
+    }
+    for name in ("_taat_single_term", "_taat_multi_term", "_taat_windowed"):
+        assert name not in funcs, name
+    callers = {
+        name for name, f in funcs.items()
+        if any(
+            isinstance(c, ast.Call) and getattr(c.func, "id", None) == "_decode_blocks"
+            for c in ast.walk(f)
+        )
+    }
+    assert callers == {"_taat_stop", "_fold_blocks"}, callers
 
 
 def test_kernels_index_term_arrays():

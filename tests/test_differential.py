@@ -10,8 +10,9 @@ ids in the oracle's order with bit-equal float64 scores:
 - the same with ``DECODE_MAX_POSTINGS`` forced below the doc span the
   queries touch, so multi-term queries take the windowed fold and the
   sparse fold;
-- the same with the multi-term early stop forced on and decoding one
-  block per chunk;
+- the same with the early stop forced on (its postings threshold at 0)
+  and decoding three blocks per chunk, so one decode call takes several
+  terms' blocks out of file order;
 - search_topk, one Spark call per index.
 
 A tombstone-heavy case deletes ids drawn over the whole corpus in many
@@ -43,7 +44,7 @@ PATHS = {
     "default": {},
     "forced_bound": {"DECODE_MAX_POSTINGS": FORCED_BOUND},
     "multi_term_stop": {
-        "MULTI_TAAT_EARLY_MIN_POSTINGS": 0, "_DECODE_CHUNK_BLOCKS": 1,
+        "MULTI_TAAT_EARLY_MIN_POSTINGS": 0, "_DECODE_CHUNK_BLOCKS": 3,
     },
 }
 ID_METHODS = ("dense_sorted", "hash")
@@ -149,6 +150,16 @@ def test_reader_matches_oracle(indexes, ids, path, monkeypatch):
                 _assert_exact(
                     reader.search(text, k=K), want[qid], f"{state} {idx} {text!r}"
                 )
+        if path == "multi_term_stop":
+            assert _multi_term_stops(reader), idx
+
+
+def _multi_term_stops(reader) -> int:
+    """How many of ``reader``'s searches of several terms ran the stop."""
+    return sum(
+        e["n_terms"] > 1 and e["kernel"] in ("stop", "stop_open")
+        for e in reader.query_log
+    )
 
 
 @pytest.mark.parametrize("ids", INDEXES)
@@ -224,3 +235,5 @@ def test_many_deletes_match_oracle(spark, indexes, ids, path, tmp_path, monkeypa
                     f"{reader} after call {c}: {q['text']!r}",
                 )
     assert len(deleted) == DELETE_CALLS * DELETE_PER_CALL
+    if path == "multi_term_stop":
+        assert _multi_term_stops(held)

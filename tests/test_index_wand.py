@@ -120,21 +120,6 @@ def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
     several windows, and the rows stay oracle-exact."""
     monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     monkeypatch.setattr(wand, "_task_reader", None)
-    decodes, windowed = [], []
-    real_decode, real_windowed = wand._decode_blocks, wand._taat_windowed
-
-    def counting_decode(picks, bm25):
-        decodes.append(sum(int(t.n[sel].sum()) for t, sel in picks))
-        return real_decode(picks, bm25)
-
-    def counting_windowed(*args, **kw):
-        start = len(decodes)
-        out = real_windowed(*args, **kw)
-        windowed.append(len(decodes) - start)
-        return out
-
-    monkeypatch.setattr(wand, "_decode_blocks", counting_decode)
-    monkeypatch.setattr(wand, "_taat_windowed", counting_windowed)
     queries = fixtures.make_queries()
     got = _batch_topk(wand._search_batches(
         [_query_batch(queries)], index_dir=index_dir, k=K,
@@ -143,6 +128,10 @@ def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
         _assert_equals_oracle_exactly(
             got.get(q["query_id"], []), oracle.topk(q["text"], k=K)
         )
+    windowed = [
+        e["decoded_blocks"] for e in wand._task_reader.query_log
+        if e["kernel"] == "windows"
+    ]
     assert len(windowed) >= 5
     assert min(windowed) > 1
 
@@ -360,6 +349,21 @@ def test_index_reader_interactive_exact(spark, index_dir, oracle):
     # memoized term cursors answer repeat queries identically
     q0 = fixtures.make_queries()[0]
     assert reader.search(q0["text"], k=K) == reader.search(q0["text"], k=K)
+
+
+def test_single_term_query_is_memoized(index_dir, oracle):
+    """A single-term query whose list fits one decode chunk is decoded
+    whole and memoized: searched again, it decodes nothing and folds the
+    memo, with the same exact answer."""
+    reader = wand.IndexReader(None, index_dir)
+    for term in ("hello", "world", "kuni"):
+        first = reader.search(term, k=K)
+        assert reader.query_log[-1]["kernel"] == "fold", term
+        assert reader.query_log[-1]["decoded_blocks"] > 1, term
+        _assert_equals_oracle_exactly(first, oracle.topk(term, k=K))
+        assert reader.search(term, k=K) == first
+        assert reader.query_log[-1]["kernel"] == "memo", term
+        assert reader.query_log[-1]["decoded_blocks"] == 0, term
 
 
 def test_cli_search_equals_reader(index_dir, capsys, monkeypatch):

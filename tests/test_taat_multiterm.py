@@ -1,11 +1,15 @@
-"""Multi-term block-max early-stop TAAT (_taat_multi_term): rank- and
-score-identity against the oracle and the full-decode scorer, including
+"""Multi-term block-max early stop (taat_topk's _taat_stop): rank- and
+score-identity against the oracle and the full-decode fold, including
 tombstone masking and the small-pool / small-candidate-cap loops.
 
-The production threshold (MULTI_TAAT_EARLY_MIN_POSTINGS) keeps the path off
-at fixture scale, so every test here forces it via monkeypatch."""
+The production threshold (MULTI_TAAT_EARLY_MIN_POSTINGS) keeps the stop
+off at fixture scale, and a reader runs it only on queries with more
+blocks than one decode chunk, so every test here forces them via
+monkeypatch and reads the kernel that ran from taat_topk's log."""
 
 from __future__ import annotations
+
+from unittest import mock
 
 import numpy as np
 import pytest
@@ -48,13 +52,22 @@ def _full_decode_topk(reader, terms, k, deleted=None):
     MULTI_TAAT_EARLY_MIN_POSTINGS and DECODE_MAX_POSTINGS."""
     fetched = reader._fetch_rows(terms)
     assert len(fetched) > 1
-    return wand.taat_topk(fetched, k, reader._bm25, deleted=deleted)
+    log: dict = {}
+    got = wand.taat_topk(fetched, k, reader._bm25, deleted=deleted, log=log)
+    assert log["kernel"] == "fold", log
+    return got
 
 
 def _early_stop_topk(reader, terms, k, deleted=None):
-    fetched = reader._fetch_rows(terms)  # ascending term
+    """taat_topk with the multi-term stop's postings threshold forced to 0
+    (with no memo, the stop runs whatever the query's block count)."""
+    fetched = reader._fetch_rows(terms)
     assert len(fetched) > 1
-    return wand._taat_multi_term(fetched, k, reader._bm25, deleted=deleted)
+    log: dict = {}
+    with mock.patch.object(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0):
+        got = wand.taat_topk(fetched, k, reader._bm25, deleted=deleted, log=log)
+    assert log["kernel"] in ("stop", "stop_open"), log
+    return got
 
 
 def test_multi_term_early_stop_matches_oracle(index_dir, oracle, monkeypatch):
@@ -128,22 +141,26 @@ def test_multi_term_early_stop_tiny_pool_and_cand_cap(
 
 
 def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
-    """taat_topk engages _taat_multi_term past the postings threshold (and
-    IndexReader.search inherits it); forced threshold 0 must keep
-    every fixture query oracle-exact through the public entry point. An
-    empty tombstone array answers as None does, whichever kernel runs:
-    the multi-term stop, the windows (bound 8) or the single-term stop
-    (the first term alone)."""
+    """taat_topk engages the multi-term stop past the postings threshold
+    and one chunk of blocks (and IndexReader.search inherits it); forced
+    thresholds must keep every fixture query oracle-exact through the
+    public entry point. An empty tombstone array answers as None does,
+    whichever kernel runs: the multi-term stop, the windows (bound 8) or
+    the single-term stop (the first term alone)."""
     monkeypatch.setattr(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0)
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", 1)
     real_bound = wand.DECODE_MAX_POSTINGS
     reader = wand.IndexReader(None, index_dir)
     empty = np.empty(0, dtype=np.int64)
+    stops = 0
     for q in _multi_term_queries():
         terms = sorted(set(tokenize_words(q["text"])))
         rows = reader._fetch_rows(terms)
         if not rows:
             continue
-        got = wand.taat_topk(rows, K, reader._bm25)
+        log: dict = {}
+        got = wand.taat_topk(rows, K, reader._bm25, log=log)
+        stops += len(rows) > 1 and log["kernel"] in ("stop", "stop_open")
         expected = oracle.topk(q["text"], k=K)
         assert [(r, d) for r, d, _ in got] == [
             (r, d) for r, d, _ in expected
@@ -156,22 +173,27 @@ def test_taat_topk_routes_multi_term_early_stop(index_dir, oracle, monkeypatch):
                 part, K, reader._bm25, deleted=empty
             ) == wand.taat_topk(part, K, reader._bm25), q
         monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", real_bound)
+    assert stops >= 5
 
 
 def test_reader_search_uses_early_stop_when_heavy(index_dir, oracle, monkeypatch):
-    """End-to-end: with the threshold forced to 0, IndexReader.search's
-    cold multi-term branch routes through the early-stop scorer and stays
-    oracle-exact (warm repeats take the memo path — also exact)."""
+    """End-to-end: with the thresholds forced, IndexReader.search's cold
+    multi-term queries route through the early stop (its query_log says
+    so) and stay oracle-exact; warm repeats answer the same."""
     monkeypatch.setattr(wand, "MULTI_TAAT_EARLY_MIN_POSTINGS", 0)
+    monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", 1)
     reader = wand.IndexReader(None, index_dir)
+    stops = 0
     for q in _multi_term_queries()[:10]:
         expected = oracle.topk(q["text"], k=K)
         got_cold = reader.search(q["text"], k=K)
+        stops += reader.query_log[-1]["kernel"] in ("stop", "stop_open")
         got_warm = reader.search(q["text"], k=K)
         assert [(r, d) for r, d, _ in got_cold] == [
             (r, d) for r, d, _ in expected
         ], q
         assert got_cold == got_warm
+    assert stops >= 5
 
 
 def test_multi_term_early_stop_nonpositive_threshold_masks_deletes(
@@ -241,19 +263,21 @@ def test_early_stops_exact_with_multi_block_chunks(
     index_dir, oracle, monkeypatch, chunk
 ):
     """Chunks of several blocks hand the decoder each chunk's blocks in
-    impact order. Both early stops must stay bit-equal to the oracle: the
-    multi-term stop on each multi-term query, the single-term stop on each
-    of its terms."""
+    impact order, several terms' in one call. The early stop (taat_topk
+    with no memo runs it on any one term) must stay bit-equal to the
+    oracle on each multi-term query and on each of its terms alone."""
     monkeypatch.setattr(wand, "_DECODE_CHUNK_BLOCKS", chunk)
     reader = wand.IndexReader(None, index_dir)
     ran = 0
     for q in _multi_term_queries():
         fetched = reader._fetch_rows(sorted(set(tokenize_words(q["text"]))))
         for t in fetched:
-            got = wand._taat_single_term(t, K, reader._bm25)
+            log: dict = {}
+            got = wand.taat_topk([t], K, reader._bm25, log=log)
             assert got == oracle.topk(t.term, k=K), t.term
+            assert log["kernel"] in ("stop", "stop_open"), t.term
         if len(fetched) > 1:
-            got = wand._taat_multi_term(fetched, K, reader._bm25)
+            got = _early_stop_topk(reader, [t.term for t in fetched], K)
             assert got == oracle.topk(q["text"], k=K), q
             ran += 1
     assert ran >= 5
