@@ -177,15 +177,14 @@ def taat_topk(
     - every term in ``memo`` (decoded terms kept across queries) and at
       most ``DECODE_MAX_POSTINGS`` postings: _fold_blocks folds the
       memoized lists;
-    - otherwise, when the query has more blocks than one decode chunk (or
-      the fold could not fill ``memo``: none given, or more postings than
-      that), the block-max early stop (_taat_stop): for one term always —
-      a Zipf-head list stops once k docs beat idf·(best undecoded max_w) —
-      and for several past ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over
-      a doc span of at most ``DECODE_MAX_POSTINGS`` (below it a full
-      vectorized decode beats the stop's bookkeeping — a
-      sum-of-remaining-UBs stop with no candidate phase was measured
-      NET-SLOWER at 6.4M docs);
+    - otherwise, when the query has more blocks than one decode chunk or
+      more postings than ``DECODE_MAX_POSTINGS``, the block-max early stop
+      (_taat_stop): for one term always — a Zipf-head list stops once k
+      docs beat idf·(best undecoded max_w) — and for several past
+      ``MULTI_TAAT_EARLY_MIN_POSTINGS`` postings over a doc span of at
+      most ``DECODE_MAX_POSTINGS`` (below it a full vectorized decode
+      beats the stop's bookkeeping — a sum-of-remaining-UBs stop with no
+      candidate phase was measured NET-SLOWER at 6.4M docs);
     - anything else: _fold_blocks over every block, in doc-id windows past
       ``DECODE_MAX_POSTINGS`` postings; in one window each list is read
       from ``memo`` or decoded whole and remembered there, so a query
@@ -207,10 +206,9 @@ def taat_topk(
         deleted = None
     bound = DECODE_MAX_POSTINGS
     total = sum(t.postings for t in terms)
-    fills = memo is not None and total <= bound  # the fold memoizes in one window
-    warm = fills and all(t.term in memo for t in terms)
-    blocks = sum(len(t.n) for t in terms)
-    if not warm and (not fills or blocks > _DECODE_CHUNK_BLOCKS):
+    one_window = total <= bound
+    warm = one_window and memo is not None and all(t.term in memo for t in terms)
+    if not warm and (not one_window or sum(len(t.n) for t in terms) > _DECODE_CHUNK_BLOCKS):
         if len(terms) == 1:
             return _taat_stop(terms, k, bm25, deleted, log)
         if total > MULTI_TAAT_EARLY_MIN_POSTINGS:
@@ -236,7 +234,12 @@ def _fold(decoded: list, k: int, universe, deleted=None):
     discarded and no live doc's sum is touched.
 
     BM25 partials are > 0, so score 0 ⇔ no query term matched (reference
-    invariant tests/test_search.py:41-44)."""
+    invariant tests/test_search.py:41-44). One list (no candidate set) holds
+    each doc once: its partials are its exact scores, with no score array."""
+    if len(decoded) == 1 and not isinstance(universe, np.ndarray):
+        docs, scores = decoded[0]
+        live = slice(None) if deleted is None else ~_tombstoned(docs, deleted)
+        return _topk_from_arrays(docs[live], scores[live], k)
     if isinstance(universe, tuple):
         lo, hi = universe
         acc = np.zeros(hi - lo, dtype=np.float64)
@@ -316,9 +319,8 @@ def _fold_blocks(terms, k: int, bm25: tuple, deleted, log: dict, cand=None, memo
     decoded whole is remembered there as (docs, idf·w, min doc,
     max doc + 1) in arrays of its own, not views of the shared decode."""
     bound = DECODE_MAX_POSTINGS
-    if cand is None:
-        sels = [np.arange(len(t.n)) for t in terms]
-        postings = sum(t.postings for t in terms)
+    if cand is None:  # every block: made only when a list is decoded
+        sels, postings = None, sum(t.postings for t in terms)
     else:
         sels = [np.flatnonzero(
             np.searchsorted(cand, t.last_doc, side="right")
@@ -327,6 +329,7 @@ def _fold_blocks(terms, k: int, bm25: tuple, deleted, log: dict, cand=None, memo
         postings = sum(int(t.n[s].sum()) for t, s in zip(terms, sels))
     windows = [None]
     if postings > bound:
+        sels = sels or [np.arange(len(t.n)) for t in terms]
         # term i's selected blocks are [starts[i], starts[i + 1]) of these
         starts = np.cumsum([0] + [len(s) for s in sels])
         blk = np.concatenate(sels)
@@ -344,8 +347,9 @@ def _fold_blocks(terms, k: int, bm25: tuple, deleted, log: dict, cand=None, memo
             picks = [blk[sel[a:b]] for a, b in zip(at[:-1], at[1:])]
         elif memo is not None:
             got = [memo.get(t.term) for t in terms]
-        todo = [i for i, e in enumerate(got) if e is None and len(picks[i])]
+        todo = [i for i, e in enumerate(got) if e is None and (picks is None or len(picks[i]))]
         if todo:
+            picks = picks or [np.arange(len(t.n)) for t in terms]
             docs, w = _decode_blocks([(terms[i], picks[i]) for i in todo], bm25)
             log["decoded_blocks"] += sum(len(picks[i]) for i in todo)
             ends = np.cumsum([int(terms[i].n[picks[i]].sum()) for i in todo])
@@ -353,17 +357,14 @@ def _fold_blocks(terms, k: int, bm25: tuple, deleted, log: dict, cand=None, memo
                 m = (docs >= win[0]) & (docs < win[1])
                 ends = np.cumsum(m)[ends - 1]
                 docs, w = docs[m], w[m]
-            span = win or (int(docs.min()), int(docs.max()) + 1)
             for i, a, b in zip(todo, [0, *ends[:-1].tolist()], ends.tolist()):
                 t, d = terms[i], docs[a:b]
-                got[i] = e = (d, t.idf * w[a:b], *span)
-                if win is None and memo is not None and len(picks[i]) == len(t.n):
-                    if len(todo) > 1:  # its own array, not a view of the decode
-                        d = d.copy()
-                    memo.put(
-                        t.term, (d, e[1], int(d.min()), int(d.max()) + 1),
-                        d.nbytes + e[1].nbytes + 64,
-                    )
+                keep = win is None and memo is not None and len(picks[i]) == len(t.n)
+                if keep and len(todo) > 1:  # its own array, not a view of the decode
+                    d = d.copy()
+                got[i] = e = (d, t.idf * w[a:b], *(win or (int(d.min()), int(d.max()) + 1)))
+                if keep:
+                    memo.put(t.term, e, d.nbytes + e[1].nbytes + 64)
         got = [e for e in got if e is not None]
         if not got:
             continue
@@ -487,10 +488,8 @@ def _taat_stop(terms: list[_Term], k: int, bm25: tuple, deleted, log: dict):
                 pool = np.unique(slots)
         if i >= len(order):
             break
-        rem = 0.0
-        for t, o, p in zip(terms, orders, ptr.tolist()):
-            if p < len(o):
-                rem += t.idf * t.max_w[o[p]]
+        rem = sum(t.idf * t.max_w[o[p]]
+                  for t, o, p in zip(terms, orders, ptr.tolist()) if p < len(o))
         if dense is None:
             if len(w) >= k:
                 kth = -np.partition(-w, k - 1)[k - 1]

@@ -116,8 +116,8 @@ def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
     """search_topk's task body, run in-process under a forced memory bound
     (a Spark worker imports the module afresh, so the bound is forced
     where the body runs): the kernels read the bound in force when they
-    are called, so multi-term queries take the windowed fold, decoding in
-    several windows, and the rows stay oracle-exact."""
+    are called, so every multi-term query holding more postings than the
+    bound takes the windowed fold, and the rows stay oracle-exact."""
     monkeypatch.setattr(wand, "DECODE_MAX_POSTINGS", FORCED_BOUND)
     monkeypatch.setattr(wand, "_task_reader", None)
     queries = fixtures.make_queries()
@@ -128,12 +128,12 @@ def test_batch_task_applies_the_driver_bound(index_dir, oracle, monkeypatch):
         _assert_equals_oracle_exactly(
             got.get(q["query_id"], []), oracle.topk(q["text"], k=K)
         )
-    windowed = [
-        e["decoded_blocks"] for e in wand._task_reader.query_log
-        if e["kernel"] == "windows"
+    over = [
+        e for e in wand._task_reader.query_log
+        if e["n_terms"] > 1 and e["n_postings"] > FORCED_BOUND
     ]
-    assert len(windowed) >= 5
-    assert min(windowed) > 1
+    assert len(over) >= 5
+    assert all(e["kernel"] == "windows" for e in over)
 
 
 def test_forced_bound_batch_exact(spark, index_dir, oracle, tmp_path, monkeypatch):
