@@ -1,7 +1,9 @@
 """The Python worker daemon (``worker_daemon``) and what ``get_spark``
 sets up around it: tasks do not re-read ``pyspark.zip``, the zipimport fix
 keeps imports exact, workers import the package whatever the JVM's working
-directory, and ``PYSPARK_SUBMIT_ARGS`` is left as the caller had it."""
+directory, ``PYSPARK_SUBMIT_ARGS`` is left as the caller had it, and
+workers reach the JVM over Unix domain sockets in a private, short-pathed
+directory that goes with the session's process."""
 
 from __future__ import annotations
 
@@ -43,6 +45,33 @@ def test_tasks_do_not_reread_zip_directories(spark):
     assert rdd.mapPartitions(count_zip_reads).collect() == [0] * 8
     # the fix lives in the workers only
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+def test_workers_reach_the_jvm_over_unix_sockets(spark):
+    def transport(_rows):
+        """One task: the worker's flag and the family and name of each
+        socket it holds."""
+        import os
+        import socket
+        import stat
+
+        sockets = []
+        for fd in map(int, os.listdir("/dev/fd")):
+            try:
+                if not stat.S_ISSOCK(os.fstat(fd).st_mode):
+                    continue
+            except OSError:
+                continue
+            with socket.socket(fileno=os.dup(fd)) as sock:
+                sockets.append((sock.family.name, str(sock.getsockname())))
+        yield os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED"), sockets
+
+    socket_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    rdd = spark.sparkContext.parallelize(range(4), 4)
+    for enabled, sockets in rdd.mapPartitions(transport).collect():
+        assert str(enabled).lower() == "true"
+        assert sockets and {family for family, _ in sockets} == {"AF_UNIX"}
+        assert all(name.startswith(socket_dir + os.sep) for _, name in sockets)
 
 
 def _run(script: str, *args: str, **kw):
@@ -138,10 +167,12 @@ def test_zipimport_fix_is_a_no_op_from_python_3_13():
 
 
 # A fresh session started from another directory with PYTHONPATH and
-# PYSPARK_SUBMIT_ARGS unset: what a task returns, the variable after
-# get_spark, and the JVM's input arguments.
+# PYSPARK_SUBMIT_ARGS unset, and TMPDIR and the JVM's java.io.tmpdir too
+# long to hold a socket path: what a task returns, the variable after
+# get_spark, the JVM's input arguments and temp directory, and the
+# workers' socket directory with its mode and socket paths.
 FRESH_SESSION = r"""
-import json, os, sys
+import json, os, stat, sys
 sys.path.insert(0, sys.argv[1])
 from clip_as_service_spark import textnorm
 from clip_as_service_spark.session import get_spark
@@ -151,6 +182,10 @@ out = {"submit_args": os.environ.get("PYSPARK_SUBMIT_ARGS")}
 jvm = spark.sparkContext._jvm
 out["jvm_args"] = list(
     jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+)
+out["jvm_tmpdir"] = jvm.java.lang.System.getProperty("java.io.tmpdir")
+socket_dir = out["socket_dir"] = spark.sparkContext.getConf().get(
+    "spark.python.unix.domain.socket.dir"
 )
 for name, job in {
     "rdd_map": lambda: spark.sparkContext.parallelize(["A  b", "C"], 2)
@@ -162,18 +197,37 @@ for name, job in {
         out[name] = job()
     except Exception as exc:
         out[name] = type(exc).__name__
+if socket_dir:
+    out["socket_dir_mode"] = oct(stat.S_IMODE(os.stat(socket_dir).st_mode))
+    out["sockets"] = [os.path.join(socket_dir, n) for n in os.listdir(socket_dir)]
 spark.stop()
 print(json.dumps(out))
 """
 
 
+LONG_TMPDIR_BYTES = 150
+
+
 @pytest.fixture(scope="module")
-def fresh_session(tmp_path_factory) -> dict:
+def long_tmpdir(tmp_path_factory) -> Path:
+    base = tmp_path_factory.mktemp("tmp")
+    path = base / ("t" * max(1, LONG_TMPDIR_BYTES - len(os.fsencode(base)) - 1))
+    path.mkdir()
+    return path
+
+
+@pytest.fixture(scope="module")
+def fresh_session(tmp_path_factory, long_tmpdir) -> dict:
     env = {
         k: v for k, v in os.environ.items()
         if k not in ("PYTHONPATH", "PYSPARK_SUBMIT_ARGS")
     }
-    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_WARMUP="0")
+    env.update(
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_GRAFT_WARMUP="0",
+        TMPDIR=str(long_tmpdir),
+        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={long_tmpdir}",
+    )
     return _run(
         FRESH_SESSION, str(ROOT), cwd=tmp_path_factory.mktemp("elsewhere"), env=env
     )
@@ -187,3 +241,15 @@ def test_workers_import_the_package_from_any_directory(fresh_session):
 def test_get_spark_leaves_submit_args_as_found(fresh_session):
     assert fresh_session["submit_args"] is None
     assert "-Xss16m" in fresh_session["jvm_args"]
+
+
+def test_socket_directory_is_private_short_and_removed(fresh_session, long_tmpdir):
+    # the session met temp directories with no room for a socket path
+    assert len(os.fsencode(str(long_tmpdir))) >= LONG_TMPDIR_BYTES
+    assert fresh_session["jvm_tmpdir"] == str(long_tmpdir)
+    assert fresh_session["socket_dir"]
+    assert fresh_session["socket_dir_mode"] == "0o700"
+    assert fresh_session["sockets"]
+    assert all(len(os.fsencode(p)) <= 107 for p in fresh_session["sockets"])
+    # removed once the session's process exited
+    assert not os.path.exists(fresh_session["socket_dir"])
