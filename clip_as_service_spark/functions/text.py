@@ -107,27 +107,6 @@ def make_tokenize_tf_udf(term_mode: str = "word", bpe_path: str | None = None):
     return bpe_tokenize_tf_udf
 
 
-def make_tokenize_udf(term_mode: str = "word", bpe_path: str | None = None):
-    """tokenize_udf (text → array<term>) for a term mode — the query-side
-    twin of make_tokenize_tf_udf so batch search tokenizes queries with the
-    same vocabulary the index was built with."""
-    if term_mode == "word":
-        return tokenize_udf
-    if term_mode != "bpe":
-        raise ValueError(f"unknown term_mode {term_mode!r}")
-
-    @pandas_udf(ArrayType(StringType()))
-    def bpe_tokenize_udf(texts: pd.Series) -> pd.Series:
-        from ..textnorm import get_bpe, tokenize_bpe_terms
-
-        bpe = get_bpe(bpe_path)
-        return texts.map(
-            lambda t: tokenize_bpe_terms(t, bpe) if t is not None else None
-        )
-
-    return bpe_tokenize_udf
-
-
 @pandas_udf(StringType())
 def extract_text_udf(blobs: pd.Series) -> pd.Series:
     """html:binary → extracted text (byte-identical to oracle's extractor)."""

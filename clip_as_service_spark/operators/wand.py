@@ -23,6 +23,10 @@ block arrays (``_Term``) that the kernels index:
   ``_fold`` into a running top-k; a single window reads and fills the
   reader's decoded-term memo.
 
+``_fold`` sums in one ``np.bincount``, into a direct array over the doc
+span (≤ ``_DENSE_SLOTS_PER_POSTING`` slots per posting) or over the
+distinct docs; ``_top`` selects every top-k above a sampled kth floor.
+
 Bounds are inflated by 1+1e-9 (``_UB_SAFETY``) so float rounding can never
 stop a decode that a true top-k doc still needs → every kernel is EXACT.
 
@@ -73,24 +77,30 @@ _UB_SAFETY = 1.0 + 1e-9
 # ---------------------------------------------------------------------------
 
 
-def _tombstoned(docs: np.ndarray, deleted: np.ndarray) -> np.ndarray:
-    """True where ``docs`` holds a tombstone (``deleted``: sorted, unique,
-    non-empty) — the membership test of every tombstone mask.
+def _member(docs: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """True where ``docs`` holds one of ``ids`` (sorted, unique, non-empty)
+    — the membership test of every tombstone mask and of the fold's
+    candidate filter.
 
     A long chunk of dense ids looks each doc up in a table over the
-    tombstones' id range, no longer than 32 slots per doc; anything else
+    ids' range, no longer than 32 slots per doc; anything else
     takes one binary search per doc. On 600k dense docs with 300
     tombstones the table took 3-6 ms of a 4096-block chunk (decode
     24-54 ms) where the search took 6-12 ms, and the search 3× less than
     the table at 8 blocks; on hash ids the search wins at every length."""
-    if len(docs) >= 8192 and int(deleted[-1]) - int(deleted[0]) <= 32 * len(docs):
-        return np.isin(docs, deleted, kind="table")
-    j = np.searchsorted(deleted, docs)
-    np.minimum(j, len(deleted) - 1, out=j)
-    return deleted[j] == docs
+    if len(docs) >= 8192 and int(ids[-1]) - int(ids[0]) <= 32 * len(docs):
+        return np.isin(docs, ids, kind="table")
+    j = np.searchsorted(ids, docs)
+    np.minimum(j, len(ids) - 1, out=j)
+    return ids[j] == docs
 
 
 _DECODE_CHUNK_BLOCKS = 4096
+# a fold sums over its lists' doc span when it has at most this many slots
+# per posting, else over their distinct docs: folding three random lists,
+# the span was faster up to ~24 slots per posting at 30k postings, ~32 at
+# 3k-10k and past 64 at 300 or fewer (and 5-10× slower at 64 from 10k up)
+_DENSE_SLOTS_PER_POSTING = 32
 
 
 @dataclasses.dataclass(slots=True)
@@ -195,11 +205,11 @@ def taat_topk(
     ``fold`` (one window), ``windows``, ``stop`` (closed early) or
     ``stop_open`` (decoded every block) — and ``decoded_blocks``, the
     blocks this call decoded. Returned scores always accumulate
-    ascending-term (the oracle's float64 association); top-k via lexsort
-    with the (score DESC, doc ASC) tie-break."""
+    ascending-term (the oracle's float64 association); top-k via ``_top``
+    and a lexsort with the (score DESC, doc ASC) tie-break."""
     log = {} if log is None else log
     log.update(kernel=None, decoded_blocks=0)
-    if not terms:
+    if not terms or k < 1:
         return []
     terms = sorted(terms, key=lambda t: t.term)
     if deleted is not None and not len(deleted):
@@ -220,53 +230,44 @@ def taat_topk(
 
 def _fold(decoded: list, k: int, universe, deleted=None):
     """Exact top-k of per-term postings ``decoded`` = [(docs, idf·w)] in
-    ASCENDING-TERM order (the oracle's float64 association), without the
-    sorted tombstones ``deleted``.
+    ASCENDING-TERM order, without the sorted tombstones ``deleted``, in one
+    pass: the lists are concatenated in that order and summed by one
+    ``np.bincount``, whose bins add their weights in input order from 0.0
+    — the oracle's float64 association, bit for bit. One list holds each
+    doc once: its partials are its scores, with no accumulator.
 
     ``universe`` says which docs get a score slot:
-    - (lo, hi), every doc in [lo, hi): a direct array, doc_id - lo IS the
-      slot — no unique/searchsorted;
-    - a sorted doc-id ndarray: those docs only, postings of others dropped
-      (_taat_stop's candidate set);
-    - None: the sorted distinct docs.
+    - (lo, hi), the lists' doc span: a direct array over it (doc_id - lo
+      IS the slot) when it has at most ``_DENSE_SLOTS_PER_POSTING`` slots
+      per posting, else the distinct docs — sized by the postings, never
+      by a sparse span;
+    - a sorted doc-id ndarray: those docs only, the postings of others
+      dropped before the fold (_taat_stop's candidate set);
+    - None: the distinct docs.
 
-    Tombstones are masked once, after accumulation: their slots are
-    discarded and no live doc's sum is touched.
-
-    BM25 partials are > 0, so score 0 ⇔ no query term matched (reference
-    invariant tests/test_search.py:41-44). One list (no candidate set) holds
-    each doc once: its partials are its exact scores, with no score array."""
-    if len(decoded) == 1 and not isinstance(universe, np.ndarray):
-        docs, scores = decoded[0]
-        live = slice(None) if deleted is None else ~_tombstoned(docs, deleted)
-        return _topk_from_arrays(docs[live], scores[live], k)
-    if isinstance(universe, tuple):
-        lo, hi = universe
-        acc = np.zeros(hi - lo, dtype=np.float64)
-        for docs, partials in decoded:  # ascending-term accumulation
-            acc[docs - lo] += partials
+    Tombstones are zeroed once, after accumulation, so no live doc's sum
+    is touched. BM25 partials are > 0, so score 0 ⇔ no query term matched
+    (reference invariant tests/test_search.py:41-44)."""
+    docs, w = decoded[0] if len(decoded) == 1 else map(np.concatenate, zip(*decoded))
+    if isinstance(universe, np.ndarray):
+        if not len(universe):
+            return []
+        m = _member(docs, universe)
+        docs, w = docs[m], w[m]
+        universe = (int(universe[0]), int(universe[-1]) + 1)
+    lo, hi = universe or (0, 0)
+    if len(decoded) > 1 and 0 < hi - lo <= _DENSE_SLOTS_PER_POSTING * len(docs):
+        w = np.bincount(docs - lo, w, hi - lo)
         if deleted is not None:  # the tombstones inside [lo, hi)
-            a, b = np.searchsorted(deleted, (lo, hi))
-            acc[deleted[a:b] - lo] = 0.0
-        slots = np.flatnonzero(acc > 0.0)
-        return _topk_from_arrays(slots + lo, acc[slots], k)
-    subset = universe is not None
-    if not subset:
-        universe = np.unique(np.concatenate([d for d, _w in decoded]))
-    if not len(universe):
-        return []
-    scores = np.zeros(len(universe), dtype=np.float64)
-    for docs, partials in decoded:  # ascending-term accumulation
-        idxs = np.searchsorted(universe, docs)
-        if subset:
-            np.clip(idxs, 0, len(universe) - 1, out=idxs)
-            m = universe[idxs] == docs
-            idxs, partials = idxs[m], partials[m]
-        scores[idxs] += partials
-    live = scores > 0.0
+            a, b = np.searchsorted(deleted, universe)
+            w[deleted[a:b] - lo] = 0.0
+        return _topk_from_arrays(lo, w, k)
+    if len(decoded) > 1:
+        docs, slot = np.unique(docs, return_inverse=True)
+        w = np.bincount(slot, w)
     if deleted is not None:
-        live &= ~_tombstoned(universe, deleted)
-    return _topk_from_arrays(universe[live], scores[live], k)
+        w = np.where(_member(docs, deleted), 0.0, w)
+    return _topk_from_arrays(docs, w, k)
 
 
 def _doc_windows(firsts, lasts, ns, bound: int) -> list[tuple[int, int]]:
@@ -464,7 +465,7 @@ def _taat_stop(terms: list[_Term], k: int, bm25: tuple, deleted, log: dict):
         log["decoded_blocks"] += len(chunk)
         ends = np.cumsum([int(t.n[s].sum()) for t, s in picks])
         if deleted is not None:
-            live = ~_tombstoned(docs, deleted)
+            live = ~_member(docs, deleted)
             ends = np.cumsum(live)[ends - 1]
             docs, w = docs[live], w[live]
         segs = [slice(a, b) for a, b in zip([0, *ends[:-1].tolist()], ends.tolist())]
@@ -482,24 +483,19 @@ def _taat_stop(terms: list[_Term], k: int, bm25: tuple, deleted, log: dict):
             for seg in segs:
                 dense[slots[seg]] += w[seg]
             if pool is None:
-                if len(slots) > _TAAT_POOL_MAX:
-                    top = np.argpartition(-w, _TAAT_POOL_MAX - 1)[:_TAAT_POOL_MAX]
-                    slots = slots[top]
-                pool = np.unique(slots)
+                pool = np.unique(slots[_top(w, _TAAT_POOL_MAX)[1]])
         if i >= len(order):
             break
         rem = sum(t.idf * t.max_w[o[p]]
                   for t, o, p in zip(terms, orders, ptr.tolist()) if p < len(o))
         if dense is None:
-            if len(w) >= k:
-                kth = -np.partition(-w, k - 1)[k - 1]
-                survive = w >= kth
-                docs, w = docs[survive], w[survive]
-                if rem * _UB_SAFETY < kth:
-                    break  # no undecoded doc can reach (or tie) the kth score
+            kth, at = _top(w, k)
+            docs, w = docs[at], w[at]
+            if rem * _UB_SAFETY < kth:
+                break  # no undecoded doc can reach (or tie) the kth score
             kept = (docs, w)
-        elif len(pool) >= k and cand_scans < _TAAT_MAX_CAND_SCANS:
-            theta = -np.partition(-dense[pool], k - 1)[k - 1]
+        elif cand_scans < _TAAT_MAX_CAND_SCANS:
+            theta = _top(dense[pool], k)[0]
             if theta > 0.0 and rem * _UB_SAFETY < theta and rem <= next_check_rem:
                 cand = np.flatnonzero(
                     dense >= theta / _UB_SAFETY - rem * _UB_SAFETY
@@ -516,7 +512,7 @@ def _taat_stop(terms: list[_Term], k: int, bm25: tuple, deleted, log: dict):
         hits = _topk_from_arrays(docs, w, k)
     else:
         if i >= len(order):  # C from the fully decoded accumulator
-            kth = -np.partition(-dense, k - 1)[k - 1] if len(dense) > k else 0.0
+            kth = _top(dense, k)[0]
             cand = np.flatnonzero(
                 dense >= kth / _UB_SAFETY if kth > 0.0 else dense > 0.0
             ) + lo
@@ -525,18 +521,34 @@ def _taat_stop(terms: list[_Term], k: int, bm25: tuple, deleted, log: dict):
     return hits
 
 
-def _topk_from_arrays(universe: np.ndarray, scores: np.ndarray, k: int):
-    """(score DESC, doc ASC) top-k over parallel arrays; boundary ties kept
-    through the kth-score threshold so the doc_id tie-break stays exact."""
-    if len(universe) == 0:
-        return []
-    if len(universe) <= k:
-        order = np.lexsort((universe, -scores))
-    else:
-        kth_score = -np.partition(-scores, k - 1)[k - 1]
-        cand = np.flatnonzero(scores >= kth_score)
-        order = cand[np.lexsort((universe[cand], -scores[cand]))]
-    return [(r, int(universe[i]), float(scores[i])) for r, i in enumerate(order[:k], 1)]
+def _top(scores: np.ndarray, k: int) -> tuple[float, np.ndarray]:
+    """(kth, at): the kth largest score > 0 (0.0 when fewer than k are)
+    and the positions of the scores > 0 at or above it, every tie at the
+    kth included — the kernels' one top-k selection. The kth largest of a
+    strided sample of ~sqrt(k·n) scores is a floor never above the true
+    kth, so only the scores at or above it are partitioned; a floor ≤ 0
+    (mostly empty slots) keeps the scores > 0 instead."""
+    floor, stride = 0.0, int(np.sqrt(len(scores) // k))
+    if stride > 1:
+        sample = scores[::stride]
+        floor = np.partition(sample, len(sample) - k)[len(sample) - k]
+    at = np.flatnonzero(scores >= floor if floor > 0.0 else scores > 0.0)
+    if len(at) < k:
+        return 0.0, at
+    s = scores[at]
+    kth = np.partition(s, len(s) - k)[len(s) - k]
+    return kth, at[s >= kth]
+
+
+def _topk_from_arrays(docs, scores: np.ndarray, k: int):
+    """(score DESC, doc ASC) top-k of the docs scoring > 0: ``docs`` and
+    ``scores`` are parallel arrays, or ``docs`` is the id of slot 0 of a
+    direct score array. Boundary ties are kept through the kth score, so
+    the doc_id tie-break stays exact."""
+    at = _top(scores, k)[1]
+    ids = at + docs if isinstance(docs, int) else docs[at]
+    order = np.lexsort((ids, -scores[at]))[:k]
+    return list(zip(range(1, k + 1), ids[order].tolist(), scores[at[order]].tolist()))
 
 
 # ---------------------------------------------------------------------------
@@ -849,7 +861,7 @@ class IndexReader:
         doc_arr = np.asarray(tbl.column("doc_id"), dtype=np.int64)
         pos_arr = np.asarray(tbl.column("pos"), dtype=np.int64)
         if len(self._deleted_arr):
-            live = ~_tombstoned(doc_arr, self._deleted_arr)
+            live = ~_member(doc_arr, self._deleted_arr)
             term_arr, doc_arr, pos_arr = (
                 term_arr[live], doc_arr[live], pos_arr[live]
             )
@@ -924,7 +936,9 @@ def search_topk(
     # absolute: a task's working directory need not be the driver's
     store = IndexStorage(os.path.abspath(index_dir))
     check_block_format(store.read_meta(), store.root)
-    return queries.select("query_id", "text").mapInArrow(
+    if queries.columns != ["query_id", "text"]:  # a select costs ~6 ms of py4j
+        queries = queries.select("query_id", "text")
+    return queries.mapInArrow(
         functools.partial(_search_batches, index_dir=store.root, k=k),
         from_arrow_schema(TOPK_SCHEMA),
     )

@@ -25,8 +25,10 @@ Design notes (100 TB target):
   214-query ``search_topk`` collect from 157 to 114 ms (medians of 30).
   A new SparkContext gets its own socket directory, made by
   ``_socket_dir``: mode 0700, under the temp directory, or under /tmp
-  when the temp directory's path would push a socket path past AF_UNIX's
-  107 bytes, and removed when the process exits. ``pyspark.daemon``
+  when that directory's path would be longer than the 61 characters
+  Spark accepts for ``spark.python.unix.domain.socket.dir`` or push a
+  socket path past AF_UNIX's 107 bytes, and removed when the process
+  exits. ``pyspark.daemon``
   treats a UDS connection as already authenticated, so the directory's
   mode is the only access control. A caller's ``extra_conf`` may set
   either key; with the option off, or no usable directory, workers use
@@ -51,6 +53,9 @@ _UDS_ENABLED = "spark.python.unix.domain.socket.enabled"
 _UDS_DIR = "spark.python.unix.domain.socket.dir"
 # the longest AF_UNIX socket path: sun_path's 108 bytes less the NUL
 _SOCKET_PATH_MAX = 107
+# the longest socket directory Spark accepts: a longer _UDS_DIR fails
+# every Python job of the session with INVALID_CONF_VALUE.REQUIREMENT
+_SOCKET_DIR_MAX = 61
 
 
 def get_spark(
@@ -182,11 +187,13 @@ def get_spark(
 def _socket_dir() -> str | None:
     """A new directory, mode 0700, for the Python workers' sockets, removed
     when this process exits: under the temp directory, or under /tmp when
-    the temp directory's path leaves no room for a socket path (Spark
-    names its sockets ``<dir>/.<uuid4>.sock``); None when neither serves."""
+    the directory's path would be longer than Spark accepts or leave no
+    room for a socket path (Spark names its sockets
+    ``<dir>/.<uuid4>.sock``); None when neither serves."""
     for parent in (tempfile.gettempdir(), "/tmp"):
-        longest = os.path.join(parent, "uds-xxxxxxxx", f".{uuid.uuid4()}.sock")
-        if len(os.fsencode(longest)) > _SOCKET_PATH_MAX:
+        longest = os.path.join(parent, "uds-xxxxxxxx")
+        sock = os.path.join(longest, f".{uuid.uuid4()}.sock")
+        if len(longest) > _SOCKET_DIR_MAX or len(os.fsencode(sock)) > _SOCKET_PATH_MAX:
             continue
         try:
             path = tempfile.mkdtemp(prefix="uds-", dir=parent)

@@ -1,5 +1,7 @@
 """End-to-end rank-identity: Spark BM25 top-k ≡ single-node oracle
-(SURVEY.md §7 M1; invariants from FIXTURES.md §6).
+(SURVEY.md §7 M1; invariants from FIXTURES.md §6), through the corpus
+stats and the batch search over an index of the same pages
+(``wand.search_topk``).
 
 Pass criterion (FIXTURES.md §3): same docIDs in same order per query,
 scores bit-close (≤1e-12 relative; the pipeline is built to be bit-identical
@@ -11,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from clip_as_service_spark import fixtures
-from clip_as_service_spark.operators import bm25, tokenize
+from clip_as_service_spark.operators import index_build, tokenize, wand
 from clip_as_service_spark.oracle import BM25Oracle
 
 N_PAGES = 200
@@ -35,12 +37,11 @@ def oracle():
 
 
 @pytest.fixture(scope="module")
-def spark_topk(spark, built):
-    postings, stats, tdf = built
-    queries = fixtures.queries_spark_df(spark)
-    out = bm25.score_topk(
-        postings, queries, tdf, stats["n_docs"], stats["avgdl"], k=K
-    )
+def spark_topk(spark, tmp_path_factory):
+    index = str(tmp_path_factory.mktemp("bm25_e2e") / "index")
+    pages = fixtures.pages_spark_df(spark, N_PAGES, partitions=6)
+    index_build.build_index(spark, pages, index, doc_id_method="dense_sorted")
+    out = wand.search_topk(spark, index, fixtures.queries_spark_df(spark), k=K)
     rows = out.collect()
     result: dict[int, list] = {}
     for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):

@@ -73,32 +73,25 @@ def test_one_function_picks_the_scorer_kernel():
 
 
 def test_tombstones_go_through_one_membership_helper():
-    """Every tombstone membership test in wand.py is a call of the one
-    sorted-membership helper ``_tombstoned`` (np.isin only inside it, no
-    in1d or setdiff1d, no second mask helper), and ``_fold`` masks once per
-    query: nothing in its per-term loops touches the tombstones."""
+    """Every tombstone membership test in wand.py, and the fold's candidate
+    filter, is a call of the one sorted-membership helper ``_member``
+    (np.isin only inside it, no in1d or setdiff1d, no second mask helper),
+    and ``_fold`` masks once per query: nothing in its per-term loops
+    touches the tombstones."""
     import ast
 
     text = (PKG / "operators" / "wand.py").read_text()
-    for name in ("np.in1d(", "np.setdiff1d(", "_mask_deleted"):
+    for name in ("np.in1d(", "np.setdiff1d(", "_mask_deleted", "_tombstoned"):
         assert name not in text, name
     funcs = {
         n.name: n for n in ast.walk(ast.parse(text))
         if isinstance(n, ast.FunctionDef)
     }
-    isin_in = {
-        name for name, f in funcs.items()
-        if any(
-            isinstance(c, ast.Attribute) and c.attr == "isin"
-            and getattr(c.value, "id", None) == "np"
-            for c in ast.walk(f)
-        )
-    }
-    assert isin_in == {"_tombstoned"}, isin_in
+    assert _calling(funcs, "isin") == {"_member"}
     callers = {
         name for name, f in funcs.items()
         if any(
-            isinstance(c, ast.Call) and getattr(c.func, "id", None) == "_tombstoned"
+            isinstance(c, ast.Call) and getattr(c.func, "id", None) == "_member"
             for c in ast.walk(f)
         )
     }
@@ -109,9 +102,40 @@ def test_tombstones_go_through_one_membership_helper():
     )
     for loop in loops:
         names = {n.id for n in ast.walk(loop) if isinstance(n, ast.Name)}
-        assert not names & {"deleted", "_tombstoned"}, (
+        assert not names & {"deleted", "_member"}, (
             ast.get_source_segment(text, loop)
         )
+
+
+def _calling(funcs: dict, attr: str) -> set:
+    """The names of the functions in ``funcs`` that use ``np.<attr>``."""
+    import ast
+
+    return {
+        name for name, f in funcs.items()
+        if any(
+            isinstance(c, ast.Attribute) and c.attr == attr
+            and getattr(c.value, "id", None) == "np"
+            for c in ast.walk(f)
+        )
+    }
+
+
+def test_one_fold_pass_and_one_topk_selection():
+    """wand.py accumulates in one place, ``_fold``, with one np.bincount
+    and no per-term scatter-add loop, and selects every top-k in one
+    helper, ``_top``: no np.partition or np.argpartition elsewhere."""
+    import ast
+
+    text = (PKG / "operators" / "wand.py").read_text()
+    funcs = {
+        n.name: n for n in ast.walk(ast.parse(text))
+        if isinstance(n, ast.FunctionDef)
+    }
+    assert "_fold" in _calling(funcs, "bincount")
+    assert not any(isinstance(n, (ast.For, ast.AugAssign)) for n in ast.walk(funcs["_fold"]))
+    assert _calling(funcs, "partition") == {"_top"}
+    assert not _calling(funcs, "argpartition")
 
 
 def test_one_early_stop_and_one_block_fold():

@@ -583,7 +583,7 @@ def test_purge_dense_ids_matches_oracle_over_survivors(spark, pages, tmp_path):
 
 
 def test_tombstone_membership_on_both_methods():
-    """wand._tombstoned answers set membership whichever method it takes:
+    """wand._member answers set membership whichever method it takes:
     the lookup table (a chunk of ≥ 8192 docs whose tombstones span ≤ 32
     ids per doc) or the binary search (shorter chunks, wider spans, hash
     ids), with docs below, inside and above the tombstones' range."""
@@ -603,5 +603,5 @@ def test_tombstone_membership_on_both_methods():
         tables.add(n >= 8192 and int(deleted[-1]) - int(deleted[0]) <= 32 * n)
         dead = set(deleted.tolist())
         want = np.array([d in dead for d in docs.tolist()])
-        assert (wand._tombstoned(docs, deleted) == want).all(), (n, span)
+        assert (wand._member(docs, deleted) == want).all(), (n, span)
     assert tables == {True, False}

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import zipimport
 from pathlib import Path
 
@@ -231,6 +233,37 @@ def fresh_session(tmp_path_factory, long_tmpdir) -> dict:
     return _run(
         FRESH_SESSION, str(ROOT), cwd=tmp_path_factory.mktemp("elsewhere"), env=env
     )
+
+
+@pytest.fixture(scope="module")
+def spark_length_session(tmp_path_factory) -> tuple[str, dict]:
+    """A fresh session whose TMPDIR has 50 characters: a ``uds-XXXXXXXX``
+    directory under it has 63, room enough for every socket path (107
+    bytes) but past the 61 characters Spark accepts for
+    ``spark.python.unix.domain.socket.dir``."""
+    base = tempfile.mkdtemp(prefix="tmplen-", dir="/tmp")
+    try:
+        tmpdir = os.path.join(base, "t" * (50 - len(base) - 1))
+        os.mkdir(tmpdir)
+        env = {
+            k: v for k, v in os.environ.items()
+            if k not in ("PYTHONPATH", "PYSPARK_SUBMIT_ARGS")
+        }
+        env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_WARMUP="0", TMPDIR=tmpdir)
+        out = _run(
+            FRESH_SESSION, str(ROOT), cwd=tmp_path_factory.mktemp("elsewhere"), env=env
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    return tmpdir, out
+
+
+def test_socket_directory_within_sparks_length_limit(spark_length_session):
+    tmpdir, out = spark_length_session
+    assert len(os.path.join(tmpdir, "uds-xxxxxxxx")) == 63
+    assert out["rdd_map"] == ["A b", "C"]
+    assert out["create_collect"] == [["a", 1], ["b", 2]]
+    assert len(out["socket_dir"]) <= 61
 
 
 def test_workers_import_the_package_from_any_directory(fresh_session):

@@ -30,7 +30,10 @@ alternating which side goes first call by call:
 - ``full_decode``: "alpha beta" at the default thresholds (one fold);
 - ``windows``: "alpha beta" with ``DECODE_MAX_POSTINGS`` forced to
   ``--window-bound`` postings, below the terms' span, so the fold runs in
-  doc-id windows.
+  doc-id windows;
+- ``sparse_pair``: two synthetic 100-posting lists, each drawn from the
+  first and last 500 doc ids, handed straight to ``_fold`` with their
+  600k-id span as the universe — the accumulator a sparse query needs.
 
 Both sides must return identical answers. One JSON line is printed:
 per case, each side's median ms per round, and this side's kernel and
@@ -54,10 +57,12 @@ import sys
 import time
 from unittest import mock
 
+import numpy as np
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_PAGES = 600_000
 K = 10
-CASES = ("alpha", "alpha_warm", "beta", "multi_stop", "full_decode", "windows")
+CASES = ("alpha", "alpha_warm", "beta", "multi_stop", "full_decode", "windows", "sparse_pair")
 
 
 def build_index(out: str) -> None:
@@ -113,9 +118,21 @@ class Side:
         self.reader = wand.IndexReader(None, index)
         self.terms = {t.term: t for t in self.reader._fetch_rows(["alpha", "beta"])}
         self.logs = "log" in inspect.signature(wand.taat_topk).parameters
+        rng = np.random.default_rng(0)
+        ends = np.r_[0:500, N_PAGES - 500 : N_PAGES]
+        self.pair = [
+            (np.sort(rng.choice(ends, 100, replace=False)), rng.random(100) + 0.1)
+            for _ in range(2)
+        ]
 
     def run(self, case: str, window_bound: int):
         w, t = self.wand, self.terms
+        if case == "sparse_pair":
+            lo = min(int(d[0]) for d, _ in self.pair)
+            hi = max(int(d[-1]) for d, _ in self.pair) + 1
+            t0 = time.perf_counter()
+            hits = w._fold(self.pair, K, (lo, hi))
+            return 1000 * (time.perf_counter() - t0), hits, {}
         forced = {
             "multi_stop": {"MULTI_TAAT_EARLY_MIN_POSTINGS": 0},
             "windows": {"DECODE_MAX_POSTINGS": window_bound},
